@@ -149,7 +149,7 @@ object Bench {
     // cost, not a query cost — without this, whichever query happened to
     // trigger materialization ate the build (the r2 bench regressions on
     // a18/a12/a13/a2 were exactly this measurement skew). Silver.memoize
-    // additionally leaf-materializes each silver (localCheckpoint) so no
+    // materializes each silver to a checkpointed plan leaf so no
     // per-query planning re-pays the lineage — the r7 suite-wide
     // per-query constant.
     try {

@@ -96,10 +96,6 @@ object History {
           .otherwise("info"))
       .select(col("store_id"), col("sale_date"), col("today_sales"),
         col("hist_avg_sales"), col("deviation_pct"), col("severity"))
-      // cached like trendDirection: the reference PERSISTS anomaly rows
-      // (write-metrics insights), and a22/r1/r2/x4 all re-read them —
-      // dimension-sized (|stores|×|days| upper bound)
-      .cache()
       .orderBy(col("store_id"), col("sale_date"))
 
   private[graft] val anomaliesBodySql: String =
@@ -149,7 +145,7 @@ object History {
     * Implemented scale-first: each history day is exploded to the ≤7
     * target days it can serve → equi-join on (store_id, day_idx).
     *
-    * The unordered body is CACHED (stores×days rows — dimension-sized):
+    * The unordered body is a SILVER (stores×days rows — dimension-sized):
     * a12, the trend-insight rubric (x3), and the recommendations rubric
     * (r2/x4) all re-read this relation; like rollupDec/paymentDec it is
     * a silver-table stand-in, not a per-query recompute. */
@@ -200,7 +196,6 @@ object History {
           .when(col("recent_avg") > col("earlier_avg") * 1.05, "increasing")
           .when(col("recent_avg") < col("earlier_avg") * 0.95, "decreasing")
           .otherwise("stable").as("direction"))
-      .cache()
   }
 
   /** Unordered body for downstream CTE composition (Recommendations). */

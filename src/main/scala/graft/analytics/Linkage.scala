@@ -62,7 +62,7 @@ object Linkage {
                                  upper: Long = 2000L,
                                  lower: Long = 0L): DataFrame =
     graft.model.Silver.memoize(spark, s"erScoredPairs_${upper}_$lower", dir) {
-      scoredPairsPlan(spark, dir, upper, lower).cache()
+      scoredPairsPlan(spark, dir, upper, lower)
     }
 
   private def cleanView(spark: SparkSession, dir: String): DataFrame =
@@ -115,7 +115,7 @@ object Linkage {
       // the union here is leaf ∪ leaf + distinct
       candidatesOfPass(spark, dir, "brand")
         .unionAll(candidatesOfPass(spark, dir, "type"))
-        .distinct().cache()
+        .distinct()
     }
 
   private def scoredPairsPlan(spark: SparkSession, dir: String,
@@ -995,7 +995,6 @@ object Linkage {
         .withColumn("is_true", (col("key_c") === col("key_d")).cast("long"))
         .select(col("key_c"), col("key_d"), col("score_milli"),
           col("decision"), col("is_true"))
-        .cache()
     }
 
   /** er8: the er5 threshold sweep RE-RUN under er7's unbiased weights —

@@ -555,12 +555,17 @@ object Profile {
   private[analytics] def fkLineitemCounts(spark: SparkSession,
                                           dir: String): DataFrame =
     graft.model.Silver.memoize(spark, "fkLineitemCounts", dir) {
-      Tables.lineitem(spark, dir)
-        .select(expr("stack(3, 'l_orderkey', l_orderkey, " +
-          "'l_partkey', l_partkey, 'l_suppkey', l_suppkey) AS (key_col, k)"))
-        .groupBy(col("key_col"), col("k")).agg(count(lit(1)).as("ca"))
-        .cache()
+      fkLineitemCountsPlan(spark, dir)
     }
+
+  /** The un-memoized builder plan of [[fkLineitemCounts]] (its scan
+    * projection is pinned by PushdownSpec). */
+  private[graft] def fkLineitemCountsPlan(spark: SparkSession,
+                                          dir: String): DataFrame =
+    Tables.lineitem(spark, dir)
+      .select(expr("stack(3, 'l_orderkey', l_orderkey, " +
+        "'l_partkey', l_partkey, 'l_suppkey', l_suppkey) AS (key_col, k)"))
+      .groupBy(col("key_col"), col("k")).agg(count(lit(1)).as("ca"))
 
   def fkIntegrity(spark: SparkSession, dir: String): DataFrame = {
     val liCounts = fkLineitemCounts(spark, dir)

@@ -196,10 +196,6 @@ object Recommendations {
         col("priority_rank"), col("category"), col("title"), col("description"),
         col("affected_stores"), col("affected_products"), col("expected_impact"),
         col("high_priority_count"))
-      // shared silver like the anomalies relation it derives from: the
-      // r2 key and the x4 BI export both read it (CacheManager dedupes
-      // the plan, so both calls share one entry)
-      .cache()
       .orderBy(col("sale_date"), col("rec_rank"))
   }
 

@@ -195,7 +195,7 @@ object Star {
     * the part dimension (broadcast) tags each line as promo or not,
     * and the monthly share is EXACT integer milli over cents
     * (numerator·1000 DIV denominator — never a float percentage of
-    * floats). Month keys are y·12+m integers rendered 'yyyy-MM'. */
+    * floats). Month keys are y·100+m integers rendered 'yyyy-MM'. */
   def promoShare(spark: SparkSession, dir: String): DataFrame = {
     val p = broadcast(Tables.part(spark, dir)
       .select(col("p_partkey"), (col("p_type") === "PROMO").as("is_promo")))

@@ -20,14 +20,14 @@ object StoreDaily {
   /** Exact-decimal form of A1, reused by company/product re-aggregations
     * (keeps all downstream sums order-independent → oracle-exact).
     *
-    * CACHED: this is the engine's materialized (store, day) summary table —
+    * SILVER: this is the engine's materialized (store, day) summary table —
     * the reference PERSISTS exactly this relation in DynamoDB
     * (write-metrics:77-104) and every read path re-queries it rather than
     * the raw line items. Our medallion equivalent is a silver parquet
     * table maintained incrementally by [[graft.streaming.StreamingIngest]];
-    * in the ad-hoc query path the cache plays that role (CacheManager
-    * dedupes by plan, so all ~15 downstream operators share one entry;
-    * |stores|×|days| rows — dimension-sized at any fact-table scale). */
+    * in the ad-hoc query path the memoized leaf plays that role (all ~15
+    * downstream operators share one handle; |stores|×|days| rows —
+    * dimension-sized at any fact-table scale). */
   def rollupDec(spark: SparkSession, dir: String): DataFrame =
     Silver.memoize(spark, "rollupDec", dir) {
       Tables.sales(spark, dir)
@@ -37,7 +37,6 @@ object StoreDaily {
           sum(col("discount_amount")).as("disc_dec"),
           count(lit(1)).as("transaction_count"),
           sum(col("quantity")).as("item_count"))
-        .cache()
     }
 
   val rollupDecSql: String =
@@ -80,7 +79,7 @@ object StoreDaily {
        |ORDER BY store_id, sale_date""".stripMargin
 
   /** Exact-decimal per-(store, day, method) payment summary — the silver
-    * payment relation. CACHED like [[rollupDec]]: the orders join (the one
+    * payment relation. A silver like [[rollupDec]]: the orders join (the one
     * fact-to-fact join in the engine, needed only to derive
     * payment_method) runs ONCE; a2/a6/a9/x1 then re-aggregate this
     * dimension-sized relation (≤ stores×days×5 rows). The production twin
@@ -97,7 +96,6 @@ object StoreDaily {
           sum(col("line_total")).as("gross_dec"),
           count(lit(1)).as("txn"),
           sum(col("quantity")).as("item_count"))
-        .cache()
     }
 
   /** A2: payment breakdown — per (store, day, method):
@@ -136,13 +134,13 @@ object StoreDaily {
     * rollup (A7) which by reference semantics aggregates truncated
     * per-store top-5s, not raw line items.
     *
-    * CACHED: this is the engine's product_daily silver relation — the
+    * SILVER: this is the engine's product_daily relation — the
     * reference PERSISTS it (calc-product-metrics:117-133) and seven read
     * paths (a3/a7/a8/j6/a26/d7/r2) re-aggregate it. Output is bounded at
     * k×stores×days rows regardless of fact-table size. */
   def topProductsDec(spark: SparkSession, dir: String, k: Int = 5): DataFrame =
     Silver.memoize(spark, s"topProductsDec:$k", dir) {
-      topProductsFrom(Tables.sales(spark, dir), k).cache()
+      topProductsFrom(Tables.sales(spark, dir), k)
     }
 
   /** Date-bounded variant: a range FILTER over the shared

@@ -547,21 +547,19 @@ object Flatten {
                            nQueries: Int = 3): DataFrame = {
     import graft.vector.Similarity
     import org.apache.spark.sql.expressions.Window
-    // the two parent rankings are query-set-sized; materialized once
-    // (localCheckpoint) so the card's four derivations share one build
-    // instead of re-running the corpus-touching parent per column, and
-    // Silver-memoized so repeated card calls don't re-run BM25/cosine
+    // the two parent rankings are query-set-sized silvers: the memo's
+    // leaf lets the card's four derivations share one build instead of
+    // re-running the corpus-touching parent per column, and repeated
+    // card calls don't re-run BM25/cosine
     val sem5 = graft.model.Silver.memoize(spark, s"x12sem:$nQueries", dir) {
       Similarity.cosineTopK(spark, dir, 10, nQueries)
         .select(col("query_id"), col("neighbor_id").as("doc"),
           col("rank").cast("long").as("sem_rank"))
-        .localCheckpoint()
     }
     val lex5 = graft.model.Silver.memoize(spark, s"x12lex:$nQueries", dir) {
       graft.text.TextAnalysis.bm25(spark, dir, nQueries, 10)
         .select(col("query_id"), col("doc_id").as("doc"),
           col("rank").as("lex_rank"))
-        .localCheckpoint()
     }
     val sem = sem5.filter(col("sem_rank") === 1)
       .select(col("query_id"), col("doc").as("sem_top1"))

@@ -3,15 +3,17 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types.StructType
 
 /** Classic-mode Column <-> catalyst Expression bridge. Spark 4 moved these
   * helpers behind `private[sql]` (`org.apache.spark.sql.classic.
   * ExpressionUtils`); a subpackage of `org.apache.spark.sql` is the
   * sanctioned way for libraries extending Catalyst to reach them — the
-  * only non-`graft` package in this repo, kept to three forwarders. */
+  * only non-`graft` package in this repo, kept to four forwarders. */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -25,4 +27,26 @@ object ColumnBridge {
                               schema: StructType): DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
+
+  /** `leaf` (a checkpointed `LogicalRDD`) re-stated with the row count
+    * and row bytes it holds, measured by one pass over its stored
+    * blocks. A checkpoint otherwise carries the optimizer's ESTIMATE
+    * for the plan it was cut from — join estimates are products of
+    * their sides — and consumer joins lose their broadcast; a loaded
+    * columnar cache reports measured statistics the same way. */
+  def withMeasuredStats(leaf: DataFrame): DataFrame = {
+    val r = leaf.queryExecution.logical.asInstanceOf[LogicalRDD]
+    val rowBytes = r.schema.defaultSize.toLong
+    val (rows, bytes) = r.rdd
+      .map {
+        case u: UnsafeRow => (1L, u.getSizeInBytes.toLong)
+        case _ => (1L, rowBytes)
+      }
+      .fold((0L, 0L)) { case ((n1, b1), (n2, b2)) => (n1 + n2, b1 + b2) }
+    val spark = leaf.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val stats = Statistics(sizeInBytes = bytes.max(1L), rowCount = Some(rows))
+    org.apache.spark.sql.classic.Dataset.ofRows(spark,
+      LogicalRDD(r.output, r.rdd, r.outputPartitioning, r.outputOrdering, r.isStreaming,
+        r.stream)(spark, Some(stats), Some(r.constraints)))
+  }
 }

@@ -62,16 +62,23 @@ object Ingest {
 
   private val corrupt = "_corrupt_record"
 
-  /** S1+S2: read a directory of JSON-array upload files; each row tagged
-    * with its source filename (the partition-key carrier). */
+  /** The upload read contract shared by the batch readers and the stream
+    * reader ([[graft.streaming.StreamingIngest.runAvailableNow]]). */
+  private[graft] val uploadReadSchema: StructType = uploadSchema.add(corrupt, StringType)
+
+  private[graft] val uploadJsonOptions: Map[String, String] = Map(
+    "multiLine" -> "true",
+    "mode" -> "PERMISSIVE",
+    "columnNameOfCorruptRecord" -> corrupt)
+
+  /** Tag each row with its source file name (the partition-key carrier). */
+  private[graft] def withFilename(df: DataFrame): DataFrame =
+    df.withColumn("_filename", regexp_extract(input_file_name(), "([^/]+)$", 1))
+
+  /** S1+S2: read a directory of JSON-array upload files. */
   def readUploads(spark: SparkSession, inDir: String): DataFrame =
-    spark.read
-      .schema(uploadSchema.add(corrupt, StringType))
-      .option("multiLine", value = true)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", corrupt)
-      .json(s"$inDir/*.json")
-      .withColumn("_filename", regexp_extract(input_file_name(), "([^/]+)$", 1))
+    withFilename(spark.read.schema(uploadReadSchema).options(uploadJsonOptions)
+      .json(s"$inDir/*.json"))
 
   /** S1b: the CSV upload source — same record schema, header row,
     * PERMISSIVE parse with malformed lines captured in the SAME
@@ -82,13 +89,12 @@ object Ingest {
     * partner feed by adding a reader, not a pipeline. Pass
     * [[filenamePatternCsv]] to [[withErrors]]/[[normalize]]. */
   def readUploadsCsv(spark: SparkSession, inDir: String): DataFrame =
-    spark.read
-      .schema(uploadSchema.add(corrupt, StringType))
+    withFilename(spark.read
+      .schema(uploadReadSchema)
       .option("header", value = true)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", corrupt)
-      .csv(s"$inDir/*.csv")
-      .withColumn("_filename", regexp_extract(input_file_name(), "([^/]+)$", 1))
+      .csv(s"$inDir/*.csv"))
 
   /** S3: constraint predicates = the JSON-Schema keywords as columns.
     * Returns the input with an `_errors` column (empty string = valid). */

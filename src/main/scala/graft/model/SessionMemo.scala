@@ -14,11 +14,11 @@ import org.apache.spark.sql.SparkSession
   * CONSTRAINT: values must NOT reference their session (directly or via
   * a DataFrame/Dataset, which holds its SparkSession strongly) — a
   * value→key strong reference defeats WeakHashMap eviction entirely.
-  * That is why [[Silver.memoize]] and the Dataset-valued media memo keep
-  * their documented strong maps: their values ARE session-bound frames,
-  * and the handful of long-lived driver sessions makes that retention
-  * harmless there. This class is for session-FREE values: paths, stats
-  * arrays, codebooks.
+  * That is why [[Silver.memoize]], the one frame-valued memo, keeps its
+  * documented strong map: its values ARE session-bound frames, and the
+  * handful of long-lived driver sessions makes that retention harmless
+  * there. This class is for session-FREE values: paths, stats arrays,
+  * codebooks.
   *
   * The tuple-keyed `apply`/`update`/`collectFirst` surface mirrors the
   * TrieMap API the spec hooks already use. */

@@ -1,9 +1,11 @@
 package graft.model
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Session-level HANDLE memoization for the shared silver relations,
-  * materialized to PLAN LEAVES.
+  * materialized to PLAN LEAVES — the one place a silver is materialized.
   *
   * Spark's CacheManager already dedupes silver EXECUTION by logical-plan
   * identity — but every re-call of a silver builder still re-constructs
@@ -24,24 +26,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (or re-match) the lineage per query. Here the first call builds the
   * silver once, `localCheckpoint` materializes it, and the memoized
   * handle is a `LogicalRDD` LEAF: consumer plans are shallow (cheap to
-  * analyze/canonicalize), and the builder's interim `.cache()` entry is
-  * dropped so the CacheManager stays small. Disable with
-  * `spark.graft.silver.leaf=false` (SQL conf or system property) to get
-  * the plain cached-plan behavior (some plan-shape tests want the full
-  * lineage visible).
+  * analyze/canonicalize), nothing enters the CacheManager, and the leaf
+  * states its measured rows and bytes, so consumer joins plan against
+  * the real size, not the optimizer's estimate. Builders return PLAIN
+  * plans (SilverLintSpec); a body that already is a checkpointed leaf
+  * (the iterative graph/component loops) is kept as-is.
   *
   * A DataFrame is bound to the session that built it, so the key
-  * includes the session — a second session in the same JVM (the
-  * extension-wiring pattern some specs use) builds its own handles
-  * instead of receiving frames bound to a session it doesn't own. */
+  * includes the session — a second session in the same JVM builds its
+  * own handles instead of receiving frames bound to a session it
+  * doesn't own. This is the engine's only frame-valued memo. */
 object Silver {
   private val memo =
     scala.collection.concurrent.TrieMap[(SparkSession, String, String), DataFrame]()
-
-  private def leafEnabled(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.silver.leaf")
-      .orElse(sys.props.get("spark.graft.silver.leaf"))
-      .forall(_ == "true")
 
   /** Return the memoized handle for `name` under `dir` in `spark`,
     * building (and leaf-materializing) it on first call. `name` must
@@ -50,17 +47,14 @@ object Silver {
     * strong reference harmless. */
   def memoize(spark: SparkSession, name: String, dir: String)
              (build: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((spark, name, dir), {
-      val df = build
-      if (leafEnabled(spark)) {
-        // eager localCheckpoint: one job materializes the silver into
-        // executor-local blocks and the handle's plan becomes a leaf;
-        // the builder's own cache entry is then redundant (the
-        // checkpoint holds its own copy), so drop it to keep
-        // CacheManager's entry list — which every action scans — small
-        val leaf = df.localCheckpoint()
-        df.unpersist()
-        leaf
-      } else df
-    })
+    memo.getOrElseUpdate((spark, name, dir), leaf(build))
+
+  /** The build as a materialized leaf: a body whose plan already is a
+    * checkpointed `LogicalRDD` is kept as-is; anything else gets one
+    * eager `localCheckpoint` job into executor-local blocks and one
+    * pass over those blocks to measure it. */
+  private def leaf(df: DataFrame): DataFrame = df.queryExecution.logical match {
+    case r: LogicalRDD if r.rdd.isCheckpointed => df
+    case _ => ColumnBridge.withMeasuredStats(df.localCheckpoint())
+  }
 }

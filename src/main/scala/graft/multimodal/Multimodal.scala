@@ -70,17 +70,17 @@ object Multimodal {
     * (the cross-video duplicate class m4 exists to find), later frames
     * drift minimally within 16-frame scenes and jump across them (the
     * structure m7's cut detector keys on). */
-  private val mediaMemo = scala.collection.concurrent
-    .TrieMap[(SparkSession, String), Dataset[MediaRecord]]()
-
-  /** Memoized + cached: building this table ENCODES a PNG/WAV payload
-    * per row (deflate and all), and six m-keys consume it — without the
-    * cache each key re-encodes the whole media lake. At 100 TB there is
-    * no encode step at all (bytes come from the real bronze media
-    * table on storage); the cache stands in for that one read. */
-  def mediaFromDocs(spark: SparkSession, dir: String): Dataset[MediaRecord] =
-    mediaMemo.getOrElseUpdate((spark, dir),
-      mediaFromDocsUncached(spark, dir).cache())
+  /** A silver: building this table ENCODES a PNG/WAV payload per row
+    * (deflate and all), and six m-keys consume it — without the memo
+    * each key re-encodes the whole media lake. At 100 TB there is no
+    * encode step at all (bytes come from the real bronze media table on
+    * storage); the memoized leaf stands in for that one read. */
+  def mediaFromDocs(spark: SparkSession, dir: String): Dataset[MediaRecord] = {
+    import spark.implicits._
+    graft.model.Silver.memoize(spark, "mediaFromDocs", dir) {
+      mediaFromDocsUncached(spark, dir).toDF()
+    }.as[MediaRecord]
+  }
 
   private def mediaFromDocsUncached(spark: SparkSession,
                                     dir: String): Dataset[MediaRecord] = {
@@ -419,7 +419,7 @@ object Multimodal {
     // m9's segmentation re-derives from it — without memoization each
     // consumer re-runs the full RIFF decode over the same bytes
     graft.model.Silver.memoize(spark, s"audioWindows_$windowSamples", dir) {
-      audioWindowsUncached(spark, dir, windowSamples).cache()
+      audioWindowsUncached(spark, dir, windowSamples)
     }
   }
 
@@ -784,7 +784,7 @@ object Multimodal {
     * javax.imageio decode of the same bytes. */
   /** Decode-once image-hash silver: ONE real PNG pixel decode per image
     * yielding BOTH fingerprints (aHash words a0/a1, pHash words p0/p1),
-    * cached and memoized — m8 and m10 each used to run their own full
+    * memoized — m8 and m10 each used to run their own full
     * decode pass over the same bytes, and the pixel decode (inflate +
     * unfilter) dominates both keys' time; the hash arithmetic on the
     * decoded buffer is noise next to it. At 100 TB this is the
@@ -817,7 +817,6 @@ object Multimodal {
       imgs.select(col("media_id"), col("ckey"))
         .join(reps, Seq("ckey"))
         .select(col("media_id"), col("a0"), col("a1"), col("p0"), col("p1"))
-        .cache()
     }
 
   def imageNearDup(spark: SparkSession, dir: String,

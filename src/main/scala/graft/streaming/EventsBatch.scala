@@ -823,7 +823,7 @@ object EventsBatch {
     * pages: rank join edges on src, contribution agg on dst, one
     * exchange pair per iteration. */
   /** The (from, to, count) transition-edge relation + degree + node
-    * silvers shared by e27/e28 — |types|²-bounded localCheckpoints,
+    * silvers shared by e27/e28 — |types|²-bounded leaves,
     * Silver-memoized so the two graph keys (and repeated calls) build
     * them once per session. */
   private def typeEdges(spark: SparkSession, dir: String): DataFrame =
@@ -837,20 +837,18 @@ object EventsBatch {
         .where(col("to_type").isNotNull)
         .groupBy(col("from_type"), col("to_type"))
         .agg(count(lit(1)).as("c"))
-        .localCheckpoint()
     }
 
   private def typeOutDeg(spark: SparkSession, dir: String): DataFrame =
     graft.model.Silver.memoize(spark, "typeOutDeg", dir) {
       typeEdges(spark, dir).groupBy(col("from_type"))
         .agg(sum(col("c")).cast("long").as("outc"))
-        .localCheckpoint()
     }
 
   private def typeNodes(spark: SparkSession, dir: String): DataFrame =
     graft.model.Silver.memoize(spark, "typeNodes", dir) {
       Tables.events(spark, dir)
-        .select(col("event_type").as("etype")).distinct().localCheckpoint()
+        .select(col("event_type").as("etype")).distinct()
     }
 
   def typePagerank(spark: SparkSession, dir: String, iters: Int = 3): DataFrame = {

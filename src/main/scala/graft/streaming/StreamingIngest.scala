@@ -36,13 +36,9 @@ object StreamingIngest {
   def runAvailableNow(spark: SparkSession, inDir: String, lakeDir: String,
                       summaryDir: String, ledgerDir: String,
                       checkpointDir: String, expectedStores: Long): Unit = {
-    val stream = spark.readStream
-      .schema(Ingest.uploadSchema.add("_corrupt_record", org.apache.spark.sql.types.StringType))
-      .option("multiLine", value = true)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(inDir)
-      .withColumn("_filename", regexp_extract(input_file_name(), "([^/]+)$", 1))
+    val stream = Ingest.withFilename(spark.readStream
+      .schema(Ingest.uploadReadSchema).options(Ingest.uploadJsonOptions)
+      .json(inDir))
 
     val query = stream.writeStream
       .trigger(Trigger.AvailableNow())
@@ -104,13 +100,12 @@ object StreamingIngest {
   }
 
   /** One micro-batch: validate → lake append → (store, day) summary
-    * upsert → completeness ledger. Package-visible for direct batch tests. */
-  private[streaming] def processBatch(batch: DataFrame, lakeDir: String,
-                                      summaryDir: String, ledgerDir: String,
-                                      expectedStores: Long): Unit = {
+    * upsert → completeness ledger. Visible for direct batch tests. */
+  private[graft] def processBatch(batch: DataFrame, lakeDir: String,
+                                  summaryDir: String, ledgerDir: String,
+                                  expectedStores: Long): Unit = {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val validated = Ingest.withErrors(batch).cache()
     try {
       val valid = Ingest.normalize(validated).cache()
@@ -131,6 +126,7 @@ object StreamingIngest {
               sum(col("quantity")).as("item_count"))
           summary.write
             .partitionBy("sale_date", "store_id")
+            .option("partitionOverwriteMode", "dynamic")
             .mode("overwrite")
             .parquet(summaryDir)
 
@@ -143,6 +139,7 @@ object StreamingIngest {
             .withColumn("complete", col("stores_reported") === expectedStores)
           complete.write
             .partitionBy("sale_date")
+            .option("partitionOverwriteMode", "dynamic")
             .mode("overwrite")
             .parquet(ledgerDir)
         }

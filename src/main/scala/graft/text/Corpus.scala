@@ -34,17 +34,17 @@ object Corpus {
     Tables.documents(spark, dir)
 
   /** Tokenize-once silver: the documents table with the split `words`
-    * array attached, CACHED. The whole text family consumes tokens or
+    * array attached, memoized. The whole text family consumes tokens or
     * text — t1/t2/t3/t5/t6/t8, the shingle relations, exact dedup, and
     * the c1/c2 compositions — and without sharing, each operator
     * re-reads parquet and re-splits every document. At 100 TB this is
     * the tokenized bronze table written once at ingest and read by every
     * corpus job (the same materialize-once move as Dedup's shingle
-    * silver). Spark's CacheManager dedupes by logical plan, so every
-    * caller shares one entry; Bench warms it with the other silvers. */
+    * silver). Every caller shares one handle; Bench warms it with the
+    * other silvers. */
   def docsTok(spark: SparkSession, dir: String): DataFrame =
     Silver.memoize(spark, "docsTok", dir) {
-      docs(spark, dir).withColumn("words", wordsCol).cache()
+      docs(spark, dir).withColumn("words", wordsCol)
     }
 
   /** Whitespace tokens, in document order. Documents are single-space

@@ -116,7 +116,6 @@ object CorpusFilter {
         .withColumn("kept",
           col("quality_score") >= minQuality && !col("is_exact_dup") &&
             !col("is_contaminated") && !col("is_benchmark"))
-        .cache()
     }
 
   /** The kept-and-packed relation — THE single definition of the shard
@@ -144,12 +143,12 @@ object CorpusFilter {
                                     minQuality: Long = 50L,
                                     budget: Long = 512L): org.apache.spark.sql.DataFrame =
     // the shard-layout silver: x7/x9/p16/writeShards all consume it, so
-    // the handle (and its cache entry) is registered once per params —
+    // the handle is registered once per params —
     // the same planning-cost class the rollupDec/trendDirection
     // memoization closed in round 5
     graft.model.Silver.memoize(spark,
         s"corpusBuildKept:$minQuality:$budget", dir) {
-      packedKeptFrom(corpusBase(spark, dir, minQuality), budget).cache()
+      packedKeptFrom(corpusBase(spark, dir, minQuality), budget)
     }
 
   def corpusBuildSql(minQuality: Long = 50L, budget: Long = 512L): String =

@@ -1557,7 +1557,6 @@ object TextAnalysis {
             .otherwise(call_function("shiftleft", lit(1L), floorLog2(col("c")).cast("int"))))
         .groupBy("bucket")
         .agg(count(lit(1)).as("n_words"), sum("c").as("mass"))
-        .cache()
     }
 
   def goodTuring(spark: SparkSession, dir: String): DataFrame = {

@@ -77,7 +77,6 @@ object Als {
         .join(broadcast(partBrand), col("l_partkey") === col("p_partkey"))
         .groupBy(col("o_custkey").as("custkey"), col("bid"))
         .agg(sum(col("qty")).as("r"))
-        .cache()
     }
 
   /** v36: per-customer rank-2 factors + best unpurchased brand.

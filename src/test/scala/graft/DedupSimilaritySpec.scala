@@ -76,6 +76,19 @@ class DedupSimilaritySpec extends GraftSpec {
       clusterKey(Dedup.dupClusters(spark, sfDir)))
   }
 
+  test("d6/d10: cluster handles are bound to the session that asked for them") {
+    // warm both memos in the shared session first: a second session must
+    // get its own build, not a frame bound to the first session
+    Dedup.dupClusters(spark, sfDir)
+    Dedup.dupClustersXxhash(spark, sfDir)
+    val s2 = spark.newSession()
+    val d6 = Dedup.dupClusters(s2, sfDir)
+    val d10 = Dedup.dupClustersXxhash(s2, sfDir)
+    assert(d6.sparkSession eq s2)
+    assert(d10.sparkSession eq s2)
+    assert(d6.count() === Dedup.dupClusters(spark, sfDir).count())
+  }
+
   test("d13: xxhash LSH eval count algebra matches d7's true-pair total") {
     // tp + fn_estimate + fn_banding partitions the >= 0.5 true-pair set:
     // tp/fn_estimate split the candidates by estimate, fn_banding is what

@@ -108,8 +108,13 @@ class IngestStreamingSpec extends GraftSpec {
     writeUpload(in, "store_0001_2024-02-01.json", s"[$goodRecord, $goodRecord]")
     writeUpload(in, "store_0002_2024-02-01.json", s"[$goodRecord]")
 
+    // the sinks ask for dynamic partition overwrite per write; the
+    // caller's session conf (shared by every later overwrite) is untouched
+    val overwriteMode = "spark.sql.sources.partitionOverwriteMode"
+    val modeBefore = spark.conf.get(overwriteMode)
     StreamingIngest.runAvailableNow(spark, in.toString, lake.toString,
       summ.toString, ledger.toString, ckpt.toString, expectedStores = 2)
+    assert(spark.conf.get(overwriteMode) === modeBefore)
 
     val summary = spark.read.parquet(summ.toString)
     assert(summary.count() === 2) // one row per (store, date)
@@ -125,6 +130,22 @@ class IngestStreamingSpec extends GraftSpec {
     StreamingIngest.runAvailableNow(spark, in.toString, lake.toString,
       summ.toString, ledger.toString, ckpt.toString, expectedStores = 2)
     assert(spark.read.parquet(summ.toString).count() === 2)
+  }
+
+  test("streaming: a micro-batch leaves its session's overwrite mode alone") {
+    // the stream runs batches in its own cloned session; a direct call
+    // runs in the caller's, which later overwrites (static by default)
+    // share — the sinks must ask for dynamic overwrite per write
+    val in = tmp("batch_in")
+    val (lake, summ, ledger) = (tmp("batch_lake"), tmp("batch_summary"), tmp("batch_ledger"))
+    writeUpload(in, "store_0001_2024-03-01.json", s"[$goodRecord]")
+    val s2 = spark.newSession()
+    val overwriteMode = "spark.sql.sources.partitionOverwriteMode"
+    val modeBefore = s2.conf.get(overwriteMode)
+    StreamingIngest.processBatch(Ingest.readUploads(s2, in.toString),
+      lake.toString, summ.toString, ledger.toString, expectedStores = 1)
+    assert(s2.conf.get(overwriteMode) === modeBefore)
+    assert(s2.read.parquet(ledger.toString).filter(col("complete")).count() === 1)
   }
 
   test("multimodal: feature extraction is deterministic, partition-parallel, typed") {

@@ -11,14 +11,17 @@ class PushdownSpec extends GraftSpec {
   import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
   import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
-  private def scans(key: String): Seq[FileSourceScanExec] = {
+  private def scans(df: org.apache.spark.sql.DataFrame): Seq[FileSourceScanExec] = {
     def walk(p: SparkPlan): Seq[FileSourceScanExec] = p match {
       case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
       case f: FileSourceScanExec => Seq(f)
       case o => o.children.flatMap(walk)
     }
-    walk(SparkEntry.queries(key)(spark, sfDir).queryExecution.executedPlan)
+    walk(df.queryExecution.executedPlan)
   }
+
+  private def scans(key: String): Seq[FileSourceScanExec] =
+    scans(SparkEntry.queries(key)(spark, sfDir))
 
   private def scanOf(key: String, table: String): Seq[FileSourceScanExec] =
     scans(key).filter(_.metadata.getOrElse("Location", "").contains(table))
@@ -77,23 +80,12 @@ class PushdownSpec extends GraftSpec {
 
   test("fkLineitemCounts silver reads exactly the 3 FK key columns") {
     // r14 ADVICE: k8's raw-scan probe moved inside the shared silver, so
-    // nothing asserted the stacked scan's projection any more. Build the
-    // silver in a FRESH session (Silver.memoize is keyed by session
-    // identity) with leaf-materialization off, so the raw lineitem scan
-    // stays visible under the builder's cache node, and pin its schema.
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    val s2 = spark.newSession()
-    s2.conf.set("spark.graft.silver.leaf", "false")
-    def walk(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case im: InMemoryTableScanExec => walk(im.relation.cachedPlan)
-      case f: FileSourceScanExec => Seq(f)
-      case o => o.children.flatMap(walk)
-    }
-    val li = walk(SparkEntry.queries("k9_fk_integrity")(s2, sfDir)
-        .queryExecution.executedPlan)
+    // nothing asserted the stacked scan's projection any more. The
+    // memoized silver is a checkpointed leaf that hides its scan, so pin
+    // the schema on the silver's un-memoized builder plan.
+    val li = scans(analytics.Profile.fkLineitemCountsPlan(spark, sfDir))
       .filter(_.metadata.getOrElse("Location", "").contains("lineitem"))
-    assert(li.nonEmpty, "k9: raw lineitem scan not visible in fresh session")
+    assert(li.nonEmpty, "fkLineitemCounts: raw lineitem scan not visible")
     assert(li.forall(_.requiredSchema.fieldNames.toSet ==
       Set("l_orderkey", "l_partkey", "l_suppkey")),
       s"fkLineitemCounts scan widened: " +
