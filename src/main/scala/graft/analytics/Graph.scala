@@ -73,6 +73,26 @@ object Graph {
         .agg(count(lit(1)).as("c"))
     }
 
+  /** The support-pruned undirected edge set (sa < sb, c ≥ minSupport)
+    * — the one edge silver of g4–g7. */
+  private def supportEdges(spark: SparkSession, dir: String,
+                           minSupport: Int): DataFrame =
+    Silver.memoize(spark, s"lpEdges:$minSupport", dir) {
+      coPairs(spark, dir).filter(col("c") >= minSupport)
+        .select(col("sa"), col("sb"))
+    }
+
+  /** The support-pruned graph as both directed arcs (src, dst, c) —
+    * the weighted edge silver of g8/g9. */
+  private def directedEdges(spark: SparkSession, dir: String,
+                            minSupport: Int): DataFrame =
+    Silver.memoize(spark, s"pprEdges:$minSupport", dir) {
+      val e = coPairs(spark, dir).filter(col("c") >= minSupport)
+        .select(col("sa"), col("sb"), col("c"))
+      e.select(col("sa").as("src"), col("sb").as("dst"), col("c"))
+        .unionAll(e.select(col("sb").as("src"), col("sa").as("dst"), col("c")))
+    }
+
   /** Degree-oriented edge list (lo → hi by ascending (deg, id) okey)
     * of the given edge subset, leaf-memoized: the wedge and closing
     * joins each read it twice and must not rebuild the degree pass. */
@@ -300,10 +320,7 @@ object Graph {
     * core sizes, core share, core density in milli. */
   def kCore(spark: SparkSession, dir: String, k: Int = 3,
             minSupport: Int = 2): DataFrame = {
-    val edges = Silver.memoize(spark, s"kcoreEdges:$minSupport", dir) {
-      coPairs(spark, dir).filter(col("c") >= minSupport)
-        .select(col("sa"), col("sb"))
-    }
+    val edges = supportEdges(spark, dir, minSupport)
     val core = Silver.memoize(spark, s"kcore:$k:$minSupport", dir) {
       var surv = edges.select(col("sa").as("v"))
         .unionAll(edges.select(col("sb").as("v")))
@@ -430,10 +447,7 @@ object Graph {
     * wedge-scored NON-edge readout. */
   def linkPrediction(spark: SparkSession, dir: String, minSupport: Int = 2,
                      topK: Int = 30): DataFrame = {
-    val e = Silver.memoize(spark, s"lpEdges:$minSupport", dir) {
-      coPairs(spark, dir).filter(col("c") >= minSupport)
-        .select(col("sa"), col("sb"))
-    }
+    val e = supportEdges(spark, dir, minSupport)
     val nbr = e.select(col("sa").as("z"), col("sb").as("n"))
       .unionAll(e.select(col("sb").as("z"), col("sa").as("n")))
     // the degree relation is node-dimension-sized (the SKU catalog) —
@@ -521,14 +535,11 @@ object Graph {
     * loops, and the loop EXITS EARLY when a frontier drains (at most
     * [[BfsMaxHops]] rounds — a fixed, data-independent bound, so the
     * oracle's unroll is total). The readout is a ≤10-row aggregate.
-    * Edge universe = g5's memoized lpEdges leaf (priced once per
-    * session). */
+    * Edge universe = the memoized [[supportEdges]] leaf g4–g7 share
+    * (priced once per session). */
   def bfsHops(spark: SparkSession, dir: String, minSupport: Int = 2)
   : DataFrame = {
-    val e = Silver.memoize(spark, s"lpEdges:$minSupport", dir) {
-      coPairs(spark, dir).filter(col("c") >= minSupport)
-        .select(col("sa"), col("sb"))
-    }
+    val e = supportEdges(spark, dir, minSupport)
     val nbr = e.select(col("sa").as("z"), col("sb").as("n"))
       .unionAll(e.select(col("sb").as("z"), col("sa").as("n")))
     val nodes = Silver.memoize(spark, s"bfsNodes:$minSupport", dir) {
@@ -597,10 +608,7 @@ object Graph {
     * full partition of the graph. */
   def lpaCommunities(spark: SparkSession, dir: String,
                      minSupport: Int = 2): DataFrame = {
-    val e = Silver.memoize(spark, s"lpEdges:$minSupport", dir) {
-      coPairs(spark, dir).filter(col("c") >= minSupport)
-        .select(col("sa"), col("sb"))
-    }
+    val e = supportEdges(spark, dir, minSupport)
     val nbr = e.select(col("sa").as("v"), col("sb").as("n"))
       .unionAll(e.select(col("sb").as("v"), col("sa").as("n")))
     val labels = Silver.memoize(spark, s"lpaLabels:$minSupport", dir) {
@@ -830,12 +838,7 @@ object Graph {
     * one driver-side move: [[PprSeeds]] ids, a literal. */
   def personalizedPagerank(spark: SparkSession, dir: String,
                            minSupport: Int = 2): DataFrame = {
-    val de = Silver.memoize(spark, s"pprEdges:$minSupport", dir) {
-      val e = coPairs(spark, dir).filter(col("c") >= minSupport)
-        .select(col("sa"), col("sb"), col("c"))
-      e.select(col("sa").as("src"), col("sb").as("dst"), col("c"))
-        .unionAll(e.select(col("sb").as("src"), col("sa").as("dst"), col("c")))
-    }
+    val de = directedEdges(spark, dir, minSupport)
     val wdeg = Silver.memoize(spark, s"pprWdeg:$minSupport", dir) {
       de.groupBy(col("src")).agg(sum(col("c")).cast("long").as("wdeg"))
     }
@@ -906,12 +909,8 @@ object Graph {
     * The top-k cut is TakeOrderedAndProject. */
   def weightedSssp(spark: SparkSession, dir: String,
                    minSupport: Int = 2): DataFrame = {
-    val de = Silver.memoize(spark, s"pprEdges:$minSupport", dir) {
-      val e = coPairs(spark, dir).filter(col("c") >= minSupport)
-        .select(col("sa"), col("sb"), col("c"))
-      e.select(col("sa").as("src"), col("sb").as("dst"), col("c"))
-        .unionAll(e.select(col("sb").as("src"), col("sa").as("dst"), col("c")))
-    }.withColumn("w", expr("1000 DIV c + 1"))
+    val de = directedEdges(spark, dir, minSupport)
+      .withColumn("w", expr("1000 DIV c + 1"))
     val nodes = de.select(col("src").as("v")).distinct()
     val seeds = nodes.orderBy(col("v")).limit(SsspSeeds)
     val dist = Silver.memoize(spark, s"sssp:$minSupport", dir) {

@@ -1063,10 +1063,9 @@ object Sketches {
   }
 
   /** sk17: EXACT distinct counting by BITMAP PARTIAL AGGREGATION —
-    * Spark's native bitmap family (`bitmap_bucket_number` /
-    * `bitmap_bit_position` / `bitmap_construct_agg` / `bitmap_count`,
-    * the Databricks-published exact-distinct pattern). Per store, each
-    * 32 768-key bucket of the sku domain folds into one fixed 4 KB
+    * Spark's native bitmap family (the Databricks-published
+    * exact-distinct pattern), here [[graft.etl.Fold.pages]]: per store,
+    * each 32 768-key bucket of the sku domain folds into one fixed 4 KB
     * bitmap, so the aggregation state is BOUNDED and MERGEABLE:
     * map-side partials OR together, the expand-based COUNT(DISTINCT)
     * rewrite (double-shuffle at scale) never appears, and re-bucketing
@@ -1081,18 +1080,11 @@ object Sketches {
     // key — |stores| x |buckets| fixed-width rows. Memoized as a leaf so
     // the company grain folds the SAME bitmaps instead of rescanning.
     val buckets = graft.model.Silver.memoize(spark, "bitmapBuckets", dir) {
-      Tables.sales(spark, dir)
-        .select(col("store_id"), col("sku"))
-        .groupBy(col("store_id"), expr("bitmap_bucket_number(sku)").as("bucket"))
-        .agg(expr("bitmap_construct_agg(bitmap_bit_position(sku))").as("bm"))
+      graft.etl.Fold.pages.partial(Tables.sales(spark, dir))
     }
-    val perStore = buckets
-      .groupBy(col("store_id"))
-      .agg(sum(expr("bitmap_count(bm)")).as("n_distinct_skus"))
-    val company = buckets
-      .groupBy(col("bucket"))
-      .agg(expr("bitmap_or_agg(bm)").as("bm"))
-      .agg(sum(expr("bitmap_count(bm)")).as("n_distinct_company"))
+    val perStore = graft.etl.Fold.distinctOf(buckets, "n_distinct_skus", "store_id")
+    val company = graft.etl.Fold.distinctOf(graft.etl.Fold.orPages(buckets),
+      "n_distinct_company")
     perStore.crossJoin(broadcast(company))
       .orderBy(col("store_id"))
   }

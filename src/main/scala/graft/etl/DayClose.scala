@@ -5,38 +5,28 @@ import org.apache.spark.sql.functions._
 
 import graft.model.Tables
 
-/** a69: the COMPOSED incremental DAY-CLOSE — the medallion-close contract
-  * run as ONE commit, twice in a row.
+/** a69/a70: the COMPOSED incremental day-close — every maintained gold
+  * folds the same day of arrivals in ONE commit, twice in a row.
   *
-  * Every piece existed as its own hash-green key (a66 sum/count fold,
-  * a67 bitmap-distinct fold, a68 MG top-k fold, d30 dedup-index append,
-  * v39 vector-index fold); what did NOT exist was the COMPOSITION: a new
-  * day of facts arrives and every maintained silver folds from the same
-  * boundary, then the golds must equal full recompute. This key runs TWO
-  * CONSECUTIVE closes (base ≤ [[Close1]]; close 1 folds the (Close1,
-  * Close2] arrivals and PERSISTS its generation; close 2 folds the rest
-  * on top of the RE-READ generation-1 bytes) — the part no single-fold
-  * key exercises: each close's input is the previous close's physical
-  * output, exactly how a nightly pipeline compounds.
+  * Each gold's fold algebra lives in [[Fold]] (rollup, bitmap pages,
+  * Misra-Gries sketches) and each runs through [[Fold.chain]] with three
+  * slices: close 0 (≤ [[Close1]]) and close 1 ((Close1, Close2]) PERSIST
+  * their generations (`roll0`/`roll1`, `pages0`/`pages1`, `sk0`/`sk1`
+  * under the session's close root), close 2 folds the rest on top of the
+  * RE-READ generation-1 bytes — each close's input is the previous
+  * close's physical output, how a nightly pipeline compounds. The
+  * dedup-index (d30) and vector-index (v39) legs join the same commit
+  * via their snapshot/delta boundaries (doc_id/vec_id mod 10 — those
+  * tables carry no dates).
   *
-  * Fold algebra per component:
-  *  - rollup: sum/count monoid re-aggregation (decimal-exact partials);
-  *  - distinct: OR-mergeable bitmap pages (`bitmap_or_agg`), folded and
-  *    re-persisted per close — a true multi-generation fold;
-  *  - top-k: Misra-Gries binary sketches in the mergeable-summaries
-  *    late-merge discipline — each close APPENDS its day's sketch rows
-  *    (the DataSketches sketch-in-silver pattern: partials accumulate,
-  *    the gold merges at read), the final merge is exact in the
-  *    exactness regime (a68's anchor);
-  *  - the dedup-index (d30) and vector-index (v39) maintenance legs join
-  *    the same commit via their established snapshot/delta boundaries
-  *    (doc_id/vec_id mod 10 — those tables carry no dates).
-  *
+  * a69 ([[dayClose]]) delivers every fact on time; a70
+  * ([[restatedClose]]) withholds a late slice until close 2. Both are
+  * one close body over different slice predicates and index legs.
   * Output is ONE long-form relation (component, key1, key2, metric,
   * value) over all five maintained golds; the DuckDB oracle recomputes
-  * every component FROM THE RAW TABLES and projects the same long form —
-  * a single hash certifying the whole close. DayCloseSpec replays the
-  * generation-1 bytes against a direct ≤ Close2 recompute (the
+  * every component FROM THE RAW TABLES and projects the same long form
+  * — a single hash certifying the whole close. R13OpsSpec/R14OpsSpec
+  * replay the generation-1 bytes against direct recomputes (the
   * mid-generation contract the end-to-end hash cannot see). */
 object DayClose {
 
@@ -52,60 +42,10 @@ object DayClose {
   private[graft] val closeDirs =
     new graft.model.SessionMemo[String, String]()
 
-  private def day0(c: Column): Column = c <= Close1
-  private def day1(c: Column): Column = c > Close1 && c <= Close2
-  private def day2(c: Column): Column = c > Close2
-
-  // ---- the shared component fold algebra (a69's close and a70's
-  // restated close run the SAME machinery over different arrival
-  // predicates — the restatement is a delivery-schedule change, never a
-  // different fold)
-
-  /** Rollup partial: the sum/count monoid at (store, month) grain. */
-  private def rollPartial(sales: DataFrame, pred: Column): DataFrame =
-    sales.filter(pred)
-      .groupBy(col("store_id"), substring(col("sale_date"), 1, 7).as("month"))
-      .agg(sum(col("line_total")).as("gross_dec"),
-        count(lit(1)).as("n_lines"))
-
-  private def rollFold(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b).groupBy(col("store_id"), col("month"))
-      .agg(sum(col("gross_dec")).as("gross_dec"),
-        sum(col("n_lines")).as("n_lines"))
-
-  /** Distinct partial: OR-mergeable bitmap pages. */
-  private def pages(sales: DataFrame, pred: Column): DataFrame =
-    sales.filter(pred)
-      .groupBy(col("store_id"),
-        expr("bitmap_bucket_number(sku)").as("bucket"))
-      .agg(expr("bitmap_construct_agg(bitmap_bit_position(sku))").as("bm"))
-
-  private def pageFold(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b).groupBy(col("store_id"), col("bucket"))
-      .agg(expr("bitmap_or_agg(bm)").as("bm"))
-
-  private def distinctOf(pagesDf: DataFrame): DataFrame =
-    pagesDf.groupBy(col("store_id"))
-      .agg(sum(expr("bitmap_count(bm)")).as("n_distinct_skus"))
-
-  /** Top-k partial: one MG sketch row per store (late-merge rows). */
-  private def sketches(sales: DataFrame, pred: Column): DataFrame =
-    sales.filter(pred)
-      .groupBy(col("store_id"))
-      .agg(graft.functions.TopKByCount
-        .topKSketch(col("sku").cast("string"),
-          graft.analytics.Sketches.exactSummarySize).as("sketch"))
-
-  private def topkOf(sketchRows: DataFrame): DataFrame =
-    sketchRows
-      .groupBy(col("store_id"))
-      .agg(graft.functions.TopKByCount
-        .topKMergeSketch(col("sketch"),
-          graft.analytics.Sketches.exactSummarySize).as("mg"))
-      .select(col("store_id"),
-        posexplode(slice(col("mg.items"), 1, 5)).as(Seq("idx", "item")))
-      .select(col("store_id"), (col("idx") + 1).cast("long").as("rank"),
-        col("item.sku").as("sku"), col("item.est_count").as("est_count"))
+  private def saleDate: Column = col("sale_date")
+  private def day0: Column = saleDate <= Close1
+  private def day1: Column = saleDate > Close1 && saleDate <= Close2
+  private def day2: Column = saleDate > Close2
 
   private def longForm(component: String, key1: Column, key2: Column,
                        metric: String, value: Column): Column =
@@ -113,88 +53,68 @@ object DayClose {
       key2.as("key2"), lit(metric).as("metric"),
       value.cast("double").as("value"))
 
-  def dayClose(spark: SparkSession, dir: String): DataFrame =
-    graft.model.Silver.memoize(spark, "a69DayClose", dir) {
-      val root = closeDirs.getOrElseUpdate((spark, dir),
-        Scratch.tempDir("a69-closes"))
+  /** `df` projected to long-form rows, one per `rows` entry. */
+  private def longRows(df: DataFrame, rows: Column*): DataFrame =
+    df.select(explode(array(rows: _*)).as("r")).select(col("r.*"))
+
+  /** The one close body: the three dated golds folded through
+    * [[Fold.chain]] over `slices` (close 0, close 1, close 2) under a
+    * session-scoped root kept in `dirs`, then the index legs, all
+    * projected to one long-form relation. */
+  private def close(spark: SparkSession, dir: String, memo: String,
+                    dirs: graft.model.SessionMemo[String, String],
+                    tag: String, slices: Seq[Column])(
+                    legs: => Seq[DataFrame]): DataFrame =
+    graft.model.Silver.memoize(spark, memo, dir) {
+      val root = dirs.getOrElseUpdate((spark, dir), Scratch.tempDir(tag))
       val sales = Tables.sales(spark, dir)
-      val sd = col("sale_date")
-
-      // ---- rollup: the sum/count monoid, folded close-over-close
-      rollPartial(sales, day0(sd)).write.mode("overwrite")
-        .parquet(s"$root/roll0")
-      rollFold(spark.read.parquet(s"$root/roll0"),
-          rollPartial(sales, day1(sd)))
-        .write.mode("overwrite").parquet(s"$root/roll1")
-      val rollGold = rollFold(spark.read.parquet(s"$root/roll1"),
-        rollPartial(sales, day2(sd)))
-
-      // ---- distinct: OR-mergeable bitmap pages, re-persisted per close
-      pages(sales, day0(sd)).write.mode("overwrite")
-        .parquet(s"$root/pages0")
-      pageFold(spark.read.parquet(s"$root/pages0"),
-          pages(sales, day1(sd)))
-        .write.mode("overwrite").parquet(s"$root/pages1")
-      val distinctGold = distinctOf(pageFold(
-        spark.read.parquet(s"$root/pages1"), pages(sales, day2(sd))))
-
-      // ---- top-k: MG sketches, late-merge (each close appends its rows)
-      sketches(sales, day0(sd)).write.mode("overwrite")
-        .parquet(s"$root/sk0")
-      spark.read.parquet(s"$root/sk0")
-        .unionByName(sketches(sales, day1(sd)))
-        .write.mode("overwrite").parquet(s"$root/sk1")
-      val topkGold = topkOf(spark.read.parquet(s"$root/sk1")
-        .unionByName(sketches(sales, day2(sd))))
-
-      // ---- the index-maintenance legs of the same commit
-      val dedupLeg = graft.dedup.Dedup.indexMaintenance(spark, dir)
-      val vectorLeg = graft.vector.IndexCompaction.compactionApplied(spark, dir)
-
-      // ---- one long-form relation over all five maintained golds
-      val rollRows = rollGold.select(explode(array(
-        longForm("rollup", col("store_id"), col("month"),
-          "total_sales", col("gross_dec").cast("double")),
-        longForm("rollup", col("store_id"), col("month"),
-          "n_lines", col("n_lines")))).as("r")).select(col("r.*"))
-      val distinctRows = distinctGold.select(
-        longForm("distinct", col("store_id"), lit(""),
-          "n_distinct_skus", col("n_distinct_skus")).as("r"))
-        .select(col("r.*"))
-      val topkRows = topkGold.select(
-        longForm("topk", col("store_id"),
-          concat(col("rank").cast("string"), lit(":"), col("sku")),
-          "est_count", col("est_count")).as("r")).select(col("r.*"))
-      val dedupRows = dedupLeg.select(
-        longForm("dedup_index", col("doc_id").cast("string"),
-          concat(col("verdict_before"), lit("->"), col("verdict_after")),
-          "maintained", lit(1.0)).as("r")).select(col("r.*"))
-      val vectorRows = vectorLeg.select(
-        longForm("vector_index", col("query_id").cast("string"),
-          concat(col("rank").cast("string"), lit(":"),
-            col("neighbor_id").cast("string")),
-          "cosine", col("cosine")).as("r")).select(col("r.*"))
-      rollRows.unionByName(distinctRows).unionByName(topkRows)
-        .unionByName(dedupRows).unionByName(vectorRows)
+      def gold(name: String, p: Fold.Partial): DataFrame =
+        Fold.chain(spark, root, name, sales, p, slices)
+      val roll = Fold.rollupOf(gold("roll", Fold.rollup))
+      val distinct = Fold.distinctOf(gold("pages", Fold.pages),
+        "n_distinct_skus", "store_id")
+      val topk = Fold.topKOf(gold("sk", Fold.sketches), 5)
+      val golds = Seq(
+        longRows(roll,
+          longForm("rollup", col("store_id"), col("month"),
+            "total_sales", col("total_sales")),
+          longForm("rollup", col("store_id"), col("month"),
+            "n_lines", col("n_lines"))),
+        longRows(distinct,
+          longForm("distinct", col("store_id"), lit(""),
+            "n_distinct_skus", col("n_distinct_skus"))),
+        longRows(topk,
+          longForm("topk", col("store_id"),
+            concat(col("rank").cast("string"), lit(":"), col("sku")),
+            "est_count", col("est_count"))))
+      (golds ++ legs).reduce(_ unionByName _)
         .orderBy(col("component"), col("key1"), col("key2"), col("metric"))
     }
 
-  /** Full recompute of all five golds from the raw tables, same long
-    * form — the one-hash certification of the whole close. */
-  def dayCloseSql(): String =
-    s"""WITH s AS (${Tables.salesSql}),
-       |roll AS (
-       |  SELECT store_id, substring(sale_date, 1, 7) AS month,
-       |    CAST(SUM(line_total) AS DOUBLE) AS total_sales,
-       |    CAST(COUNT(*) AS BIGINT) AS n_lines
-       |  FROM s GROUP BY 1, 2),
-       |dist AS (
-       |  SELECT store_id,
-       |    CAST(COUNT(DISTINCT sku) AS BIGINT) AS n_distinct_skus
-       |  FROM s GROUP BY 1),
+  /** a69: two consecutive on-time closes over [[Close1]]/[[Close2]]. */
+  def dayClose(spark: SparkSession, dir: String): DataFrame =
+    close(spark, dir, "a69DayClose", closeDirs, "a69-closes",
+        Seq(day0, day1, day2)) {
+      Seq(
+        longRows(graft.dedup.Dedup.indexMaintenance(spark, dir),
+          longForm("dedup_index", col("doc_id").cast("string"),
+            concat(col("verdict_before"), lit("->"), col("verdict_after")),
+            "maintained", lit(1.0))),
+        longRows(graft.vector.IndexCompaction.compactionApplied(spark, dir),
+          longForm("vector_index", col("query_id").cast("string"),
+            concat(col("rank").cast("string"), lit(":"),
+              col("neighbor_id").cast("string")),
+            "cosine", col("cosine"))))
+    }
+
+  /** The one close oracle: full recompute of the dated golds (the
+    * a66–a68 oracles) plus the index legs' CTEs `dd`/`vx` and their
+    * long-form rows. */
+  private def closeSql(legs: String, ddRows: String, vxRows: String): String =
+    s"""WITH roll AS (${Materialize.incrementalRollupSql()}),
+       |dist AS (${Materialize.incrementalDistinctSql()}),
        |tk AS (${Materialize.incrementalTopKSql(5)}),
-       |dd AS (${graft.dedup.Dedup.indexMaintenanceSql()}),
-       |vx AS (${graft.vector.IndexCompaction.compactionAppliedSql()})
+       |$legs
        |SELECT * FROM (
        |  SELECT 'rollup' AS component, store_id AS key1, month AS key2,
        |    'total_sales' AS metric, total_sales AS value FROM roll
@@ -209,14 +129,23 @@ object DayClose {
        |    CAST(rank AS VARCHAR) || ':' || sku, 'est_count',
        |    CAST(est_count AS DOUBLE) FROM tk
        |  UNION ALL
-       |  SELECT 'dedup_index', CAST(doc_id AS VARCHAR),
-       |    verdict_before || '->' || verdict_after, 'maintained',
-       |    CAST(1 AS DOUBLE) FROM dd
+       |  $ddRows
        |  UNION ALL
-       |  SELECT 'vector_index', CAST(query_id AS VARCHAR),
-       |    CAST(rank AS VARCHAR) || ':' || CAST(neighbor_id AS VARCHAR),
-       |    'cosine', cosine FROM vx
+       |  $vxRows
        |) ORDER BY component, key1, key2, metric""".stripMargin
+
+  /** Full recompute of all five golds from the raw tables, same long
+    * form — the one-hash certification of the whole close. */
+  def dayCloseSql(): String =
+    closeSql(
+      s"""dd AS (${graft.dedup.Dedup.indexMaintenanceSql()}),
+         |vx AS (${graft.vector.IndexCompaction.compactionAppliedSql()})""".stripMargin,
+      """SELECT 'dedup_index', CAST(doc_id AS VARCHAR),
+        |    verdict_before || '->' || verdict_after, 'maintained',
+        |    CAST(1 AS DOUBLE) FROM dd""".stripMargin,
+      """SELECT 'vector_index', CAST(query_id AS VARCHAR),
+        |    CAST(rank AS VARCHAR) || ':' || CAST(neighbor_id AS VARCHAR),
+        |    'cosine', cosine FROM vx""".stripMargin)
 
   // ---------------------------------------------------------------- a70
 
@@ -227,6 +156,9 @@ object DayClose {
   val LateMod = 10
   val LateRes = 7
 
+  private def late: Column =
+    pmod(col("l_orderkey"), lit(LateMod)) === lit(LateRes) && saleDate <= Close2
+
   /** a70 generation roots per (session, sfDir) — spec hook. */
   private[graft] val restateDirs =
     new graft.model.SessionMemo[String, String]()
@@ -236,13 +168,12 @@ object DayClose {
     * late slice (k13's feed, dated ≤ [[Close2]]) is WITHHELD from
     * close 0 and close 1 — both generations persist WITHOUT it — and
     * close 2 delivers it alongside the normal > [[Close2]] arrivals.
-    * Every dated gold folds the correction through the SAME algebra as
-    * its on-time arrivals ([[rollFold]]'s monoid add at (store, month)
-    * grain, [[pageFold]]'s bitmap OR, the MG sketch appended as one
-    * more late-merge row) — restatement is a delivery-schedule change,
-    * never a special case — and the golds must equal full recompute on
-    * the corrected facts (k13's merge-equals-recompute contract,
-    * composed through two persisted generations).
+    * Every dated gold folds the correction through the SAME [[Fold]]
+    * algebra and the same close body as its on-time arrivals —
+    * restatement is a delivery-schedule change (different slice
+    * predicates), never a special case — and the golds must equal full
+    * recompute on the corrected facts (k13's merge-equals-recompute
+    * contract, composed through two persisted generations).
     *
     * The index legs join the commit as measured RE-DELIVERY probes: the
     * restated close re-delivers the delta batch, and the PutIfAbsent
@@ -254,115 +185,33 @@ object DayClose {
     * the physical bytes, predicted trivially by the oracle.
     *
     * Reference analogue: the unconditional (store, date) overwrite on
-    * re-delivery, write-metrics/lambda_function.py:104. DayCloseSpec
+    * re-delivery, write-metrics/lambda_function.py:104. R14OpsSpec
     * replays correction-before (generation 1 must equal an on-time-only
     * recompute — the late rows are really absent) and correction-after
     * (the gold equals the full recompute). */
   def restatedClose(spark: SparkSession, dir: String): DataFrame =
-    graft.model.Silver.memoize(spark, "a70RestatedClose", dir) {
-      val root = restateDirs.getOrElseUpdate((spark, dir),
-        Scratch.tempDir("a70-closes"))
-      val sales = Tables.sales(spark, dir)
-      val sd = col("sale_date")
-      val late = pmod(col("l_orderkey"), lit(LateMod)) === lit(LateRes) &&
-        sd <= lit(Close2)
-
-      // ---- rollup generations, correction withheld then folded late
-      rollPartial(sales, day0(sd) && !late).write.mode("overwrite")
-        .parquet(s"$root/roll0")
-      rollFold(spark.read.parquet(s"$root/roll0"),
-          rollPartial(sales, day1(sd) && !late))
-        .write.mode("overwrite").parquet(s"$root/roll1")
-      val rollGold = rollFold(spark.read.parquet(s"$root/roll1"),
-        rollPartial(sales, day2(sd) || late))
-
-      // ---- bitmap distinct through the same chain
-      pages(sales, day0(sd) && !late).write.mode("overwrite")
-        .parquet(s"$root/pages0")
-      pageFold(spark.read.parquet(s"$root/pages0"),
-          pages(sales, day1(sd) && !late))
-        .write.mode("overwrite").parquet(s"$root/pages1")
-      val distinctGold = distinctOf(pageFold(
-        spark.read.parquet(s"$root/pages1"),
-        pages(sales, day2(sd) || late)))
-
-      // ---- MG top-k: the correction is one more late-merge sketch row
-      sketches(sales, day0(sd) && !late).write.mode("overwrite")
-        .parquet(s"$root/sk0")
-      spark.read.parquet(s"$root/sk0")
-        .unionByName(sketches(sales, day1(sd) && !late))
-        .write.mode("overwrite").parquet(s"$root/sk1")
-      val topkGold = topkOf(spark.read.parquet(s"$root/sk1")
-        .unionByName(sketches(sales, day2(sd) || late)))
-
-      // ---- re-delivery probes of the maintained physical indexes
-      val dedupLeg = graft.dedup.Dedup.redeliveryProbe(spark, dir)
-      val vectorLeg =
-        graft.vector.IndexCompaction.redeliveryProbe(spark, dir)
-
-      val rollRows = rollGold.select(explode(array(
-        longForm("rollup", col("store_id"), col("month"),
-          "total_sales", col("gross_dec").cast("double")),
-        longForm("rollup", col("store_id"), col("month"),
-          "n_lines", col("n_lines")))).as("r")).select(col("r.*"))
-      val distinctRows = distinctGold.select(
-        longForm("distinct", col("store_id"), lit(""),
-          "n_distinct_skus", col("n_distinct_skus")).as("r"))
-        .select(col("r.*"))
-      val topkRows = topkGold.select(
-        longForm("topk", col("store_id"),
-          concat(col("rank").cast("string"), lit(":"), col("sku")),
-          "est_count", col("est_count")).as("r")).select(col("r.*"))
-      val dedupRows = dedupLeg.select(
-        longForm("dedup_index", col("doc_id").cast("string"),
-          lit("redelivered"), "not_novel",
-          col("not_novel").cast("double")).as("r")).select(col("r.*"))
-      val vectorRows = vectorLeg.select(
-        longForm("vector_index", col("vec_id").cast("string"),
-          lit("redelivered"), "present_once",
-          col("present_once")).as("r")).select(col("r.*"))
-      rollRows.unionByName(distinctRows).unionByName(topkRows)
-        .unionByName(dedupRows).unionByName(vectorRows)
-        .orderBy(col("component"), col("key1"), col("key2"), col("metric"))
+    close(spark, dir, "a70RestatedClose", restateDirs, "a70-closes",
+        Seq(day0 && !late, day1 && !late, day2 || late)) {
+      Seq(
+        longRows(graft.dedup.Dedup.redeliveryProbe(spark, dir),
+          longForm("dedup_index", col("doc_id").cast("string"),
+            lit("redelivered"), "not_novel", col("not_novel"))),
+        longRows(graft.vector.IndexCompaction.redeliveryProbe(spark, dir),
+          longForm("vector_index", col("vec_id").cast("string"),
+            lit("redelivered"), "present_once", col("present_once"))))
     }
 
   /** Full recompute of the dated golds from the raw tables plus the
     * trivial re-delivery predictions — the one-hash certification that
     * the correction landed and the indexes did not double-ingest. */
   def restatedCloseSql(): String =
-    s"""WITH s AS (${Tables.salesSql}),
-       |roll AS (
-       |  SELECT store_id, substring(sale_date, 1, 7) AS month,
-       |    CAST(SUM(line_total) AS DOUBLE) AS total_sales,
-       |    CAST(COUNT(*) AS BIGINT) AS n_lines
-       |  FROM s GROUP BY 1, 2),
-       |dist AS (
-       |  SELECT store_id,
-       |    CAST(COUNT(DISTINCT sku) AS BIGINT) AS n_distinct_skus
-       |  FROM s GROUP BY 1),
-       |tk AS (${Materialize.incrementalTopKSql(5)}),
-       |dd AS (SELECT doc_id FROM documents
-       |       WHERE doc_id % 10 >= ${graft.dedup.Dedup.SnapshotMod}),
-       |vx AS (SELECT vec_id FROM embeddings
-       |       WHERE vec_id % 10 >= ${graft.vector.IndexCompaction.SnapshotMod})
-       |SELECT * FROM (
-       |  SELECT 'rollup' AS component, store_id AS key1, month AS key2,
-       |    'total_sales' AS metric, total_sales AS value FROM roll
-       |  UNION ALL
-       |  SELECT 'rollup', store_id, month, 'n_lines',
-       |    CAST(n_lines AS DOUBLE) FROM roll
-       |  UNION ALL
-       |  SELECT 'distinct', store_id, '', 'n_distinct_skus',
-       |    CAST(n_distinct_skus AS DOUBLE) FROM dist
-       |  UNION ALL
-       |  SELECT 'topk', store_id,
-       |    CAST(rank AS VARCHAR) || ':' || sku, 'est_count',
-       |    CAST(est_count AS DOUBLE) FROM tk
-       |  UNION ALL
-       |  SELECT 'dedup_index', CAST(doc_id AS VARCHAR), 'redelivered',
-       |    'not_novel', CAST(1 AS DOUBLE) FROM dd
-       |  UNION ALL
-       |  SELECT 'vector_index', CAST(vec_id AS VARCHAR), 'redelivered',
-       |    'present_once', CAST(1 AS DOUBLE) FROM vx
-       |) ORDER BY component, key1, key2, metric""".stripMargin
+    closeSql(
+      s"""dd AS (SELECT doc_id FROM documents
+         |       WHERE doc_id % 10 >= ${graft.dedup.Dedup.SnapshotMod}),
+         |vx AS (SELECT vec_id FROM embeddings
+         |       WHERE vec_id % 10 >= ${graft.vector.IndexCompaction.SnapshotMod})""".stripMargin,
+      """SELECT 'dedup_index', CAST(doc_id AS VARCHAR), 'redelivered',
+        |    'not_novel', CAST(1 AS DOUBLE) FROM dd""".stripMargin,
+      """SELECT 'vector_index', CAST(vec_id AS VARCHAR), 'redelivered',
+        |    'present_once', CAST(1 AS DOUBLE) FROM vx""".stripMargin)
 }

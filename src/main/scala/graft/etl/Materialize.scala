@@ -126,39 +126,21 @@ object Materialize {
     * key, not just concatenate disjoint ranges. */
   val IngestBoundary = "1995-06-15"
 
-  /** a66: INCREMENTAL AGGREGATE MAINTENANCE — the IVM step that closes
-    * the incremental-lifecycle triad (d29 dedups the delta, v38 searches
-    * it, a66 folds it into the gold rollup): the monthly revenue rollup
-    * is maintained as base-silver ⊕ delta, where the base partial is
-    * PHYSICALLY MATERIALIZED to parquet (yesterday's silver, exactly
-    * what [[writeSummaries]] persists), today's delta is aggregated
-    * alone (work ∝ delta), and ⊕ is re-aggregation of the sum/count
-    * monoid over the union. The ORACLE recomputes the rollup from the
-    * full fact table, so the hash match is the machine-checked proof
-    * that partial-aggregate merge == full recompute — history is never
-    * rescanned, the algebra guarantees the same bytes. Decimal partials
-    * make ⊕ exact (the [[StoreDaily.paymentDec]] argument); a
-    * float-summed silver could not offer this contract. */
+  /** The two a66–a68 generations: yesterday's silver, today's arrivals. */
+  private def boundarySlices: Seq[org.apache.spark.sql.Column] =
+    Seq(col("sale_date") <= IngestBoundary, col("sale_date") > IngestBoundary)
+
+  /** a66: INCREMENTAL AGGREGATE MAINTENANCE — the monthly revenue
+    * rollup maintained as a [[Fold.rollup]] fold over the
+    * [[IngestBoundary]] split: generation 0 is persisted to parquet
+    * (yesterday's silver, what [[writeSummaries]] persists), today's
+    * delta is aggregated alone and merged on top. The oracle recomputes
+    * from the full fact table, so the hash match certifies
+    * partial-aggregate merge == full recompute. */
   def incrementalRollup(spark: SparkSession, dir: String): DataFrame =
     graft.model.Silver.memoize(spark, "a66IncrementalRollup", dir) {
-      val root = Scratch.tempDir("a66-silver")
-      def partial(pred: org.apache.spark.sql.Column): DataFrame =
-        graft.model.Tables.sales(spark, dir)
-          .filter(pred)
-          .groupBy(col("store_id"),
-            substring(col("sale_date"), 1, 7).as("month"))
-          .agg(sum(col("line_total")).as("gross_dec"),
-            count(lit(1)).as("n_lines"))
-      partial(col("sale_date") <= IngestBoundary)
-        .write.mode("overwrite").parquet(s"$root/base")
-      spark.read.parquet(s"$root/base")
-        .unionByName(partial(col("sale_date") > IngestBoundary))
-        .groupBy(col("store_id"), col("month"))
-        .agg(sum(col("gross_dec")).as("gross_dec"),
-          sum(col("n_lines")).as("n_lines"))
-        .select(col("store_id"), col("month"),
-          col("gross_dec").cast("double").as("total_sales"),
-          col("n_lines"))
+      Fold.rollupOf(Fold.chain(spark, Scratch.tempDir("a66-silver"), "roll",
+          graft.model.Tables.sales(spark, dir), Fold.rollup, boundarySlices))
         .orderBy(col("store_id"), col("month"))
     }
 
@@ -173,38 +155,17 @@ object Materialize {
 
   // ---------------------------------------------------------------- a67
 
-  /** a67: INCREMENTAL EXACT DISTINCT — IVM past the sum/count monoid
-    * (a66's natural sequel): the per-store distinct-sku count
-    * maintained as OR-mergeable bitmap partials (sk17's discipline).
-    * Yesterday's (store, bucket) bitmaps are PHYSICALLY materialized to
-    * parquet (a binary column, one fixed 4 KB page per 32 768-key sku
-    * bucket), today's delta is aggregated alone (work ∝ delta), ⊕ is
-    * `bitmap_or_agg` over the union, and `bitmap_count` reads the
-    * answer. COUNT(DISTINCT) is NOT a sum-monoid — naive partials
-    * double-count keys seen on both sides of the boundary; the bitmap
-    * page is the classic exactly-mergeable representation. The oracle
-    * recomputes COUNT(DISTINCT sku) from the full fact table, so the
-    * hash match proves base ⊕ delta == full recompute on the OR monoid
-    * — history never rescanned, and unlike the HLL rung (sk1) the
-    * result is EXACT, so it rides the hash gate. */
+  /** a67: INCREMENTAL EXACT DISTINCT — the per-store distinct-sku
+    * count maintained as a [[Fold.pages]] fold over the same split
+    * as a66: IVM past the sum/count monoid. Unlike the HLL rung (sk1)
+    * the result is exact, so the oracle's full-recompute
+    * COUNT(DISTINCT) hash-certifies base ⊕ delta. */
   def incrementalDistinct(spark: SparkSession, dir: String): DataFrame =
     graft.model.Silver.memoize(spark, "a67IncrementalDistinct", dir) {
-      val root = Scratch.tempDir("a67-silver")
-      def buckets(pred: org.apache.spark.sql.Column): DataFrame =
-        graft.model.Tables.sales(spark, dir)
-          .filter(pred)
-          .groupBy(col("store_id"),
-            expr("bitmap_bucket_number(sku)").as("bucket"))
-          .agg(expr("bitmap_construct_agg(bitmap_bit_position(sku))")
-            .as("bm"))
-      buckets(col("sale_date") <= IngestBoundary)
-        .write.mode("overwrite").parquet(s"$root/base")
-      spark.read.parquet(s"$root/base")
-        .unionByName(buckets(col("sale_date") > IngestBoundary))
-        .groupBy(col("store_id"), col("bucket"))
-        .agg(expr("bitmap_or_agg(bm)").as("bm"))
-        .groupBy(col("store_id"))
-        .agg(sum(expr("bitmap_count(bm)")).as("n_distinct_skus"))
+      Fold.distinctOf(
+          Fold.chain(spark, Scratch.tempDir("a67-silver"), "pages",
+            graft.model.Tables.sales(spark, dir), Fold.pages, boundarySlices),
+          "n_distinct_skus", "store_id")
         .orderBy(col("store_id"))
     }
 
@@ -218,43 +179,20 @@ object Materialize {
 
   // ---------------------------------------------------------------- a68
 
-  /** a68: INCREMENTAL TOP-K — IVM on the Misra-Gries summary, the third
+  /** a68: INCREMENTAL TOP-K — per-store heavy hitters maintained as a
+    * [[Fold.sketches]] fold over the same split as a66: the third
     * non-trivially-mergeable rung (a66 sum/count, a67 OR-bitmap, a68
-    * heavy hitters). Yesterday's per-store MG sketch is PHYSICALLY
-    * persisted as a binary column ([[graft.functions.TopKSketch]]'s
-    * wire format — the DataSketches sketch-in-silver pattern), today's
-    * delta is sketched alone (work ∝ delta), and ⊕ is the
-    * mergeable-summaries combine ([[graft.functions.TopKMergeSketch]])
-    * folding the two sketch rows per store back into a summary. In the
-    * exactness regime (summarySize ≥ per-store distinct skus, sk4's
-    * anchor) the merged summary is EXACT with max_err = 0, so the
-    * DuckDB oracle — a full-recompute COUNT + ROW_NUMBER ranking —
-    * hash-certifies partial-merge == full recompute on an aggregate
-    * whose naive partials (per-slice top-k lists) would NOT merge
-    * correctly. */
+    * Misra-Gries). Naive partials (per-slice top-k lists) would not
+    * merge correctly; in the sketches' exactness regime the merged
+    * summary is exact with max_err = 0, so the oracle's full-recompute
+    * COUNT + ROW_NUMBER ranking hash-certifies it. */
   def incrementalTopK(spark: SparkSession, dir: String,
                       topK: Int = 5): DataFrame =
     graft.model.Silver.memoize(spark, "a68IncrementalTopK", dir) {
-      val root = Scratch.tempDir("a68-silver")
-      val size = graft.analytics.Sketches.exactSummarySize
-      def sketch(pred: org.apache.spark.sql.Column): DataFrame =
-        graft.model.Tables.sales(spark, dir)
-          .filter(pred)
-          .groupBy(col("store_id"))
-          .agg(graft.functions.TopKByCount
-            .topKSketch(col("sku").cast("string"), size).as("sketch"))
-      sketch(col("sale_date") <= IngestBoundary)
-        .write.mode("overwrite").parquet(s"$root/base")
-      spark.read.parquet(s"$root/base")
-        .unionByName(sketch(col("sale_date") > IngestBoundary))
-        .groupBy(col("store_id"))
-        .agg(graft.functions.TopKByCount
-          .topKMergeSketch(col("sketch"), size).as("mg"))
-        .select(col("store_id"), col("mg.max_err").as("max_err"),
-          posexplode(slice(col("mg.items"), 1, topK)).as(Seq("idx", "item")))
-        .select(col("store_id"), (col("idx") + 1).cast("long").as("rank"),
-          col("item.sku").as("sku"), col("item.est_count").as("est_count"),
-          col("max_err"))
+      Fold.topKOf(
+          Fold.chain(spark, Scratch.tempDir("a68-silver"), "sk",
+            graft.model.Tables.sales(spark, dir), Fold.sketches, boundarySlices),
+          topK)
         .orderBy("store_id", "rank")
     }
 

@@ -177,16 +177,15 @@ object StoreDaily {
     * map_from_entries over the per-method aggregate). Not oracle-checked
     * (nested values don't hash-compare portably — their flat projections
     * j6/x1/a2 are); value-consistency with the flat relations is
-    * spec-tested. */
+    * spec-tested. The payment map reads the [[paymentDec]] silver
+    * a2/a6/x1 share, so the orders join is not re-run. */
   def summaryDocument(spark: SparkSession, dir: String): DataFrame = {
     val base = rollupDec(spark, dir)
     val top = topProductsDec(spark, dir, 5)
       .groupBy(col("store_id"), col("sale_date"))
       .agg(array_sort(collect_list(struct(col("rank"), col("sku"),
         col("units"), col("rev_dec")))).as("top_products"))
-    val pay = Tables.salesWithPayment(spark, dir)
-      .groupBy(col("store_id"), col("sale_date"), col("payment_method"))
-      .agg(sum(col("line_total") - col("discount_amount")).as("amt_dec"))
+    val pay = paymentDec(spark, dir)
       .groupBy(col("store_id"), col("sale_date"))
       .agg(map_from_entries(array_sort(collect_list(
         struct(col("payment_method"), col("amt_dec"))))).as("payment_breakdown"))

@@ -45,18 +45,18 @@ import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
   * groups: 1.6×; 1M groups (≈ one group per 8 rows): 0.42× — sort wins
   * when nearly every row opens a fresh heap and the hash-map churn
   * dominates. That is the classic selectivity-dependent rewrite
-  * trade-off, and group-key NDV is exactly what Catalyst has no
-  * estimate for at this point in the plan, so the choice is a session
-  * knob rather than a silent heuristic:
-  * `spark.graft.groupTopK.enabled=false` keeps the stock
-  * WindowGroupLimit plan. The library's own ranking keys sit in the
-  * winning regime (stores × days, queries, event types — bounded
-  * dimensions, never row-cardinality groups).
+  * trade-off. When the child carries column statistics the rewrite
+  * keeps the stock plan outside the winning regime
+  * ([[GroupTopKRewrite]]'s regime guard); without them it fires — the
+  * library's own ranking keys sit in the winning regime (stores × days,
+  * queries, event types — bounded dimensions, never row-cardinality
+  * groups).
   *
   * Registered via [[graft.GraftExtensions]]: [[GroupTopKRewrite]]
   * (an `injectOptimizerRule`) swaps the Filter+Window+WindowGroupLimit
   * pattern for the custom logical node; [[GroupTopKStrategy]]
-  * (an `injectPlannerStrategy`) lowers it. Opt-in by session; the
+  * (an `injectPlannerStrategy`) lowers it. Opt-in by session (a
+  * session without [[graft.GraftExtensions]] keeps the stock plan); the
   * driver surfaces (Verify/Bench) install the extensions, so the
   * DuckDB oracle sweep re-certifies every ranking key UNDER the
   * rewrite each round (bit-parity is also GroupTopKSpec's contract). */
@@ -85,10 +85,13 @@ case class GroupTopK(
   * rows/group — see [[GroupTopK]]'s scaladoc). When the child carries
   * CBO column statistics for every partition key, the rewrite computes
   * estimated rows-per-group = rowCount / Π ndv(key) and KEEPS THE
-  * STOCK PLAN below `spark.graft.groupTopK.minRowsPerGroup` (default
-  * 64 — the log-midpoint of the measured 8×-losing and 1.6×-winning
-  * regimes). Without stats the session knob alone decides, as before. */
+  * STOCK PLAN below [[MinRowsPerGroup]]. Without stats the rewrite
+  * fires. */
 object GroupTopKRewrite extends Rule[LogicalPlan] {
+
+  /** The regime floor: the log-midpoint of the measured 8×-losing and
+    * 1.6×-winning rows-per-group regimes. */
+  private val MinRowsPerGroup = 64
 
   private def limitFrom(cond: Expression, rank: Attribute): Option[Int] =
     cond match {
@@ -110,11 +113,9 @@ object GroupTopKRewrite extends Rule[LogicalPlan] {
     }
 
   /** True when the heap operator's regime is plausible: either no
-    * usable statistics (the session knob is the only signal), or the
-    * estimated rows-per-group clears the configured floor. */
+    * usable statistics, or the estimated rows-per-group clears
+    * [[MinRowsPerGroup]]. */
   private def heapRegime(child: LogicalPlan, groupExprs: Seq[Expression]): Boolean = {
-    val minRowsPerGroup = BigInt(
-      conf.getConfString("spark.graft.groupTopK.minRowsPerGroup", "64").toLong)
     val stats = child.stats
     stats.rowCount match {
       case Some(rows) if rows > 0 && groupExprs.nonEmpty =>
@@ -127,16 +128,14 @@ object GroupTopKRewrite extends Rule[LogicalPlan] {
         }
         if (ndvs.forall(_.isDefined)) {
           val groups = ndvs.flatten.map(_.max(BigInt(1))).product.min(rows)
-          rows >= groups * minRowsPerGroup
+          rows >= groups * MinRowsPerGroup
         } else true
       case _ => true
     }
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case f @ Filter(cond, w: logical.Window)
-        if w.windowExpressions.size == 1 &&
-          conf.getConfString("spark.graft.groupTopK.enabled", "true") == "true" =>
+    case f @ Filter(cond, w: logical.Window) if w.windowExpressions.size == 1 =>
       w.windowExpressions.head match {
         case a @ Alias(WindowExpression(_: RowNumber,
             WindowSpecDefinition(_, _, SpecifiedWindowFrame(

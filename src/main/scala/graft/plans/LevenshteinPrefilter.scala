@@ -22,9 +22,9 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * qualify (a nondeterministic operand would be evaluated twice with
   * different draws, changing which rows survive). Idempotent: a
   * conjunct already present (semantically) is never re-added, so the
-  * fixed-point optimizer converges. Kill switch:
-  * `spark.graft.levenshteinPrefilter.enabled=false`. Bit-parity and
-  * plan shape are LevenshteinPrefilterSpec's contract. */
+  * fixed-point optimizer converges. Active in sessions built with
+  * [[graft.GraftExtensions]]. Bit-parity and plan shape are
+  * LevenshteinPrefilterSpec's contract. */
 object LevenshteinPrefilter extends Rule[LogicalPlan] with PredicateHelper {
 
   /** Unwraps levenshtein(a, b), with or without the bigint cast. */
@@ -67,9 +67,7 @@ object LevenshteinPrefilter extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (conf.getConfString("spark.graft.levenshteinPrefilter.enabled",
-        "true") != "true") plan
-    else plan.transform {
+    plan.transform {
       case f @ Filter(cond, child) =>
         strengthen(cond).map(Filter(_, child)).getOrElse(f)
       // injected rules run AFTER the main optimizer batches, so by the

@@ -106,44 +106,41 @@ object StreamingIngest {
                                   expectedStores: Long): Unit = {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
-    val validated = Ingest.withErrors(batch).cache()
+    val valid = Ingest.normalize(Ingest.withErrors(batch)).cache()
     try {
-      val valid = Ingest.normalize(validated).cache()
-      try {
-        if (!valid.isEmpty) {
-          Ingest.writeLake(valid, lakeDir)
+      if (!valid.isEmpty) {
+        Ingest.writeLake(valid, lakeDir)
 
-          // A1-shaped (store, day) summary, overwritten per partition —
-          // the write-metrics upsert.
-          val summary = valid
-            .withColumn("sale_date",
-              concat_ws("-", col("year"), col("month"), col("day")))
-            .groupBy(col("store_id"), col("sale_date"))
-            .agg(
-              sum(col("line_total")).as("total_sales_dec"),
-              sum(col("discount_amount")).as("total_discount_dec"),
-              count(lit(1)).as("transaction_count"),
-              sum(col("quantity")).as("item_count"))
-          summary.write
-            .partitionBy("sale_date", "store_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(summaryDir)
+        // A1-shaped (store, day) summary, overwritten per partition —
+        // the write-metrics upsert.
+        val summary = valid
+          .withColumn("sale_date",
+            concat_ws("-", col("year"), col("month"), col("day")))
+          .groupBy(col("store_id"), col("sale_date"))
+          .agg(
+            sum(col("line_total")).as("total_sales_dec"),
+            sum(col("discount_amount")).as("total_discount_dec"),
+            count(lit(1)).as("transaction_count"),
+            sum(col("quantity")).as("item_count"))
+        summary.write
+          .partitionBy("sale_date", "store_id")
+          .option("partitionOverwriteMode", "dynamic")
+          .mode("overwrite")
+          .parquet(summaryDir)
 
-          // Completeness gate over the whole summary table (not just this
-          // batch): dates at the expected store count become ledger rows.
-          val complete = spark.read.parquet(summaryDir)
-            .groupBy(col("sale_date"))
-            .agg(countDistinct(col("store_id")).as("stores_reported"))
-            .withColumn("expected", lit(expectedStores))
-            .withColumn("complete", col("stores_reported") === expectedStores)
-          complete.write
-            .partitionBy("sale_date")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(ledgerDir)
-        }
-      } finally valid.unpersist()
-    } finally validated.unpersist()
+        // Completeness gate over the whole summary table (not just this
+        // batch): dates at the expected store count become ledger rows.
+        val complete = spark.read.parquet(summaryDir)
+          .groupBy(col("sale_date"))
+          .agg(countDistinct(col("store_id")).as("stores_reported"))
+          .withColumn("expected", lit(expectedStores))
+          .withColumn("complete", col("stores_reported") === expectedStores)
+        complete.write
+          .partitionBy("sale_date")
+          .option("partitionOverwriteMode", "dynamic")
+          .mode("overwrite")
+          .parquet(ledgerDir)
+      }
+    } finally valid.unpersist()
   }
 }

@@ -111,18 +111,6 @@ class GroupTopKSpec extends GraftSpec {
     assert(r1.count() >= 5 * 37 && r2.count() <= 5 * 37)
   }
 
-  test("the session knob turns the rewrite off") {
-    extSpark.conf.set("spark.graft.groupTopK.enabled", "false")
-    try {
-      val off = topk(synth(extSpark), _ <= 5)
-      assert(!collectPlan(off.queryExecution.executedPlan)
-        .exists(_.getClass.getSimpleName == "GroupTopKExec"))
-    } finally extSpark.conf.set("spark.graft.groupTopK.enabled", "true")
-    val on = topk(synth(extSpark), _ <= 5)
-    assert(collectPlan(on.queryExecution.executedPlan)
-      .exists(_.getClass.getSimpleName == "GroupTopKExec"))
-  }
-
   test("a3-shaped real ranking: per-store-day top-5 products matches stock") {
     def shape(s: SparkSession) = {
       val sales = graft.model.Tables.sales(s, sfDir)

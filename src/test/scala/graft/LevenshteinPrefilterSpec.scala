@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** [[graft.plans.LevenshteinPrefilter]]'s contract: the injected
   * length-difference conjunct is semantically implied, so results are
-  * IDENTICAL with the rule on and off, while the optimized plan shows
+  * IDENTICAL with the rule on (an extensions session) and off (the
+  * stock session), while the optimized plan shows
   * the O(1) probe conjoined ahead of the edit-distance DP. */
 class LevenshteinPrefilterSpec extends GraftSpec {
 
@@ -36,19 +37,19 @@ class LevenshteinPrefilterSpec extends GraftSpec {
   }
 
   test("prefilter is value-neutral: identical pairs with rule on and off") {
-    val df = words(extSpark)
-    val a = df.select(col("id").as("ia"), col("w").as("wa"))
-    val b = df.select(col("id").as("ib"), col("w").as("wb"))
-    def pairs() = a.crossJoin(b).filter(col("ia") < col("ib"))
-      .withColumn("d", levenshtein(col("wa"), col("wb")).cast("long"))
-      .filter(col("d") <= 2L)
-      .collect().map(r => (r.getLong(0), r.getLong(2))).sortBy(identity).toSeq
-    val withRule = pairs()
-    extSpark.conf.set("spark.graft.levenshteinPrefilter.enabled", "false")
-    try {
-      val without = pairs()
-      assert(withRule.nonEmpty && withRule === without)
-    } finally extSpark.conf.unset("spark.graft.levenshteinPrefilter.enabled")
+    // "off" is the stock session, which installs no extensions
+    def pairs(s: SparkSession) = {
+      val df = words(s)
+      val a = df.select(col("id").as("ia"), col("w").as("wa"))
+      val b = df.select(col("id").as("ib"), col("w").as("wb"))
+      a.crossJoin(b).filter(col("ia") < col("ib"))
+        .withColumn("d", levenshtein(col("wa"), col("wb")).cast("long"))
+        .filter(col("d") <= 2L)
+        .collect().map(r => (r.getLong(0), r.getLong(2))).sortBy(identity).toSeq
+    }
+    val withRule = pairs(extSpark)
+    val without = pairs(spark)
+    assert(withRule.nonEmpty && withRule === without)
   }
 
   test("the optimized plan carries the implied length bound ahead of the DP") {

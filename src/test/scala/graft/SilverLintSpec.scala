@@ -2,9 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
-
 /** Source lint over `src/main/scala`: [[graft.model.Silver.memoize]] is
   * the one place a silver is materialized and the one frame-valued memo.
   *
@@ -21,19 +18,9 @@ import scala.jdk.CollectionConverters._
   */
 class SilverLintSpec extends AnyFunSuite {
 
-  private val root = Paths.get("src/main/scala")
+  private def sources = MainSources.files
 
-  private lazy val sources: Seq[(String, String)] = {
-    assert(Files.isDirectory(root), s"no source tree at ${root.toAbsolutePath}")
-    val walk = Files.walk(root)
-    try walk.iterator().asScala
-      .filter(p => p.toString.endsWith(".scala"))
-      .map(p => root.relativize(p).toString -> Files.readString(p))
-      .toList.sortBy(_._1)
-    finally walk.close()
-  }
-
-  private def lineOf(src: String, at: Int): Int = src.substring(0, at).count(_ == '\n') + 1
+  private def lineOf(src: String, at: Int): Int = MainSources.lineOf(src, at)
 
   /** Index of the bracket closing the one at `open` (any of `([{`);
     * string and char literals (with `${...}` splices) and comments are

@@ -84,4 +84,18 @@ class TriangleSpec extends GraftSpec {
     val kept = est.getAs[Long]("n_edges_sampled")
     assert(kept > 0 && kept < full, s"sample $kept of $full edges")
   }
+
+  test("g4, g5 and g7 read one support-pruned edge leaf in a fresh session") {
+    // g6's readout reads only its node and distance leaves; g5 and g7
+    // read the edge set itself
+    val s = spark.newSession()
+    def leaves(df: org.apache.spark.sql.DataFrame): Set[Int] =
+      df.queryExecution.optimizedPlan.collect {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+      }.toSet
+    val g4 = leaves(Graph.kCore(s, sfDir))
+    val shared = g4 & leaves(Graph.linkPrediction(s, sfDir)) &
+      leaves(Graph.lpaCommunities(s, sfDir))
+    assert(shared.size === 1, s"g4 leaves $g4 share $shared with g5 and g7")
+  }
 }
