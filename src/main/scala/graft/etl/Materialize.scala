@@ -21,36 +21,61 @@ import org.apache.spark.sql.functions._
   * fact-table size. */
 object Materialize {
 
-  /** Write the three summary tables under `root`. Returns their paths. */
+  /** Write the summary tables under `root`; returns their paths.
+    *
+    * Three independent chains run side by side, each on a fresh thread
+    * that inherits the caller's Spark local properties (job group and
+    * description included), so every job they start is attributed to the
+    * caller: the `rollupDec` silver → store_daily, then company_daily;
+    * `topProductsDec` → product_daily; `paymentDec` → payment_daily. No
+    * two chains share a silver, so none waits on another's build. The
+    * call returns once every chain has finished and rethrows the first
+    * failure (in chain order).
+    *
+    * Each date-partitioned table is hash-clustered by `sale_date` into
+    * `spark.sql.shuffle.partitions` write tasks: every date lands in one
+    * task, so a table holds exactly one file per date, and all cores
+    * write. Unclustered, a partitioned write leaves one file per
+    * (task, date). */
   def writeSummaries(spark: SparkSession, dir: String, root: String): Map[String, String] = {
-    val storeDaily = StoreDaily.rollupDec(spark, dir)
-    storeDaily.write
-      .partitionBy("sale_date")
-      .mode("overwrite")
-      .parquet(s"$root/store_daily")
+    val paths = Seq("store_daily", "company_daily", "product_daily", "payment_daily")
+      .map(t => t -> s"$root/$t").toMap
+    val tasks = spark.sessionState.conf.numShufflePartitions
+    def byDate(df: DataFrame, table: String): Unit =
+      df.repartition(tasks, col("sale_date")).write
+        .partitionBy("sale_date")
+        .mode("overwrite")
+        .parquet(paths(table))
 
-    CompanyDaily.rollup(spark, dir).write
-      .mode("overwrite")
-      .parquet(s"$root/company_daily")
+    sideBySide(Seq(
+      () => {
+        byDate(StoreDaily.rollupDec(spark, dir), "store_daily")
+        CompanyDaily.rollup(spark, dir).write
+          .mode("overwrite")
+          .parquet(paths("company_daily"))
+      },
+      () => byDate(ProductDaily.rollupLossy(spark, dir), "product_daily"),
+      // the payment dimension is join-derived (orders → payment_method);
+      // materializing the per-(store, day, method) silver relation means
+      // the orders join happens once per ingest increment, never per read
+      // query
+      () => byDate(StoreDaily.paymentDec(spark, dir), "payment_daily")))
+    paths
+  }
 
-    ProductDaily.rollupLossy(spark, dir).write
-      .partitionBy("sale_date")
-      .mode("overwrite")
-      .parquet(s"$root/product_daily")
-
-    // the payment dimension is join-derived (orders → payment_method);
-    // materializing the per-(store, day, method) silver relation means the
-    // orders join happens once per ingest increment, never per read query
-    StoreDaily.paymentDec(spark, dir).write
-      .partitionBy("sale_date")
-      .mode("overwrite")
-      .parquet(s"$root/payment_daily")
-
-    Map(
-      "store_daily" -> s"$root/store_daily",
-      "company_daily" -> s"$root/company_daily",
-      "product_daily" -> s"$root/product_daily",
-      "payment_daily" -> s"$root/payment_daily")
+  /** Run `chains` on one fresh thread each, wait for all of them, then
+    * rethrow the first failure in chain order. Fresh threads, not a pool:
+    * a thread copies its creator's Spark local properties when it is
+    * created, and only then. */
+  private def sideBySide(chains: Seq[() => Unit]): Unit = {
+    val failures = new Array[Throwable](chains.size)
+    val threads = chains.zipWithIndex.map { case (chain, i) =>
+      new Thread(() => try chain() catch { case t: Throwable => failures(i) = t },
+        s"writeSummaries-$i")
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    failures.find(_ != null).foreach(t => throw t)
   }
 
   /** Bucketed variants of the summary tables: 8 buckets on store_id,

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -167,16 +167,17 @@ object Ingest {
       .parquet(lakeDir)
 
   /** The full S1→S5 pipeline over a directory: one scan, two sinks.
-    * Returns (validCount, rejectCount). */
+    * Returns (validCount, rejectCount), each a metric observed by its
+    * sink's write — no pass of its own. */
   def processUploads(spark: SparkSession, inDir: String,
                      lakeDir: String, rejectDir: String): (Long, Long) = {
     val validated = withErrors(readUploads(spark, inDir)).cache()
     try {
-      val valid = normalize(validated)
-      val bad = rejects(validated)
-      writeLake(valid, lakeDir)
-      bad.write.mode("overwrite").json(rejectDir) // S7 sink doubles as sidecar
-      (valid.count(), bad.count())
+      val (nValid, nBad) = (Observation("valid_rows"), Observation("rejected_rows"))
+      writeLake(normalize(validated).observe(nValid, count(lit(1)).as("n")), lakeDir)
+      rejects(validated).observe(nBad, count(lit(1)).as("n"))
+        .write.mode("overwrite").json(rejectDir) // S7 sink doubles as sidecar
+      (nValid.get("n").asInstanceOf[Long], nBad.get("n").asInstanceOf[Long])
     } finally validated.unpersist()
   }
 

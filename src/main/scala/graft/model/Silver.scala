@@ -35,19 +35,31 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * A DataFrame is bound to the session that built it, so the key
   * includes the session — a second session in the same JVM builds its
   * own handles instead of receiving frames bound to a session it
-  * doesn't own. This is the engine's only frame-valued memo. */
+  * doesn't own. This is the engine's only frame-valued memo.
+  *
+  * Builds are single-flight: the map holds a lazy holder per key, and
+  * `TrieMap.getOrElseUpdate` hands every concurrent miss the one holder
+  * it inserted (its body may run once per racing caller, which is why
+  * the body only allocates the holder). The holder's lazy leaf is built
+  * by the first caller to force it while the others wait, so N callers
+  * of one cold silver pay one build; a hit stays one map read. */
 object Silver {
+  private final class Handle(build: => DataFrame) {
+    lazy val frame: DataFrame = leaf(build)
+  }
+
   private val memo =
-    scala.collection.concurrent.TrieMap[(SparkSession, String, String), DataFrame]()
+    scala.collection.concurrent.TrieMap[(SparkSession, String, String), Handle]()
 
   /** Return the memoized handle for `name` under `dir` in `spark`,
     * building (and leaf-materializing) it on first call. `name` must
     * encode any non-dir parameters (e.g. `"topProductsDec:5"`). Keyed by
     * session IDENTITY — the handful of sessions a JVM holds makes the
-    * strong reference harmless. */
+    * strong reference harmless. A build that throws leaves the key
+    * unbuilt; the next call builds again. */
   def memoize(spark: SparkSession, name: String, dir: String)
              (build: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((spark, name, dir), leaf(build))
+    memo.getOrElseUpdate((spark, name, dir), new Handle(build)).frame
 
   /** The build as a materialized leaf: a body whose plan already is a
     * checkpointed `LogicalRDD` is kept as-is; anything else gets one

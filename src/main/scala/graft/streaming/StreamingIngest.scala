@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.ingest.Ingest
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -17,16 +18,21 @@ import org.apache.spark.sql.streaming.Trigger
   *    each (store, day) partition is overwritten whole = the reference's
   *    unconditional put_item, write-metrics:104 — late/re-uploaded files
   *    just overwrite their own partition, exactly-once-ish);
-  *  - completeness gate: after each batch, dates whose distinct reported
-  *    stores reach the expected count are recorded in a run ledger —
-  *    the `check-all-stores` → `states:startExecution` trigger
-  *    (check-all-stores:45-92); the ledger is an idempotent parquet
-  *    overwrite per date, which also gives the scheduled-fallback
-  *    "analysis already ran" dedupe (eventbridge.tf:100-127).
+  *  - completeness gate: after each batch, every date the batch touched
+  *    gets a run-ledger row with its reported-store count and whether it
+  *    reached the expected count — the `check-all-stores` →
+  *    `states:startExecution` trigger (check-all-stores:45-92); the
+  *    ledger is an idempotent parquet overwrite per date, which also
+  *    gives the scheduled-fallback "analysis already ran" dedupe
+  *    (eventbridge.tf:100-127).
   *
   * Scale posture: state is carried by the summary table itself (parquet
   *  partitions), not by mapGroupsWithState — restart-safe via the
-  *  checkpoint + idempotent sinks, no state-store growth.
+  *  checkpoint + idempotent sinks, no state-store growth. A batch's work
+  *  is proportional to the batch, not to the history: its dates come
+  *  from a metric observed on the summary write, and each date's store
+  *  count is a directory listing of that date's summary partition, so no
+  *  batch rescans the summary table or rewrites another date's ledger.
   */
 object StreamingIngest {
 
@@ -99,43 +105,57 @@ object StreamingIngest {
       }
   }
 
-  /** One micro-batch: validate → lake append → (store, day) summary
-    * upsert → completeness ledger. Visible for direct batch tests. */
+  /** One micro-batch: validate → lake write → (store, day) summary
+    * upsert → completeness ledger for the batch's dates. Visible for
+    * direct batch tests. A batch with no valid row writes no partition
+    * and no ledger row (dynamic overwrite leaves every existing
+    * partition in place), so it needs no emptiness probe. */
   private[graft] def processBatch(batch: DataFrame, lakeDir: String,
                                   summaryDir: String, ledgerDir: String,
                                   expectedStores: Long): Unit = {
-    if (batch.isEmpty) return
     val spark = batch.sparkSession
     val valid = Ingest.normalize(Ingest.withErrors(batch)).cache()
     try {
-      if (!valid.isEmpty) {
-        Ingest.writeLake(valid, lakeDir)
+      Ingest.writeLake(valid, lakeDir)
 
-        // A1-shaped (store, day) summary, overwritten per partition —
-        // the write-metrics upsert.
-        val summary = valid
-          .withColumn("sale_date",
-            concat_ws("-", col("year"), col("month"), col("day")))
-          .groupBy(col("store_id"), col("sale_date"))
-          .agg(
-            sum(col("line_total")).as("total_sales_dec"),
-            sum(col("discount_amount")).as("total_discount_dec"),
-            count(lit(1)).as("transaction_count"),
-            sum(col("quantity")).as("item_count"))
-        summary.write
-          .partitionBy("sale_date", "store_id")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite")
-          .parquet(summaryDir)
+      // A1-shaped (store, day) summary, overwritten per partition — the
+      // write-metrics upsert. The batch's dates are a metric observed by
+      // the write itself, not a further job.
+      val dates = Observation("wave_dates")
+      valid
+        .withColumn("sale_date",
+          concat_ws("-", col("year"), col("month"), col("day")))
+        .groupBy(col("store_id"), col("sale_date"))
+        .agg(
+          sum(col("line_total")).as("total_sales_dec"),
+          sum(col("discount_amount")).as("total_discount_dec"),
+          count(lit(1)).as("transaction_count"),
+          sum(col("quantity")).as("item_count"))
+        .observe(dates, collect_set(col("sale_date")).as("dates"))
+        .write
+        .partitionBy("sale_date", "store_id")
+        .option("partitionOverwriteMode", "dynamic")
+        .mode("overwrite")
+        .parquet(summaryDir)
 
-        // Completeness gate over the whole summary table (not just this
-        // batch): dates at the expected store count become ledger rows.
-        val complete = spark.read.parquet(summaryDir)
-          .groupBy(col("sale_date"))
-          .agg(countDistinct(col("store_id")).as("stores_reported"))
+      // Completeness gate over the batch's dates only: no other date's
+      // summary partitions changed, so no other ledger row can. A date's
+      // reported stores are its `store_id=` partition directories — the
+      // summary is partitioned by exactly (sale_date, store_id) and a
+      // partition directory exists only when it holds rows, so the
+      // listing equals countDistinct(store_id) over the date's rows.
+      val touched = dates.get("dates").asInstanceOf[scala.collection.Seq[String]]
+      if (touched.nonEmpty) {
+        val root = new Path(summaryDir)
+        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val reported = touched.toSeq.map { d =>
+          d -> fs.listStatus(new Path(root, s"sale_date=$d"))
+            .count(s => s.isDirectory && s.getPath.getName.startsWith("store_id=")).toLong
+        }
+        spark.createDataFrame(reported).toDF("sale_date", "stores_reported")
           .withColumn("expected", lit(expectedStores))
           .withColumn("complete", col("stores_reported") === expectedStores)
-        complete.write
+          .write
           .partitionBy("sale_date")
           .option("partitionOverwriteMode", "dynamic")
           .mode("overwrite")

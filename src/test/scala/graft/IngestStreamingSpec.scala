@@ -148,6 +148,91 @@ class IngestStreamingSpec extends GraftSpec {
     assert(s2.read.parquet(ledger.toString).filter(col("complete")).count() === 1)
   }
 
+  /** Every data file under `dir` (relative path -> modification time);
+    * the `_SUCCESS` marker a write leaves is not data. */
+  private def dataFiles(dir: Path): Map[String, Long] = {
+    import scala.jdk.CollectionConverters._
+    val walk = Files.walk(dir)
+    try walk.iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.getFileName.toString.startsWith("part-"))
+      .map(p => dir.relativize(p).toString -> Files.getLastModifiedTime(p).toMillis)
+      .toMap
+    finally walk.close()
+  }
+
+  private def batch(files: (String, String)*): org.apache.spark.sql.DataFrame = {
+    val in = tmp("wave_in")
+    files.foreach { case (name, body) => writeUpload(in, name, body) }
+    Ingest.readUploads(spark, in.toString)
+  }
+
+  test("ingest: processUploads takes both counts from its two writes (2 jobs)") {
+    val in = tmp("uploads_jobs")
+    writeUpload(in, "store_0001_2024-01-02.json", s"[$goodRecord, $goodRecord]")
+    writeUpload(in, "store_0002_2024-01-02.json",
+      s"[$goodRecord, ${goodRecord.replace("credit", "bitcoin")}]")
+    val (counts, jobs) = JobLog.during(spark) {
+      Ingest.processUploads(spark, in.toString, tmp("lake_jobs").toString,
+        tmp("rejected_jobs").toString)
+    }
+    assert(counts === ((3L, 1L)))
+    assert(jobs.size === 2, s"one job per sink, no counting pass: $jobs")
+  }
+
+  test("streaming: a wave rewrites only its own dates' ledger partitions") {
+    val (lake, summ, ledger) = (tmp("gate_lake"), tmp("gate_summary"), tmp("gate_ledger"))
+    def wave(files: (String, String)*): Unit = StreamingIngest.processBatch(
+      batch(files: _*), lake.toString, summ.toString, ledger.toString, expectedStores = 2)
+    wave("store_0001_2024-04-01.json" -> s"[$goodRecord]")
+    val first = dataFiles(ledger.resolve("sale_date=2024-04-01"))
+    assert(first.size === 1)
+    Thread.sleep(20) // a rewrite would show a later modification time
+    wave("store_0001_2024-04-02.json" -> s"[$goodRecord]",
+      "store_0002_2024-04-02.json" -> s"[$goodRecord]")
+    assert(dataFiles(ledger.resolve("sale_date=2024-04-01")) === first)
+
+    val led = spark.read.parquet(ledger.toString)
+      .select(col("sale_date").cast("string"), col("stores_reported"), col("expected"),
+        col("complete"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getBoolean(3))).toSet
+    assert(led === Set(("2024-04-01", 1L, 2L, false), ("2024-04-02", 2L, 2L, true)))
+    // a late store completes the first date; the second stays as it was
+    val second = dataFiles(ledger.resolve("sale_date=2024-04-02"))
+    wave("store_0002_2024-04-01.json" -> s"[$goodRecord]")
+    assert(spark.read.parquet(ledger.toString).filter(col("complete")).count() === 2)
+    assert(dataFiles(ledger.resolve("sale_date=2024-04-02")) === second)
+  }
+
+  test("streaming: a batch whose every row is rejected leaves lake, summary and ledger unchanged") {
+    val (lake, summ, ledger) = (tmp("rej_lake"), tmp("rej_summary"), tmp("rej_ledger"))
+    def wave(files: (String, String)*): Unit = StreamingIngest.processBatch(
+      batch(files: _*), lake.toString, summ.toString, ledger.toString, expectedStores = 1)
+    wave("store_0001_2024-05-01.json" -> s"[$goodRecord, $goodRecord]")
+    val dirs = Seq(lake, summ, ledger)
+    def rows = dirs.map(d => spark.read.parquet(d.toString).collect().map(_.toString).sorted.toSeq)
+    val (filesBefore, rowsBefore) = (dirs.map(dataFiles), rows)
+    assert(filesBefore.forall(_.nonEmpty))
+    Thread.sleep(20)
+    wave("store_0001_2024-05-02.json" -> s"[${goodRecord.replace("credit", "bitcoin")}]",
+      "not_an_upload.json" -> s"[$goodRecord]",
+      "store_0002_2024-05-02.json" -> "this is not json")
+    assert(dirs.map(dataFiles) === filesBefore)
+    assert(rows === rowsBefore)
+  }
+
+  test("streaming: one direct processBatch runs a fixed number of jobs") {
+    val (lake, summ, ledger) = (tmp("jobs_lake"), tmp("jobs_summary"), tmp("jobs_ledger"))
+    def wave(day: String) = JobLog.during(spark) {
+      StreamingIngest.processBatch(batch(s"store_0001_2024-06-$day.json" -> s"[$goodRecord]"),
+        lake.toString, summ.toString, ledger.toString, expectedStores = 1)
+    }._2
+    val (first, later) = (wave("01"), wave("02"))
+    // lake write, summary write (its shuffle stage and the write), ledger
+    // write — whatever history the tables already hold
+    assert(first.size === 4, s"jobs: $first")
+    assert(later.size === 4, s"jobs: $later")
+  }
+
   test("multimodal: feature extraction is deterministic, partition-parallel, typed") {
     val media = Multimodal.mediaFromDocs(spark, sfDir)
     val n = media.count()

@@ -58,4 +58,42 @@ class MaterializeSpec extends GraftSpec {
       s"expected partition filters in plan:\n$plan")
     assert(pruned.count() > 0)
   }
+
+  test("each date-partitioned summary table holds one file per sale_date") {
+    // without coalescing, the silvers keep every shuffle partition, so an
+    // unclustered partitioned write leaves one file per (task, date)
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    val root = Files.createTempDirectory("medallion_files")
+    root.toFile.deleteOnExit()
+    Materialize.writeSummaries(s2, sfDir, root.toString)
+    Seq("store_daily", "product_daily", "payment_daily").foreach { t =>
+      val dates = root.resolve(t).toFile.listFiles().filter(_.getName.startsWith("sale_date="))
+      assert(dates.length > 1, t)
+      val perDate = dates.map(d => d.getName -> d.listFiles().count(_.getName.startsWith("part-")))
+      assert(perDate.forall(_._2 == 1), s"$t: ${perDate.filter(_._2 != 1).toSeq}")
+    }
+  }
+
+  test("every job writeSummaries starts carries the caller's job group") {
+    val s2 = spark.newSession() // cold silvers: the builds run inside the call
+    val root = Files.createTempDirectory("medallion_group")
+    root.toFile.deleteOnExit()
+    val sc = spark.sparkContext
+    sc.setJobGroup("materialize-spec", "writeSummaries")
+    val (_, jobs) =
+      try JobLog.during(s2)(Materialize.writeSummaries(s2, sfDir, root.toString))
+      finally sc.clearJobGroup()
+    assert(jobs.size > 4)
+    assert(jobs.forall(_.group.contains("materialize-spec")),
+      s"jobs outside the caller's group: ${jobs.filterNot(_.group.contains("materialize-spec"))}")
+  }
+
+  test("a failing table write fails writeSummaries") {
+    val notADir = Files.createTempFile("medallion", ".file")
+    notADir.toFile.deleteOnExit()
+    intercept[Exception] {
+      Materialize.writeSummaries(spark, sfDir, notADir.toString)
+    }
+  }
 }

@@ -91,4 +91,34 @@ class SilverSpec extends GraftSpec {
     assert(h eq body, "the leaf body is the handle")
     assert(n === 1, s"one job (the body's own checkpoint) builds it, got $n")
   }
+
+  test("four callers of one cold silver pay one build") {
+    val n = 4
+    val start = new java.util.concurrent.CyclicBarrier(n)
+    def call() = Silver.memoize(spark, "silverSpec:singleFlight", sfDir) {
+      Thread.sleep(300) // every racing caller is inside a build at once
+      spark.range(100).toDF("id")
+    }
+    val (handles, jobs) = JobLog.during(spark) {
+      val out = new Array[DataFrame](n)
+      val threads = (0 until n).map { i =>
+        new Thread(() => { start.await(); out(i) = call() })
+      }
+      threads.foreach(_.start())
+      threads.foreach(_.join())
+      out.toSeq
+    }
+    val checkpoints = jobs.filter(_.stages.exists(_.startsWith("localCheckpoint")))
+    assert(checkpoints.size === 1, s"jobs: $jobs")
+    assert(handles.forall(h => h != null && (h eq handles.head)))
+  }
+
+  test("withMeasuredStats on a frame that is not a checkpointed leaf says what it needs") {
+    val e = intercept[IllegalArgumentException] {
+      org.apache.spark.sql.graftbridge.ColumnBridge.withMeasuredStats(
+        spark.range(3).toDF("id").filter("id > 0"))
+    }
+    assert(e.getMessage.contains("classic (non-Connect) SparkSession"), e.getMessage)
+    assert(e.getMessage.contains("checkpointed LogicalRDD leaf"), e.getMessage)
+  }
 }
