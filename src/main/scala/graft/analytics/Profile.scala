@@ -946,9 +946,10 @@ object Profile {
     // ONE data-sized exchange: the (col, batch, value) grain — every
     // downstream stat (counts, null counts, min/max, sums, distincts,
     // new/gone) derives from it, so the two-month slice shuffles once
-    val valGrain = melted.groupBy(col("col_name"), col("batch"), col("v"))
-      .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+    val valGrain = graft.model.Silver.memoize(spark, "profileDriftValGrain", dir) {
+      melted.groupBy(col("col_name"), col("batch"), col("v"))
+        .agg(count(lit(1)).as("cnt"))
+    }
     val stats = valGrain.groupBy(col("col_name"), col("batch"))
       .agg(sum(col("cnt")).as("n"),
         coalesce(sum(when(col("v").isNull, col("cnt"))), lit(0L)).as("nn"),

@@ -1,6 +1,6 @@
 package graft.analytics
 
-import graft.model.Tables
+import graft.model.{Silver, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -324,6 +324,15 @@ object Sketches {
       .drop(("graft_bloom_mask" +: bloomHashes.indices.map(i => s"graft_bp$i")): _*)
   }
 
+  /** The filter's build side, (k) = the urgent orders' keys: a silver,
+    * read by the mask build and by the exact-match join (sk8, sk11). */
+  private def urgentOrderKeys(spark: SparkSession, dir: String): DataFrame =
+    Silver.memoize(spark, "urgentOrderKeys", dir) {
+      Tables.orders(spark, dir)
+        .filter(col("o_orderpriority") === "1-URGENT")
+        .select(col("o_orderkey").as("k")).distinct()
+    }
+
   /** sk8: BLOOM-FILTER JOIN PRUNING — the runtime-filter pattern Spark's
     * own InjectRuntimeFilter rule applies at scale, built as a first-class
     * relational operator with a measured false-positive ledger. Build
@@ -341,9 +350,7 @@ object Sketches {
     * contract (zero false negatives) is spec-asserted and visible in the
     * ledger (n_bloom_pass ≥ n_true_match, never a missed match). */
   def bloomPrune(spark: SparkSession, dir: String): DataFrame = {
-    val build = Tables.orders(spark, dir)
-      .filter(col("o_orderpriority") === "1-URGENT")
-      .select(col("o_orderkey").as("k")).distinct()
+    val build = urgentOrderKeys(spark, dir)
     val mask = bloomMaskOf(build.select(col("k").as("h")))
     val probe = withBloomPass(
       Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_returnflag")),
@@ -580,11 +587,7 @@ object Sketches {
   def bloomSweep(spark: SparkSession, dir: String,
                  bitsLevels: Seq[Long] =
                    Seq(4096L, 8192L, 16384L, 32768L, 65536L)): DataFrame = {
-    // cached: the one-shot mask build and the truth broadcast are two
-    // actions over this relation
-    val build = Tables.orders(spark, dir)
-      .filter(col("o_orderpriority") === "1-URGENT")
-      .select(col("o_orderkey").as("k")).distinct().cache()
+    val build = urgentOrderKeys(spark, dir)
     // ONE widest-mask build job; narrower widths fold on the driver.
     // The three affine hashes h_i = ((k mod P)·a_i + b_i) mod P are
     // hoisted to shared columns — each level's pass tests h_i mod m

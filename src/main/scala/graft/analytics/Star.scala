@@ -2,7 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.model.Tables
+import graft.model.{Silver, Tables}
 
 /** Star-schema join shapes over the full TPC-H-ish dimension chain
   * (region → nation → customer → orders → lineitem). The reference's
@@ -322,38 +322,39 @@ object Star {
     * are exact integer milli of cents (never float-of-float). */
   def marketShare(spark: SparkSession, dir: String,
                   market: String = "ASIA"): DataFrame = {
-    val nat = Tables.nation(spark, dir)
-    val marketCust = broadcast(
-      Tables.customer(spark, dir).select(col("c_custkey"), col("c_nationkey"))
-        .join(nat.join(Tables.region(spark, dir),
-            col("n_regionkey") === col("r_regionkey"))
-          .filter(col("r_name") === market)
-          .select(col("n_nationkey")),
-          col("c_nationkey") === col("n_nationkey"))
-        .select(col("c_custkey")))
-    val supp = broadcast(
-      Tables.supplier(spark, dir).select(col("s_suppkey"), col("s_nationkey"))
-        .join(nat.select(col("n_nationkey"), col("n_name")),
-          col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("n_name").as("supp_nation")))
-    val o = Tables.orders(spark, dir)
-      .join(marketCust, col("o_custkey") === col("c_custkey"))
-      .select(col("o_orderkey"))
-    val byNation = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey"), col("l_suppkey"),
-        year(col("l_shipdate")).cast("long").as("sale_year"),
-        (col("l_extendedprice").cast(Tables.Money) -
-          round(col("l_extendedprice").cast(Tables.Money) *
-            col("l_discount").cast(Tables.Money), 2)).as("net_dec"))
-      .join(o, col("l_orderkey") === col("o_orderkey"))
-      .join(supp, col("l_suppkey") === col("s_suppkey"))
-      .groupBy(col("sale_year"), col("supp_nation"))
-      .agg(count(lit(1)).as("n_lines"),
-        (sum(col("net_dec")) * 100).cast("long").as("revenue_cents"))
-      // materialized once: the (year, nation) aggregate feeds the
-      // year-totals broadcast subtree AND the share join — without this
-      // the whole fact join chain executed twice per call
-      .localCheckpoint()
+    // one silver: the (year, nation) aggregate feeds the year-totals
+    // broadcast subtree AND the share join — a plain plan would run the
+    // whole fact join chain twice per call
+    val byNation = Silver.memoize(spark, s"marketShareByNation:$market", dir) {
+      val nat = Tables.nation(spark, dir)
+      val marketCust = broadcast(
+        Tables.customer(spark, dir).select(col("c_custkey"), col("c_nationkey"))
+          .join(nat.join(Tables.region(spark, dir),
+              col("n_regionkey") === col("r_regionkey"))
+            .filter(col("r_name") === market)
+            .select(col("n_nationkey")),
+            col("c_nationkey") === col("n_nationkey"))
+          .select(col("c_custkey")))
+      val supp = broadcast(
+        Tables.supplier(spark, dir).select(col("s_suppkey"), col("s_nationkey"))
+          .join(nat.select(col("n_nationkey"), col("n_name")),
+            col("s_nationkey") === col("n_nationkey"))
+          .select(col("s_suppkey"), col("n_name").as("supp_nation")))
+      val o = Tables.orders(spark, dir)
+        .join(marketCust, col("o_custkey") === col("c_custkey"))
+        .select(col("o_orderkey"))
+      Tables.lineitem(spark, dir)
+        .select(col("l_orderkey"), col("l_suppkey"),
+          year(col("l_shipdate")).cast("long").as("sale_year"),
+          (col("l_extendedprice").cast(Tables.Money) -
+            round(col("l_extendedprice").cast(Tables.Money) *
+              col("l_discount").cast(Tables.Money), 2)).as("net_dec"))
+        .join(o, col("l_orderkey") === col("o_orderkey"))
+        .join(supp, col("l_suppkey") === col("s_suppkey"))
+        .groupBy(col("sale_year"), col("supp_nation"))
+        .agg(count(lit(1)).as("n_lines"),
+          (sum(col("net_dec")) * 100).cast("long").as("revenue_cents"))
+    }
     val yearTotals = byNation.groupBy(col("sale_year"))
       .agg(sum(col("revenue_cents")).cast("long").as("market_cents"))
       .select(col("sale_year").as("yt_year"), col("market_cents"))
@@ -367,6 +368,7 @@ object Star {
           "ELSE revenue_cents * 1000 DIV market_cents END").as("share_milli"))
       .orderBy(col("sale_year"), col("supp_nation"))
   }
+
 
   def marketShareSql(market: String = "ASIA"): String =
     s"""WITH mcust AS (
@@ -1300,10 +1302,9 @@ object Star {
     * reason Q11 parameterizes its fraction by SF).
     *
     * Shape: the supplier/nation legs are broadcast dims decorating the
-    * fact scan; ONE hash aggregate to part grain, materialized ONCE as
-    * a plan leaf (localCheckpoint — the IndexStore probe discipline:
-    * a self-referencing DAG otherwise duplicates the whole fact
-    * subtree into both branches of the cross join); the global scalar
+    * fact scan; ONE hash aggregate to part grain, a silver (a
+    * self-referencing DAG otherwise duplicates the whole fact subtree
+    * into both branches of the cross join); the global scalar
     * is a 1-row aggregate of that part-grain leaf CROSS-broadcast
     * back — the fact table is scanned exactly once by construction. */
   def importantStockParts(spark: SparkSession, dir: String,
@@ -1314,12 +1315,13 @@ object Star {
           .select(col("n_nationkey"))),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"))
-    val ps = Tables.lineitem(spark, dir)
-      .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
-      .groupBy(col("l_partkey"))
-      .agg((sum(col("l_extendedprice").cast(Tables.Money)) * 100)
-        .cast("long").as("value_cents"))
-      .localCheckpoint()
+    val ps = Silver.memoize(spark, s"importantStockValues:$regionKey", dir) {
+      Tables.lineitem(spark, dir)
+        .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
+        .groupBy(col("l_partkey"))
+        .agg((sum(col("l_extendedprice").cast(Tables.Money)) * 100)
+          .cast("long").as("value_cents"))
+    }
     val tot = ps.agg(sum(col("value_cents")).as("total_cents"),
       count(lit(1)).as("n_parts"))
     ps.crossJoin(broadcast(tot))

@@ -24,12 +24,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Broadcast cap for corpus-derived small sides (template-shingle set
-    * and kin): ~2M short strings ≈ low hundreds of MB framed, the safe
-    * end of guide §3.1's broadcast budget. Above it, fall back to a
-    * shuffle join — slower, never wrong, never an executor OOM. */
-  private val MaxBroadcastTemplates = 2000000L
-
   // ---------------------------------------------------------------- d1
 
   /** d1: exact dedup — canonical-keeper assignment per identical text.
@@ -177,7 +171,11 @@ object Dedup {
     * bench bottleneck; a custom Catalyst Expression isn't needed — 16
     * codegen'd min aggregates are exactly as fast.) */
   private def signaturesWide(spark: SparkSession, dir: String): DataFrame =
-    signaturesWideFrom(docSids(spark, dir))
+    Silver.memoize(spark, "sigsWide", dir)(signaturesWideFrom(docSids(spark, dir)))
+
+  /** d13's signatures: [[signaturesWide]] over the mod-P xxhash ids. */
+  private def signaturesWideXx(spark: SparkSession, dir: String): DataFrame =
+    Silver.memoize(spark, "sigsWideXx", dir)(signaturesWideFrom(sketchSidsXx(spark, dir)))
 
   private def signaturesWideFrom(ds: DataFrame): DataFrame = {
     val mins = (0 until NumHashes).map(j =>
@@ -238,16 +236,15 @@ object Dedup {
     * Self-join happens on (band, bandhash) buckets, NOT all pairs. */
   def minhashLsh(spark: SparkSession, dir: String): DataFrame =
     Silver.memoize(spark, "minhashLsh", dir) {
-      val ds = docSids(spark, dir)
-      minhashLshFrom(ds, ds)
+      minhashLshFrom(signaturesWide(spark, dir), docSids(spark, dir))
     }
 
-  /** The d2 pipeline over explicit id relations: `sketchSids` feeds the
-    * minhash family (ids must be < P), `identSids` the exact-set side
-    * (any id width). d2 passes the dictionary relation for both; d13
-    * passes the xxhash pair (mod-P sketch ids, raw 64-bit identity). */
-  private def minhashLshFrom(sketchSids: DataFrame, identSids: DataFrame): DataFrame = {
-    val sigs = signaturesWideFrom(sketchSids).cache() // bands + both estimate sides
+  /** The d2 pipeline over explicit relations: `sigs` is the wide
+    * signature silver (it feeds the bands and both estimate sides),
+    * `identSids` the exact-set side (any id width). d2 passes the
+    * dictionary family, d13 the xxhash one (mod-P sketch ids, raw 64-bit
+    * identity). */
+  private def minhashLshFrom(sigs: DataFrame, identSids: DataFrame): DataFrame = {
     val bands = bandKeys(sigs)
     val cands = bands.select(col("doc_id").as("doc_a"), col("band"), col("bandkey"))
       .join(bands.select(col("doc_id").as("doc_b"), col("band"), col("bandkey")),
@@ -732,52 +729,54 @@ object Dedup {
     val edges = pairs
       .unionByName(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
       .cache()
-    // LINEAGE TRUNCATION, not just caching: each round's plan must start
-    // from the previous round's MATERIALIZED result, or the final label
-    // relation carries the whole 20-round join lineage — and every later
-    // action on it (d6, d10, c1, each bench iteration) re-optimizes that
-    // deep tree on the DRIVER, seconds per query at any data size. The
-    // classic iterative-graph fix (GraphX checkpoints the same way):
-    // eager localCheckpoint pins each round's rows in executor storage
-    // and replaces its plan with a shallow scan. At 100 TB the same move
-    // writes rounds to durable storage every few iterations.
-    var labels = docs
-      .select(col("doc_id"), col("doc_id").as("label")).localCheckpoint()
-    var converged = false
-    var rounds = 0
-    // run to CONVERGENCE, not to a silent round cap: one-hop min-label
-    // propagation needs up-to-diameter rounds, and nearest-neighbor
-    // edge relations (v21) form long chains where a fixed small cap
-    // would emit split clusters with no error. The bound below is a
-    // runaway backstop that FAILS LOUDLY instead of mis-clustering.
-    val maxRounds = 1024
-    while (!converged && rounds < maxRounds) {
-      val viaNeighbors = edges
-        .join(labels.select(col("doc_id").as("doc_b"), col("label").as("n_label")),
-          Seq("doc_b"))
-        .groupBy(col("doc_a").as("doc_id"))
-        .agg(min(col("n_label")).as("min_n_label"))
-      // carry the convergence bit in the round's own output (label
-      // shrank iff some neighbor label was smaller) — the check is then
-      // a filter over the checkpointed rows, not another join
-      val next = labels.join(viaNeighbors, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          least(col("label"), coalesce(col("min_n_label"), col("label"))).as("label"),
-          (col("min_n_label") < col("label")).as("changed"))
+    try {
+      // LINEAGE TRUNCATION, not just caching: each round's plan must start
+      // from the previous round's MATERIALIZED result, or the final label
+      // relation carries the whole 20-round join lineage — and every later
+      // action on it (d6, d10, c1, each bench iteration) re-optimizes that
+      // deep tree on the DRIVER, seconds per query at any data size. The
+      // classic iterative-graph fix (GraphX checkpoints the same way):
+      // eager localCheckpoint pins each round's rows in executor storage
+      // and replaces its plan with a shallow scan. At 100 TB the same move
+      // writes rounds to durable storage every few iterations.
+      var labels = docs
+        .select(col("doc_id"), col("doc_id").as("label")).localCheckpoint()
+      var converged = false
+      var rounds = 0
+      // run to CONVERGENCE, not to a silent round cap: one-hop min-label
+      // propagation needs up-to-diameter rounds, and nearest-neighbor
+      // edge relations (v21) form long chains where a fixed small cap
+      // would emit split clusters with no error. The bound below is a
+      // runaway backstop that FAILS LOUDLY instead of mis-clustering.
+      val maxRounds = 1024
+      while (!converged && rounds < maxRounds) {
+        val viaNeighbors = edges
+          .join(labels.select(col("doc_id").as("doc_b"), col("label").as("n_label")),
+            Seq("doc_b"))
+          .groupBy(col("doc_a").as("doc_id"))
+          .agg(min(col("n_label")).as("min_n_label"))
+        // carry the convergence bit in the round's own output (label
+        // shrank iff some neighbor label was smaller) — the check is then
+        // a filter over the checkpointed rows, not another join
+        val next = labels.join(viaNeighbors, Seq("doc_id"), "left")
+          .select(col("doc_id"),
+            least(col("label"), coalesce(col("min_n_label"), col("label"))).as("label"),
+            (col("min_n_label") < col("label")).as("changed"))
+          .localCheckpoint()
+        converged = next.filter(col("changed")).isEmpty
+        labels = next.select(col("doc_id"), col("label"))
+        rounds += 1
+      }
+      require(converged,
+        s"component labeling did not converge in $maxRounds rounds — " +
+          "refusing to emit partially-propagated clusters")
+      val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("cluster_size"))
+      labels.join(sizes, Seq("label"))
+        .select(col("doc_id"), col("label").as("cluster_id"), col("cluster_size"))
+        // doc-count-sized label relation, read by both the d6 key and c1 —
+        // checkpointed for the same shallow-plan reason as the rounds
         .localCheckpoint()
-      converged = next.filter(col("changed")).isEmpty
-      labels = next.select(col("doc_id"), col("label"))
-      rounds += 1
-    }
-    require(converged,
-      s"component labeling did not converge in $maxRounds rounds — " +
-        "refusing to emit partially-propagated clusters")
-    val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("cluster_size"))
-    labels.join(sizes, Seq("label"))
-      .select(col("doc_id"), col("label").as("cluster_id"), col("cluster_size"))
-      // doc-count-sized label relation, read by both the d6 key and c1 —
-      // checkpointed for the same shallow-plan reason as the rounds
-      .localCheckpoint()
+    } finally edges.unpersist() // the labels leaf no longer reads it
   }
 
   /** d25: DUPLICATION-INFLATION report — the one-row answer to "what
@@ -960,9 +959,7 @@ object Dedup {
     * Same band/bucket algebra as [[minhashLsh]]; hash-gated via the
     * mod-P id silver since r13. */
   def minhashPairsXxhash(spark: SparkSession, dir: String): DataFrame = {
-    val sids = sketchSidsXx(spark, dir)
-    val sigs = signaturesWideFrom(sids)
-    val bands = bandKeys(sigs)
+    val bands = bandKeys(signaturesWideXx(spark, dir))
     bands.select(col("doc_id").as("doc_a"), col("band"), col("bandkey"))
       .join(bands.select(col("doc_id").as("doc_b"), col("band"), col("bandkey")),
         Seq("band", "bandkey"))
@@ -997,7 +994,7 @@ object Dedup {
                     threshold: Double = 0.5): DataFrame =
     lshEvalFrom(
       Silver.memoize(spark, "minhashLshXxhash", dir) {
-        minhashLshFrom(sketchSidsXx(spark, dir), docSidsXx(spark, dir))
+        minhashLshFrom(signaturesWideXx(spark, dir), docSidsXx(spark, dir))
       }.select(col("doc_a"), col("doc_b"), col("est_jaccard"), col("jaccard")),
       ngramJaccardXxhash(spark, dir, threshold).select(col("doc_a"), col("doc_b")),
       threshold)
@@ -1157,16 +1154,17 @@ object Dedup {
     // duplication factor (the d22 lesson; measured 22x at the 10x
     // replica before this rewrite, output unchanged)
     val reps = contentReps(spark, dir)
-    // materialized once: the pair relation feeds the rep-pair distinct,
-    // both broadcast doc-set filters below AND the final join-back —
-    // four consumers of one tiny relation
-    val pairs = containmentPairs(spark, dir, minPct)
-      .select(col("contained_doc"), col("container_doc"))
-      .join(reps.select(col("doc_id").as("contained_doc"),
-        col("rep").as("ra")), "contained_doc")
-      .join(reps.select(col("doc_id").as("container_doc"),
-        col("rep").as("rb")), "container_doc")
-      .localCheckpoint()
+    // a silver: the pair relation feeds the rep-pair distinct, both
+    // doc-set filters below AND the final join-back — four consumers of
+    // one tiny relation, whose measured size broadcasts it
+    val pairs = Silver.memoize(spark, s"sharedSpanPairs:$minPct", dir) {
+      containmentPairs(spark, dir, minPct)
+        .select(col("contained_doc"), col("container_doc"))
+        .join(reps.select(col("doc_id").as("contained_doc"),
+          col("rep").as("ra")), "contained_doc")
+        .join(reps.select(col("doc_id").as("container_doc"),
+          col("rep").as("rb")), "container_doc")
+    }
     val repPairs = pairs.select(col("ra"), col("rb")).distinct()
     // guide §3.2: restrict BOTH token streams to the verdict pairs'
     // doc sets BEFORE the shingle explode — the pair set is containment-
@@ -1175,18 +1173,16 @@ object Dedup {
     // shuffles the full corpus-wide distinct shingle stream (the 8-core
     // bench paid ~20x the 32-core time on exactly that sort)
     val shingPos = Corpus.docsTok(spark, dir)
-      .join(broadcast(repPairs.select(col("ra").as("doc_id"))),
-        Seq("doc_id"), "left_semi")
+      .join(repPairs.select(col("ra").as("doc_id")), Seq("doc_id"), "left_semi")
       .select(col("doc_id").as("ra"),
         posexplode(Corpus.shinglesOf(col("words"))))
       .select(col("ra"), (col("pos") + lit(1L)).as("pos"),
         col("col").as("shingle"))
     val contSet = Corpus.docsTok(spark, dir)
-      .join(broadcast(repPairs.select(col("rb").as("doc_id"))),
-        Seq("doc_id"), "left_semi")
+      .join(repPairs.select(col("rb").as("doc_id")), Seq("doc_id"), "left_semi")
       .select(col("doc_id").as("rb"),
         explode(array_distinct(Corpus.shinglesOf(col("words")))).as("shingle"))
-    val matched = broadcast(repPairs).join(shingPos, Seq("ra"))
+    val matched = repPairs.join(shingPos, Seq("ra"))
       .join(contSet, Seq("rb", "shingle"))
     val w = Window.partitionBy("ra", "rb").orderBy("pos")
     val runs = matched
@@ -1316,9 +1312,7 @@ object Dedup {
     * candidate-pair-sized. */
   def lshSweep(spark: SparkSession, dir: String,
                threshold: Double = 0.5): DataFrame = {
-    val sigs = Silver.memoize(spark, "sigsWide", dir) {
-      signaturesWide(spark, dir)
-    }
+    val sigs = signaturesWide(spark, dir)
     val truth = ngramJaccard(spark, dir, threshold)
       .select(col("doc_a"), col("doc_b"))
     val truthN = truth.agg(count(lit(1)).as("n_truth"))
@@ -1345,18 +1339,20 @@ object Dedup {
         .select(col("doc_id"), col("bk.band").as("band"),
           col("bk.k1").as("k1"), col("bk.k2").as("k2"))
     }
-    val cands2 = bk2
-      .select(col("doc_id").as("doc_a"), col("band"), col("k1"), col("k2"))
-      .join(bk2.select(col("doc_id").as("doc_b"), col("band"),
-        col("k1"), col("k2")), Seq("band", "k1", "k2"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
-      .localCheckpoint() // feeds r=2 counts/hits AND the r=4/r=8 rescoring
+    // a silver: feeds the r=2 counts/hits AND the r=4/r=8 rescoring,
+    // which joins it by its measured size
+    val cands2 = Silver.memoize(spark, "lshCands2", dir) {
+      bk2.select(col("doc_id").as("doc_a"), col("band"), col("k1"), col("k2"))
+        .join(bk2.select(col("doc_id").as("doc_b"), col("band"),
+          col("k1"), col("k2")), Seq("band", "k1", "k2"))
+        .filter(col("doc_a") < col("doc_b"))
+        .select(col("doc_a"), col("doc_b")).distinct()
+    }
     val sa = sigs.select(col("doc_id").as("doc_a") +:
       (0 until NumHashes).map(j => col(s"mh$j").as(s"a$j")): _*)
     val sb = sigs.select(col("doc_id").as("doc_b") +:
       (0 until NumHashes).map(j => col(s"mh$j").as(s"b$j")): _*)
-    val wide = broadcast(cands2).join(sa, "doc_a").join(sb, "doc_b")
+    val wide = cands2.join(sa, "doc_a").join(sb, "doc_b")
     def collide(r: Int): Column =
       (0 until NumHashes / r).map { b =>
         (0 until r).map(i => col(s"a${r * b + i}") === col(s"b${r * b + i}"))
@@ -1454,29 +1450,24 @@ object Dedup {
                        minRun: Int = 2, minDocs: Int = 2,
                        topN: Int = 20): DataFrame = {
     val toks = Corpus.docsTok(spark, dir).select(col("doc_id"), col("words"))
-    // materialized once: the positioned shingle stream feeds the df agg
-    // AND the run-collapse join — un-checkpointed, the shingle explode
-    // (3-token string build per position) ran twice per call
-    val pos = toks
-      .select(col("doc_id"), posexplode(Corpus.shinglesOf(col("words"))))
-      .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("sh"))
-      .localCheckpoint()
-    val freq = pos.groupBy("sh")
-      .agg(countDistinct(col("doc_id")).as("df"))
-      .filter(col("df") >= minDf).select("sh")
-      .localCheckpoint()
+    // a silver: the positioned shingle stream feeds the df agg AND the
+    // run-collapse join — as a plain plan, the shingle explode (3-token
+    // string build per position) ran twice per call
+    val pos = Silver.memoize(spark, "positionedShingles", dir) {
+      toks.select(col("doc_id"), posexplode(Corpus.shinglesOf(col("words"))))
+        .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("sh"))
+    }
+    // the df-thresholded template-shingle set is a silver too: by its
+    // measured size it broadcasts while it fits (d15's discipline), and
+    // a boilerplate-heavy crawl's set falls back to a shuffle join
+    val freq = Silver.memoize(spark, s"templateShingles:$minDf", dir) {
+      pos.groupBy("sh")
+        .agg(countDistinct(col("doc_id")).as("df"))
+        .filter(col("df") >= minDf).select("sh")
+    }
     val byDoc = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("pos"))
-    // broadcast the df-thresholded template-shingle set (d15's
-    // discipline) so the full positioned stream is never shuffled by
-    // shingle text for this join — but only while it FITS: the set is
-    // corpus-derived with no upper bound (a boilerplate-heavy 100 TB
-    // crawl could push it past executor memory), so past a row cap the
-    // join falls back to shuffle, which is merely slower, never wrong.
-    // The checkpoint makes the cardinality probe free of a second df agg.
-    val freqSide =
-      if (freq.count() <= MaxBroadcastTemplates) broadcast(freq) else freq
-    val runs = pos.join(freqSide, Seq("sh"))
+    val runs = pos.join(freq, Seq("sh"))
       .withColumn("rn", row_number().over(byDoc))
       .withColumn("grp", col("pos") - col("rn"))
       .groupBy(col("doc_id"), col("grp"))
@@ -1578,12 +1569,19 @@ object Dedup {
     * positioned streams (d19's shape); runs/spans ride one pair-key
     * exchange. Never all-pairs anywhere. */
   def dupSpans(spark: SparkSession, dir: String,
-               minSpan: Int = 50, maxDf: Int = 50): DataFrame =
-    dupSpansFrom(Corpus.docsTok(spark, dir), minSpan, maxDf)
+               minSpan: Int = 50, maxDf: Int = 50): DataFrame = {
+    val docsTok = Corpus.docsTok(spark, dir)
+    // a silver: the pairs feed the doc filter and both sides of the join
+    dupSpansOver(docsTok, minSpan, Silver.memoize(spark,
+      s"dupSpanPairs:$minSpan:$maxDf", dir)(dupSpanPairs(docsTok, minSpan, maxDf)))
+  }
 
   private[graft] def dupSpansFrom(docsTok: DataFrame,
-                                  minSpan: Int, maxDf: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+                                  minSpan: Int, maxDf: Int): DataFrame =
+    dupSpansOver(docsTok, minSpan, dupSpanPairs(docsTok, minSpan, maxDf))
+
+  /** Stage 1: (doc_a, doc_b) pairs sharing a (minSpan − 2)-token window. */
+  private def dupSpanPairs(docsTok: DataFrame, minSpan: Int, maxDf: Int): DataFrame = {
     val k = minSpan - 2
     val wins = docsTok
       .select(col("doc_id"), col("words"),
@@ -1599,25 +1597,24 @@ object Dedup {
     // transiently holds a boilerplate window's full doc set before the
     // filter drops it; at true scale a count-first semi-join pre-cap
     // bounds that too (the d4/h1 discipline).
-    val winDocs = wins.groupBy(col("win"))
+    wins.groupBy(col("win"))
       .agg(sort_array(collect_set(col("doc_id"))).as("docs"))
       .filter(size(col("docs")) >= 2 && size(col("docs")) <= maxDf)
-    // materialized once: the candidate-pair relation now feeds three
-    // consumers (both stage-2 join legs' doc filters + the pair join
-    // itself) — un-checkpointed, stage 1's window aggregate would
-    // re-execute per reference
-    val pairs = winDocs
       .select(explode(col("docs")).as("doc_a"), col("docs"))
       .select(col("doc_a"), explode(col("docs")).as("doc_b"))
       .filter(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b")).distinct()
-      .localCheckpoint()
+  }
+
+  /** Stage 2: the longest shared span per candidate pair. */
+  private def dupSpansOver(docsTok: DataFrame, minSpan: Int,
+                           pairs: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     // stage 2 only ever needs candidate-pair docs' shingles: semi-join
     // the positioned stream down to the (tiny, broadcast) candidate doc
     // set BEFORE the (doc_b, shingle) exchange — the r13 shape shuffled
     // the FULL corpus shingle stream and dropped non-candidates at the
-    // join (guide §3.2: reduce the big side before shuffling it). The
-    // filtered stream is materialized once and feeds both join legs.
+    // join (guide §3.2: reduce the big side before shuffling it).
     val candDocs = pairs.select(col("doc_a").as("doc_id"))
       .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
     val shingPos = docsTok
@@ -1625,7 +1622,6 @@ object Dedup {
       .select(col("doc_id"), (col("pos") + lit(1L)).as("pos"),
         col("col").as("shingle"))
       .join(broadcast(candDocs), Seq("doc_id"), "left_semi")
-      .localCheckpoint()
     val matched = broadcast(pairs)
       .join(shingPos.select(col("doc_id").as("doc_a"),
         col("pos").as("pos_a"), col("shingle")), Seq("doc_a"))
@@ -1828,12 +1824,13 @@ object Dedup {
               .when(coalesce(col("near_hit"), lit(false)), lit("near"))
               .otherwise(lit("novel")).as("verdict"))
       }
-      // eager leaf: the BEFORE probe must execute before the appends
-      // below change what its lazy parquet scans would read
-      val before = classify(
-        spark.read.parquet(s"$indexDir/texts"),
-        spark.read.parquet(s"$indexDir/bands"))
-        .localCheckpoint()
+      // a silver, built here: the BEFORE probe must execute before the
+      // appends below change what its lazy parquet scans would read
+      val before = Silver.memoize(spark, s"d30BeforeProbe:$indexDir", dir) {
+        classify(
+          spark.read.parquet(s"$indexDir/texts"),
+          spark.read.parquet(s"$indexDir/bands"))
+      }
       // 2. THE MAINTENANCE: append the novel identities and band keys
       val novelIds = before.filter(col("verdict") === "novel")
         .select(col("doc_id"))

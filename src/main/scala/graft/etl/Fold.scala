@@ -32,8 +32,9 @@ import graft.functions.TopKByCount
   *    distinct skus) the merged summary is exact, max_err 0.
   *
   * Callers: a66–a68 ([[Materialize]], two slices), a69/a70
-  * ([[DayClose]], three slices), and sk17's page build and company
-  * re-fold ([[graft.analytics.Sketches.bitmapDistinct]]). */
+  * ([[DayClose]], three slices), sk17's page build and company re-fold
+  * ([[graft.analytics.Sketches.bitmapDistinct]]), and its streaming face
+  * ([[graft.streaming.StatefulBitmapDistinct]]). */
 object Fold {
 
   /** A mergeable partial over sales facts: `partial` aggregates one
@@ -57,9 +58,14 @@ object Fold {
 
   val pages: Partial = Partial(
     facts => facts
-      .groupBy(col("store_id"), expr("bitmap_bucket_number(sku)").as("bucket"))
-      .agg(expr("bitmap_construct_agg(bitmap_bit_position(sku))").as("bm")),
+      .groupBy(col("store_id"), bucketOf(col("sku")).as("bucket"))
+      .agg(pageOf(col("sku")).as("bm")),
     parts => orPages(parts, "store_id"))
+
+  /** Page columns: a sku's 32 768-key bucket, a group's page, a page's count. */
+  def bucketOf(sku: Column): Column = bitmap_bucket_number(sku)
+  def pageOf(sku: Column): Column = bitmap_construct_agg(bitmap_bit_position(sku))
+  def bitsOf(page: Column): Column = bitmap_count(page)
 
   /** OR-merges pages per (`keys`, bucket); with no keys, every store's
     * page of a bucket folds into one company page. */
@@ -71,7 +77,7 @@ object Fold {
     * `as`. Exact when no two pages share (`keys`, bucket). */
   def distinctOf(pagesDf: DataFrame, as: String, keys: String*): DataFrame =
     pagesDf.groupBy(keys.map(col): _*)
-      .agg(sum(expr("bitmap_count(bm)")).as(as))
+      .agg(sum(bitsOf(col("bm"))).as(as))
 
   val sketches: Partial = Partial(
     facts => facts

@@ -1,6 +1,6 @@
 package graft.etl
 
-import graft.model.Tables
+import graft.model.{Silver, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -65,24 +65,27 @@ object Layout {
         col("l_orderkey"), col("l_linenumber"))
     val dom = rows.agg(min(col("sku")).as("sku_lo"), max(col("sku")).as("sku_hi"),
       min(col("supp")).as("supp_lo"), max(col("supp")).as("supp_hi"))
-    // materialized once: GlobalRank evaluates its input twice (range
-    // sampling + the shuffle itself), so un-checkpointed the scan +
-    // bit-interleave lineage re-ran on both passes
-    val z = rows.crossJoin(broadcast(dom))
-      .withColumn("z", zValue(
-        scaled(col("sku"), col("sku_lo"), col("sku_hi")),
-        scaled(col("supp"), col("supp_lo"), col("supp_hi"))))
-      .select(col("sku"), col("supp"), col("l_orderkey"),
-        col("l_linenumber"), col("z"))
-      .localCheckpoint()
+    // a silver: GlobalRank evaluates its input twice (range sampling +
+    // the shuffle itself), so as a plain plan the scan + bit-interleave
+    // lineage re-ran on both passes
+    val z = Silver.memoize(spark, "zorderKeys", dir) {
+      rows.crossJoin(broadcast(dom))
+        .withColumn("z", zValue(
+          scaled(col("sku"), col("sku_lo"), col("sku_hi")),
+          scaled(col("supp"), col("supp_lo"), col("supp_hi"))))
+        .select(col("sku"), col("supp"), col("l_orderkey"),
+          col("l_linenumber"), col("z"))
+    }
     // the probe-rectangle row count is layout-independent, so it rides
     // the zorder layout's file-stat aggregate as one conditional sum
     // instead of a third fact pass; the file-grain relation is tiny and
     // feeds two consumers (readout + the selected scalar)
-    val zFiles = fileStats(graft.plans.GlobalRank.withRowNumber(
-        z, "rk", col("z"), col("l_orderkey"), col("l_linenumber")),
-        rowsPerFile, withSel = Some((skuLo, skuHi, suppLo, suppHi)))
-      .localCheckpoint()
+    val zFiles = Silver.memoize(spark,
+        s"zorderFiles:$rowsPerFile:$skuLo:$skuHi:$suppLo:$suppHi", dir) {
+      fileStats(graft.plans.GlobalRank.withRowNumber(
+          z, "rk", col("z"), col("l_orderkey"), col("l_linenumber")),
+          rowsPerFile, withSel = Some((skuLo, skuHi, suppLo, suppHi)))
+    }
     val selected = zFiles.agg(sum(col("n_sel")).as("n_rows_selected"))
     val zLayout =
       statsReadout("zorder", zFiles, skuLo, skuHi, suppLo, suppHi)

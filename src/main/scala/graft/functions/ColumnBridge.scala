@@ -43,8 +43,8 @@ object ColumnBridge {
     classic(spark, None)._1.internalCreateDataFrame(rdd, schema)
 
   /** `leaf` (a checkpointed `LogicalRDD`) re-stated with the row count
-    * and row bytes it holds, measured by one pass over its stored
-    * blocks. A checkpoint otherwise carries the optimizer's ESTIMATE
+    * and row bytes it holds, measured by one pass over its blocks — for
+    * a lazy checkpoint, the pass that fills them. A checkpoint otherwise carries the optimizer's ESTIMATE
     * for the plan it was cut from — join estimates are products of
     * their sides — and consumer joins lose their broadcast; a loaded
     * columnar cache reports measured statistics the same way. */

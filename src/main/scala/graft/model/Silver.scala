@@ -24,13 +24,16 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * are PERSISTED tables registered once in the catalog — a consumer
   * reads `silver.trend_direction` as a SCAN LEAF, it does not re-derive
   * (or re-match) the lineage per query. Here the first call builds the
-  * silver once, `localCheckpoint` materializes it, and the memoized
-  * handle is a `LogicalRDD` LEAF: consumer plans are shallow (cheap to
-  * analyze/canonicalize), nothing enters the CacheManager, and the leaf
-  * states its measured rows and bytes, so consumer joins plan against
-  * the real size, not the optimizer's estimate. Builders return PLAIN
-  * plans (SilverLintSpec); a body that already is a checkpointed leaf
-  * (the iterative graph/component loops) is kept as-is.
+  * silver once and the memoized handle is a `LogicalRDD` LEAF: consumer
+  * plans are shallow (cheap to analyze/canonicalize), nothing enters the
+  * CacheManager, and the leaf states its measured rows and bytes, so
+  * consumer joins (and their broadcasts) plan against the real size,
+  * not the optimizer's estimate. ONE job fills and measures a fresh
+  * leaf: the checkpoint is lazy, the measuring pass fills its blocks,
+  * and Spark truncates the lineage when that job ends. Builders return
+  * PLAIN plans (SilverLintSpec), and an intermediate a builder reuses
+  * is a silver keyed by every parameter it depends on; a body that
+  * already is a checkpointed leaf (the iterative loops) is kept as-is.
   *
   * A DataFrame is bound to the session that built it, so the key
   * includes the session — a second session in the same JVM builds its
@@ -62,11 +65,11 @@ object Silver {
     memo.getOrElseUpdate((spark, name, dir), new Handle(build)).frame
 
   /** The build as a materialized leaf: a body whose plan already is a
-    * checkpointed `LogicalRDD` is kept as-is; anything else gets one
-    * eager `localCheckpoint` job into executor-local blocks and one
-    * pass over those blocks to measure it. */
+    * checkpointed `LogicalRDD` is kept as-is; anything else is marked
+    * for a lazy `localCheckpoint` and measured by one job, which fills
+    * the executor-local blocks as it counts them. */
   private def leaf(df: DataFrame): DataFrame = df.queryExecution.logical match {
     case r: LogicalRDD if r.rdd.isCheckpointed => df
-    case _ => ColumnBridge.withMeasuredStats(df.localCheckpoint())
+    case _ => ColumnBridge.withMeasuredStats(df.localCheckpoint(eager = false))
   }
 }

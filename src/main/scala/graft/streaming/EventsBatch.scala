@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.functions.FloorLog2.floorLog2
-import graft.model.Tables
+import graft.model.{Silver, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -1193,17 +1193,17 @@ object EventsBatch {
     val edges = typeEdges(spark, dir)
     val outDeg = typeOutDeg(spark, dir)
     val nodes = typeNodes(spark, dir)
-    val rems = nodes.filter(col("etype") =!= target)
-      .select(col("etype").as("r"))
-      .union(nodes.limit(1).select(lit(none).as("r")))
-      .localCheckpoint()
+    val rems = Silver.memoize(spark, s"removalStates:$target", dir) {
+      nodes.filter(col("etype") =!= target)
+        .select(col("etype").as("r"))
+        .union(nodes.limit(1).select(lit(none).as("r")))
+    }
     def pinned(mass: Column): Column =
       when(col("etype") === col("r"), 0L)
         .when(col("etype") === target, 1000L)
         .otherwise(mass)
     var p = rems.crossJoin(nodes)
       .select(col("r"), col("etype"), pinned(lit(0L)).as("p_milli"))
-      .localCheckpoint()
     (1 to steps).foreach { _ =>
       val contrib = edges
         .join(broadcast(p), col("to_type") === col("etype"))
@@ -1220,13 +1220,14 @@ object EventsBatch {
           pinned(coalesce(expr("mass DIV outc"), lit(0L))).as("p_milli"))
         .localCheckpoint() // |types|² rows; keeps each step's agg single
     }
-    val firsts = Tables.events(spark, dir)
-      .groupBy(col("user_id"))
-      .agg(min(struct(col("ts"), col("event_id"), col("event_type")))
-        .as("f"))
-      .select(col("f.event_type").as("s"))
-      .groupBy(col("s")).agg(count(lit(1)).as("n_users"))
-      .localCheckpoint()
+    val firsts = Silver.memoize(spark, "firstEventTypes", dir) {
+      Tables.events(spark, dir)
+        .groupBy(col("user_id"))
+        .agg(min(struct(col("ts"), col("event_id"), col("event_type")))
+          .as("f"))
+        .select(col("f.event_type").as("s"))
+        .groupBy(col("s")).agg(count(lit(1)).as("n_users"))
+    }
     val total = firsts.agg(sum(col("n_users")).cast("long").as("n_total"))
     val conv = p.join(broadcast(firsts), col("etype") === col("s"))
       .groupBy(col("r"))

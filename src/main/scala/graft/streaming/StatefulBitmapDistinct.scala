@@ -1,7 +1,9 @@
 package graft.streaming
 
+import graft.etl.Fold
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.functions
+import org.apache.spark.sql.functions.{col, lit}
 
 /** One (store, sku) sale observation on the ingest stream — the sk17
   * distinct-counting domain. */
@@ -15,53 +17,25 @@ case class SkuSale(store_id: String, sku: Long)
 case class BucketDistinct(store_id: String, bucket: Long, n_seen: Long,
                           n_distinct: Long)
 
-/** sk17's EXACT distinct counting as a LIVE streaming operator: each
-  * (store, sku-bucket) key holds one fixed 4 KiB bitmap cell; a sale
-  * sets its sku's bit and the batch emits the bucket's updated distinct
-  * count. This is the streaming face of the same algebra the batch key
-  * rests on — bitmap OR is idempotent, commutative and associative, so
-  * the maintained count is independent of delivery order, micro-batch
-  * split, and re-delivery, with NO retraction logic (the property HLL
-  * twins buy with error; here it is exact).
+/** sk17's EXACT distinct counting as a LIVE streaming operator: a
+  * streaming aggregation over [[Fold]]'s page algebra, whose state per
+  * (store, sku-bucket) is one 4 KiB page and an arrival count; in Update
+  * mode each batch emits every touched bucket's cumulative count. Bitmap
+  * OR is idempotent, commutative and associative, so the count is
+  * independent of delivery order, micro-batch split and re-delivery,
+  * with NO retraction logic (HLL twins buy that with error).
   *
-  * Scale posture: state is exactly 4096 bytes per (store, occupied
-  * bucket) — bounded by stores × occupied key-space buckets, not by the
-  * stream; keys hash-partition the state store, and emission is one
-  * 4-field row per touched bucket per batch. The store-level (or
-  * company-level) total is a downstream bucket-sum — the same re-fold
-  * the batch key does, never a rescan. */
+  * Scale posture: state is bounded by stores × occupied buckets, not by
+  * the stream; the store (or company) total is a downstream bucket-sum —
+  * the same re-fold the batch key does, never a rescan. */
 object StatefulBitmapDistinct {
-
-  val BucketBits = 32768 // matches Spark's bitmap_bucket_number/bit_position
-
-  /** Spark's bucket split, BOTH branches (spec-asserted against the SQL
-    * functions over the live sku domain): positive keys fill buckets
-    * 1.. top-down, zero/negative keys mirror into buckets 0, -1, .. via
-    * truncating division — so bucket 0 holds v ∈ [-32767, 0] with
-    * position -v. */
-  def bucketOf(sku: Long): Long =
-    if (sku > 0) (sku - 1) / BucketBits + 1 else sku / BucketBits
-  def positionOf(sku: Long): Int =
-    (if (sku > 0) (sku - 1) % BucketBits else -(sku % BucketBits)).toInt
 
   def count(ds: Dataset[SkuSale]): Dataset[BucketDistinct] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(s => (s.store_id, bucketOf(s.sku)))
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout) {
-        (key: (String, Long), rows: Iterator[SkuSale],
-         state: GroupState[(Long, Array[Byte])]) =>
-          val (seen0, bits) = state.getOption
-            .getOrElse((0L, new Array[Byte](BucketBits / 8)))
-          var nSeen = seen0
-          rows.foreach { s =>
-            nSeen += 1
-            val p = positionOf(s.sku)
-            bits(p >> 3) = (bits(p >> 3) | (1 << (p & 7))).toByte
-          }
-          var distinct = 0L
-          bits.foreach(b => distinct += java.lang.Integer.bitCount(b & 0xff))
-          state.update((nSeen, bits))
-          Iterator.single(BucketDistinct(key._1, key._2, nSeen, distinct))
-      }
+    ds.groupBy(col("store_id"), Fold.bucketOf(col("sku")).as("bucket"))
+      .agg(functions.count(lit(1)).as("n_seen"), Fold.pageOf(col("sku")).as("bm"))
+      .select(col("store_id"), col("bucket"), col("n_seen"),
+        Fold.bitsOf(col("bm")).as("n_distinct"))
+      .as[BucketDistinct]
   }
 }

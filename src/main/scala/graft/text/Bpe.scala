@@ -113,39 +113,40 @@ object Bpe {
     val merges = Seq.newBuilder[(Long, String, String, String, Long)]
     var grank = 0L
     var exhausted = false
-    for (_ <- 1 to rounds if !exhausted) {
-      val pairs = dict
-        .select(col("freq"),
-          explode(arrays_zip(
-            slice(col("symbols"), lit(1), size(col("symbols")) - 1).as("l"),
-            slice(col("symbols"), lit(2), size(col("symbols")) - 1).as("r"))
-          ).as("p"))
-        .groupBy(col("p.l").as("left"), col("p.r").as("right"))
-        .agg(sum(col("freq")).as("pair_count"))
-      // ONE driver round-trip per ROUND (window rows), not per merge
-      val cands = pairs
-        .orderBy(col("pair_count").desc, col("left").asc, col("right").asc)
-        .limit(window).collect()
-        .map(r => (r.getAs[String]("left"), r.getAs[String]("right")) ->
-          r.getAs[Long]("pair_count")).toSeq
-      if (cands.nonEmpty) {
-        val kept = keepCompatible(cands)
-        kept.foreach { case ((l, r), c) =>
-          grank += 1
-          merges += ((grank, l, r, l + r, c))
-        }
-        // the whole batch applies in ONE projection: disjoint pairs
-        // compose order-independently, folds chained in rank order
-        val batched = kept.foldLeft(col("symbols")) {
-          case (acc, ((l, r), _)) => mergeCol(acc, l, r)
-        }
-        val next = dict.select(batched.as("symbols"), col("freq")).cache()
-        next.count() // materialize before unpersisting the parent
-        dict.unpersist()
-        dict = next
-      } else exhausted = true // no pairs left: stop submitting empty jobs
-    }
-    dict.unpersist()
+    try {
+      for (_ <- 1 to rounds if !exhausted) {
+        val pairs = dict
+          .select(col("freq"),
+            explode(arrays_zip(
+              slice(col("symbols"), lit(1), size(col("symbols")) - 1).as("l"),
+              slice(col("symbols"), lit(2), size(col("symbols")) - 1).as("r"))
+            ).as("p"))
+          .groupBy(col("p.l").as("left"), col("p.r").as("right"))
+          .agg(sum(col("freq")).as("pair_count"))
+        // ONE driver round-trip per ROUND (window rows), not per merge
+        val cands = pairs
+          .orderBy(col("pair_count").desc, col("left").asc, col("right").asc)
+          .limit(window).collect()
+          .map(r => (r.getAs[String]("left"), r.getAs[String]("right")) ->
+            r.getAs[Long]("pair_count")).toSeq
+        if (cands.nonEmpty) {
+          val kept = keepCompatible(cands)
+          kept.foreach { case ((l, r), c) =>
+            grank += 1
+            merges += ((grank, l, r, l + r, c))
+          }
+          // the whole batch applies in ONE projection: disjoint pairs
+          // compose order-independently, folds chained in rank order
+          val batched = kept.foldLeft(col("symbols")) {
+            case (acc, ((l, r), _)) => mergeCol(acc, l, r)
+          }
+          val parent = dict
+          dict = parent.select(batched.as("symbols"), col("freq")).cache()
+          dict.count() // materialize before unpersisting the parent
+          parent.unpersist()
+        } else exhausted = true // no pairs left: stop submitting empty jobs
+      }
+    } finally dict.unpersist()
     merges.result()
       .toDF("merge_rank", "left", "right", "merged", "pair_count")
       .orderBy("merge_rank")

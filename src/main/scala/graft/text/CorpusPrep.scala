@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.model.Silver
 
 /** Training-corpus preparation operators — the steps between "raw scraped
   * documents" and "training mix" that every large-scale LLM data pipeline
@@ -1109,14 +1110,15 @@ object CorpusPrep {
     // the corpus totals re-aggregate from the bucket model (Σ per-bucket
     // counts ≡ corpus token count), so the explode+dict join runs once
     // where the r13 shape paid it three times (model, totals, scoring).
-    // localCheckpoint: docTf feeds two consumers (counts0, docW).
-    val docTf = toks.groupBy(col("doc_id"), col("lang"), col("bucket"))
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+    // docTf is a silver: it feeds counts0 and docW. The bucket model
+    // feeds counts and totals in one plan, which share its exchange.
+    val docTf = Silver.memoize(spark, s"dsirDocTf:$nBuckets", dir) {
+      toks.groupBy(col("doc_id"), col("lang"), col("bucket"))
+        .agg(count(lit(1)).as("tf"))
+    }
     val counts0 = docTf.groupBy(col("bucket"))
       .agg(sum(col("tf")).as("cr0"),
         sum(when(col("lang") === target, col("tf")).otherwise(0L)).as("ct0"))
-      .localCheckpoint() // bucket-bounded; feeds counts AND totals
     val counts = counts0
       .select(col("bucket"), (col("cr0") + 1L).as("cr"), (col("ct0") + 1L).as("ct"))
     val totals = counts0.agg(
@@ -1212,15 +1214,16 @@ object CorpusPrep {
     val perDoc = TextAnalysis.lmSurprisal(spark, dir)
       .join(Corpus.docs(spark, dir).select(col("doc_id"), col("source")),
         Seq("doc_id"))
-    // cached: the |sources|-sized rollup feeds THREE consumers below
+    // a silver: the |sources|-sized rollup feeds THREE consumers below
     // (the corpus-total aggregate, the stepped projection, the weight
-    // normalizer) — without a cache each 1-row aggregate re-executes
+    // normalizer) — as a plain plan each 1-row aggregate re-executes
     // the whole corpus surprisal pipeline
-    val dom = perDoc.groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_tokens")).as("n_tokens"),
-        sum(col("sum_bits")).as("sum_bits"))
-      .cache()
+    val dom = Silver.memoize(spark, "domainReweightSources", dir) {
+      perDoc.groupBy(col("source"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("n_tokens")).as("n_tokens"),
+          sum(col("sum_bits")).as("sum_bits"))
+    }
     val tot = dom.agg(sum(col("n_tokens")).as("tot_tokens"),
       sum(col("sum_bits")).as("tot_bits"))
     val stepped = dom.crossJoin(tot) // 1-row scalar broadcast

@@ -1,7 +1,7 @@
 package graft.text
 
 import graft.functions.FloorLog2.floorLog2
-import graft.model.Tables
+import graft.model.{Silver, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -860,11 +860,12 @@ object TextAnalysis {
     // scalars AND the test side — un-materialized, Spark re-ran the
     // corpus explode once per consumer (4 full passes per call), because
     // identical non-exchange subtrees are never shared within a plan
-    val tf = Corpus.docsTok(spark, dir)
-      .select(col("doc_id"), col("lang"), explode(col("words")).as("word"))
-      .groupBy(col("doc_id"), col("lang"), col("word"))
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+    val tf = Silver.memoize(spark, "nbDocLangWordTf", dir) {
+      Corpus.docsTok(spark, dir)
+        .select(col("doc_id"), col("lang"), explode(col("words")).as("word"))
+        .groupBy(col("doc_id"), col("lang"), col("word"))
+        .agg(count(lit(1)).as("tf"))
+    }
     val train = tf.filter(pmod(col("doc_id"), lit(2L)) === 0L)
     // model: per-(lang, word) occurrence counts — vocab-bounded
     val model = train.groupBy(col("lang"), col("word"))
@@ -1051,18 +1052,18 @@ object TextAnalysis {
         explode(col("words")).as("word"))
       .groupBy("doc_id", "dl", "word").agg(count(lit(1)).as("tf"))
     val byWord = Window.partitionBy("word")
-    // materialized once: the df-capped stats relation feeds the query
-    // terms, the posting-join candidates AND the scoring left join —
-    // un-checkpointed, the corpus explode + the word-window sort ran
+    // a silver: the df-capped stats relation feeds the query terms, the
+    // posting-join candidates AND the scoring left join — as a plain
+    // plan, the corpus explode + the word-window sort ran
     // once per consumer (3 full passes per call)
-    val stats = tfs
-      .withColumn("df", count(lit(1)).over(byWord))
-      .withColumn("cf", sum(col("tf")).over(byWord))
-      .crossJoin(broadcast(totals))
-      .filter(col("df") * lit(100L) <= lit(maxDfPct.toLong) * col("n_docs"))
-      .withColumn("cfp",
-        greatest(expr("(cf * 1048576) DIV t_total"), lit(1L)))
-      .localCheckpoint()
+    val stats = Silver.memoize(spark, s"qlTermStats:$maxDfPct", dir) {
+      tfs.withColumn("df", count(lit(1)).over(byWord))
+        .withColumn("cf", sum(col("tf")).over(byWord))
+        .crossJoin(broadcast(totals))
+        .filter(col("df") * lit(100L) <= lit(maxDfPct.toLong) * col("n_docs"))
+        .withColumn("cfp",
+          greatest(expr("(cf * 1048576) DIV t_total"), lit(1L)))
+    }
     val qterms = stats.filter(col("doc_id") < nQueries)
       .select(col("doc_id").as("query_id"), col("word"),
         col("cfp").as("q_cfp")).distinct()

@@ -1,6 +1,6 @@
 package graft.vector
 
-import graft.model.Tables
+import graft.model.{Silver, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -2735,14 +2735,15 @@ object Similarity {
       disc.zipWithIndex.foldLeft(lit(0L)) { case (acc, (d, i)) =>
         when(rankCol === (i + 1).toLong, lit(d)).otherwise(acc)
       }
-    // each parent ranking computed ONCE at depth 2k and materialized
+    // each parent ranking computed ONCE at depth 2k as a silver
     // (query-set-sized): bm25@k / cosine@k are rank-prefix filters of
     // the same deterministic total order, and the fusion runs over the
     // shared relations via rrfFrom — the r13 shape re-ran bm25 and
     // cosine a second time inside rrfFusion
-    val lex2k = graft.text.TextAnalysis.bm25(spark, dir, nQueries, 2 * k)
-      .localCheckpoint()
-    val sem2k = cosineTopK(spark, dir, 2 * k, nQueries).localCheckpoint()
+    val lex2k = Silver.memoize(spark, s"bm25TopK:$nQueries:${2 * k}", dir)(
+      graft.text.TextAnalysis.bm25(spark, dir, nQueries, 2 * k))
+    val sem2k = Silver.memoize(spark, s"cosineTopK:${2 * k}:$nQueries", dir)(
+      cosineTopK(spark, dir, 2 * k, nQueries))
     val systems =
       lex2k.filter(col("rank") <= k)
         .select(lit("bm25").as("system"), col("query_id"),
@@ -3128,28 +3129,28 @@ object Similarity {
   def mmrDiversify(spark: SparkSession, dir: String, k: Int = 5,
                    nCand: Int = 10,
                    nQueries: Int = defaultNQueries): DataFrame = {
-    val pool = cosineTopK(spark, dir, nCand, nQueries)
-      .select(col("query_id"), col("neighbor_id").as("cand_id"),
-        col("cosine").as("rel"))
-      .localCheckpoint()
+    val pool = Silver.memoize(spark, s"mmrPool:$nCand:$nQueries", dir) {
+      cosineTopK(spark, dir, nCand, nQueries)
+        .select(col("query_id"), col("neighbor_id").as("cand_id"),
+          col("cosine").as("rel"))
+    }
     val emb = withNorm(spark, dir)
       .select(col("vec_id"), col("embedding"), col("norm2"))
     val poolE = pool
       .join(emb, col("cand_id") === col("vec_id"))
       .select(col("query_id"), col("cand_id"), col("embedding"),
         col("norm2"))
-      .localCheckpoint()
     val a = poolE.select(col("query_id"), col("cand_id").as("a_id"),
       col("embedding").as("a_emb"), col("norm2").as("a_n2"))
     val b = poolE.select(col("query_id").as("qb"),
       col("cand_id").as("b_id"), col("embedding").as("b_emb"),
       col("norm2").as("b_n2"))
-    val psim = a
-      .join(b, col("query_id") === col("qb") && col("a_id") =!= col("b_id"))
-      .select(col("query_id"), col("a_id"), col("b_id"),
-        cosine(dotCol(col("a_emb"), col("b_emb")),
-          col("a_n2"), col("b_n2")).as("sim"))
-      .localCheckpoint()
+    val psim = Silver.memoize(spark, s"mmrPoolSim:$nCand:$nQueries", dir) {
+      a.join(b, col("query_id") === col("qb") && col("a_id") =!= col("b_id"))
+        .select(col("query_id"), col("a_id"), col("b_id"),
+          cosine(dotCol(col("a_emb"), col("b_emb")),
+            col("a_n2"), col("b_n2")).as("sim"))
+    }
     val w1 = Window.partitionBy(col("query_id"))
       .orderBy(col("rel").desc, col("cand_id").asc)
     var all = pool.withColumn("rn", row_number().over(w1))
@@ -3269,10 +3270,11 @@ object Similarity {
         col("embedding"), col("norm2"))
     val q = graft.text.TextAnalysis.qualityScore(spark, dir)
       .select(col("doc_id"), col("quality_score"))
-    val a = assigned.join(q, col("vec_id") === col("doc_id"))
-      .select(col("doc_id"), col("cell"), col("embedding"),
-        col("norm2"), col("quality_score"))
-      .localCheckpoint()
+    val a = Silver.memoize(spark, s"semDedupCells:$nCentroids", dir) {
+      assigned.join(q, col("vec_id") === col("doc_id"))
+        .select(col("doc_id"), col("cell"), col("embedding"),
+          col("norm2"), col("quality_score"))
+    }
     val x = a.select(col("doc_id"), col("cell"), col("embedding"),
       col("norm2"), col("quality_score"))
     val y = a.select(col("doc_id").as("y_id"), col("cell").as("y_cell"),

@@ -16,8 +16,7 @@ class CorpusPrepSpec extends GraftSpec {
       (2L, "call 555-123-4567 twice: 555-123-4567", "en", "web", 0L),
       (3L, "no pii here just 42 numbers 7", "en", "web", 0L)
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val tmp = java.nio.file.Files.createTempDirectory("pii_docs")
-    tmp.toFile.deleteOnExit()
+    val tmp = tempDir("pii_docs")
     crafted.write.mode("overwrite").parquet(tmp.resolve("documents.parquet").toString)
 
     val r = CorpusPrep.piiScrub(spark, tmp.toString).collect()
@@ -388,8 +387,7 @@ class CorpusPrepSpec extends GraftSpec {
   }
 
   test("writeShards: hive-partitioned by split/lang, kept docs only, idempotent") {
-    val out = java.nio.file.Files.createTempDirectory("shards_out")
-    out.toFile.deleteOnExit()
+    val out = tempDir("shards_out")
     graft.text.CorpusFilter.writeShards(spark, sfDir, out.toString)
     graft.text.CorpusFilter.writeShards(spark, sfDir, out.toString) // overwrite, not append
     val shards = spark.read.parquet(out.toString)

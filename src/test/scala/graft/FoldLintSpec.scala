@@ -11,6 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *      second copy elsewhere is a second definition of a monoid.
   *   2. No `spark.graft.*` configuration key appears: the engine has no
   *      settable options of its own, so a key that appears is a new knob.
+  *   3. No hand-written bitmap under `graft/streaming/`: a streaming
+  *      distinct count folds [[graft.etl.Fold]]'s pages, so no bit count
+  *      or 32 768-key bucket split is written there a second time.
   */
 class FoldLintSpec extends AnyFunSuite {
 
@@ -38,5 +41,16 @@ class FoldLintSpec extends AnyFunSuite {
       m <- "spark\\.graft\\.[A-Za-z0-9_.]*".r.findAllMatchIn(src)
     } yield s"$file:${MainSources.lineOf(src, m.start)}: ${m.matched}"
     assert(hits.isEmpty, "\nspark.graft.* keys under src/main:\n" + hits.mkString("\n"))
+  }
+
+  test("no hand-written bitmap bit count or bucket split under graft/streaming/") {
+    val hits = for {
+      (file, src) <- MainSources.files if file.startsWith("graft/streaming/")
+      m <- "bitCount\\(|\\b32768\\b|BucketBits".r.findAllMatchIn(src)
+    } yield s"$file:${MainSources.lineOf(src, m.start)}: ${m.matched}"
+    assert(hits.isEmpty,
+      "\nhand-written bitmap code under graft/streaming/ (fold " +
+        "graft.etl.Fold's pages instead):\n" + hits.mkString("\n"))
+    assert(MainSources.files.exists(_._1.startsWith("graft/streaming/")))
   }
 }

@@ -13,6 +13,12 @@ trait GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = GraftSpec.session
 
+  /** A fresh directory under the system temp dir, deleted recursively
+    * when the JVM exits: `File.deleteOnExit` cannot remove a directory
+    * that Spark has filled. */
+  def tempDir(tag: String): java.nio.file.Path =
+    java.nio.file.Path.of(graft.etl.Scratch.tempDir(tag))
+
   override def afterAll(): Unit = () // session shared across suites
 }
 

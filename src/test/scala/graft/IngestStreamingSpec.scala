@@ -10,12 +10,6 @@ import java.nio.file.{Files, Path}
   * Streaming wrapper, and the multimodal binary-column plumbing. */
 class IngestStreamingSpec extends GraftSpec {
 
-  private def tmp(prefix: String): Path = {
-    val p = Files.createTempDirectory(prefix)
-    p.toFile.deleteOnExit()
-    p
-  }
-
   private val goodRecord =
     """{"transaction_id": "TXN-0001-20240102-0001",
       | "transaction_timestamp": "2024-01-02T09:15:00",
@@ -28,9 +22,9 @@ class IngestStreamingSpec extends GraftSpec {
     Files.writeString(dir.resolve(name), body)
 
   test("ingest: valid file lands in Hive-partitioned lake; bad rows quarantined") {
-    val in = tmp("uploads")
-    val lake = tmp("lake")
-    val rej = tmp("rejected")
+    val in = tempDir("uploads")
+    val lake = tempDir("lake")
+    val rej = tempDir("rejected")
     val badQuantity = goodRecord.replace("\"quantity\": 2", "\"quantity\": 0")
     val badPayment = goodRecord.replace("credit", "bitcoin")
     writeUpload(in, "store_0001_2024-01-02.json", s"[$goodRecord, $goodRecord]")
@@ -58,7 +52,7 @@ class IngestStreamingSpec extends GraftSpec {
 
   test("ingest: CSV source runs the SAME validation core — routing parity " +
     "with the JSON path on equivalent content") {
-    val in = tmp("uploads_csv")
+    val in = tempDir("uploads_csv")
     val header = "transaction_id,transaction_timestamp,item_sku,item_name," +
       "quantity,unit_price,line_total,discount_amount,payment_method,customer_id"
     def row(qty: String, pay: String) =
@@ -86,9 +80,9 @@ class IngestStreamingSpec extends GraftSpec {
   }
 
   test("ingest: malformed JSON file routes to quarantine, not the lake") {
-    val in = tmp("uploads2")
-    val lake = tmp("lake2")
-    val rej = tmp("rejected2")
+    val in = tempDir("uploads2")
+    val lake = tempDir("lake2")
+    val rej = tempDir("rejected2")
     writeUpload(in, "store_0003_2024-01-05.json", "this is not json at all {]")
     writeUpload(in, "store_0004_2024-01-05.json", s"[$goodRecord]")
     val (valid, rejected) = Ingest.processUploads(
@@ -100,11 +94,11 @@ class IngestStreamingSpec extends GraftSpec {
   }
 
   test("streaming: AvailableNow ingests, upserts summaries, writes completeness ledger") {
-    val in = tmp("stream_in")
-    val lake = tmp("stream_lake")
-    val summ = tmp("stream_summary")
-    val ledger = tmp("stream_ledger")
-    val ckpt = tmp("stream_ckpt")
+    val in = tempDir("stream_in")
+    val lake = tempDir("stream_lake")
+    val summ = tempDir("stream_summary")
+    val ledger = tempDir("stream_ledger")
+    val ckpt = tempDir("stream_ckpt")
     writeUpload(in, "store_0001_2024-02-01.json", s"[$goodRecord, $goodRecord]")
     writeUpload(in, "store_0002_2024-02-01.json", s"[$goodRecord]")
 
@@ -136,8 +130,8 @@ class IngestStreamingSpec extends GraftSpec {
     // the stream runs batches in its own cloned session; a direct call
     // runs in the caller's, which later overwrites (static by default)
     // share — the sinks must ask for dynamic overwrite per write
-    val in = tmp("batch_in")
-    val (lake, summ, ledger) = (tmp("batch_lake"), tmp("batch_summary"), tmp("batch_ledger"))
+    val in = tempDir("batch_in")
+    val (lake, summ, ledger) = (tempDir("batch_lake"), tempDir("batch_summary"), tempDir("batch_ledger"))
     writeUpload(in, "store_0001_2024-03-01.json", s"[$goodRecord]")
     val s2 = spark.newSession()
     val overwriteMode = "spark.sql.sources.partitionOverwriteMode"
@@ -161,26 +155,26 @@ class IngestStreamingSpec extends GraftSpec {
   }
 
   private def batch(files: (String, String)*): org.apache.spark.sql.DataFrame = {
-    val in = tmp("wave_in")
+    val in = tempDir("wave_in")
     files.foreach { case (name, body) => writeUpload(in, name, body) }
     Ingest.readUploads(spark, in.toString)
   }
 
   test("ingest: processUploads takes both counts from its two writes (2 jobs)") {
-    val in = tmp("uploads_jobs")
+    val in = tempDir("uploads_jobs")
     writeUpload(in, "store_0001_2024-01-02.json", s"[$goodRecord, $goodRecord]")
     writeUpload(in, "store_0002_2024-01-02.json",
       s"[$goodRecord, ${goodRecord.replace("credit", "bitcoin")}]")
     val (counts, jobs) = JobLog.during(spark) {
-      Ingest.processUploads(spark, in.toString, tmp("lake_jobs").toString,
-        tmp("rejected_jobs").toString)
+      Ingest.processUploads(spark, in.toString, tempDir("lake_jobs").toString,
+        tempDir("rejected_jobs").toString)
     }
     assert(counts === ((3L, 1L)))
     assert(jobs.size === 2, s"one job per sink, no counting pass: $jobs")
   }
 
   test("streaming: a wave rewrites only its own dates' ledger partitions") {
-    val (lake, summ, ledger) = (tmp("gate_lake"), tmp("gate_summary"), tmp("gate_ledger"))
+    val (lake, summ, ledger) = (tempDir("gate_lake"), tempDir("gate_summary"), tempDir("gate_ledger"))
     def wave(files: (String, String)*): Unit = StreamingIngest.processBatch(
       batch(files: _*), lake.toString, summ.toString, ledger.toString, expectedStores = 2)
     wave("store_0001_2024-04-01.json" -> s"[$goodRecord]")
@@ -204,7 +198,7 @@ class IngestStreamingSpec extends GraftSpec {
   }
 
   test("streaming: a batch whose every row is rejected leaves lake, summary and ledger unchanged") {
-    val (lake, summ, ledger) = (tmp("rej_lake"), tmp("rej_summary"), tmp("rej_ledger"))
+    val (lake, summ, ledger) = (tempDir("rej_lake"), tempDir("rej_summary"), tempDir("rej_ledger"))
     def wave(files: (String, String)*): Unit = StreamingIngest.processBatch(
       batch(files: _*), lake.toString, summ.toString, ledger.toString, expectedStores = 1)
     wave("store_0001_2024-05-01.json" -> s"[$goodRecord, $goodRecord]")
@@ -221,7 +215,7 @@ class IngestStreamingSpec extends GraftSpec {
   }
 
   test("streaming: one direct processBatch runs a fixed number of jobs") {
-    val (lake, summ, ledger) = (tmp("jobs_lake"), tmp("jobs_summary"), tmp("jobs_ledger"))
+    val (lake, summ, ledger) = (tempDir("jobs_lake"), tempDir("jobs_summary"), tempDir("jobs_ledger"))
     def wave(day: String) = JobLog.during(spark) {
       StreamingIngest.processBatch(batch(s"store_0001_2024-06-$day.json" -> s"[$goodRecord]"),
         lake.toString, summ.toString, ledger.toString, expectedStores = 1)
@@ -259,7 +253,7 @@ class IngestStreamingSpec extends GraftSpec {
   }
 
   test("ndjson export: line-delimited json round-trips") {
-    val out = tmp("ndjson")
+    val out = tempDir("ndjson")
     val df = graft.etl.StoreDaily.rollup(spark, sfDir).limit(20)
     Ingest.exportNdjson(df, out.toString)
     val back = spark.read.json(out.toString)
@@ -268,7 +262,7 @@ class IngestStreamingSpec extends GraftSpec {
   }
 
   test("ndjson export writes the BI manifest sidecar next to the dataset") {
-    val out = tmp("ndjson_manifest")
+    val out = tempDir("ndjson_manifest")
     val df = graft.etl.StoreDaily.rollup(spark, sfDir).limit(20)
     val manifestPath = Ingest.exportNdjsonWithManifest(df, out.toString, parts = 2)
     assert(manifestPath.endsWith("manifest.json"))

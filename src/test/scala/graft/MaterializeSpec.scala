@@ -7,8 +7,7 @@ import java.nio.file.Files
 class MaterializeSpec extends GraftSpec {
 
   test("silver tables round-trip; company rollup from silver = from facts") {
-    val root = Files.createTempDirectory("medallion")
-    root.toFile.deleteOnExit()
+    val root = tempDir("medallion")
     val paths = Materialize.writeSummaries(spark, sfDir, root.toString)
     assert(paths.size === 4)
     assert(paths.contains("payment_daily"))
@@ -48,8 +47,7 @@ class MaterializeSpec extends GraftSpec {
   }
 
   test("silver date-range read prunes partitions (plan contains PartitionFilters)") {
-    val root = Files.createTempDirectory("medallion2")
-    root.toFile.deleteOnExit()
+    val root = tempDir("medallion2")
     Materialize.writeSummaries(spark, sfDir, root.toString)
     val pruned = Materialize.storeDaily(spark, root.toString)
       .filter(col("sale_date").between("1998-06-01", "1998-06-30"))
@@ -64,8 +62,7 @@ class MaterializeSpec extends GraftSpec {
     // unclustered partitioned write leaves one file per (task, date)
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    val root = Files.createTempDirectory("medallion_files")
-    root.toFile.deleteOnExit()
+    val root = tempDir("medallion_files")
     Materialize.writeSummaries(s2, sfDir, root.toString)
     Seq("store_daily", "product_daily", "payment_daily").foreach { t =>
       val dates = root.resolve(t).toFile.listFiles().filter(_.getName.startsWith("sale_date="))
@@ -77,8 +74,7 @@ class MaterializeSpec extends GraftSpec {
 
   test("every job writeSummaries starts carries the caller's job group") {
     val s2 = spark.newSession() // cold silvers: the builds run inside the call
-    val root = Files.createTempDirectory("medallion_group")
-    root.toFile.deleteOnExit()
+    val root = tempDir("medallion_group")
     val sc = spark.sparkContext
     sc.setJobGroup("materialize-spec", "writeSummaries")
     val (_, jobs) =

@@ -15,6 +15,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *      `Dataset`-typed values outside `graft/model/`: a DataFrame is
   *      bound to its session, and every side memo so far got that
   *      binding wrong or duplicated what memoize already does.
+  *   3. Outside `graft/model/`, a reused intermediate is a silver, not a
+  *      materialization of its own: a `.cache()`/`.persist()` is a scoped
+  *      temporary, unpersisted in a `finally` of the same `def`, and a
+  *      `.localCheckpoint()` appears only in an allowlisted `def`, each
+  *      with the reason a silver cannot stand in for it.
   */
 class SilverLintSpec extends AnyFunSuite {
 
@@ -115,5 +120,96 @@ class SilverLintSpec extends AnyFunSuite {
     assert(hits.isEmpty,
       "\nframe-valued memo maps outside graft/model/ (use Silver.memoize, " +
         "which keys by session):\n" + hits.mkString("\n"))
+  }
+
+  /** (name, first line, last line) of every `def` in `src`, by layout: a
+    * def runs until the next non-blank line indented no deeper than its
+    * own, other than a `:`/`=`/`)` continuation of its signature. */
+  private val DefLine =
+    ("^(\\s*)(?:(?:private|protected)(?:\\[\\w+\\])?\\s+|override\\s+|final\\s+|" +
+      "implicit\\s+)*def\\s+(\\w+)").r
+
+  private def defs(src: String): Seq[(String, Int, Int)] = {
+    val lines = src.split("\n", -1)
+    def indent(l: String) = l.indexWhere(!_.isWhitespace)
+    def inside(l: String, ind: Int) =
+      l.trim.isEmpty || indent(l) > ind || ":=)".contains(l.trim.head)
+    lines.indices.flatMap { i =>
+      DefLine.findPrefixMatchOf(lines(i)).map { m =>
+        val end = lines.indexWhere(l => !inside(l, m.group(1).length), i + 1)
+        (m.group(2), i + 1, if (end < 0) lines.length else end)
+      }
+    }
+  }
+
+  /** (line, innermost enclosing def, matched method) of every code
+    * (non-comment) call of `method` in `src`. */
+  private def sites(src: String, method: String): Seq[(Int, Option[(String, Int, Int)], String)] = {
+    val ds = defs(src)
+    s"\\.($method)\\(".r.findAllMatchIn(src).flatMap { m =>
+      val line = lineOf(src, m.start)
+      val before = src.substring(src.lastIndexOf('\n', m.start - 1) + 1, m.start)
+      if (before.trim.startsWith("*") || before.contains("//")) None
+      else Some((line, ds.filter(d => d._2 <= line && line <= d._3).maxByOption(_._2),
+        m.group(1)))
+    }.toSeq
+  }
+
+  test("a cache or persist outside graft/model/ is unpersisted in a finally " +
+      "of its own def") {
+    val hits = for {
+      (file, src) <- sources if !file.startsWith("graft/model/")
+      lines = src.split("\n", -1)
+      (line, d, method) <- sites(src, "cache|persist")
+    } yield {
+      val (from, to) = d.fold((line, line))(x => (x._2, x._3))
+      val upTo = lines.slice(from - 1, line).mkString("\n")
+      val name = "\\b(\\w+)\\s*=\\s".r.findAllMatchIn(upTo).map(_.group(1)).toSeq.lastOption
+      val rest = lines.slice(line - 1, to).mkString("\n")
+      val scoped = name.exists(n =>
+        s"(?s)finally\\s*(\\{[^}]*)?\\b$n\\.unpersist\\(".r.findFirstIn(rest).isDefined)
+      (s"$file:$line: .$method() of ${name.getOrElse("?")} in def ${d.fold("?")(_._1)}", scoped)
+    }
+    assert(hits.size >= 5, s"lint found only ${hits.size} cache/persist sites")
+    val bad = hits.collect { case (at, false) => at }
+    assert(bad.isEmpty,
+      "\ncaches outside graft/model/ with no finally-unpersist in their def " +
+        "(make the relation a Silver.memoize silver, or scope it):\n" + bad.mkString("\n"))
+  }
+
+  /** (file, def) -> why the def checkpoints a relation itself. */
+  private val checkpointers: Map[(String, String), String] = {
+    val loop = "loop truncation: each round reads the previous round's leaf"
+    val snapshot = "per-call snapshot: pinned before this call's appends or sized by its query"
+    Map(
+      ("graft/analytics/Graph.scala", "kCore") -> loop,
+      ("graft/analytics/Graph.scala", "bfsHops") -> loop,
+      ("graft/analytics/Graph.scala", "lpaCommunities") -> loop,
+      ("graft/analytics/Graph.scala", "personalizedPagerank") -> loop,
+      ("graft/analytics/Graph.scala", "weightedSssp") -> loop,
+      ("graft/dedup/Dedup.scala", "dupClustersFrom") -> loop,
+      ("graft/streaming/EventsBatch.scala", "absorptionProbability") -> loop,
+      ("graft/streaming/EventsBatch.scala", "removalEffect") -> loop,
+      ("graft/vector/Pca.scala", "leadingComponent") -> loop,
+      ("graft/vector/Similarity.scala", "mmrDiversify") -> loop,
+      ("graft/streaming/StreamingIndexMaintenance.scala", "maintainBatch") -> snapshot,
+      ("graft/streaming/StreamingIndexMaintenance.scala", "buildSnapshotCells") -> snapshot,
+      ("graft/streaming/StreamingIndexMaintenance.scala", "foldVectorBatch") -> snapshot,
+      ("graft/vector/IndexStore.scala", "queryIvfPq") -> snapshot)
+  }
+
+  test("a localCheckpoint outside graft/model/ appears only in an " +
+      "allowlisted def") {
+    val hits = for {
+      (file, src) <- sources if !file.startsWith("graft/model/")
+      (line, d, _) <- sites(src, "localCheckpoint")
+    } yield (file, d.map(_._1).getOrElse("?"), line)
+    val bad = hits.filterNot { case (f, d, _) => checkpointers.contains((f, d)) }
+      .map { case (f, d, l) => s"$f:$l in def $d" }
+    assert(bad.isEmpty,
+      "\nlocalCheckpoint outside the allowlist (a reused intermediate is a " +
+        "Silver.memoize silver keyed by its parameters):\n" + bad.mkString("\n"))
+    val stale = checkpointers.keySet -- hits.map(h => (h._1, h._2)).toSet
+    assert(stale.isEmpty, s"allowlisted defs that no longer checkpoint: $stale")
   }
 }

@@ -7,7 +7,11 @@ import org.apache.spark.sql.functions.col
 
 /** The materialization rules of [[Silver.memoize]], the engine's one
   * silver memo: handles are checkpointed plan leaves, held per session,
-  * built once, and a body that already is a leaf is not copied again. */
+  * built once by ONE job that both fills and measures the leaf, and a
+  * body that already is a leaf is not copied again. Builders that reuse
+  * an intermediate make it a silver keyed by every parameter it depends
+  * on: a repeat call runs no job, and joins to it are planned from its
+  * measured size, not a hand-written broadcast hint. */
 class SilverSpec extends GraftSpec {
 
   private var groups = 0
@@ -60,7 +64,7 @@ class SilverSpec extends GraftSpec {
       spark.range(5).toDF("id")
     }
     val (first, firstJobs) = jobs(call())
-    assert(firstJobs === 2, "the first call checkpoints the body and measures it")
+    assert(firstJobs === 1, "one job fills the lazy checkpoint and measures it")
     val (second, secondJobs) = jobs(call())
     assert(second eq first)
     assert(secondJobs === 0)
@@ -108,8 +112,8 @@ class SilverSpec extends GraftSpec {
       threads.foreach(_.join())
       out.toSeq
     }
-    val checkpoints = jobs.filter(_.stages.exists(_.startsWith("localCheckpoint")))
-    assert(checkpoints.size === 1, s"jobs: $jobs")
+    val builds = jobs.filter(_.stages.exists(_.startsWith("withMeasuredStats")))
+    assert(builds.size === 1, s"jobs: $jobs")
     assert(handles.forall(h => h != null && (h eq handles.head)))
   }
 
@@ -120,5 +124,43 @@ class SilverSpec extends GraftSpec {
     }
     assert(e.getMessage.contains("classic (non-Connect) SparkSession"), e.getMessage)
     assert(e.getMessage.contains("checkpointed LogicalRDD leaf"), e.getMessage)
+  }
+
+  test("a repeat call of d23, d27 or j14 in the same session runs no job") {
+    Seq[(String, () => DataFrame)](
+      "d23" -> (() => graft.dedup.Dedup.templatePassages(spark, sfDir)),
+      "d27" -> (() => graft.dedup.Dedup.dupSpans(spark, sfDir)),
+      "j14" -> (() => graft.analytics.Star.marketShare(spark, sfDir))).foreach {
+      case (key, call) =>
+        val first = call()
+        val (again, jobs) = JobLog.during(spark)(call())
+        assert(jobs.isEmpty, s"$key repeat ran: $jobs")
+        assert(again.collect().toSeq === first.collect().toSeq, key)
+    }
+  }
+
+  test("with broadcasts off, d21 and d23 broadcast neither their candidate " +
+      "pairs nor their template-shingle set") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    def plan(df: DataFrame): String = df.queryExecution.executedPlan.toString
+    Seq("d21" -> graft.dedup.Dedup.lshSweep(s, sfDir),
+        "d23" -> graft.dedup.Dedup.templatePassages(s, sfDir)).foreach {
+      case (key, df) =>
+        assert(!plan(df).contains("BroadcastHashJoin"), s"$key:\n${plan(df)}")
+    }
+  }
+
+  test("a memoized intermediate is keyed by the parameters it depends on") {
+    def share(market: String) =
+      graft.analytics.Star.marketShare(spark, sfDir, market)
+        .select(col("supp_nation"), col("revenue_cents")).collect().toSet
+    val asia = share("ASIA")
+    val europe = share("EUROPE")
+    assert(asia.nonEmpty && europe.nonEmpty)
+    assert(asia != europe, "two markets returned one market's shares")
+    def passages(minDf: Int) =
+      graft.dedup.Dedup.templatePassages(spark, sfDir, minDf = minDf).collect().toSeq
+    assert(passages(2) != passages(5), "two df floors returned one floor's passages")
   }
 }

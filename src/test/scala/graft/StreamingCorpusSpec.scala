@@ -23,8 +23,7 @@ class StreamingCorpusSpec extends GraftSpec {
 
   private def runStream(in: Path, transform: org.apache.spark.sql.DataFrame
       => org.apache.spark.sql.DataFrame, sinkName: String): Unit = {
-    val ckpt = Files.createTempDirectory(s"${sinkName}_ckpt")
-    ckpt.toFile.deleteOnExit()
+    val ckpt = tempDir(s"${sinkName}_ckpt")
     val stream = spark.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", 1).json(in.toString)
     val q = transform(stream).writeStream
@@ -36,8 +35,7 @@ class StreamingCorpusSpec extends GraftSpec {
   }
 
   test("streaming dedup keeps first arrival, drops within-watermark duplicate content") {
-    val in = Files.createTempDirectory("stream_docs")
-    in.toFile.deleteOnExit()
+    val in = tempDir("stream_docs")
     // batch 1: two distinct docs
     Files.writeString(in.resolve("a.json"), Seq(
       doc(1, "2024-03-01T10:00:00", "The cat sat!"),
@@ -55,8 +53,7 @@ class StreamingCorpusSpec extends GraftSpec {
   }
 
   test("streaming quality gate verdict is bit-identical to the batch t2 rubric") {
-    val in = Files.createTempDirectory("stream_gate")
-    in.toFile.deleteOnExit()
+    val in = tempDir("stream_gate")
     val good = ("it was the best of times and the worst of times " * 4).trim // all 4 bands: score 100
     val short = "too short"                 // fails length+stopword bands: score 50
     val digits = "2024 9981 777 31337 404 500 12 99 1000 12345 42 7 8 9 10 11 12 13 14 15 16 17 18 19 20" // only length band: score 25
@@ -82,8 +79,7 @@ class StreamingCorpusSpec extends GraftSpec {
   }
 
   test("composed corpus ingest gates then dedups (rejected docs never enter state)") {
-    val in = Files.createTempDirectory("stream_corpus")
-    in.toFile.deleteOnExit()
+    val in = tempDir("stream_corpus")
     val good = ("it was the best of times and the worst of times " * 4).trim
     Files.writeString(in.resolve("a.json"), Seq(
       doc(1, "2024-03-01T10:00:00", good),
@@ -99,8 +95,7 @@ class StreamingCorpusSpec extends GraftSpec {
   }
 
   test("streaming decontamination gate drops benchmark-overlapping docs, map-side") {
-    val in = Files.createTempDirectory("stream_decon")
-    in.toFile.deleteOnExit()
+    val in = tempDir("stream_decon")
     val leaked = "alpha beta gamma delta epsilon zeta"     // shares all shingles w/ benchmark
     val clean = "one two three four five six seven eight"  // disjoint shingles
     Files.writeString(in.resolve("a.json"), Seq(
@@ -124,8 +119,7 @@ class StreamingCorpusSpec extends GraftSpec {
   }
 
   test("streaming span gate drops long verbatim quotes, keeps scattered overlap") {
-    val in = Files.createTempDirectory("stream_span")
-    in.toFile.deleteOnExit()
+    val in = tempDir("stream_span")
     // quoted: 6 consecutive benchmark shingles = 8-token span (>= 7 gate)
     val quoted = "alpha beta gamma delta epsilon zeta eta theta"
     // scattered: shares isolated shingles, no run longer than 1 (3 tokens)
@@ -159,8 +153,7 @@ class StreamingCorpusSpec extends GraftSpec {
   }
 
   test("streaming surprisal gate scores bit-identically to batch t13") {
-    val in = Files.createTempDirectory("stream_lm")
-    in.toFile.deleteOnExit()
+    val in = tempDir("stream_lm")
     // stream the REAL corpus documents so the parity claim is over the
     // exact population t13 scores — INCLUDING the capped-vocab OOV rule:
     // words outside the top-K fit must be charged the same derived
@@ -186,8 +179,7 @@ class StreamingCorpusSpec extends GraftSpec {
   }
 
   test("surprisal gate drops OOV garbage, keeps common-word text") {
-    val in = Files.createTempDirectory("stream_lm_gate")
-    in.toFile.deleteOnExit()
+    val in = tempDir("stream_lm_gate")
     val vocab = StreamingCorpus.lmVocabBits(spark, sfDir)
     val oov = StreamingCorpus.lmOovBits(spark, sfDir)
     assert(oov > 12L, "fixture OOV charge must exceed the gate threshold")
@@ -205,8 +197,7 @@ class StreamingCorpusSpec extends GraftSpec {
   }
 
   test("streaming sample gate selects exactly the batch p13 sample") {
-    val in = Files.createTempDirectory("stream_sample")
-    in.toFile.deleteOnExit()
+    val in = tempDir("stream_sample")
     val docsJson = graft.text.Corpus.docs(spark, sfDir)
       .select("doc_id", "text").collect()
       .map(r => doc(r.getLong(0), "2024-03-01T10:00:00", r.getString(1)))
@@ -223,8 +214,7 @@ class StreamingCorpusSpec extends GraftSpec {
 
   test("streaming budget gate admits exactly the docs the fitted p17 plan " +
     "admits under the in-stream language prediction") {
-    val in = Files.createTempDirectory("stream_budget")
-    in.toFile.deleteOnExit()
+    val in = tempDir("stream_budget")
     val docsRows = graft.text.Corpus.docs(spark, sfDir)
       .select("doc_id", "text").collect()
     Files.writeString(in.resolve("a.json"),
@@ -253,8 +243,7 @@ class StreamingCorpusSpec extends GraftSpec {
 
   test("streaming charset gate keeps exactly the docs batch t18 rates at " +
     "or above the ascii threshold; garbage is dropped") {
-    val in = Files.createTempDirectory("stream_charset")
-    in.toFile.deleteOnExit()
+    val in = tempDir("stream_charset")
     val docsJson = graft.text.Corpus.docs(spark, sfDir)
       .select("doc_id", "text").collect()
       .map(r => doc(r.getLong(0), "2024-03-01T10:00:00", r.getString(1)))
@@ -279,8 +268,7 @@ class StreamingCorpusSpec extends GraftSpec {
   test("streaming Bloom gate drops every historical doc (one-sided) and " +
     "matches the batch mask verdict on novel docs") {
     import graft.analytics.Sketches
-    val in = Files.createTempDirectory("stream_bloom")
-    in.toFile.deleteOnExit()
+    val in = tempDir("stream_bloom")
     val mask = StreamingCorpus.historicalBloomMask(spark, sfDir)
     // replay 20 docs ALREADY in the lake + 20 novel docs
     val historical = graft.text.Corpus.docs(spark, sfDir)

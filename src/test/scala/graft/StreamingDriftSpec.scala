@@ -22,10 +22,8 @@ class StreamingDriftSpec extends GraftSpec {
 
   test("streaming drift monitor: matching window passes, shifted window " +
     "flags, append mode emits only finalized windows") {
-    val in = Files.createTempDirectory("stream_drift")
-    in.toFile.deleteOnExit()
-    val ckpt = Files.createTempDirectory("stream_drift_ckpt")
-    ckpt.toFile.deleteOnExit()
+    val in = tempDir("stream_drift")
+    val ckpt = tempDir("stream_drift_ckpt")
 
     // baseline: clicks historically uniform over buckets 0 and 1
     val base = Map("click:0" -> 500L, "click:1" -> 500L)

@@ -14,10 +14,8 @@ import java.nio.file.{Files, Path}
 class StreamingWindowSpec extends GraftSpec {
 
   test("watermarked window finalizes closed windows only, in append mode") {
-    val in: Path = Files.createTempDirectory("stream_events")
-    in.toFile.deleteOnExit()
-    val ckpt = Files.createTempDirectory("stream_events_ckpt")
-    ckpt.toFile.deleteOnExit()
+    val in: Path = tempDir("stream_events")
+    val ckpt = tempDir("stream_events_ckpt")
 
     def line(ts: String, tpe: String) = s"""{"ts": "$ts", "event_type": "$tpe"}"""
     // batch 1: events inside 10:00 and 11:00 windows
