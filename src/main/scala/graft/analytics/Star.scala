@@ -369,7 +369,6 @@ object Star {
       .orderBy(col("sale_year"), col("supp_nation"))
   }
 
-
   def marketShareSql(market: String = "ASIA"): String =
     s"""WITH mcust AS (
        |  SELECT c_custkey FROM customer

@@ -44,10 +44,11 @@ object ColumnBridge {
 
   /** `leaf` (a checkpointed `LogicalRDD`) re-stated with the row count
     * and row bytes it holds, measured by one pass over its blocks — for
-    * a lazy checkpoint, the pass that fills them. A checkpoint otherwise carries the optimizer's ESTIMATE
-    * for the plan it was cut from — join estimates are products of
-    * their sides — and consumer joins lose their broadcast; a loaded
-    * columnar cache reports measured statistics the same way. */
+    * a lazy checkpoint, the pass that fills them. A checkpoint otherwise
+    * carries the optimizer's ESTIMATE for the plan it was cut from —
+    * join estimates are products of their sides — and consumer joins
+    * lose their broadcast; a loaded columnar cache reports measured
+    * statistics the same way. */
   def withMeasuredStats(leaf: DataFrame): DataFrame = {
     val (spark, Some(r)) = classic(leaf.sparkSession, Some(leaf.queryExecution.logical))
     val rowBytes = r.schema.defaultSize.toLong

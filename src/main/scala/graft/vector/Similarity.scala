@@ -2303,14 +2303,16 @@ object Similarity {
     * keep/drop verdict every downstream pack/mix stage consumes. */
   def semanticClusters(spark: SparkSession, dir: String,
                        threshold: Double = 0.4): DataFrame = {
-    val verts = Tables.embeddings(spark, dir).select(col("vec_id").as("doc_id"))
-    val edges = lshNearDup(spark, dir, threshold)
-      .filter(col("is_near_dup"))
-      .select(col("vec_id").as("doc_a"), col("neighbor_id").as("doc_b"))
-    graft.dedup.Dedup.dupClustersFrom(verts, edges)
-      .select(col("doc_id").as("vec_id"), col("cluster_id"),
-        col("cluster_size"),
-        (col("doc_id") === col("cluster_id")).as("is_representative"))
+    // memoized like d6: the rounds run convergence actions at build time
+    Silver.memoize(spark, s"semanticClusters:$threshold", dir) {
+      val verts = Tables.embeddings(spark, dir).select(col("vec_id").as("doc_id"))
+      val edges = lshNearDup(spark, dir, threshold)
+        .filter(col("is_near_dup"))
+        .select(col("vec_id").as("doc_a"), col("neighbor_id").as("doc_b"))
+      graft.dedup.Dedup.dupClustersFrom(verts, edges)
+    }.select(col("doc_id").as("vec_id"), col("cluster_id"),
+      col("cluster_size"),
+      (col("doc_id") === col("cluster_id")).as("is_representative"))
       .orderBy("vec_id")
   }
 

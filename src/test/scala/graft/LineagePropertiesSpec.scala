@@ -28,8 +28,7 @@ class LineagePropertiesSpec extends AnyFunSuite {
 
   private lazy val base: String = {
     import spark.implicits._
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-lineage-prop").toString
+    val tmp = graft.etl.Scratch.tempDir("lineage-prop")
     Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("id", "x")
       .write.parquet(s"$tmp/alpha.parquet")
     Seq((1L, 5L), (2L, 6L)).toDF("id", "y")

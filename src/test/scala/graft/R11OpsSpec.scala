@@ -96,7 +96,7 @@ class R11OpsSpec extends GraftSpec {
   test("d29: a synthetic corpus exercises all three verdicts — exact " +
       "(identical text), near (one band shared), novel (disjoint)") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-d29").toString
+    val tmp = graft.etl.Scratch.tempDir("d29")
     val base = (1 to 40).map(i => s"tok${i}").mkString(" ")
     // near: same first 37 tokens, different tail — minhash bands almost
     // surely collide on >=1 of 4 bands; novel: disjoint vocabulary
@@ -251,7 +251,7 @@ class R11OpsSpec extends GraftSpec {
       "multi-source, and literal outputs on a synthetic two-table plan") {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val tmp = java.nio.file.Files.createTempDirectory("graft-k28").toString
+    val tmp = graft.etl.Scratch.tempDir("k28")
     Seq((1L, 10L), (2L, 20L)).toDF("id", "x")
       .write.parquet(s"$tmp/alpha.parquet")
     Seq((1L, 5L, "a,b"), (2L, 6L, "c")).toDF("id", "y", "tags")

@@ -23,8 +23,7 @@ class RuntimeFilterSpec extends GraftSpec {
   }
 
   private lazy val lakeDir: String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-dpp-lake").toString
+    val dir = graft.etl.Scratch.tempDir("dpp-lake")
     graft.model.Tables.sales(spark, sfDir)
       .write.mode("overwrite").partitionBy("store_id").parquet(dir)
     dir

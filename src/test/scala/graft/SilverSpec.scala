@@ -126,11 +126,12 @@ class SilverSpec extends GraftSpec {
     assert(e.getMessage.contains("checkpointed LogicalRDD leaf"), e.getMessage)
   }
 
-  test("a repeat call of d23, d27 or j14 in the same session runs no job") {
+  test("a repeat call of d23, d27, j14 or v21 in the same session runs no job") {
     Seq[(String, () => DataFrame)](
       "d23" -> (() => graft.dedup.Dedup.templatePassages(spark, sfDir)),
       "d27" -> (() => graft.dedup.Dedup.dupSpans(spark, sfDir)),
-      "j14" -> (() => graft.analytics.Star.marketShare(spark, sfDir))).foreach {
+      "j14" -> (() => graft.analytics.Star.marketShare(spark, sfDir)),
+      "v21" -> (() => graft.vector.Similarity.semanticClusters(spark, sfDir))).foreach {
       case (key, call) =>
         val first = call()
         val (again, jobs) = JobLog.during(spark)(call())

@@ -44,7 +44,7 @@ class SkewSpec extends GraftSpec {
     import org.apache.spark.sql.functions._
     val src = graft.model.Tables.sales(spark, sfDir)
       .select(col("sale_date"), col("sku"))
-    val base = java.nio.file.Files.createTempDirectory("k4audit").toString
+    val base = graft.etl.Scratch.tempDir("k4audit")
     val nFiles = 4
     // same rows, two physical layouts
     src.repartitionByRange(nFiles, col("sale_date"))
