@@ -310,9 +310,9 @@ object Graph {
     * Scale shape: the edge universe is g1's memoized co-pair leaf;
     * each peel round is TWO survivor semi-joins + one degree
     * aggregate — all keyed on the vertex id, edge-sized, never
-    * node-quadratic — and the driver carries only a convergence
-    * COUNT; `localCheckpoint` truncates per-round lineage exactly as
-    * d6's component loop does. Rounds = peel depth (graph-dependent,
+    * node-quadratic — and each round is a [[Silver.iterate]] leaf whose
+    * measured row count is the convergence test (the survivors stop
+    * shrinking), so a round is one job. Rounds = peel depth (graph-dependent,
     * small on dense co-occurrence graphs; bounded by the loud
     * [[KCoreMaxRounds]] contract shared with the oracle's unroll —
     * an oracle round PAST the fixpoint is a no-op, so unrolling more
@@ -322,31 +322,21 @@ object Graph {
             minSupport: Int = 2): DataFrame = {
     val edges = supportEdges(spark, dir, minSupport)
     val core = Silver.memoize(spark, s"kcore:$k:$minSupport", dir) {
-      var surv = edges.select(col("sa").as("v"))
-        .unionAll(edges.select(col("sb").as("v")))
-        .distinct().localCheckpoint()
-      var n = surv.count()
-      var rounds = 0
-      var converged = false
-      while (!converged && rounds < KCoreMaxRounds) {
-        val alive = edges
-          .join(surv.select(col("v").as("sa")), Seq("sa"), "left_semi")
-          .join(surv.select(col("v").as("sb")), Seq("sb"), "left_semi")
-        val next = alive.select(col("sa").as("v"))
-          .unionAll(alive.select(col("sb").as("v")))
-          .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-          .filter(col("deg") >= k).select(col("v"))
-          .localCheckpoint()
-        val m = next.count()
-        converged = m == n
-        surv = next
-        n = m
-        rounds += 1
-      }
-      require(converged,
+      val peel = Silver.iterate(edges.select(col("sa").as("v"))
+        .unionAll(edges.select(col("sb").as("v"))).distinct(), KCoreMaxRounds) {
+        (surv, _) =>
+          val alive = edges
+            .join(surv.select(col("v").as("sa")), Seq("sa"), "left_semi")
+            .join(surv.select(col("v").as("sb")), Seq("sb"), "left_semi")
+          alive.select(col("sa").as("v"))
+            .unionAll(alive.select(col("sb").as("v")))
+            .groupBy(col("v")).agg(count(lit(1)).as("deg"))
+            .filter(col("deg") >= k).select(col("v"))
+      }(Some((_, before, after) => after == before))
+      require(peel.converged,
         s"k-core peel did not converge in $KCoreMaxRounds rounds — " +
           "raise KCoreMaxRounds AND the oracle unroll together")
-      surv
+      peel.last
     }
     val graphStats = edges.agg(count(lit(1)).as("n_edges"))
       .crossJoin(edges.select(col("sa").as("v"))
@@ -530,11 +520,12 @@ object Graph {
     *
     * Scale shape: each round is ONE frontier-keyed join against the
     * neighbor list + an anti join against the visited set — edge- and
-    * node-sized relations only, never node-quadratic; lineage is
-    * truncated per round (localCheckpoint) exactly like d6/g4's
-    * loops, and the loop EXITS EARLY when a frontier drains (at most
-    * [[BfsMaxHops]] rounds — a fixed, data-independent bound, so the
-    * oracle's unroll is total). The readout is a ≤10-row aggregate.
+    * node-sized relations only, never node-quadratic. The visited set
+    * is the [[Silver.iterate]] state (the frontier is its last hop),
+    * one leaf and one job per round, and the loop EXITS EARLY when the
+    * visited rows stop growing (at most [[BfsMaxHops]] rounds — a
+    * fixed, data-independent bound, so the oracle's unroll is total;
+    * the cap is silent by declaration). The readout is a ≤10-row aggregate.
     * Edge universe = the memoized [[supportEdges]] leaf g4–g7 share
     * (priced once per session). */
   def bfsHops(spark: SparkSession, dir: String, minSupport: Int = 2)
@@ -547,22 +538,14 @@ object Graph {
         .distinct()
     }
     val dist = Silver.memoize(spark, s"bfsDist:$minSupport", dir) {
-      var d = nodes.orderBy(col("v")).limit(BfsSeeds)
-        .select(col("v"), lit(0L).as("hop")).localCheckpoint()
-      var frontier = d.select(col("v"))
-      var hop = 0L
-      var drained = frontier.isEmpty
-      while (!drained && hop < BfsMaxHops) {
-        hop += 1
-        val next = frontier.join(nbr, frontier("v") === nbr("z"))
+      Silver.iterate(nodes.orderBy(col("v")).limit(BfsSeeds)
+        .select(col("v"), lit(0L).as("hop")), BfsMaxHops) { (visited, hop) =>
+        val frontier = visited.filter(col("hop") === hop - 1L).select(col("v"))
+        visited.unionAll(frontier.join(nbr, frontier("v") === nbr("z"))
           .select(col("n").as("v")).distinct()
-          .join(d, Seq("v"), "left_anti")
-          .select(col("v"), lit(hop).as("hop")).localCheckpoint()
-        drained = next.isEmpty
-        if (!drained) d = d.unionAll(next).localCheckpoint()
-        frontier = next.select(col("v"))
-      }
-      d
+          .join(visited, Seq("v"), "left_anti")
+          .select(col("v"), lit(hop.toLong).as("hop")))
+      }(Some((_, before, after) => after == before)).last
     }
     val n = nodes.agg(count(lit(1)).as("n_total"))
     val reached = dist.groupBy(col("hop")).agg(count(lit(1)).as("n_nodes"))
@@ -601,8 +584,8 @@ object Graph {
     *
     * Scale shape: each round is ONE neighbor-label join (edge-sized)
     * + a (v, label) count + a per-node argmax via min(struct) — all
-    * keyed exchanges, never node-quadratic; lineage truncated per
-    * round like d6/g4/g6. The community rollup, degree join, and
+    * keyed exchanges, never node-quadratic; each round is a
+    * [[Silver.iterate]] leaf. The community rollup, degree join, and
     * modularity fold are node-/community-sized; the top-k cut is
     * TakeOrderedAndProject. Complements g4 (one dense core) with the
     * full partition of the graph. */
@@ -612,18 +595,15 @@ object Graph {
     val nbr = e.select(col("sa").as("v"), col("sb").as("n"))
       .unionAll(e.select(col("sb").as("v"), col("sa").as("n")))
     val labels = Silver.memoize(spark, s"lpaLabels:$minSupport", dir) {
-      var lbl = nbr.select(col("v")).distinct()
-        .select(col("v"), col("v").as("lbl")).localCheckpoint()
-      for (_ <- 1 to LpaRounds) {
-        lbl = nbr
+      Silver.iterate(nbr.select(col("v")).distinct()
+        .select(col("v"), col("v").as("lbl")), LpaRounds) { (lbl, _) =>
+        nbr
           .join(lbl.select(col("v").as("n"), col("lbl").as("nbl")), "n")
           .groupBy(col("v"), col("nbl")).agg(count(lit(1)).as("cnt"))
           .groupBy(col("v"))
           .agg(min(struct((-col("cnt")).as("nc"), col("nbl"))).as("k"))
           .select(col("v"), col("k.nbl").as("lbl"))
-          .localCheckpoint()
-      }
-      lbl
+      }().last
     }
     val dec38 = "decimal(38,0)"
     val m = e.agg(count(lit(1)).as("m")) // 1 row
@@ -831,50 +811,45 @@ object Graph {
     *
     * Scale shape: THE distributed PageRank kernel — each iteration is
     * one rank⋈edges join on src plus one dst-keyed re-aggregation
-    * (edge-sized exchanges, never node-quadratic), lineage truncated
-    * per round (localCheckpoint) like d6/g4/g6/g7. Rank is node-sized
+    * (edge-sized exchanges, never node-quadratic), each iteration a
+    * [[Silver.iterate]] leaf. Rank is node-sized
     * and meets the edge stream by shuffle, NOT broadcast — at catalog
     * scale that is the only shape that survives. The seed list is the
-    * one driver-side move: [[PprSeeds]] ids, a literal. */
+    * one driver-side move: [[PprSeeds]] ids, a literal collected once,
+    * when the rank silver is built; the rank carries the seed flag the
+    * readout reports. */
   def personalizedPagerank(spark: SparkSession, dir: String,
                            minSupport: Int = 2): DataFrame = {
     val de = directedEdges(spark, dir, minSupport)
     val wdeg = Silver.memoize(spark, s"pprWdeg:$minSupport", dir) {
       de.groupBy(col("src")).agg(sum(col("c")).cast("long").as("wdeg"))
     }
-    val nodes = wdeg.select(col("src").as("v"))
-    val seedIds = nodes.orderBy(col("v")).limit(PprSeeds)
-      .collect().map(_.getLong(0)).toSeq
-    val nSeeds = math.max(seedIds.size.toLong, 1L)
-    val isSeed = col("v").isin(seedIds: _*)
     // the iterated rank relation is itself a session silver (g6/g7's
     // discipline) — repeated readers pay the power iterations once
     val rank = Silver.memoize(spark, s"pprRank:$minSupport", dir) {
-      val base = when(isSeed, lit(150000L / nSeeds)).otherwise(lit(0L))
-      var r = nodes
-        .select(col("v"),
-          when(isSeed, lit(1000000L / nSeeds)).otherwise(lit(0L))
-            .as("rank_micro"))
-        .localCheckpoint()
-      for (_ <- 1 to PprIters) {
+      val nodes = wdeg.select(col("src").as("v"))
+      val seedIds = nodes.orderBy(col("v")).limit(PprSeeds)
+        .collect().map(_.getLong(0)).toSeq
+      val nSeeds = math.max(seedIds.size.toLong, 1L)
+      Silver.iterate(nodes
+          .withColumn("is_seed", when(col("v").isin(seedIds: _*), 1L).otherwise(0L))
+          .withColumn("rank_micro", col("is_seed") * (1000000L / nSeeds)),
+        PprIters) { (r, _) =>
         val contribs = de
           .join(wdeg, "src")
           .join(r.select(col("v").as("src"), col("rank_micro")), "src")
           .select(col("dst"),
             expr("(850 * ((rank_micro * c) DIV wdeg)) DIV 1000").as("contrib"))
           .groupBy(col("dst")).agg(sum(col("contrib")).cast("long").as("s"))
-        r = nodes
-          .join(contribs, nodes("v") === contribs("dst"), "left")
-          .select(col("v"),
-            (base + coalesce(col("s"), lit(0L))).as("rank_micro"))
-          .localCheckpoint()
-      }
-      r
+        r.select(col("v"), col("is_seed"))
+          .join(contribs, col("v") === contribs("dst"), "left")
+          .select(col("v"), col("is_seed"),
+            (col("is_seed") * (150000L / nSeeds) + coalesce(col("s"), lit(0L)))
+              .as("rank_micro"))
+      }().last
     }
     rank.join(wdeg.select(col("src").as("v"), col("wdeg")), "v")
-      .select(col("v").as("sku"),
-        when(isSeed, 1L).otherwise(0L).as("is_seed"),
-        col("wdeg"), col("rank_micro"))
+      .select(col("v").as("sku"), col("is_seed"), col("wdeg"), col("rank_micro"))
       .orderBy(col("rank_micro").desc, col("sku"))
       .limit(PprTopK)
   }
@@ -904,8 +879,8 @@ object Graph {
     * Scale shape: each round is ONE dist⋈edges join on src + a
     * dst-keyed min re-aggregation (edge-sized exchanges — the
     * min-plus twin of g8's rank join-agg), sparse representation
-    * (unreached nodes absent), lineage truncated per round
-    * (localCheckpoint); the converged relation is a session silver.
+    * (unreached nodes absent), each round a [[Silver.iterate]] leaf;
+    * the last round's relation is a session silver.
     * The top-k cut is TakeOrderedAndProject. */
   def weightedSssp(spark: SparkSession, dir: String,
                    minSupport: Int = 2): DataFrame = {
@@ -914,15 +889,12 @@ object Graph {
     val nodes = de.select(col("src").as("v")).distinct()
     val seeds = nodes.orderBy(col("v")).limit(SsspSeeds)
     val dist = Silver.memoize(spark, s"sssp:$minSupport", dir) {
-      var d = seeds.select(col("v"), lit(0L).as("d")).localCheckpoint()
-      for (_ <- 1 to SsspRounds) {
-        d = d.join(de, d("v") === de("src"))
+      Silver.iterate(seeds.select(col("v"), lit(0L).as("d")), SsspRounds) { (d, _) =>
+        d.join(de, d("v") === de("src"))
           .select(col("dst").as("v"), (col("d") + col("w")).as("d"))
           .unionByName(d)
           .groupBy(col("v")).agg(min(col("d")).as("d"))
-          .localCheckpoint()
-      }
-      d
+      }().last
     }
     dist
       .join(seeds.select(col("v"), lit(1L).as("is_seed")), Seq("v"), "left")

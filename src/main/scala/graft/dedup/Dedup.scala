@@ -708,76 +708,58 @@ object Dedup {
     * neighbors' labels) to fixpoint. Each round is one join + aggregate
     * (hash-partitioned on doc_id); rounds needed = component diameter
     * (near-dup clusters are shallow — a handful). The driver-side loop
-    * carries only a convergence COUNT, never data. Oracle: DuckDB
+    * reads only each round's measured row count, never data. Oracle: DuckDB
     * replays the same closure with WITH RECURSIVE (UNION dedup
     * terminates it). */
-  /** Memoized per (session, dir, threshold): the CC loop below runs
-    * driver-side convergence ACTIONS at build time, so only the memo can
-    * stop a second call from re-running the rounds. */
   def dupClusters(spark: SparkSession, dir: String,
                   threshold: Double = 0.5): DataFrame =
-    Silver.memoize(spark, s"dupClusters:$threshold", dir) {
-      dupClustersFrom(Corpus.docsTok(spark, dir),
-        ngramJaccard(spark, dir, threshold).select(col("doc_a"), col("doc_b")))
-    }.orderBy(col("doc_id"))
+    dupClustersFrom(spark, s"dupClusters:$threshold", dir)(Corpus.docsTok(spark, dir),
+      ngramJaccard(spark, dir, threshold).select(col("doc_a"), col("doc_b")))
+      .orderBy(col("doc_id"))
 
   /** Generic min-label connected components over (doc_id) vertices and
-    * (doc_a, doc_b) edges — shared by d6/d10 (shingle edges) and v21's
-    * semantic clusters (embedding near-dup edges). Returns an unordered
-    * checkpointed leaf, which [[Silver.memoize]] keeps as-is. */
-  private[graft] def dupClustersFrom(docs: DataFrame, pairs: DataFrame): DataFrame = {
-    val edges = pairs
-      .unionByName(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .cache()
-    try {
-      // LINEAGE TRUNCATION, not just caching: each round's plan must start
-      // from the previous round's MATERIALIZED result, or the final label
-      // relation carries the whole 20-round join lineage — and every later
-      // action on it (d6, d10, c1, each bench iteration) re-optimizes that
-      // deep tree on the DRIVER, seconds per query at any data size. The
-      // classic iterative-graph fix (GraphX checkpoints the same way):
-      // eager localCheckpoint pins each round's rows in executor storage
-      // and replaces its plan with a shallow scan. At 100 TB the same move
-      // writes rounds to durable storage every few iterations.
-      var labels = docs
-        .select(col("doc_id"), col("doc_id").as("label")).localCheckpoint()
-      var converged = false
-      var rounds = 0
-      // run to CONVERGENCE, not to a silent round cap: one-hop min-label
-      // propagation needs up-to-diameter rounds, and nearest-neighbor
-      // edge relations (v21) form long chains where a fixed small cap
-      // would emit split clusters with no error. The bound below is a
-      // runaway backstop that FAILS LOUDLY instead of mis-clustering.
+    * (doc_a, doc_b) edges — shared by d6/d10 (shingle edges), v21's
+    * semantic clusters (embedding near-dup edges) and er3's entity
+    * links. The unordered (doc_id, cluster_id, cluster_size) relation is
+    * the session silver `name`, so only its first call runs the rounds.
+    *
+    * Each round is one [[Silver.iterate]] leaf: the doc's new label,
+    * plus one MARK row per doc whose label shrank this round (some
+    * neighbor label was smaller). The marks make the convergence test a
+    * row count — the round is a fixpoint when its leaf holds exactly one
+    * row per doc — so a round costs its one job and no other. The
+    * rounds run to CONVERGENCE, not to a silent cap: nearest-neighbor
+    * edge relations (v21) form long chains where a fixed small cap would
+    * emit split clusters with no error; the 1024-round bound is a
+    * runaway backstop that FAILS LOUDLY instead of mis-clustering. */
+  private[graft] def dupClustersFrom(spark: SparkSession, name: String, dir: String)
+                                    (docs: => DataFrame, pairs: => DataFrame): DataFrame =
+    Silver.memoize(spark, name, dir) {
       val maxRounds = 1024
-      while (!converged && rounds < maxRounds) {
+      val p = pairs
+      val edges = p.unionByName(p.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+      val rounds = Silver.iterate(docs.select(col("doc_id"), col("doc_id").as("label"),
+        lit(false).as("mark")), maxRounds) { (prev, _) =>
+        val labels = prev.filter(!col("mark")).select(col("doc_id"), col("label"))
         val viaNeighbors = edges
           .join(labels.select(col("doc_id").as("doc_b"), col("label").as("n_label")),
             Seq("doc_b"))
           .groupBy(col("doc_a").as("doc_id"))
           .agg(min(col("n_label")).as("min_n_label"))
-        // carry the convergence bit in the round's own output (label
-        // shrank iff some neighbor label was smaller) — the check is then
-        // a filter over the checkpointed rows, not another join
-        val next = labels.join(viaNeighbors, Seq("doc_id"), "left")
+        labels.join(viaNeighbors, Seq("doc_id"), "left")
           .select(col("doc_id"),
             least(col("label"), coalesce(col("min_n_label"), col("label"))).as("label"),
-            (col("min_n_label") < col("label")).as("changed"))
-          .localCheckpoint()
-        converged = next.filter(col("changed")).isEmpty
-        labels = next.select(col("doc_id"), col("label"))
-        rounds += 1
-      }
-      require(converged,
+            explode(when(col("min_n_label") < col("label"), array(lit(false), lit(true)))
+              .otherwise(array(lit(false)))).as("mark"))
+      }(Some((docRows, _, rows) => rows == docRows))
+      require(rounds.converged,
         s"component labeling did not converge in $maxRounds rounds — " +
           "refusing to emit partially-propagated clusters")
+      val labels = rounds.last.filter(!col("mark")).select(col("doc_id"), col("label"))
       val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("cluster_size"))
       labels.join(sizes, Seq("label"))
         .select(col("doc_id"), col("label").as("cluster_id"), col("cluster_size"))
-        // doc-count-sized label relation, read by both the d6 key and c1 —
-        // checkpointed for the same shallow-plan reason as the rounds
-        .localCheckpoint()
-    } finally edges.unpersist() // the labels leaf no longer reads it
-  }
+    }
 
   /** d25: DUPLICATION-INFLATION report — the one-row answer to "what
     * does duplication cost this corpus": how many near-dup clusters
@@ -908,10 +890,9 @@ object Dedup {
     * (the oracle replays the closure with WITH RECURSIVE). */
   def dupClustersXxhash(spark: SparkSession, dir: String,
                         threshold: Double = 0.5): DataFrame =
-    Silver.memoize(spark, s"dupClustersXxhash:$threshold", dir) {
-      dupClustersFrom(Corpus.docsTok(spark, dir),
-        ngramJaccardXxhash(spark, dir, threshold).select(col("doc_a"), col("doc_b")))
-    }.orderBy(col("doc_id"))
+    dupClustersFrom(spark, s"dupClustersXxhash:$threshold", dir)(Corpus.docsTok(spark, dir),
+      ngramJaccardXxhash(spark, dir, threshold).select(col("doc_a"), col("doc_b")))
+      .orderBy(col("doc_id"))
 
   def dupClustersXxhashSql(threshold: Double = 0.5): String =
     dupClustersSqlFrom(xxIdentSidsSql, threshold)

@@ -33,9 +33,9 @@ import org.apache.spark.sql.functions._
   * materialize-read-measure loop costs the same at every SF. */
 object Evolution {
 
-  /** Test hook: materialized lake root per sfDir. */
+  /** Test hook: materialized lake root per (session, sfDir). */
   private[graft] val lakeDirs =
-    scala.collection.concurrent.TrieMap[String, String]()
+    new graft.model.SessionMemo[String, String]()
 
   /** Last day of generation v1 (v2 starts the day after). */
   val SplitDate = "1998-06-15"
@@ -56,7 +56,7 @@ object Evolution {
   def schemaEvolution(spark: SparkSession, dir: String): DataFrame =
     Silver.memoize(spark, "k27SchemaEvolution", dir) {
       val lakeDir = Scratch.tempDir("k27-lake")
-      lakeDirs(dir) = lakeDir
+      lakeDirs((spark, dir)) = lakeDir
       val sl = slice(spark, dir).persist()
       try {
         sl.filter(col("sale_date") <= SplitDate)

@@ -69,11 +69,12 @@ object LakeApply {
   private val MonthFrom = "1998-06-01"
   private val MonthTo = "1998-06-30"
 
-  /** Test hook: materialized lake root per (tag, sfDir), so specs can
-    * assert the PHYSICAL outcome (file counts, overwrite isolation)
-    * against the relation each applier returns. */
+  /** Materialized lake root per (session, (tag, sfDir)): [[k29Lake]]
+    * reads it back, and specs assert the PHYSICAL outcome (file counts,
+    * overwrite isolation) against the relation each applier returns.
+    * Keyed by session, like the silver that wrote the lake. */
   private[graft] val lakeDirs =
-    scala.collection.concurrent.TrieMap[(String, String), String]()
+    new graft.model.SessionMemo[(String, String), String]()
 
   /** One shuffle partition per file key — exact output-file placement. */
   private class FileKeyPartitioner(n: Int) extends Partitioner {
@@ -187,7 +188,7 @@ object LakeApply {
   def compactionApplied(spark: SparkSession, dir: String): DataFrame =
     Silver.memoize(spark, "k24CompactionApplied", dir) {
       val (lakeDir, dataSchema) = buildSalesLake(spark, dir, "k24")
-      lakeDirs(("k24", dir)) = lakeDir
+      lakeDirs((spark, ("k24", dir))) = lakeDir
       val partCols = Seq("part_month", "store_id")
       val lake = readLake(spark, lakeDir, dataSchema, partCols)
       // freeze the BEFORE inventory on the driver (metadata-sized)
@@ -289,7 +290,7 @@ object LakeApply {
   def atomicRewrite(spark: SparkSession, dir: String): DataFrame =
     Silver.memoize(spark, "k29AtomicRewrite", dir) {
       val lakeDir = Scratch.tempDir("k29-lake")
-      lakeDirs(("k29", dir)) = lakeDir
+      lakeDirs((spark, ("k29", dir))) = lakeDir
       val partCols = Seq("part_month", "store_id")
       val slice = sliceSales(spark, dir)
         .withColumn("__fk", concat_ws("/", col("store_id"), col("sale_date")))
@@ -357,7 +358,7 @@ object LakeApply {
     * the crash-window replay pins v1/v2 without touching the pointer). */
   private[graft] def k29Lake(spark: SparkSession, dir: String,
                              version: Option[Int]): DataFrame = {
-    val lakeDir = lakeDirs(("k29", dir))
+    val lakeDir = lakeDirs((spark, ("k29", dir)))
     val dataSchema = StructType(sliceSales(spark, dir)
       .drop("part_month", "store_id").schema.fields)
     val entries = AtomicManifest.read(lakeDir, version)
@@ -385,7 +386,7 @@ object LakeApply {
                    mod: Long = 97L): DataFrame =
     Silver.memoize(spark, s"k25PurgeApplied-$mod", dir) {
       val (lakeDir, dataSchema) = buildSalesLake(spark, dir, "k25")
-      lakeDirs((s"k25-$mod", dir)) = lakeDir
+      lakeDirs((spark, (s"k25-$mod", dir))) = lakeDir
       val partCols = Seq("part_month", "store_id")
       val lake = readLake(spark, lakeDir, dataSchema, partCols)
       val before = lakeStats(lake, partCols).collect()
@@ -468,7 +469,7 @@ object LakeApply {
   def dedupApplied(spark: SparkSession, dir: String): DataFrame =
     Silver.memoize(spark, "d28DedupApplied", dir) {
       val lakeDir = Scratch.tempDir("d28-lake")
-      lakeDirs(("d28", dir)) = lakeDir
+      lakeDirs((spark, ("d28", dir))) = lakeDir
       val docs = Tables.documents(spark, dir)
       val docsKeyed = docs.withColumn("__fk", col("source"))
       writeExactFiles(docsKeyed, Seq("source"), "__fk", lakeDir)

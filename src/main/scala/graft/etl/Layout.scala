@@ -237,7 +237,7 @@ object Layout {
         rows, "rk", col("sku"), col("supp"), col("l_orderkey"),
         col("l_linenumber")))
       val lakeDir = Scratch.tempDir("k26-lake")
-      LakeApply.lakeDirs(("k26", dir)) = lakeDir
+      LakeApply.lakeDirs((spark, ("k26", dir))) = lakeDir
       LakeApply.writeExactFiles(zRanked.unionByName(linRanked),
         Seq("layout"), "__fk", lakeDir)
       val schema = org.apache.spark.sql.types.StructType(

@@ -33,7 +33,15 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * and Spark truncates the lineage when that job ends. Builders return
   * PLAIN plans (SilverLintSpec), and an intermediate a builder reuses
   * is a silver keyed by every parameter it depends on; a body that
-  * already is a checkpointed leaf (the iterative loops) is kept as-is.
+  * already is a leaf is kept as-is.
+  *
+  * Rounds are leaves too: [[iterate]] is the one loop. Each round of an
+  * iterative relation (graph peels and walks, component labels, power
+  * iterations, greedy picks, merge batches) becomes a leaf by the same
+  * one-job pass, so no round's plan carries the rounds before it, and a
+  * convergence test reads the measured row counts instead of running a
+  * job. A builder whose body iterates is memoized, keyed by every
+  * parameter its rounds depend on, so only its first call runs them.
   *
   * A DataFrame is bound to the session that built it, so the key
   * includes the session — a second session in the same JVM builds its
@@ -63,6 +71,43 @@ object Silver {
   def memoize(spark: SparkSession, name: String, dir: String)
              (build: => DataFrame): DataFrame =
     memo.getOrElseUpdate((spark, name, dir), new Handle(build)).frame
+
+  /** The rounds one [[iterate]] ran: `rounds(0)` is the initial
+    * relation and `rounds(i)` round i's leaf. `converged` says the loop
+    * stopped at a fixpoint rather than at its round cap. */
+  final case class Rounds(rounds: IndexedSeq[DataFrame], converged: Boolean) {
+    def last: DataFrame = rounds.last
+  }
+
+  /** Run `step` from `init` for at most `maxRounds` rounds; round `i`
+    * (1-based) is `step(round i - 1, i)`, and every round's result
+    * becomes a measured leaf. The loop stops early, converged, when a
+    * round returns its input itself, or when
+    * `fixpoint(initRows, previousRows, rows)` holds over the leaves'
+    * measured row counts, which costs no job. With a fixpoint the
+    * initial relation is a measured leaf too; without one it is read as
+    * given (round 1's plan includes it), and the loop runs exactly
+    * `maxRounds` rounds unless a round returns its input. */
+  def iterate(init: DataFrame, maxRounds: Int)(step: (DataFrame, Int) => DataFrame)
+             (fixpoint: Option[(Long, Long, Long) => Boolean] = None): Rounds = {
+    val rounds = scala.collection.mutable.ArrayBuffer(if (fixpoint.isDefined) leaf(init) else init)
+    var converged = false
+    while (!converged && rounds.size <= maxRounds) {
+      val prev = rounds.last
+      val out = step(prev, rounds.size)
+      converged = out eq prev
+      if (!converged) {
+        rounds += leaf(out)
+        converged = fixpoint.exists(_(rows(rounds.head), rows(prev), rows(rounds.last)))
+      }
+    }
+    Rounds(rounds.toIndexedSeq, converged)
+  }
+
+  /** The row count a leaf measured when it was built (a count job only
+    * for a leaf checkpointed without measuring). */
+  private def rows(leaf: DataFrame): Long =
+    leaf.queryExecution.logical.stats.rowCount.map(_.toLong).getOrElse(leaf.count())
 
   /** The build as a materialized leaf: a body whose plan already is a
     * checkpointed `LogicalRDD` is kept as-is; anything else is marked

@@ -1091,38 +1091,37 @@ object EventsBatch {
     * — one floor division per node per step (sum first, divide once),
     * widest product c·p ≤ 1000·|edge count|, engine-exact. e27's
     * broadcast join-agg kernel with the recursion running FORWARD
-    * from each state instead of mass flowing in. */
+    * from each state instead of mass flowing in. Each step is a
+    * [[Silver.iterate]] leaf (|types| rows, so each step's agg stays
+    * single), and the table is a silver keyed by (target, steps). */
   def absorptionProbability(spark: SparkSession, dir: String,
                             target: String = "purchase",
-                            steps: Int = 3): DataFrame = {
-    val edges = typeEdges(spark, dir)
-    val outDeg = typeOutDeg(spark, dir)
-    val nodes = typeNodes(spark, dir)
-    var p = nodes.withColumn("p_milli",
-      when(col("etype") === target, 1000L).otherwise(0L))
-    val byStep = (1 to steps).map { _ =>
-      val contrib = edges
-        .join(broadcast(p), col("to_type") === col("etype"))
-        .groupBy(col("from_type"))
-        .agg(sum(col("c") * col("p_milli")).cast("long").as("mass"))
-        .select(col("from_type").as("c_type"), col("mass"))
-      val deg = outDeg.select(col("from_type").as("o_type"), col("outc"))
-      p = nodes
-        .join(broadcast(contrib), col("etype") === col("c_type"), "left")
-        .join(broadcast(deg), col("etype") === col("o_type"), "left")
-        .select(col("etype"),
-          when(col("etype") === target, 1000L)
-            .otherwise(coalesce(
-              expr("mass DIV outc"), lit(0L))).as("p_milli"))
-        .localCheckpoint() // |types| rows; keeps each step's agg single
-      p
-    }
-    byStep.zipWithIndex
-      .map { case (df, i) => df.select(col("etype"),
-        col("p_milli").as(s"p${i + 1}_milli")) }
-      .reduce((a, b) => a.join(b, "etype"))
-      .orderBy(col("etype"))
-  }
+                            steps: Int = 3): DataFrame =
+    Silver.memoize(spark, s"absorption:$target:$steps", dir) {
+      val edges = typeEdges(spark, dir)
+      // each step's state carries the node's out-degree with its p
+      val init = typeNodes(spark, dir)
+        .join(broadcast(typeOutDeg(spark, dir)), col("etype") === col("from_type"), "left")
+        .select(col("etype"), col("outc"),
+          when(col("etype") === target, 1000L).otherwise(0L).as("p_milli"))
+      val byStep = Silver.iterate(init, steps) { (p, _) =>
+        val contrib = edges
+          .join(broadcast(p), col("to_type") === col("etype"))
+          .groupBy(col("from_type"))
+          .agg(sum(col("c") * col("p_milli")).cast("long").as("mass"))
+          .select(col("from_type").as("c_type"), col("mass"))
+        p.select(col("etype"), col("outc"))
+          .join(broadcast(contrib), col("etype") === col("c_type"), "left")
+          .select(col("etype"), col("outc"),
+            when(col("etype") === target, 1000L)
+              .otherwise(coalesce(
+                expr("mass DIV outc"), lit(0L))).as("p_milli"))
+      }().rounds.tail
+      byStep.zipWithIndex
+        .map { case (df, i) => df.select(col("etype"),
+          col("p_milli").as(s"p${i + 1}_milli")) }
+        .reduce((a, b) => a.join(b, "etype"))
+    }.orderBy(col("etype"))
 
   def absorptionProbabilitySql(target: String = "purchase"): String = {
     def step(prev: String, cur: String): String =
@@ -1184,65 +1183,66 @@ object EventsBatch {
     * keyed (removed, etype) — |types|² rows, broadcast-sized at any
     * corpus scale because the state space is the TYPE graph (e27's
     * argument) — so all removals advance in the SAME per-step
-    * aggregate. The only data-sized moves are the memoized edge
-    * silver's build and the one user-keyed first-event aggregate. */
+    * aggregate, each step a [[Silver.iterate]] leaf; the report is a
+    * silver keyed by (target, steps). The only data-sized moves are the
+    * memoized edge silver's build and the one user-keyed first-event
+    * aggregate. */
   def removalEffect(spark: SparkSession, dir: String,
                     target: String = "purchase",
-                    steps: Int = 3): DataFrame = {
-    val none = "(none)"
-    val edges = typeEdges(spark, dir)
-    val outDeg = typeOutDeg(spark, dir)
-    val nodes = typeNodes(spark, dir)
-    val rems = Silver.memoize(spark, s"removalStates:$target", dir) {
-      nodes.filter(col("etype") =!= target)
-        .select(col("etype").as("r"))
-        .union(nodes.limit(1).select(lit(none).as("r")))
-    }
-    def pinned(mass: Column): Column =
-      when(col("etype") === col("r"), 0L)
-        .when(col("etype") === target, 1000L)
-        .otherwise(mass)
-    var p = rems.crossJoin(nodes)
-      .select(col("r"), col("etype"), pinned(lit(0L)).as("p_milli"))
-    (1 to steps).foreach { _ =>
-      val contrib = edges
-        .join(broadcast(p), col("to_type") === col("etype"))
-        .groupBy(col("r"), col("from_type"))
-        .agg(sum(col("c") * col("p_milli")).cast("long").as("mass"))
-        .select(col("r").as("c_r"), col("from_type").as("c_type"),
-          col("mass"))
-      val deg = outDeg.select(col("from_type").as("o_type"), col("outc"))
-      p = rems.crossJoin(nodes)
-        .join(broadcast(contrib),
-          col("r") === col("c_r") && col("etype") === col("c_type"), "left")
-        .join(broadcast(deg), col("etype") === col("o_type"), "left")
-        .select(col("r"), col("etype"),
-          pinned(coalesce(expr("mass DIV outc"), lit(0L))).as("p_milli"))
-        .localCheckpoint() // |types|² rows; keeps each step's agg single
-    }
-    val firsts = Silver.memoize(spark, "firstEventTypes", dir) {
-      Tables.events(spark, dir)
-        .groupBy(col("user_id"))
-        .agg(min(struct(col("ts"), col("event_id"), col("event_type")))
-          .as("f"))
-        .select(col("f.event_type").as("s"))
-        .groupBy(col("s")).agg(count(lit(1)).as("n_users"))
-    }
-    val total = firsts.agg(sum(col("n_users")).cast("long").as("n_total"))
-    val conv = p.join(broadcast(firsts), col("etype") === col("s"))
-      .groupBy(col("r"))
-      .agg(sum(col("n_users") * col("p_milli")).cast("long").as("mass"))
-      .crossJoin(broadcast(total))
-      .select(col("r"), expr("mass DIV n_total").as("conv_milli"))
-    val base = conv.filter(col("r") === none)
-      .select(col("conv_milli").as("base_milli"))
-    conv.filter(col("r") =!= none)
-      .crossJoin(broadcast(base))
-      .select(col("r").as("removed_type"), col("base_milli"),
-        col("conv_milli"),
-        (col("base_milli") - col("conv_milli")).as("effect_milli"))
-      .orderBy(col("removed_type"))
-  }
+                    steps: Int = 3): DataFrame =
+    Silver.memoize(spark, s"removalEffect:$target:$steps", dir) {
+      val none = "(none)"
+      val edges = typeEdges(spark, dir)
+      val outDeg = typeOutDeg(spark, dir)
+      val nodes = typeNodes(spark, dir)
+      val rems = Silver.memoize(spark, s"removalStates:$target", dir) {
+        nodes.filter(col("etype") =!= target)
+          .select(col("etype").as("r"))
+          .union(nodes.limit(1).select(lit(none).as("r")))
+      }
+      def pinned(mass: Column): Column =
+        when(col("etype") === col("r"), 0L)
+          .when(col("etype") === target, 1000L)
+          .otherwise(mass)
+      // each step's state carries the node's out-degree with its p
+      val init = rems.crossJoin(nodes)
+        .join(broadcast(outDeg), col("etype") === col("from_type"), "left")
+        .select(col("r"), col("etype"), col("outc"), pinned(lit(0L)).as("p_milli"))
+      val p = Silver.iterate(init, steps) { (p, _) =>
+        val contrib = edges
+          .join(broadcast(p), col("to_type") === col("etype"))
+          .groupBy(col("r"), col("from_type"))
+          .agg(sum(col("c") * col("p_milli")).cast("long").as("mass"))
+          .select(col("r").as("c_r"), col("from_type").as("c_type"),
+            col("mass"))
+        p.select(col("r"), col("etype"), col("outc"))
+          .join(broadcast(contrib),
+            col("r") === col("c_r") && col("etype") === col("c_type"), "left")
+          .select(col("r"), col("etype"), col("outc"),
+            pinned(coalesce(expr("mass DIV outc"), lit(0L))).as("p_milli"))
+      }().last
+      val firsts = Silver.memoize(spark, "firstEventTypes", dir) {
+        Tables.events(spark, dir)
+          .groupBy(col("user_id"))
+          .agg(min(struct(col("ts"), col("event_id"), col("event_type")))
+            .as("f"))
+          .select(col("f.event_type").as("s"))
+          .groupBy(col("s")).agg(count(lit(1)).as("n_users"))
+      }
+      val total = firsts.agg(sum(col("n_users")).cast("long").as("n_total"))
+      val conv = p.join(broadcast(firsts), col("etype") === col("s"))
+        .groupBy(col("r"))
+        .agg(sum(col("n_users") * col("p_milli")).cast("long").as("mass"))
+        .crossJoin(broadcast(total))
+        .select(col("r"), expr("mass DIV n_total").as("conv_milli"))
+      val base = conv.filter(col("r") === none)
+        .select(col("conv_milli").as("base_milli"))
+      conv.filter(col("r") =!= none)
+        .crossJoin(broadcast(base))
+        .select(col("r").as("removed_type"), col("base_milli"),
+          col("conv_milli"),
+          (col("base_milli") - col("conv_milli")).as("effect_milli"))
+    }.orderBy(col("removed_type"))
 
   def removalEffectSql(target: String = "purchase"): String = {
     def step(prev: String, cur: String): String =

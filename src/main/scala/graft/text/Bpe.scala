@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.model.Silver
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -34,8 +35,9 @@ import org.apache.spark.sql.functions._
   * composed left-to-right folds in ONE projection (`aggregate` HOF:
   * last symbol == left ∧ current == right → replace last with merged,
   * else append — greedy non-overlapping, the BPE rule). The fold is
-  * codegen-free but narrow: no shuffle, one cached dictionary per
-  * ROUND (not per merge), lineage one step deep.
+  * codegen-free but narrow: no shuffle, one dictionary leaf per
+  * ROUND (a [[graft.model.Silver.iterate]] round, not one per merge),
+  * lineage one step deep.
   *
   * ORACLE TWIN (r8; generalized to batched rounds in r11): the
   * trainer IS expressible in DuckDB once the fixed ROUND count is
@@ -97,60 +99,54 @@ object Bpe {
     * pair_count) over `rounds` batched rounds with a `window`-wide
     * candidate batch per round; pair_count is the pre-round count
     * (exact for every kept pair — disjointness guarantees the batch
-    * cannot perturb it). */
+    * cannot perturb it). A session silver keyed by (rounds, window),
+    * so only the first call trains. */
   def train(spark: SparkSession, dir: String, rounds: Int = Rounds,
-            window: Int = BatchWindow): DataFrame = {
-    import spark.implicits._
-    // the dictionary is vocabulary-sized: coalesce to a few partitions so
-    // the round jobs schedule a handful of real tasks instead of
-    // 32 near-empty ones (pure overhead at this relation size)
-    var dict = Corpus.docsTok(spark, dir)
-      .select(explode(col("words")).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("freq"))
-      .select(charsCol(col("word")).as("symbols"), col("freq"))
-      .coalesce(4)
-      .cache()
-    val merges = Seq.newBuilder[(Long, String, String, String, Long)]
-    var grank = 0L
-    var exhausted = false
-    try {
-      for (_ <- 1 to rounds if !exhausted) {
-        val pairs = dict
-          .select(col("freq"),
-            explode(arrays_zip(
-              slice(col("symbols"), lit(1), size(col("symbols")) - 1).as("l"),
-              slice(col("symbols"), lit(2), size(col("symbols")) - 1).as("r"))
-            ).as("p"))
-          .groupBy(col("p.l").as("left"), col("p.r").as("right"))
-          .agg(sum(col("freq")).as("pair_count"))
-        // ONE driver round-trip per ROUND (window rows), not per merge
-        val cands = pairs
-          .orderBy(col("pair_count").desc, col("left").asc, col("right").asc)
-          .limit(window).collect()
-          .map(r => (r.getAs[String]("left"), r.getAs[String]("right")) ->
-            r.getAs[Long]("pair_count")).toSeq
-        if (cands.nonEmpty) {
-          val kept = keepCompatible(cands)
-          kept.foreach { case ((l, r), c) =>
-            grank += 1
-            merges += ((grank, l, r, l + r, c))
-          }
-          // the whole batch applies in ONE projection: disjoint pairs
-          // compose order-independently, folds chained in rank order
-          val batched = kept.foldLeft(col("symbols")) {
-            case (acc, ((l, r), _)) => mergeCol(acc, l, r)
-          }
-          val parent = dict
-          dict = parent.select(batched.as("symbols"), col("freq")).cache()
-          dict.count() // materialize before unpersisting the parent
-          parent.unpersist()
-        } else exhausted = true // no pairs left: stop submitting empty jobs
+            window: Int = BatchWindow): DataFrame =
+    Silver.memoize(spark, s"bpeMerges:$rounds:$window", dir) {
+      import spark.implicits._
+      // the kept batch of one dictionary: ONE driver round-trip per
+      // ROUND (window rows), not per merge
+      def batch(dict: DataFrame): Seq[((String, String), Long)] = keepCompatible(dict
+        .select(col("freq"),
+          explode(arrays_zip(
+            slice(col("symbols"), lit(1), size(col("symbols")) - 1).as("l"),
+            slice(col("symbols"), lit(2), size(col("symbols")) - 1).as("r"))
+          ).as("p"))
+        .groupBy(col("p.l").as("left"), col("p.r").as("right"))
+        .agg(sum(col("freq")).as("pair_count"))
+        .orderBy(col("pair_count").desc, col("left").asc, col("right").asc)
+        .limit(window).collect()
+        .map(r => (r.getAs[String]("left"), r.getAs[String]("right")) ->
+          r.getAs[Long]("pair_count")).toSeq)
+      // the word-frequency dictionary is vocabulary-sized: coalesce to a
+      // few partitions so the round jobs schedule a handful of real tasks
+      // instead of 32 near-empty ones (pure overhead at this relation size)
+      val dict0 = Silver.memoize(spark, "bpeDictionary", dir) {
+        Corpus.docsTok(spark, dir)
+          .select(explode(col("words")).as("word"))
+          .groupBy("word").agg(count(lit(1)).as("freq"))
+          .select(charsCol(col("word")).as("symbols"), col("freq"))
+          .coalesce(4)
       }
-    } finally dict.unpersist()
-    merges.result()
-      .toDF("merge_rank", "left", "right", "merged", "pair_count")
-      .orderBy("merge_rank")
-  }
+      val kept = Seq.newBuilder[((String, String), Long)]
+      // round i applies batch i; the last batch needs no dictionary after
+      // it, and an empty batch (no pairs left) is the fixpoint
+      val dicts = Silver.iterate(dict0, rounds - 1) { (dict, _) =>
+        val b = batch(dict)
+        kept ++= b
+        // the whole batch applies in ONE projection: disjoint pairs
+        // compose order-independently, folds chained in rank order
+        if (b.isEmpty) dict
+        else dict.select(b.foldLeft(col("symbols")) {
+          case (acc, ((l, r), _)) => mergeCol(acc, l, r)
+        }.as("symbols"), col("freq"))
+      }()
+      if (rounds > 0 && !dicts.converged) kept ++= batch(dicts.last)
+      kept.result().zipWithIndex
+        .map { case (((l, r), c), i) => (i + 1L, l, r, l + r, c) }
+        .toDF("merge_rank", "left", "right", "merged", "pair_count")
+    }.orderBy("merge_rank")
 
   /** t21: BPE ENCODE — the learned merge table applied to the corpus:
     * per document, every word's character sequence is rewritten by the

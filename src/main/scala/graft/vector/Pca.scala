@@ -1,6 +1,6 @@
 package graft.vector
 
-import graft.model.Tables
+import graft.model.{Silver, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -34,13 +34,17 @@ import org.apache.spark.sql.functions._
   *  - sign fixed deterministically: the lowest-indexed nonzero
   *    component is made positive (eigenvectors are sign-ambiguous).
   *
-  * Scale shape: the long form is fact-sized and localCheckpointed
+  * Scale shape: the long form is fact-sized and a session silver
   * (8 reuses across 4 iterations — one materialization, shallow
   * consumer plans); the iterate v (d rows), the rescale quotients
   * (1 row each) and the sign (1 row) broadcast; s is row-count-sized
-  * and meets the long form in a key-partitioned join. Per iteration:
-  * two fact-relation joins + two aggregates — the minimum any
-  * distributed implementation pays. PcaSpec certifies the direction
+  * and meets the long form in a key-partitioned join. Each HALF-step
+  * is one [[Silver.iterate]] round whose leaf is the raw product (sraw
+  * per row, then wraw per dim): the next half-step reads it twice (its
+  * rescale max and its quotient), so a leaf pays each fact pass once.
+  * Per iteration: two fact-relation joins + two aggregates — the
+  * minimum any distributed implementation pays. The component is a
+  * silver keyed by `iters`. PcaSpec certifies the direction
   * against an in-process double-precision power iteration (cosine)
   * and the oracle re-runs the whole fixed-point chain in DuckDB. */
 object Pca {
@@ -53,52 +57,52 @@ object Pca {
     s"CASE WHEN $num < 0 THEN -((-($num)) $div $den) ELSE ($num) $div $den END"
 
   def leadingComponent(spark: SparkSession, dir: String,
-                       iters: Int = 4): DataFrame = {
-    val xl = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "x")))
-      .select(col("vec_id"), col("pos").cast("long").as("pos"),
-        expr("CAST(FLOOR(CAST(x AS DOUBLE) * 1000.0) AS BIGINT)").as("xq"))
-    val mu = xl.groupBy(col("pos"))
-      .agg(sum(col("xq")).as("sx"), count(lit(1)).as("n"))
-      .select(col("pos"), expr(truncDiv("sx", "n", "DIV")).as("mu"))
-    // hash-partition by vec_id BEFORE the checkpoint: the LogicalRDD
-    // leaf keeps its outputPartitioning, so each iteration's
-    // groupBy(vec_id) and the long⋈s vec_id join reuse this ONE
-    // exchange instead of re-shuffling the fact relation twice per
-    // round (guide §2.4: operations keyed the same way share one
-    // exchange) — 8 fact exchanges drop to 1 at iters = 4
-    val long = xl.join(broadcast(mu), "pos")
-      .select(col("vec_id"), col("pos"), (col("xq") - col("mu")).as("c"))
-      .repartition(col("vec_id"))
-      .localCheckpoint()
-    var v = long.select(col("pos")).distinct()
-      .select(col("pos"), lit(10000L).as("v"))
-    (1 to iters).foreach { _ =>
-      // sraw/wraw are each consumed TWICE (the rescale max and the
-      // quotient) — without eager materialization Spark re-executes the
-      // unshared lineage on both branches, doubling the fact passes per
-      // iteration (2^iters growth; measured 55 s at sf0.1 vs ~2 s
-      // materialized). localCheckpoint = one pass each, per iteration.
-      val sraw = long.join(broadcast(v), "pos")
-        .groupBy(col("vec_id")).agg(sum(col("c") * col("v")).as("sraw"))
-        .localCheckpoint()
-      val qs = sraw.agg(expr("MAX(ABS(sraw)) DIV 10000 + 1").as("q"))
-      val s = sraw.crossJoin(broadcast(qs))
-        .select(col("vec_id"), expr(truncDiv("sraw", "q", "DIV")).as("s"))
-      val wraw = long.join(s, "vec_id")
-        .groupBy(col("pos")).agg(sum(col("c") * col("s")).as("wraw"))
-        .localCheckpoint()
-      val qw = wraw.agg(expr("MAX(ABS(wraw)) DIV 10000 + 1").as("q"))
-      v = wraw.crossJoin(broadcast(qw))
-        .select(col("pos"), expr(truncDiv("wraw", "q", "DIV")).as("v"))
-    }
-    val sgn = v.where(col("v") =!= 0L)
-      .agg(coalesce(min(struct(col("pos"), col("v"))).getField("v"), lit(1L)).as("lead"))
-      .select(when(col("lead") < 0L, -1L).otherwise(1L).as("f"))
-    v.crossJoin(broadcast(sgn))
-      .select(col("pos"), (col("f") * col("v")).as("component_e4"))
-      .orderBy(col("pos"))
-  }
+                       iters: Int = 4): DataFrame =
+    Silver.memoize(spark, s"pcaComponent:$iters", dir) {
+      val xl = Tables.embeddings(spark, dir)
+        .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "x")))
+        .select(col("vec_id"), col("pos").cast("long").as("pos"),
+          expr("CAST(FLOOR(CAST(x AS DOUBLE) * 1000.0) AS BIGINT)").as("xq"))
+      val mu = xl.groupBy(col("pos"))
+        .agg(sum(col("xq")).as("sx"), count(lit(1)).as("n"))
+        .select(col("pos"), expr(truncDiv("sx", "n", "DIV")).as("mu"))
+      // the centered long form, hash-partitioned by vec_id BEFORE it
+      // becomes a silver leaf: the leaf keeps its outputPartitioning, so
+      // each iteration's groupBy(vec_id) and the long⋈s vec_id join reuse
+      // this ONE exchange instead of re-shuffling the fact relation twice
+      // per round (guide §2.4: operations keyed the same way share one
+      // exchange) — 8 fact exchanges drop to 1 at iters = 4
+      val long = Silver.memoize(spark, "pcaCentered", dir) {
+        xl.join(broadcast(mu), "pos")
+          .select(col("vec_id"), col("pos"), (col("xq") - col("mu")).as("c"))
+          .repartition(col("vec_id"))
+      }
+      // `key`-keyed raw values rescaled to 1e4 fixed point as `out`
+      def rescaled(raw: DataFrame, key: String, out: String): DataFrame =
+        raw.crossJoin(broadcast(raw.agg(expr("MAX(ABS(raw)) DIV 10000 + 1").as("q"))))
+          .select(col(key), expr(truncDiv("raw", "q", "DIV")).as(out))
+      val v0 = long.select(col("pos")).distinct()
+        .select(col("pos"), lit(10000L).as("v"))
+      // odd rounds project the rows on v (sraw per vec_id), even rounds
+      // fold the rescaled projections back onto the dims (wraw per pos);
+      // v0 is 1e4 in every dim, so round 1 needs no join
+      val halves = Silver.iterate(v0, 2 * iters) { (prev, i) =>
+        if (i % 2 == 1) {
+          val proj = if (i == 1) long.withColumn("v", lit(10000L))
+            else long.join(broadcast(rescaled(prev, "pos", "v")), "pos")
+          proj.groupBy(col("vec_id")).agg(sum(col("c") * col("v")).as("raw"))
+        } else {
+          long.join(rescaled(prev, "vec_id", "s"), "vec_id")
+            .groupBy(col("pos")).agg(sum(col("c") * col("s")).as("raw"))
+        }
+      }()
+      val v = if (iters == 0) halves.last else rescaled(halves.last, "pos", "v")
+      val sgn = v.where(col("v") =!= 0L)
+        .agg(coalesce(min(struct(col("pos"), col("v"))).getField("v"), lit(1L)).as("lead"))
+        .select(when(col("lead") < 0L, -1L).otherwise(1L).as("f"))
+      v.crossJoin(broadcast(sgn))
+        .select(col("pos"), (col("f") * col("v")).as("component_e4"))
+    }.orderBy(col("pos"))
 
   def leadingComponentSql(iters: Int = 4): String = {
     def iterCte(prev: String, k: Int): String =

@@ -2297,20 +2297,21 @@ object Similarity {
     * label-free LSH path — the candidate generator an unlabeled 100 TB
     * embedding lake can actually afford), and the clustering is the
     * SAME distributed min-label components used for d6/d10
-    * ([[graft.dedup.Dedup.dupClustersFrom]]: per-round join+agg with
-    * localCheckpoint lineage truncation — one engine, three edge
+    * ([[graft.dedup.Dedup.dupClustersFrom]]: per-round join+agg, each
+    * round a [[Silver.iterate]] leaf — one engine, four edge
     * relations). One representative per cluster (the min id), the
     * keep/drop verdict every downstream pack/mix stage consumes. */
   def semanticClusters(spark: SparkSession, dir: String,
                        threshold: Double = 0.4): DataFrame = {
-    // memoized like d6: the rounds run convergence actions at build time
-    Silver.memoize(spark, s"semanticClusters:$threshold", dir) {
-      val verts = Tables.embeddings(spark, dir).select(col("vec_id").as("doc_id"))
-      val edges = lshNearDup(spark, dir, threshold)
-        .filter(col("is_near_dup"))
-        .select(col("vec_id").as("doc_a"), col("neighbor_id").as("doc_b"))
-      graft.dedup.Dedup.dupClustersFrom(verts, edges)
-    }.select(col("doc_id").as("vec_id"), col("cluster_id"),
+    graft.dedup.Dedup.dupClustersFrom(spark, s"semanticClusters:$threshold", dir)(
+      Tables.embeddings(spark, dir).select(col("vec_id").as("doc_id")),
+      // every round reads the edges: a silver, not v2's sorted plan
+      Silver.memoize(spark, s"semanticEdges:$threshold", dir) {
+        lshNearDup(spark, dir, threshold)
+          .filter(col("is_near_dup"))
+          .select(col("vec_id").as("doc_a"), col("neighbor_id").as("doc_b"))
+      }
+    ).select(col("doc_id").as("vec_id"), col("cluster_id"),
       col("cluster_size"),
       (col("doc_id") === col("cluster_id")).as("is_representative"))
       .orderBy("vec_id")
@@ -3120,8 +3121,9 @@ object Similarity {
     * pool-internal similarity matrix `psim` is (nQueries·nCand²)-
     * bounded, and each greedy step is one (pool ⟕ max-sim-to-
     * selected) join + an argmax window over ≤ nCand rows per query —
-    * all relations query-set-sized and checkpoint-truncated, the
-    * corpus itself touched only by the v1 pool scan.
+    * all relations query-set-sized, each step a [[Silver.iterate]]
+    * leaf, the corpus itself touched only by the v1 pool scan. The
+    * picks are a silver keyed by (k, nCand, nQueries).
     *
     * FP determinism: rel and sim are the strict-fold cosines; MAX of
     * bit-identical doubles is order-independent; the score is one
@@ -3136,55 +3138,55 @@ object Similarity {
         .select(col("query_id"), col("neighbor_id").as("cand_id"),
           col("cosine").as("rel"))
     }
-    val emb = withNorm(spark, dir)
-      .select(col("vec_id"), col("embedding"), col("norm2"))
-    val poolE = pool
-      .join(emb, col("cand_id") === col("vec_id"))
-      .select(col("query_id"), col("cand_id"), col("embedding"),
-        col("norm2"))
-    val a = poolE.select(col("query_id"), col("cand_id").as("a_id"),
-      col("embedding").as("a_emb"), col("norm2").as("a_n2"))
-    val b = poolE.select(col("query_id").as("qb"),
-      col("cand_id").as("b_id"), col("embedding").as("b_emb"),
-      col("norm2").as("b_n2"))
     val psim = Silver.memoize(spark, s"mmrPoolSim:$nCand:$nQueries", dir) {
+      val emb = withNorm(spark, dir)
+        .select(col("vec_id"), col("embedding"), col("norm2"))
+      val poolE = pool
+        .join(emb, col("cand_id") === col("vec_id"))
+        .select(col("query_id"), col("cand_id"), col("embedding"),
+          col("norm2"))
+      val a = poolE.select(col("query_id"), col("cand_id").as("a_id"),
+        col("embedding").as("a_emb"), col("norm2").as("a_n2"))
+      val b = poolE.select(col("query_id").as("qb"),
+        col("cand_id").as("b_id"), col("embedding").as("b_emb"),
+        col("norm2").as("b_n2"))
       a.join(b, col("query_id") === col("qb") && col("a_id") =!= col("b_id"))
         .select(col("query_id"), col("a_id"), col("b_id"),
           cosine(dotCol(col("a_emb"), col("b_emb")),
             col("a_n2"), col("b_n2")).as("sim"))
     }
-    val w1 = Window.partitionBy(col("query_id"))
-      .orderBy(col("rel").desc, col("cand_id").asc)
-    var all = pool.withColumn("rn", row_number().over(w1))
-      .filter(col("rn") === 1)
-      .select(col("query_id"), col("cand_id"), col("rel"),
-        lit(1).as("step"), col("rel").as("score"))
-      .localCheckpoint()
-    (2 to k).foreach { i =>
-      val seld = all.select(col("query_id").as("s_q"),
-        col("cand_id").as("s_id"))
-      val ms = psim
-        .join(seld, col("query_id") === col("s_q") &&
-          col("b_id") === col("s_id"))
-        .groupBy(col("query_id"), col("a_id"))
-        .agg(max(col("sim")).as("maxsim"))
-        .select(col("query_id").as("m_q"), col("a_id"), col("maxsim"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("score").desc, col("cand_id").asc)
-      val sel = pool
-        .join(seld, col("query_id") === col("s_q") &&
-          col("cand_id") === col("s_id"), "left_anti")
-        .join(ms, col("query_id") === col("m_q") &&
-          col("cand_id") === col("a_id"))
-        .withColumn("score",
-          lit(0.5) * col("rel") - lit(0.5) * col("maxsim"))
-        .withColumn("rn", row_number().over(w))
+    val picks = Silver.memoize(spark, s"mmrPicks:$k:$nCand:$nQueries", dir) {
+      val w1 = Window.partitionBy(col("query_id"))
+        .orderBy(col("rel").desc, col("cand_id").asc)
+      // round i picks step i + 1
+      Silver.iterate(pool.withColumn("rn", row_number().over(w1))
         .filter(col("rn") === 1)
         .select(col("query_id"), col("cand_id"), col("rel"),
-          lit(i).as("step"), col("score"))
-      all = all.union(sel).localCheckpoint()
+          lit(1).as("step"), col("rel").as("score")), k - 1) { (all, i) =>
+        val seld = all.select(col("query_id").as("s_q"),
+          col("cand_id").as("s_id"))
+        val ms = psim
+          .join(seld, col("query_id") === col("s_q") &&
+            col("b_id") === col("s_id"))
+          .groupBy(col("query_id"), col("a_id"))
+          .agg(max(col("sim")).as("maxsim"))
+          .select(col("query_id").as("m_q"), col("a_id"), col("maxsim"))
+        val w = Window.partitionBy(col("query_id"))
+          .orderBy(col("score").desc, col("cand_id").asc)
+        all.union(pool
+          .join(seld, col("query_id") === col("s_q") &&
+            col("cand_id") === col("s_id"), "left_anti")
+          .join(ms, col("query_id") === col("m_q") &&
+            col("cand_id") === col("a_id"))
+          .withColumn("score",
+            lit(0.5) * col("rel") - lit(0.5) * col("maxsim"))
+          .withColumn("rn", row_number().over(w))
+          .filter(col("rn") === 1)
+          .select(col("query_id"), col("cand_id"), col("rel"),
+            lit(i + 1).as("step"), col("score")))
+      }().last
     }
-    all.select(col("query_id"), col("step").cast("long").as("step"),
+    picks.select(col("query_id"), col("step").cast("long").as("step"),
       col("cand_id").as("vec_id"), col("rel"), col("score"))
       .orderBy(col("query_id"), col("step"))
   }

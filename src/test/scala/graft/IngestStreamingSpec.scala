@@ -227,6 +227,31 @@ class IngestStreamingSpec extends GraftSpec {
     assert(later.size === 4, s"jobs: $later")
   }
 
+  test("streaming: a wave reads the same input bytes however many dates the lake holds") {
+    val (lake, summ, ledger) = (tempDir("bytes_lake"), tempDir("bytes_summary"), tempDir("bytes_ledger"))
+    def wave(day: String): Long = {
+      val read = new java.util.concurrent.atomic.AtomicLong
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          Option(e.taskMetrics).foreach(m => read.addAndGet(m.inputMetrics.bytesRead))
+      }
+      spark.sparkContext.addSparkListener(listener)
+      // JobLog's closing marker is delivered after every task end of the wave
+      try JobLog.during(spark) {
+        StreamingIngest.processBatch(batch(
+            s"store_0001_2024-07-$day.json" -> s"[$goodRecord, $goodRecord]",
+            s"store_0002_2024-07-$day.json" -> s"[$goodRecord]"),
+          lake.toString, summ.toString, ledger.toString, expectedStores = 2)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      read.get
+    }
+    val first = wave("01")
+    Seq("02", "03", "04").foreach(wave)
+    val later = wave("05")
+    assert(first > 0)
+    assert(later <= first, s"the fifth wave read $later bytes, the first $first")
+  }
+
   test("multimodal: feature extraction is deterministic, partition-parallel, typed") {
     val media = Multimodal.mediaFromDocs(spark, sfDir)
     val n = media.count()

@@ -62,7 +62,7 @@ class LakeApplySpec extends GraftSpec {
     }
     assert(got === want)
     // physical: files on disk per partition == files_after
-    val root = LakeApply.lakeDirs(("k24", sfDir))
+    val root = LakeApply.lakeDirs((spark, ("k24", sfDir)))
     val onDisk = partFiles(root).groupBy(_.split("/").dropRight(1).mkString("/"))
       .map { case (dirPart, fs) => dirPart -> fs.length.toLong }
     got.foreach { case ((m, s), (_, fa, _)) =>
@@ -96,7 +96,7 @@ class LakeApplySpec extends GraftSpec {
     val slice = sliceRows()
     val wantSurvivors = slice.filterNot(r => cohort(r._3))
       .map(r => (r._3, r._4)).sorted.toSeq
-    val root = LakeApply.lakeDirs((s"k25-$mod", sfDir))
+    val root = LakeApply.lakeDirs((spark, (s"k25-$mod", sfDir)))
     val back = spark.read.parquet(root)
       .select(col("l_orderkey"), col("l_linenumber")).collect()
       .map(r => (r.getLong(0), r.getInt(1)))
@@ -135,7 +135,7 @@ class LakeApplySpec extends GraftSpec {
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     val drops = verdict.collect { case (id, "drop") => id }.toSet
     assert(drops.nonEmpty, "fixture must actually drop something")
-    val root = LakeApply.lakeDirs(("d28", sfDir))
+    val root = LakeApply.lakeDirs((spark, ("d28", sfDir)))
     val back = spark.read.parquet(root).select("doc_id").collect()
       .map(_.getLong(0)).toSet
     val all = Tables.documents(spark, sfDir).select("doc_id").collect()
@@ -160,7 +160,7 @@ class LakeApplySpec extends GraftSpec {
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(4)))
       .toMap
     assert(rel.keySet === Set("zorder", "linear"))
-    val root = LakeApply.lakeDirs(("k26", sfDir))
+    val root = LakeApply.lakeDirs((spark, ("k26", sfDir)))
     val onDisk = partFiles(root)
       .groupBy(_.split("/").head)
       .map { case (d, fs) => d.stripPrefix("layout=") -> fs.length.toLong }
@@ -171,5 +171,13 @@ class LakeApplySpec extends GraftSpec {
     // the reason z-order exists: on the 2-d probe rectangle it must
     // not lose to the linear (sku, supp) sort
     assert(rel("zorder")._2 <= rel("linear")._2)
+  }
+
+  test("k29: each session reads back the lake its own build wrote") {
+    val sessions = Seq(spark.newSession(), spark.newSession())
+    sessions.foreach(s => LakeApply.atomicRewrite(s, sfDir).collect())
+    val Seq(a, b) = sessions.map(s => LakeApply.k29Lake(s, sfDir, None).inputFiles.toSet)
+    assert(a.nonEmpty && b.nonEmpty)
+    assert(a.intersect(b).isEmpty, s"both sessions read one lake: ${a.intersect(b).take(3)}")
   }
 }

@@ -80,7 +80,7 @@ class R14OpsSpec extends GraftSpec {
       rows.map(r => (r.getLong(3), r.get(4).toString)).sorted.toSeq
     assert(ids(v1) === ids(v2))
     // time travel intact: gen-1 bytes still on disk after the swap
-    val lakeDir = LakeApply.lakeDirs(("k29", dir))
+    val lakeDir = LakeApply.lakeDirs((spark, ("k29", dir)))
     assert(graft.model.AtomicManifest.listFiles(lakeDir, "gen1").nonEmpty)
   }
 

@@ -127,16 +127,77 @@ class SilverSpec extends GraftSpec {
   }
 
   test("a repeat call of d23, d27, j14 or v21 in the same session runs no job") {
-    Seq[(String, () => DataFrame)](
+    // and of every key whose body runs rounds: its loop is built once
+    val loopKeys = Seq("g4_kcore", "g6_bfs_hops", "g7_lpa_communities",
+      "g8_personalized_pagerank", "g9_weighted_sssp", "d6_dup_clusters",
+      "d10_clusters_xxhash", "er3_entity_clusters", "e28_absorption",
+      "e32_removal_effect", "v33_mmr_diversify", "v34_pca_power", "t20_bpe_train")
+    (Seq[(String, () => DataFrame)](
       "d23" -> (() => graft.dedup.Dedup.templatePassages(spark, sfDir)),
       "d27" -> (() => graft.dedup.Dedup.dupSpans(spark, sfDir)),
       "j14" -> (() => graft.analytics.Star.marketShare(spark, sfDir)),
-      "v21" -> (() => graft.vector.Similarity.semanticClusters(spark, sfDir))).foreach {
+      "v21" -> (() => graft.vector.Similarity.semanticClusters(spark, sfDir))) ++
+      loopKeys.map(k => k -> (() => SparkEntry.queries(k)(spark, sfDir)))).foreach {
       case (key, call) =>
         val first = call()
         val (again, jobs) = JobLog.during(spark)(call())
         assert(jobs.isEmpty, s"$key repeat ran: $jobs")
         assert(again.collect().toSeq === first.collect().toSeq, key)
+    }
+  }
+
+  private def isMeasuredLeaf(df: DataFrame): Boolean = df.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.isCheckpointed && r.computeStats().rowCount.isDefined
+    case _ => false
+  }
+
+  test("iterate: a fixed-round loop runs every round, each a measured leaf built by one job") {
+    val (rounds, jobs) = JobLog.during(spark) {
+      Silver.iterate(spark.range(5).toDF("id"), 3) { (prev, _) =>
+        prev.select((col("id") + 1).as("id"))
+      }()
+    }
+    assert(jobs.size === 3, s"one job per round, the initial plan read by round 1: $jobs")
+    assert(rounds.rounds.size === 4 && !rounds.converged)
+    assert(rounds.rounds.tail.forall(isMeasuredLeaf))
+    assert(rounds.last.collect().map(_.getLong(0)).sorted.toSeq === (3L to 7L))
+    assert(rounds.rounds(1).collect().map(_.getLong(0)).sorted.toSeq === (1L to 5L))
+  }
+
+  test("iterate: a row-count fixpoint ends the loop without a job of its own; " +
+      "the cap ends it unconverged") {
+    def peel(cap: Int) = JobLog.during(spark) {
+      Silver.iterate(spark.range(10).toDF("id"), cap) { (prev, i) =>
+        prev.filter(col("id") >= math.min(i, 2) * 3)
+      }(Some((_, before, after) => after == before))
+    }
+    val (done, jobs) = peel(8)
+    // rows 10, 7, 4, 4: the third round repeats the second's count
+    assert(done.converged && done.rounds.size === 4)
+    assert(done.rounds.forall(isMeasuredLeaf), "a fixpoint measures the initial relation too")
+    assert(jobs.size === 4, s"one job per leaf, none for the test: $jobs")
+    assert(done.last.count() === 4)
+    val (capped, _) = peel(2)
+    assert(!capped.converged && capped.rounds.size === 3)
+  }
+
+  test("iterate: a round that returns its input leaf is a fixpoint") {
+    var calls = 0
+    val (rounds, jobs) = JobLog.during(spark) {
+      Silver.iterate(spark.range(3).toDF("id"), 5) { (prev, _) => calls += 1; prev }()
+    }
+    assert(rounds.converged && rounds.rounds.size === 1 && calls === 1)
+    assert(jobs.isEmpty, s"no round was built: $jobs")
+  }
+
+  test("a fresh-session g4 or g6 build runs one job per round and no count or isEmpty probe") {
+    Seq("g4_kcore" -> 12, "g6_bfs_hops" -> 22).foreach { case (key, most) =>
+      val s = spark.newSession()
+      val (_, jobs) = JobLog.during(s)(SparkEntry.queries(key)(s, sfDir))
+      val probes = jobs.filter(_.stages.exists(n => n.startsWith("count at") ||
+        n.startsWith("isEmpty at")))
+      assert(probes.isEmpty, s"$key probes: $probes")
+      assert(jobs.size <= most, s"$key ran ${jobs.size} jobs: $jobs")
     }
   }
 
