@@ -90,9 +90,6 @@ object Recommendations {
   // lose a pipe to the OUTER stripMargin when this body is embedded in
   // another margin-stripped SQL string, e.g. Flatten's x3/x4 wrappers)
 
-  val trendInsightsSql: String =
-    s"$trendInsightsBodySql\nORDER BY sale_date, trend_type"
-
   /** r2: the deterministic recommendation relation — the reference
     * prompt's four categories realized as rules over the insight inputs,
     * rank-ordered per date by the reference's priority order

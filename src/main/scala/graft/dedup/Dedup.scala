@@ -213,9 +213,6 @@ object Dedup {
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("n_common"))
 
-  private def commonShingles(spark: SparkSession, dir: String): DataFrame =
-    commonShinglesFrom(docSids(spark, dir))
-
   /** All the d-family oracle SQL below is parameterized over the
     * (doc_id, sid) relation so the xxhash twins (whose id assignment
     * DuckDB cannot compute) can swap in a read_parquet() over the
@@ -1769,14 +1766,22 @@ object Dedup {
     * certifies the physical append == the planned index delta (k24's
     * plan==action contract on the dedup index). Work stays ∝ delta:
     * the corpus is never rescanned; the indexes only grow by appends. */
-  /** d30's physical index root per (session, sfDir) — spec hook. */
-  private[graft] val d30IndexDirs =
-    new graft.model.SessionMemo[String, String]()
-
   def indexMaintenance(spark: SparkSession, dir: String): DataFrame =
     Silver.memoize(spark, "d30IndexMaintenance", dir) {
+      val indexDir = d30Index(spark, dir)
+      // RE-PROBE against the RE-READ physical indexes (the measured leg —
+      // a lost or misplaced append row flips a verdict_after)
+      d30Before(spark, dir, indexDir).withColumnRenamed("verdict", "verdict_before")
+        .join(d30Verdicts(spark, dir, indexDir).select(col("doc_id"),
+          col("verdict").as("verdict_after")), Seq("doc_id"))
+        .orderBy(col("doc_id"))
+    }
+
+  /** d30's physical index root: the snapshot indexes, built once per
+    * session and appended with the delta batch's novel docs. */
+  private[graft] def d30Index(spark: SparkSession, dir: String): String =
+    Silver.once(spark, "d30Index", dir) {
       val indexDir = graft.etl.Scratch.tempDir("d30-index")
-      d30IndexDirs((spark, dir)) = indexDir
       val ds = docSids(spark, dir)
       val docs = Corpus.docs(spark, dir)
       // 1. materialize the snapshot indexes (bounded: identities/buckets)
@@ -1787,50 +1792,48 @@ object Dedup {
       docs.filter(col("doc_id") % 10 < SnapshotMod)
         .select(col("text")).distinct()
         .write.mode("overwrite").parquet(s"$indexDir/texts")
-      val delta = docs.filter(col("doc_id") % 10 >= SnapshotMod)
-      val deltaBands = bandKeys(signaturesWideFrom(
-        ds.filter(col("doc_id") % 10 >= SnapshotMod)))
-      def classify(texts: DataFrame, bands: DataFrame): DataFrame = {
-        val nearIds = deltaBands
-          .join(bands, Seq("band", "bandkey"), "left_semi")
-          .select(col("doc_id")).distinct()
-          .withColumn("near_hit", lit(true))
-        val exactIds = delta.join(texts, Seq("text"), "left_semi")
-          .select(col("doc_id")).withColumn("exact_hit", lit(true))
-        delta.select(col("doc_id"), col("source"))
-          .join(exactIds, Seq("doc_id"), "left")
-          .join(nearIds, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("source"),
-            when(coalesce(col("exact_hit"), lit(false)), lit("exact"))
-              .when(coalesce(col("near_hit"), lit(false)), lit("near"))
-              .otherwise(lit("novel")).as("verdict"))
-      }
-      // a silver, built here: the BEFORE probe must execute before the
-      // appends below change what its lazy parquet scans would read
-      val before = Silver.memoize(spark, s"d30BeforeProbe:$indexDir", dir) {
-        classify(
-          spark.read.parquet(s"$indexDir/texts"),
-          spark.read.parquet(s"$indexDir/bands"))
-      }
       // 2. THE MAINTENANCE: append the novel identities and band keys
-      val novelIds = before.filter(col("verdict") === "novel")
-        .select(col("doc_id"))
-      delta.join(novelIds, Seq("doc_id"), "left_semi")
+      val novelIds = d30Before(spark, dir, indexDir)
+        .filter(col("verdict") === "novel").select(col("doc_id"))
+      docs.filter(col("doc_id") % 10 >= SnapshotMod)
+        .join(novelIds, Seq("doc_id"), "left_semi")
         .select(col("text")).distinct()
         .write.mode("append").parquet(s"$indexDir/texts")
-      deltaBands.join(novelIds, Seq("doc_id"), "left_semi")
+      bandKeys(signaturesWideFrom(ds.filter(col("doc_id") % 10 >= SnapshotMod)))
+        .join(novelIds, Seq("doc_id"), "left_semi")
         .select(col("band"), col("bandkey")).distinct()
         .write.mode("append").parquet(s"$indexDir/bands")
-      // 3. RE-PROBE against the RE-READ physical indexes (the measured
-      // leg — a lost or misplaced append row flips a verdict_after)
-      val after = classify(
-        spark.read.parquet(s"$indexDir/texts"),
-        spark.read.parquet(s"$indexDir/bands"))
-      before.withColumnRenamed("verdict", "verdict_before")
-        .join(after.select(col("doc_id"),
-          col("verdict").as("verdict_after")), Seq("doc_id"))
-        .orderBy(col("doc_id"))
+      indexDir
     }
+
+  /** The delta batch's verdicts against the snapshot indexes, before the
+    * appends: a silver, built before them, because the appends change
+    * what its lazy parquet scans would read. */
+  private def d30Before(spark: SparkSession, dir: String, indexDir: String): DataFrame =
+    Silver.memoize(spark, s"d30BeforeProbe:$indexDir", dir) {
+      d30Verdicts(spark, dir, indexDir)
+    }
+
+  /** The delta batch classified against the index at `indexDir` as it
+    * reads now (d29's exact > near > novel algebra). */
+  private def d30Verdicts(spark: SparkSession, dir: String,
+                          indexDir: String): DataFrame = {
+    val delta = Corpus.docs(spark, dir).filter(col("doc_id") % 10 >= SnapshotMod)
+    val nearIds = bandKeys(signaturesWideFrom(
+        docSids(spark, dir).filter(col("doc_id") % 10 >= SnapshotMod)))
+      .join(spark.read.parquet(s"$indexDir/bands"), Seq("band", "bandkey"), "left_semi")
+      .select(col("doc_id")).distinct()
+      .withColumn("near_hit", lit(true))
+    val exactIds = delta.join(spark.read.parquet(s"$indexDir/texts"), Seq("text"), "left_semi")
+      .select(col("doc_id")).withColumn("exact_hit", lit(true))
+    delta.select(col("doc_id"), col("source"))
+      .join(exactIds, Seq("doc_id"), "left")
+      .join(nearIds, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("source"),
+        when(coalesce(col("exact_hit"), lit(false)), lit("exact"))
+          .when(coalesce(col("near_hit"), lit(false)), lit("near"))
+          .otherwise(lit("novel")).as("verdict"))
+  }
 
   /** a70's re-delivery leg: the SAME delta batch is delivered AGAIN to
     * the already-maintained physical index ([[indexMaintenance]]'s
@@ -1848,8 +1851,7 @@ object Dedup {
     * analogue: the unconditional whole-object (store, date) overwrite,
     * write-metrics/lambda_function.py:104. */
   def redeliveryProbe(spark: SparkSession, dir: String): DataFrame = {
-    indexMaintenance(spark, dir) // builds + maintains the physical index
-    val indexDir = d30IndexDirs((spark, dir))
+    val indexDir = d30Index(spark, dir)
     val isDelta = col("doc_id") % 10 >= SnapshotMod
     val delta = Corpus.docs(spark, dir).filter(isDelta)
     val exactIds = delta

@@ -37,11 +37,6 @@ object DayClose {
   /** Second close: the NEXT day's arrivals (nonempty at every test SF). */
   val Close2: String = "1995-06-16"
 
-  /** Generation roots per (session, sfDir), exposed for the spec's
-    * mid-generation assertions. */
-  private[graft] val closeDirs =
-    new graft.model.SessionMemo[String, String]()
-
   private def saleDate: Column = col("sale_date")
   private def day0: Column = saleDate <= Close1
   private def day1: Column = saleDate > Close1 && saleDate <= Close2
@@ -57,45 +52,57 @@ object DayClose {
   private def longRows(df: DataFrame, rows: Column*): DataFrame =
     df.select(explode(array(rows: _*)).as("r")).select(col("r.*"))
 
-  /** The one close body: the three dated golds folded through
-    * [[Fold.chain]] over `slices` (close 0, close 1, close 2) under a
-    * session-scoped root kept in `dirs`, then the index legs, all
+  /** A close's persisted generations: the root [[Fold.chain]] wrote
+    * them under (the specs' mid-generation assertions read it), and the
+    * three dated golds the last slice folds onto them. */
+  private[graft] final case class Closes(root: String, roll: DataFrame,
+                                         pages: DataFrame, sketches: DataFrame)
+
+  /** The three dated golds folded through [[Fold.chain]] over `slices`
+    * (close 0, close 1, close 2) under a fresh root. */
+  private def closes(spark: SparkSession, dir: String, tag: String,
+                     slices: Seq[Column]): Closes = {
+    val root = Scratch.tempDir(tag)
+    val sales = Tables.sales(spark, dir)
+    def gold(name: String, p: Fold.Partial): DataFrame =
+      Fold.chain(spark, root, name, sales, p, slices)
+    Closes(root, gold("roll", Fold.rollup), gold("pages", Fold.pages),
+      gold("sk", Fold.sketches))
+  }
+
+  /** The one close body: the golds of `c`, then the index legs, all
     * projected to one long-form relation. */
-  private def close(spark: SparkSession, dir: String, memo: String,
-                    dirs: graft.model.SessionMemo[String, String],
-                    tag: String, slices: Seq[Column])(
-                    legs: => Seq[DataFrame]): DataFrame =
-    graft.model.Silver.memoize(spark, memo, dir) {
-      val root = dirs.getOrElseUpdate((spark, dir), Scratch.tempDir(tag))
-      val sales = Tables.sales(spark, dir)
-      def gold(name: String, p: Fold.Partial): DataFrame =
-        Fold.chain(spark, root, name, sales, p, slices)
-      val roll = Fold.rollupOf(gold("roll", Fold.rollup))
-      val distinct = Fold.distinctOf(gold("pages", Fold.pages),
-        "n_distinct_skus", "store_id")
-      val topk = Fold.topKOf(gold("sk", Fold.sketches), 5)
-      val golds = Seq(
-        longRows(roll,
-          longForm("rollup", col("store_id"), col("month"),
-            "total_sales", col("total_sales")),
-          longForm("rollup", col("store_id"), col("month"),
-            "n_lines", col("n_lines"))),
-        longRows(distinct,
-          longForm("distinct", col("store_id"), lit(""),
-            "n_distinct_skus", col("n_distinct_skus"))),
-        longRows(topk,
-          longForm("topk", col("store_id"),
-            concat(col("rank").cast("string"), lit(":"), col("sku")),
-            "est_count", col("est_count"))))
-      (golds ++ legs).reduce(_ unionByName _)
-        .orderBy(col("component"), col("key1"), col("key2"), col("metric"))
+  private def close(c: Closes, legs: Seq[DataFrame]): DataFrame = {
+    val roll = Fold.rollupOf(c.roll)
+    val distinct = Fold.distinctOf(c.pages, "n_distinct_skus", "store_id")
+    val topk = Fold.topKOf(c.sketches, 5)
+    val golds = Seq(
+      longRows(roll,
+        longForm("rollup", col("store_id"), col("month"),
+          "total_sales", col("total_sales")),
+        longForm("rollup", col("store_id"), col("month"),
+          "n_lines", col("n_lines"))),
+      longRows(distinct,
+        longForm("distinct", col("store_id"), lit(""),
+          "n_distinct_skus", col("n_distinct_skus"))),
+      longRows(topk,
+        longForm("topk", col("store_id"),
+          concat(col("rank").cast("string"), lit(":"), col("sku")),
+          "est_count", col("est_count"))))
+    (golds ++ legs).reduce(_ unionByName _)
+      .orderBy(col("component"), col("key1"), col("key2"), col("metric"))
+  }
+
+  /** a69's generations: every slice on time. */
+  private[graft] def a69Closes(spark: SparkSession, dir: String): Closes =
+    graft.model.Silver.once(spark, "a69Closes", dir) {
+      closes(spark, dir, "a69-closes", Seq(day0, day1, day2))
     }
 
   /** a69: two consecutive on-time closes over [[Close1]]/[[Close2]]. */
   def dayClose(spark: SparkSession, dir: String): DataFrame =
-    close(spark, dir, "a69DayClose", closeDirs, "a69-closes",
-        Seq(day0, day1, day2)) {
-      Seq(
+    graft.model.Silver.memoize(spark, "a69DayClose", dir) {
+      close(a69Closes(spark, dir), Seq(
         longRows(graft.dedup.Dedup.indexMaintenance(spark, dir),
           longForm("dedup_index", col("doc_id").cast("string"),
             concat(col("verdict_before"), lit("->"), col("verdict_after")),
@@ -104,7 +111,7 @@ object DayClose {
           longForm("vector_index", col("query_id").cast("string"),
             concat(col("rank").cast("string"), lit(":"),
               col("neighbor_id").cast("string")),
-            "cosine", col("cosine"))))
+            "cosine", col("cosine")))))
     }
 
   /** The one close oracle: full recompute of the dated golds (the
@@ -159,9 +166,13 @@ object DayClose {
   private def late: Column =
     pmod(col("l_orderkey"), lit(LateMod)) === lit(LateRes) && saleDate <= Close2
 
-  /** a70 generation roots per (session, sfDir) — spec hook. */
-  private[graft] val restateDirs =
-    new graft.model.SessionMemo[String, String]()
+  /** a70's closes: the late slice withheld from close 0 and close 1,
+    * delivered with close 2. */
+  private[graft] def a70Closes(spark: SparkSession, dir: String): Closes =
+    graft.model.Silver.once(spark, "a70Closes", dir) {
+      closes(spark, dir, "a70-closes",
+        Seq(day0 && !late, day1 && !late, day2 || late))
+    }
 
   /** a70: the RESTATED day-close — the one nightly-pipeline event a69
     * does not exercise: a LATE fact for an ALREADY-CLOSED day. The
@@ -190,15 +201,14 @@ object DayClose {
     * recompute — the late rows are really absent) and correction-after
     * (the gold equals the full recompute). */
   def restatedClose(spark: SparkSession, dir: String): DataFrame =
-    close(spark, dir, "a70RestatedClose", restateDirs, "a70-closes",
-        Seq(day0 && !late, day1 && !late, day2 || late)) {
-      Seq(
+    graft.model.Silver.memoize(spark, "a70RestatedClose", dir) {
+      close(a70Closes(spark, dir), Seq(
         longRows(graft.dedup.Dedup.redeliveryProbe(spark, dir),
           longForm("dedup_index", col("doc_id").cast("string"),
             lit("redelivered"), "not_novel", col("not_novel"))),
         longRows(graft.vector.IndexCompaction.redeliveryProbe(spark, dir),
           longForm("vector_index", col("vec_id").cast("string"),
-            lit("redelivered"), "present_once", col("present_once"))))
+            lit("redelivered"), "present_once", col("present_once")))))
     }
 
   /** Full recompute of the dated golds from the raw tables plus the

@@ -33,10 +33,6 @@ import org.apache.spark.sql.functions._
   * materialize-read-measure loop costs the same at every SF. */
 object Evolution {
 
-  /** Test hook: materialized lake root per (session, sfDir). */
-  private[graft] val lakeDirs =
-    new graft.model.SessionMemo[String, String]()
-
   /** Last day of generation v1 (v2 starts the day after). */
   val SplitDate = "1998-06-15"
 
@@ -55,18 +51,7 @@ object Evolution {
 
   def schemaEvolution(spark: SparkSession, dir: String): DataFrame =
     Silver.memoize(spark, "k27SchemaEvolution", dir) {
-      val lakeDir = Scratch.tempDir("k27-lake")
-      lakeDirs((spark, dir)) = lakeDir
-      val sl = slice(spark, dir).persist()
-      try {
-        sl.filter(col("sale_date") <= SplitDate)
-          .select(V1Cols.map(col): _*)
-          .write.mode("overwrite").parquet(s"$lakeDir/gen=v1")
-        sl.filter(col("sale_date") > SplitDate)
-          .select(V2Cols.map(col): _*)
-          .write.mode("overwrite").parquet(s"$lakeDir/gen=v2")
-      } finally sl.unpersist()
-      val merged = spark.read.option("mergeSchema", "true").parquet(lakeDir)
+      val merged = spark.read.option("mergeSchema", "true").parquet(k27Lake(spark, dir))
       val dataCols = merged.schema.fieldNames.filterNot(_ == "gen").sorted
       val nn = dataCols.map(c =>
         sum(when(col(c).isNotNull, 1L).otherwise(0L)).as(s"nn_$c"))
@@ -80,6 +65,24 @@ object Evolution {
           col("n_nonnull"),
           expr("n_nonnull * 1000 DIV n_rows").as("coverage_milli"))
         .orderBy(col("gen"), col("column_name"))
+    }
+
+  /** k27's lake: the slice written as generation v1 (up to
+    * [[SplitDate]]) and v2 (after it), each with its own columns;
+    * returns its root. */
+  private[graft] def k27Lake(spark: SparkSession, dir: String): String =
+    Silver.once(spark, "k27Lake", dir) {
+      val lakeDir = Scratch.tempDir("k27-lake")
+      val sl = slice(spark, dir).persist()
+      try {
+        sl.filter(col("sale_date") <= SplitDate)
+          .select(V1Cols.map(col): _*)
+          .write.mode("overwrite").parquet(s"$lakeDir/gen=v1")
+        sl.filter(col("sale_date") > SplitDate)
+          .select(V2Cols.map(col): _*)
+          .write.mode("overwrite").parquet(s"$lakeDir/gen=v2")
+      } finally sl.unpersist()
+      lakeDir
     }
 
   /** The oracle predicts the audit from the fact table + the declared

@@ -69,12 +69,18 @@ object LakeApply {
   private val MonthFrom = "1998-06-01"
   private val MonthTo = "1998-06-30"
 
-  /** Materialized lake root per (session, (tag, sfDir)): [[k29Lake]]
-    * reads it back, and specs assert the PHYSICAL outcome (file counts,
-    * overwrite isolation) against the relation each applier returns.
-    * Keyed by session, like the silver that wrote the lake. */
-  private[graft] val lakeDirs =
-    new graft.model.SessionMemo[(String, String), String]()
+  /** A lake an applier has rewritten: its root, its data schema
+    * (partition columns excluded), and what the measured relation needs
+    * from before the rewrite: one figure per partition, and the
+    * partitions the rewrite touched. Each applier builds its lake once
+    * per session ([[Silver.once]]); specs call the same build to assert
+    * the PHYSICAL outcome (file counts, overwrite isolation) against the
+    * relation the applier returns. */
+  private[graft] final case class AppliedLake[K](root: String, dataSchema: StructType,
+                                                 before: Map[K, Long],
+                                                 touched: Set[K] = Set.empty[K])
+
+  private val SalesParts = Seq("part_month", "store_id")
 
   /** One shuffle partition per file key — exact output-file placement. */
   private class FileKeyPartitioner(n: Int) extends Partitioner {
@@ -187,51 +193,62 @@ object LakeApply {
     * files are carried through the partition rewrite one-to-one. */
   def compactionApplied(spark: SparkSession, dir: String): DataFrame =
     Silver.memoize(spark, "k24CompactionApplied", dir) {
-      val (lakeDir, dataSchema) = buildSalesLake(spark, dir, "k24")
-      lakeDirs((spark, ("k24", dir))) = lakeDir
-      val partCols = Seq("part_month", "store_id")
-      val lake = readLake(spark, lakeDir, dataSchema, partCols)
-      // freeze the BEFORE inventory on the driver (metadata-sized)
-      // before the rewrite invalidates the listing
-      val before = lakeStats(lake, partCols).collect()
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-      // plan the bins from the lake's own data
-      val model = lake.groupBy(col("part_month"), col("store_id"),
-          col("sale_date"))
-        .agg(count(lit(1)).as("n_rows"))
-        .withColumn("file_bytes",
-          lit(HeaderBytes) + lit(RowBytes) * col("n_rows"))
-        .withColumn("small",
-          (col("file_bytes") < TargetBytes).cast("long"))
-      val packWin = Window.partitionBy(col("part_month"), col("store_id"))
-        .orderBy(col("sale_date"))
-      val binned = model
-        .withColumn("cum_small",
-          sum(col("small") * col("file_bytes")).over(packWin))
-        .withColumn("file_tag",
-          when(col("small") === 1L, concat(lit("bin-"),
-            expr(s"(cum_small - 1) DIV $TargetBytes")))
-            .otherwise(concat(lit("keep-"), col("sale_date"))))
-        .select(col("part_month"), col("store_id"), col("sale_date"),
-          col("file_tag"))
-      val rewrite = lake.join(binned,
-          Seq("part_month", "store_id", "sale_date"))
-        .withColumn("__fk", concat_ws("/", col("part_month"),
-          col("store_id"), col("file_tag")))
-        .drop("file_tag")
-      writeExactFiles(rewrite, partCols, "__fk", lakeDir)
+      val lake = k24Lake(spark, dir)
       // re-measure the physical result
-      val after = readLake(spark, lakeDir, dataSchema, partCols)
-      val measured = lakeStats(after, partCols).collect()
+      val after = readLake(spark, lake.root, lake.dataSchema, SalesParts)
+      val measured = lakeStats(after, SalesParts).collect()
         .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
       import spark.implicits._
       measured.toSeq
         .map { case (m, s, nf, nr) =>
-          (m, s, before.getOrElse((m, s), 0L), nf, nr)
+          (m, s, lake.before.getOrElse((m, s), 0L), nf, nr)
         }
         .toDF("part_month", "store_id", "files_before", "files_after",
           "rows_total")
         .orderBy(col("part_month"), col("store_id"))
+    }
+
+  /** k17's bin-pack of `lake`, planned from its own rows: small files
+    * pack into running-total bins (bin = (cum_bytes − 1) DIV target),
+    * large ones are kept one-to-one; `__fk` names each row's file. */
+  private def binPacked(lake: DataFrame): DataFrame = {
+    val model = lake.groupBy(col("part_month"), col("store_id"),
+        col("sale_date"))
+      .agg(count(lit(1)).as("n_rows"))
+      .withColumn("file_bytes",
+        lit(HeaderBytes) + lit(RowBytes) * col("n_rows"))
+      .withColumn("small",
+        (col("file_bytes") < TargetBytes).cast("long"))
+    val packWin = Window.partitionBy(col("part_month"), col("store_id"))
+      .orderBy(col("sale_date"))
+    val binned = model
+      .withColumn("cum_small",
+        sum(col("small") * col("file_bytes")).over(packWin))
+      .withColumn("file_tag",
+        when(col("small") === 1L, concat(lit("bin-"),
+          expr(s"(cum_small - 1) DIV $TargetBytes")))
+          .otherwise(concat(lit("keep-"), col("sale_date"))))
+      .select(col("part_month"), col("store_id"), col("sale_date"),
+        col("file_tag"))
+    lake.join(binned, Seq("part_month", "store_id", "sale_date"))
+      .withColumn("__fk", concat_ws("/", col("part_month"),
+        col("store_id"), col("file_tag")))
+      .drop("file_tag")
+  }
+
+  /** k24's lake after the bin-pack rewrite; `before` is the file count
+    * per partition before it. */
+  private[graft] def k24Lake(spark: SparkSession,
+                             dir: String): AppliedLake[(String, String)] =
+    Silver.once(spark, "k24Lake", dir) {
+      val (lakeDir, dataSchema) = buildSalesLake(spark, dir, "k24")
+      val lake = readLake(spark, lakeDir, dataSchema, SalesParts)
+      // freeze the BEFORE inventory on the driver (metadata-sized)
+      // before the rewrite invalidates the listing
+      val before = lakeStats(lake, SalesParts).collect()
+        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+      writeExactFiles(binPacked(lake), SalesParts, "__fk", lakeDir)
+      AppliedLake(lakeDir, dataSchema, before)
     }
 
   def compactionAppliedSql(): String =
@@ -289,65 +306,39 @@ object LakeApply {
     * pin a manifest version and never observe a torn partition. */
   def atomicRewrite(spark: SparkSession, dir: String): DataFrame =
     Silver.memoize(spark, "k29AtomicRewrite", dir) {
+      // measured: both inventories from the manifest — the before leg
+      // time-travels to the v1 snapshot AFTER the swap
+      val (_, v1) = k29Dir(spark, dir)
+      val before = lakeStats(k29Lake(spark, dir, Some(v1)), SalesParts)
+        .select(SalesParts.map(col) :+ col("n_files").as("files_before"): _*)
+      val after = lakeStats(k29Lake(spark, dir, None), SalesParts)
+        .select(SalesParts.map(col) ++ Seq(col("n_files").as("files_after"),
+          col("n_rows").as("rows_total")): _*)
+      before.join(after, SalesParts)
+        .orderBy(col("part_month"), col("store_id"))
+    }
+
+  /** k29's lake after the swap: its root and the manifest version the
+    * bronze build committed. */
+  private[graft] def k29Dir(spark: SparkSession, dir: String): (String, Int) =
+    Silver.once(spark, "k29Lake", dir) {
       val lakeDir = Scratch.tempDir("k29-lake")
-      lakeDirs((spark, ("k29", dir))) = lakeDir
-      val partCols = Seq("part_month", "store_id")
       val slice = sliceSales(spark, dir)
         .withColumn("__fk", concat_ws("/", col("store_id"), col("sale_date")))
-      writeExactFiles(slice, partCols, "__fk", s"$lakeDir/gen1")
-      val dataSchema = StructType(slice
-        .drop("__fk", "part_month", "store_id").schema.fields)
+      writeExactFiles(slice, SalesParts, "__fk", s"$lakeDir/gen1")
       // COMMIT 1: the bronze build becomes visible atomically
       val v1 = AtomicManifest.commit(lakeDir,
         AtomicManifest.listFiles(lakeDir, "gen1").map((1L, _)))
-      def genLake(gen: Long, version: Option[Int]): DataFrame = {
-        val files = AtomicManifest.read(lakeDir, version)
-          .collect { case (`gen`, p) => s"$lakeDir/$p" }
-        val full = partCols.foldLeft(dataSchema)((s, c) => s.add(c, StringType))
-        spark.read.schema(full)
-          .option("basePath", s"$lakeDir/gen$gen").parquet(files: _*)
-      }
-      val lake = genLake(1L, None)
+      val lake = k29Read(spark, dir, lakeDir, None)
       // k17's bin-pack plan, computed from the manifest-resolved lake
-      val model = lake.groupBy(col("part_month"), col("store_id"),
-          col("sale_date"))
-        .agg(count(lit(1)).as("n_rows"))
-        .withColumn("file_bytes",
-          lit(HeaderBytes) + lit(RowBytes) * col("n_rows"))
-        .withColumn("small",
-          (col("file_bytes") < TargetBytes).cast("long"))
-      val packWin = Window.partitionBy(col("part_month"), col("store_id"))
-        .orderBy(col("sale_date"))
-      val binned = model
-        .withColumn("cum_small",
-          sum(col("small") * col("file_bytes")).over(packWin))
-        .withColumn("file_tag",
-          when(col("small") === 1L, concat(lit("bin-"),
-            expr(s"(cum_small - 1) DIV $TargetBytes")))
-            .otherwise(concat(lit("keep-"), col("sale_date"))))
-        .select(col("part_month"), col("store_id"), col("sale_date"),
-          col("file_tag"))
-      val rewrite = lake.join(binned,
-          Seq("part_month", "store_id", "sale_date"))
-        .withColumn("__fk", concat_ws("/", col("part_month"),
-          col("store_id"), col("file_tag")))
-        .drop("file_tag")
-      writeExactFiles(rewrite, partCols, "__fk", s"$lakeDir/gen2")
+      writeExactFiles(binPacked(lake), SalesParts, "__fk", s"$lakeDir/gen2")
       // COMMIT 2 — the rewrite transaction: removeFiles(every gen-1
       // file) + addFiles(gen-2), promoted in one atomic rename. A
       // reader during the gen-2 write still resolves the small-file
       // lake; a reader after sees only the packed one.
       AtomicManifest.commit(lakeDir,
         AtomicManifest.listFiles(lakeDir, "gen2").map((2L, _)))
-      // measured: both inventories from the manifest — the before leg
-      // time-travels to the v1 snapshot AFTER the swap
-      val before = lakeStats(genLake(1L, Some(v1)), partCols)
-        .select(partCols.map(col) :+ col("n_files").as("files_before"): _*)
-      val after = lakeStats(genLake(2L, None), partCols)
-        .select(partCols.map(col) ++ Seq(col("n_files").as("files_after"),
-          col("n_rows").as("rows_total")): _*)
-      before.join(after, partCols)
-        .orderBy(col("part_month"), col("store_id"))
+      (lakeDir, v1)
     }
 
   /** Same predicted relation as k24 — the swap and the in-place
@@ -357,15 +348,19 @@ object LakeApply {
   /** Manifest-resolved read of the k29 lake at `version` (spec hook:
     * the crash-window replay pins v1/v2 without touching the pointer). */
   private[graft] def k29Lake(spark: SparkSession, dir: String,
-                             version: Option[Int]): DataFrame = {
-    val lakeDir = lakeDirs((spark, ("k29", dir)))
+                             version: Option[Int]): DataFrame =
+    k29Read(spark, dir, k29Dir(spark, dir)._1, version)
+
+  /** The newest generation the manifest of `lakeDir` lists at `version`
+    * (None: the current one). */
+  private def k29Read(spark: SparkSession, dir: String, lakeDir: String,
+                      version: Option[Int]): DataFrame = {
     val dataSchema = StructType(sliceSales(spark, dir)
       .drop("part_month", "store_id").schema.fields)
     val entries = AtomicManifest.read(lakeDir, version)
     val gen = entries.map(_._1).max
     val files = entries.collect { case (g, p) if g == gen => s"$lakeDir/$p" }
-    val full = Seq("part_month", "store_id")
-      .foldLeft(dataSchema)((s, c) => s.add(c, StringType))
+    val full = SalesParts.foldLeft(dataSchema)((s, c) => s.add(c, StringType))
     spark.read.schema(full)
       .option("basePath", s"$lakeDir/gen$gen").parquet(files: _*)
   }
@@ -385,11 +380,29 @@ object LakeApply {
   def purgeApplied(spark: SparkSession, dir: String,
                    mod: Long = 97L): DataFrame =
     Silver.memoize(spark, s"k25PurgeApplied-$mod", dir) {
+      val lake = k25Lake(spark, dir, mod)
+      val after = readLake(spark, lake.root, lake.dataSchema, SalesParts)
+      val remaining = lakeStats(after, SalesParts).collect()
+        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(3)).toMap
+      import spark.implicits._
+      lake.before.toSeq
+        .map { case ((m, s), rb) =>
+          val ra = remaining.getOrElse((m, s), 0L)
+          (m, s, rb, ra, rb - ra, if (lake.touched((m, s))) 1L else 0L)
+        }
+        .toDF("part_month", "store_id", "rows_before", "rows_after",
+          "n_purged", "touched")
+        .orderBy(col("part_month"), col("store_id"))
+    }
+
+  /** k25's lake after the purge of cohort `mod`; `before` is the row
+    * count per partition before it. */
+  private[graft] def k25Lake(spark: SparkSession, dir: String,
+                             mod: Long): AppliedLake[(String, String)] =
+    Silver.once(spark, s"k25Lake:$mod", dir) {
       val (lakeDir, dataSchema) = buildSalesLake(spark, dir, "k25")
-      lakeDirs((spark, (s"k25-$mod", dir))) = lakeDir
-      val partCols = Seq("part_month", "store_id")
-      val lake = readLake(spark, lakeDir, dataSchema, partCols)
-      val before = lakeStats(lake, partCols).collect()
+      val lake = readLake(spark, lakeDir, dataSchema, SalesParts)
+      val before = lakeStats(lake, SalesParts).collect()
         .map(r => (r.getString(0), r.getString(1)) -> r.getLong(3)).toMap
       // cohort keys are ~1% of orders — broadcast-sized by design
       val cohort = Tables.orders(spark, dir)
@@ -414,7 +427,7 @@ object LakeApply {
         .drop("__purge")
         .withColumn("__fk",
           concat_ws("/", col("part_month"), col("store_id"), col("sale_date")))
-      writeExactFiles(survivors, partCols, "__fk", lakeDir)
+      writeExactFiles(survivors, SalesParts, "__fk", lakeDir)
       // a wholly-purged partition has no survivors: dynamic overwrite
       // never visits it, so the delete is explicit — exactly what a
       // copy-on-write lake's delete commit does to emptied partitions
@@ -426,18 +439,7 @@ object LakeApply {
           p.getFileSystem(hadoopConf).delete(p, true)
         }
       }
-      val after = readLake(spark, lakeDir, dataSchema, partCols)
-      val remaining = lakeStats(after, partCols).collect()
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(3)).toMap
-      import spark.implicits._
-      before.toSeq
-        .map { case ((m, s), rb) =>
-          val ra = remaining.getOrElse((m, s), 0L)
-          (m, s, rb, ra, rb - ra, if (touched.contains((m, s))) 1L else 0L)
-        }
-        .toDF("part_month", "store_id", "rows_before", "rows_after",
-          "n_purged", "touched")
-        .orderBy(col("part_month"), col("store_id"))
+      AppliedLake(lakeDir, dataSchema, before, touched.keySet)
     }
 
   def purgeAppliedSql(mod: Long = 97L): String =
@@ -468,8 +470,25 @@ object LakeApply {
     * near-dup purge kept exactly the quality-selected keepers. */
   def dedupApplied(spark: SparkSession, dir: String): DataFrame =
     Silver.memoize(spark, "d28DedupApplied", dir) {
+      val lake = d28Lake(spark, dir)
+      val after = readLake(spark, lake.root, lake.dataSchema, Seq("source"))
+      val remaining = lakeStats(after, Seq("source")).collect()
+        .map(r => r.getString(0) -> r.getLong(2)).toMap
+      import spark.implicits._
+      lake.before.toSeq
+        .map { case (s, db) =>
+          val da = remaining.getOrElse(s, 0L)
+          (s, db, da, db - da)
+        }
+        .toDF("source", "docs_before", "docs_after", "n_dropped")
+        .orderBy(col("source"))
+    }
+
+  /** d28's documents lake after the verdict's drops; `before` is the doc
+    * count per source before them. */
+  private[graft] def d28Lake(spark: SparkSession, dir: String): AppliedLake[String] =
+    Silver.once(spark, "d28Lake", dir) {
       val lakeDir = Scratch.tempDir("d28-lake")
-      lakeDirs((spark, ("d28", dir))) = lakeDir
       val docs = Tables.documents(spark, dir)
       val docsKeyed = docs.withColumn("__fk", col("source"))
       writeExactFiles(docsKeyed, Seq("source"), "__fk", lakeDir)
@@ -505,17 +524,7 @@ object LakeApply {
           p.getFileSystem(hadoopConf).delete(p, true)
         }
       }
-      val after = readLake(spark, lakeDir, dataSchema, Seq("source"))
-      val remaining = lakeStats(after, Seq("source")).collect()
-        .map(r => r.getString(0) -> r.getLong(2)).toMap
-      import spark.implicits._
-      before.toSeq
-        .map { case (s, db) =>
-          val da = remaining.getOrElse(s, 0L)
-          (s, db, da, db - da)
-        }
-        .toDF("source", "docs_before", "docs_after", "n_dropped")
-        .orderBy(col("source"))
+      AppliedLake(lakeDir, dataSchema, before)
     }
 
   def dedupAppliedSql(): String =

@@ -3,6 +3,7 @@ package graft.etl
 import graft.model.{Silver, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** k15: Z-ORDER LAYOUT vs LINEAR CLUSTERING — the data-skipping readout
   * behind every lakehouse OPTIMIZE ZORDER BY: interleaving the bits of
@@ -211,7 +212,36 @@ object Layout {
                     rowsPerFile: Int = 4096,
                     skuLo: Long = 100L, skuHi: Long = 500L,
                     suppLo: Long = 10L, suppHi: Long = 30L): DataFrame =
-    graft.model.Silver.memoize(spark, "k26ZorderApplied", dir) {
+    Silver.memoize(spark, s"k26ZorderApplied:$rowsPerFile:$skuLo:$skuHi:$suppLo:$suppHi", dir) {
+      val (lakeDir, schema) = zorderLake(spark, dir, rowsPerFile)
+      val lake = spark.read.schema(schema).parquet(lakeDir)
+      val fileStats = lake
+        .select(col("layout"), col("sku"), col("supp"),
+          col("_metadata.file_path").as("fp"))
+        .groupBy(col("layout"), col("fp"))
+        .agg(count(lit(1)).as("n_rows"),
+          min(col("sku")).as("sku_min"), max(col("sku")).as("sku_max"),
+          min(col("supp")).as("supp_min"), max(col("supp")).as("supp_max"))
+      val selected = lake.filter(col("layout") === "zorder" &&
+          col("sku").between(skuLo, skuHi) &&
+          col("supp").between(suppLo, suppHi))
+        .agg(count(lit(1)).as("n_rows_selected"))
+      fileStats.groupBy(col("layout"))
+        .agg(count(lit(1)).as("n_files"),
+          expr(s"CAST(SUM(${touchedExpr(skuLo, skuHi, suppLo, suppHi)}) " +
+            "AS BIGINT)").as("n_touched"),
+          expr(s"SUM(${touchedExpr(skuLo, skuHi, suppLo, suppHi)}) * 1000" +
+            " DIV COUNT(*)").as("touched_pct_milli"),
+          sum(col("n_rows")).as("n_rows_total"))
+        .crossJoin(broadcast(selected))
+        .orderBy(col("layout"))
+    }
+
+  /** k26's lake: both layouts of every line item, written
+    * `rowsPerFile` rows to a file; returns its root and schema. */
+  private[graft] def zorderLake(spark: SparkSession, dir: String,
+                                rowsPerFile: Int): (String, StructType) =
+    Silver.once(spark, s"k26Lake:$rowsPerFile", dir) {
       val rows = Tables.lineitem(spark, dir)
         .select(col("l_partkey").cast("long").as("sku"),
           col("l_suppkey").cast("long").as("supp"),
@@ -237,33 +267,10 @@ object Layout {
         rows, "rk", col("sku"), col("supp"), col("l_orderkey"),
         col("l_linenumber")))
       val lakeDir = Scratch.tempDir("k26-lake")
-      LakeApply.lakeDirs((spark, ("k26", dir))) = lakeDir
       LakeApply.writeExactFiles(zRanked.unionByName(linRanked),
         Seq("layout"), "__fk", lakeDir)
-      val schema = org.apache.spark.sql.types.StructType(
-        zRanked.drop("__fk", "layout").schema.fields)
-        .add("layout", org.apache.spark.sql.types.StringType)
-      val lake = spark.read.schema(schema).parquet(lakeDir)
-      val fileStats = lake
-        .select(col("layout"), col("sku"), col("supp"),
-          col("_metadata.file_path").as("fp"))
-        .groupBy(col("layout"), col("fp"))
-        .agg(count(lit(1)).as("n_rows"),
-          min(col("sku")).as("sku_min"), max(col("sku")).as("sku_max"),
-          min(col("supp")).as("supp_min"), max(col("supp")).as("supp_max"))
-      val selected = lake.filter(col("layout") === "zorder" &&
-          col("sku").between(skuLo, skuHi) &&
-          col("supp").between(suppLo, suppHi))
-        .agg(count(lit(1)).as("n_rows_selected"))
-      fileStats.groupBy(col("layout"))
-        .agg(count(lit(1)).as("n_files"),
-          expr(s"CAST(SUM(${touchedExpr(skuLo, skuHi, suppLo, suppHi)}) " +
-            "AS BIGINT)").as("n_touched"),
-          expr(s"SUM(${touchedExpr(skuLo, skuHi, suppLo, suppHi)}) * 1000" +
-            " DIV COUNT(*)").as("touched_pct_milli"),
-          sum(col("n_rows")).as("n_rows_total"))
-        .crossJoin(broadcast(selected))
-        .orderBy(col("layout"))
+      (lakeDir, StructType(zRanked.drop("__fk", "layout").schema.fields)
+        .add("layout", StringType))
     }
 
   /** k26's oracle IS k15's model at the applied file size — the whole

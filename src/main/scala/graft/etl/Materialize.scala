@@ -213,7 +213,7 @@ object Materialize {
     * COUNT + ROW_NUMBER ranking hash-certifies it. */
   def incrementalTopK(spark: SparkSession, dir: String,
                       topK: Int = 5): DataFrame =
-    graft.model.Silver.memoize(spark, "a68IncrementalTopK", dir) {
+    graft.model.Silver.memoize(spark, s"a68IncrementalTopK:$topK", dir) {
       Fold.topKOf(
           Fold.chain(spark, Scratch.tempDir("a68-silver"), "sk",
             graft.model.Tables.sales(spark, dir), Fold.sketches, boundarySlices),

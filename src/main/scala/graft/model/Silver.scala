@@ -3,9 +3,10 @@ package graft.model
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.graftbridge.ColumnBridge
+import scala.collection.concurrent.TrieMap
 
-/** Session-level HANDLE memoization for the shared silver relations,
-  * materialized to PLAN LEAVES — the one place a silver is materialized.
+/** The engine's one session memo ([[once]]), and the one place a silver
+  * is materialized: shared silver relations are memoized as PLAN LEAVES.
   *
   * Spark's CacheManager already dedupes silver EXECUTION by logical-plan
   * identity — but every re-call of a silver builder still re-constructs
@@ -43,34 +44,54 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * job. A builder whose body iterates is memoized, keyed by every
   * parameter its rounds depend on, so only its first call runs them.
   *
-  * A DataFrame is bound to the session that built it, so the key
-  * includes the session — a second session in the same JVM builds its
-  * own handles instead of receiving frames bound to a session it
-  * doesn't own. This is the engine's only frame-valued memo.
+  * This is the engine's one session memo. [[once]] is its primitive: a
+  * value built once per (session, name, dir), whatever it is: a silver
+  * frame ([[memoize]] is `once` of the leaf), a directory a builder
+  * writes and returns, fitted driver-side arrays, a table's schema. The
+  * name encodes every parameter other than the session and `dir`
+  * (SilverLintSpec checks it), so two calls that differ in any
+  * parameter never share a value, and no builder records what it built
+  * for another to read: a reader calls the build, and gets the value
+  * the first call built.
   *
-  * Builds are single-flight: the map holds a lazy holder per key, and
-  * `TrieMap.getOrElseUpdate` hands every concurrent miss the one holder
-  * it inserted (its body may run once per racing caller, which is why
-  * the body only allocates the holder). The holder's lazy leaf is built
-  * by the first caller to force it while the others wait, so N callers
-  * of one cold silver pay one build; a hit stays one map read. */
+  * The map is held per session, in a weak map on the session: a stopped,
+  * dereferenced session's session-free values (paths, arrays, schemas)
+  * can be collected with it. A frame holds its session strongly, so a
+  * session that memoized a frame stays as long as the JVM, as it always
+  * did; a frame is bound to the session that built it, so a second
+  * session builds its own instead of receiving one it does not own.
+  *
+  * Builds are single-flight: the per-session map holds a lazy holder
+  * per key, and `TrieMap.getOrElseUpdate` hands every concurrent miss
+  * the one holder it inserted (its body may run once per racing caller,
+  * which is why the body only allocates the holder). The holder's lazy
+  * value is built by the first caller to force it while the others
+  * wait, so N callers of one cold key pay one build; a hit is a session
+  * lookup and one map read. A build that throws leaves the key unbuilt;
+  * the next call builds again. */
 object Silver {
-  private final class Handle(build: => DataFrame) {
-    lazy val frame: DataFrame = leaf(build)
+  private final class Handle(build: => Any) {
+    lazy val value: Any = build
   }
 
-  private val memo =
-    scala.collection.concurrent.TrieMap[(SparkSession, String, String), Handle]()
+  private val sessions =
+    new java.util.WeakHashMap[SparkSession, TrieMap[(String, String), Handle]]()
 
-  /** Return the memoized handle for `name` under `dir` in `spark`,
-    * building (and leaf-materializing) it on first call. `name` must
-    * encode any non-dir parameters (e.g. `"topProductsDec:5"`). Keyed by
-    * session IDENTITY — the handful of sessions a JVM holds makes the
-    * strong reference harmless. A build that throws leaves the key
-    * unbuilt; the next call builds again. */
+  private def memoOf(spark: SparkSession): TrieMap[(String, String), Handle] =
+    sessions.synchronized(sessions.computeIfAbsent(spark, _ => TrieMap.empty))
+
+  /** The value of `build` for `name` under `dir` in `spark`, built on the
+    * first call and returned by every later one. `name` must encode
+    * every other parameter the value depends on (e.g. `"foldedIndex:8"`)
+    * and be used for one type of value only. */
+  def once[A](spark: SparkSession, name: String, dir: String)(build: => A): A =
+    memoOf(spark).getOrElseUpdate((name, dir), new Handle(build)).value.asInstanceOf[A]
+
+  /** The memoized silver `name` under `dir` in `spark`: [[once]] of the
+    * build as a measured plan leaf. */
   def memoize(spark: SparkSession, name: String, dir: String)
              (build: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((spark, name, dir), new Handle(build)).frame
+    once(spark, name, dir)(leaf(build))
 
   /** The rounds one [[iterate]] ran: `rounds(0)` is the initial
     * relation and `rounds(i)` round i's leaf. `converged` says the loop

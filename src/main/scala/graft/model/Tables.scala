@@ -43,8 +43,14 @@ import org.apache.spark.sql.types._
 object Tables {
   val Money: DecimalType = DecimalType(18, 2)
 
-  private def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** A table read with its schema given: the parquet footer pass that
+    * infers it (a Spark job) runs once per session and table. */
+  private def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(Silver.once(spark, s"tableSchema:$name", dir) {
+      spark.read.parquet(path).schema
+    }).parquet(path)
+  }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "orders")

@@ -1162,7 +1162,7 @@ object Multimodal {
     * in the spec's in-process check. */
   def imageNearDupApplied(spark: SparkSession, dir: String,
                           maxHamming: Int = 10): DataFrame =
-    graft.model.Silver.memoize(spark, "m13NearDupApplied", dir) {
+    graft.model.Silver.memoize(spark, s"m13NearDupApplied:$maxHamming", dir) {
       bandedHammingPairs(imageHashSilver(spark, dir)
         .select(col("media_id"), col("a0").as("h0"), col("a1").as("h1")),
         maxHamming)
@@ -1171,7 +1171,7 @@ object Multimodal {
   /** m14: m10's pHash twin of m13 — same silver, DCT fingerprint. */
   def phashDupApplied(spark: SparkSession, dir: String,
                       maxHamming: Int = 10): DataFrame =
-    graft.model.Silver.memoize(spark, "m14PhashApplied", dir) {
+    graft.model.Silver.memoize(spark, s"m14PhashApplied:$maxHamming", dir) {
       bandedHammingPairs(imageHashSilver(spark, dir)
         .select(col("media_id"), col("p0").as("h0"), col("p1").as("h1")),
         maxHamming)

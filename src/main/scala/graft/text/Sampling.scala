@@ -67,20 +67,20 @@ object Sampling {
     * branch would re-aggregate — three full corpus scans at 100 TB). */
   def stratifiedSample(spark: SparkSession, dir: String,
                        budget: Int = 150): DataFrame =
-    apportionedDraw(spark, dir, budget, s"samplingAlloc:$budget",
-      col("n_docs"))
+    apportionedDraw(spark, dir, budget, sqrtWeight = false)
 
   /** Shared machinery of smp1/smp3: Hamilton-apportion `budget` over the
-    * strata by `weight` (an expression over the rollup's `n_docs`), then
-    * draw each stratum's quota of hash-smallest docs. */
+    * strata by the rollup's `n_docs` (by its [[isqrt]] under
+    * `sqrtWeight`), then draw each stratum's quota of hash-smallest
+    * docs. */
   private def apportionedDraw(spark: SparkSession, dir: String, budget: Int,
-                              memoKey: String, weight: Column): DataFrame = {
+                              sqrtWeight: Boolean): DataFrame = {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-    val alloc = graft.model.Silver.memoize(spark, memoKey, dir) {
+    val alloc = graft.model.Silver.memoize(spark, s"samplingAlloc:$budget:$sqrtWeight", dir) {
       val strata = docs.groupBy(col("lang"), col("source"))
         .agg(count(lit(1)).as("n_docs"))
-        .withColumn("w", weight)
+        .withColumn("w", if (sqrtWeight) isqrt(col("n_docs")) else col("n_docs"))
       val tot = strata.agg(sum(col("w")).as("w_total"))
       val quotas = strata.crossJoin(broadcast(tot))
         .withColumn("base", expr(s"$budget * w DIV w_total"))
@@ -132,8 +132,7 @@ object Sampling {
     * full-stratum sort. */
   def temperatureMix(spark: SparkSession, dir: String,
                      budget: Int = 150): DataFrame =
-    apportionedDraw(spark, dir, budget, s"samplingAllocSqrt:$budget",
-      isqrt(col("n_docs")))
+    apportionedDraw(spark, dir, budget, sqrtWeight = true)
 
   def stratifiedSampleSql(budget: Int = 150): String =
     apportionedDrawSql(budget, "n_docs")

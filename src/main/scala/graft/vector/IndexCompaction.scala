@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import Similarity.{cosine, dotCol, dotSql, withNorm, withNormSql, defaultNQueries}
-import graft.model.AtomicManifest
+import graft.model.{AtomicManifest, Silver}
 
 /** v39/v40: the vector PLAN → ACTION loop — v38's missing half.
   *
@@ -49,16 +49,12 @@ object IndexCompaction {
   /** Snapshot membership rule — v38's (and d29's): vec_id % 10 < 8. */
   val SnapshotMod = 8L
 
-  /** Physical index roots per (session, sfDir) — built once, shared by
-    * v39 and v40; exposed for the spec's file-level assertions. */
-  private[graft] val indexDirs =
-    new graft.model.SessionMemo[String, String]()
-
-  /** The manifest version the FOLD committed, per (session, sfDir) —
-    * the post-fold keys (v39/v40/v41) pin their reads to it so a later
-    * rebalance commit (which removes split-parent files from the
-    * CURRENT manifest) cannot change what they certify. */
-  private val foldCommits = new graft.model.SessionMemo[String, Int]()
+  /** A folded index: its physical root and the manifest version the
+    * FOLD committed. The post-fold keys (v39/v40/v41) pin their reads to
+    * `commit`, so a later rebalance commit (which removes split-parent
+    * files from the CURRENT manifest) cannot change what they
+    * certify. */
+  private[graft] final case class Folded(root: String, commit: Int)
 
   /** Generation `gen`'s live files per the committed manifest — the
     * ONLY way index readers here resolve data files (no directory
@@ -84,10 +80,10 @@ object IndexCompaction {
   }
 
   /** Build the snapshot index physically, then FOLD the delta into it.
-    * Returns the index root. One build per (session, sfDir). */
-  private def foldedIndex(spark: SparkSession, dir: String,
-                          nCentroids: Int): String =
-    indexDirs.getOrElseUpdate((spark, dir), {
+    * One build per (session, sfDir, nCentroids), shared by v39–v44. */
+  private[graft] def foldedIndex(spark: SparkSession, dir: String,
+                                 nCentroids: Int): Folded =
+    Silver.once(spark, s"foldedIndex:$nCentroids", dir) {
       val indexDir = graft.etl.Scratch.tempDir("v39-index")
       val e = withNorm(spark, dir)
       val snap = e.filter(col("vec_id") % 10 < SnapshotMod)
@@ -119,10 +115,9 @@ object IndexCompaction {
       // COMMIT 2: the fold's appended files join the live set in one
       // rename — a reader during the append still sees the pre-fold
       // index, never a partially-appended cell
-      foldCommits((spark, dir)) = AtomicManifest.commit(indexDir,
-        AtomicManifest.listFiles(indexDir, "cells").map((1L, _)))
-      indexDir
-    })
+      Folded(indexDir, AtomicManifest.commit(indexDir,
+        AtomicManifest.listFiles(indexDir, "cells").map((1L, _))))
+    }
 
   /** v39: post-fold ANN from the MEASURED index — candidate identity
     * from the re-read physical cells table, scores from the fact-table
@@ -131,9 +126,9 @@ object IndexCompaction {
   def compactionApplied(spark: SparkSession, dir: String, k: Int = 5,
                         nQueries: Int = defaultNQueries,
                         nCentroids: Int = 8, nProbe: Int = 2): DataFrame =
-    graft.model.Silver.memoize(spark, "v39CompactionApplied", dir) {
-      val indexDir = foldedIndex(spark, dir, nCentroids)
-      val cents = broadcast(spark.read.parquet(s"$indexDir/centroids"))
+    Silver.memoize(spark, s"v39CompactionApplied:$k:$nQueries:$nCentroids:$nProbe", dir) {
+      val index = foldedIndex(spark, dir, nCentroids)
+      val cents = broadcast(spark.read.parquet(s"${index.root}/centroids"))
       val e = withNorm(spark, dir)
       val queries = e.filter(col("vec_id") < nQueries)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
@@ -151,8 +146,7 @@ object IndexCompaction {
       // commit, joined on the probed cells (the inverted-list seek).
       // The read pins the fold's manifest version: this key certifies
       // the post-fold index whether or not a rebalance committed since.
-      val cells = manifestGen(spark, indexDir, 1L, "cells",
-          Some(foldCommits((spark, dir))))
+      val cells = manifestGen(spark, index.root, 1L, "cells", Some(index.commit))
         .select(col("vec_id").as("neighbor_id"), col("cell"))
       val scored = broadcast(qprobe).join(cells, Seq("cell"))
         .filter(col("query_id") =!= col("neighbor_id"))
@@ -235,10 +229,9 @@ object IndexCompaction {
     * exactly the planned files with zero row loss. */
   def cellInventory(spark: SparkSession, dir: String,
                     nCentroids: Int = 8): DataFrame =
-    graft.model.Silver.memoize(spark, "v40CellInventory", dir) {
-      val indexDir = foldedIndex(spark, dir, nCentroids)
-      manifestGen(spark, indexDir, 1L, "cells",
-          Some(foldCommits((spark, dir))))
+    Silver.memoize(spark, s"v40CellInventory:$nCentroids", dir) {
+      val index = foldedIndex(spark, dir, nCentroids)
+      manifestGen(spark, index.root, 1L, "cells", Some(index.commit))
         .select(col("cell"), col("vec_id"),
           col("_metadata.file_path").as("__fp"))
         .groupBy(col("cell"))
@@ -257,9 +250,8 @@ object IndexCompaction {
     * reader; the oracle predicts the constant-1 relation. */
   def redeliveryProbe(spark: SparkSession, dir: String,
                       nCentroids: Int = 8): DataFrame = {
-    val indexDir = foldedIndex(spark, dir, nCentroids)
-    val live = manifestGen(spark, indexDir, 1L, "cells",
-        Some(foldCommits((spark, dir))))
+    val index = foldedIndex(spark, dir, nCentroids)
+    val live = manifestGen(spark, index.root, 1L, "cells", Some(index.commit))
       .groupBy(col("vec_id")).agg(count(lit(1)).as("n"))
     withNorm(spark, dir).filter(col("vec_id") % 10 >= SnapshotMod)
       .select(col("vec_id"))
@@ -282,7 +274,7 @@ object IndexCompaction {
   def foldRecall(spark: SparkSession, dir: String, k: Int = 5,
                  nQueries: Int = defaultNQueries,
                  nCentroids: Int = 8, nProbe: Int = 2): DataFrame =
-    graft.model.Silver.memoize(spark, "v41FoldRecall", dir) {
+    Silver.memoize(spark, s"v41FoldRecall:$k:$nQueries:$nCentroids:$nProbe", dir) {
       val pre = Similarity.deltaIndexAnn(spark, dir, k, nQueries,
           nCentroids, nProbe)
         .select(col("query_id"), col("neighbor_id"),
@@ -381,16 +373,14 @@ object IndexCompaction {
   /** Hot-cell threshold in milli-of-mean (see scaladoc above). */
   val HotMilliDefault = 1080L
 
-  private val rebalMemo = new graft.model.SessionMemo[String, String]()
-
   private def subCentTable(nCentroids: Int) = s"split_subcents_$nCentroids"
 
   /** Build the rebalance generation (sub-centroid silver + `cells2`);
-    * returns the index root. One build per (session, sfDir). */
+    * returns the index root. One build per (session, sfDir, nCentroids). */
   private def rebalancedIndex(spark: SparkSession, dir: String,
                               nCentroids: Int): String =
-    rebalMemo.getOrElseUpdate((spark, dir), {
-      val indexDir = foldedIndex(spark, dir, nCentroids)
+    Silver.once(spark, s"rebalancedIndex:$nCentroids", dir) {
+      val indexDir = foldedIndex(spark, dir, nCentroids).root
       val cells = manifestGen(spark, indexDir, 1L, "cells")
         .select(col("vec_id"), col("cell").cast("int").as("cell"))
       // hot cells from the MEASURED index (centroid-count-sized collect)
@@ -467,7 +457,7 @@ object IndexCompaction {
       AtomicManifest.commit(indexDir,
         kept ++ AtomicManifest.listFiles(indexDir, "cells2").map((2L, _)))
       indexDir
-    })
+    }
 
   /** The LIVE cell set of the index at `indexDir`, resolved ONLY
     * through its committed manifest: gen-1 entries (split parents are
@@ -503,7 +493,7 @@ object IndexCompaction {
   /** v42: the measured post-rebalance inventory. */
   def rebalanceApplied(spark: SparkSession, dir: String,
                        nCentroids: Int = 8): DataFrame =
-    graft.model.Silver.memoize(spark, "v42RebalanceApplied", dir) {
+    Silver.memoize(spark, s"v42RebalanceApplied:$nCentroids", dir) {
       inventoryOf(liveCells(spark, dir, nCentroids))
     }
 
@@ -563,7 +553,7 @@ object IndexCompaction {
   def rebalancedAnn(spark: SparkSession, dir: String, k: Int = 5,
                     nQueries: Int = defaultNQueries,
                     nCentroids: Int = 8, nProbe: Int = 2): DataFrame =
-    graft.model.Silver.memoize(spark, "v43RebalancedAnn", dir) {
+    Silver.memoize(spark, s"v43RebalancedAnn:$k:$nQueries:$nCentroids:$nProbe", dir) {
       val indexDir = rebalancedIndex(spark, dir, nCentroids)
       val silver = spark.read.parquet(
         graft.model.OracleSilver.dirFor(subCentTable(nCentroids), dir))
@@ -660,11 +650,9 @@ object IndexCompaction {
     * exactly the dead files and nothing else; the spec additionally
     * asserts the parent partition dirs are gone and the kept files'
     * names are untouched. */
-  private val gcMemo = new graft.model.SessionMemo[String, String]()
-
   private[graft] def gcIndex(spark: SparkSession, dir: String,
                              nCentroids: Int): String =
-    gcMemo.getOrElseUpdate((spark, dir), {
+    Silver.once(spark, s"gcIndex:$nCentroids", dir) {
       val indexDir = rebalancedIndex(spark, dir, nCentroids)
       val gcDir = graft.etl.Scratch.tempDir("v44-gc")
       def copyTree(src: java.io.File, dst: java.io.File): Unit = {
@@ -705,13 +693,13 @@ object IndexCompaction {
           }
       }
       gcDir
-    })
+    }
 
   /** v44: the measured live inventory from the GC'd clone — identical
     * to v42's relation iff the GC deleted exactly the dead files. */
   def gcApplied(spark: SparkSession, dir: String,
                 nCentroids: Int = 8): DataFrame =
-    graft.model.Silver.memoize(spark, "v44GcApplied", dir) {
+    Silver.memoize(spark, s"v44GcApplied:$nCentroids", dir) {
       inventoryOf(liveCellsFrom(spark, gcIndex(spark, dir, nCentroids)))
     }
 

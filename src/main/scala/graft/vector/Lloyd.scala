@@ -190,15 +190,12 @@ object Lloyd {
     sx.divide(java.math.BigDecimal.valueOf(n), 30,
       java.math.RoundingMode.HALF_EVEN).doubleValue
 
-  private val ivfMemo =
-    new graft.model.SessionMemo[(String, Int, Int), Array[Array[Double]]]()
-
   /** FIT-ONCE access to the trained IVF centroids — the index-lifecycle
     * contract: quantizers are fit once and versioned with the index,
     * never refit per query. In-JVM the fit memoizes on
-    * (session, corpus, nCentroids, iters) — every consumer (v28's two
-    * ivfAnn legs, repeated bench iterations) shares ONE fit; pass
-    * `persistDir` to also round-trip the centroids through
+    * (session, corpus, nCentroids, iters, persistDir) — every consumer
+    * (v28's two ivfAnn legs, repeated bench iterations) shares ONE fit;
+    * pass `persistDir` to also round-trip the centroids through
     * [[IndexStore.writeTrainedCentroids]] so a later session loads
     * instead of refitting. The fit is deterministic (decimal-exact
     * sums, see the object scaladoc) and doubles survive parquet
@@ -207,12 +204,13 @@ object Lloyd {
   def ivfTrainedOnce(spark: SparkSession, dir: String, nCentroids: Int = 8,
                      iters: Int = 4,
                      persistDir: Option[String] = None): Array[Array[Double]] =
-    ivfMemo.getOrElseUpdate((spark, (dir, nCentroids, iters)), {
+    graft.model.Silver.once(spark,
+        s"ivfCentroids:$nCentroids:$iters:${persistDir.getOrElse("")}", dir) {
       persistDir.flatMap(IndexStore.readTrainedCentroids(spark, _))
         .getOrElse {
           val fit = ivfTrain(spark, dir, nCentroids, iters)
           persistDir.foreach(IndexStore.writeTrainedCentroids(spark, _, fit))
           fit
         }
-    })
+    }
 }

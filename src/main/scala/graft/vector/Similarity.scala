@@ -62,12 +62,9 @@ object Similarity {
     * dimension-sized posexplode aggregate; the collect is bounded by
     * |dims| rows, and at 100 TB it is a persisted stats table computed
     * at index-build time, not a per-query pass. */
-  private val dimStatsMemo =
-    new graft.model.SessionMemo[String, Array[(Double, Double)]]()
-
   private[vector] def dimStats(spark: SparkSession,
                                dir: String): Array[(Double, Double)] =
-    dimStatsMemo.getOrElseUpdate((spark, dir),
+    Silver.once(spark, "dimStats", dir) {
       Tables.embeddings(spark, dir)
         .select(posexplode(col("embedding")).as(Seq("pos", "x")))
         .groupBy("pos")
@@ -75,7 +72,8 @@ object Similarity {
           max(col("x").cast("double")).as("dmax"))
         .orderBy("pos")
         .collect()
-        .map(r => (r.getDouble(1), r.getDouble(2))))
+        .map(r => (r.getDouble(1), r.getDouble(2)))
+    }
 
   /** Embeddings with the precomputed squared norm (one pass, reused by
     * every pairwise cosine — norms are never recomputed per pair). */

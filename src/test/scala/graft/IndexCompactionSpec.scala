@@ -88,12 +88,7 @@ class IndexCompactionSpec extends GraftSpec {
 
   test("the physical cells table read back equals the frozen-centroid " +
       "assignment recomputed in memory (plan == action at row grain)") {
-    val indexDir = IndexCompaction.indexDirs.collectFirst {
-      case ((s, d), p) if d == sfDir && s == spark => p
-    }.getOrElse {
-      IndexCompaction.compactionApplied(spark, sfDir).count()
-      IndexCompaction.indexDirs((spark, sfDir))
-    }
+    val indexDir = IndexCompaction.foldedIndex(spark, sfDir, 8).root
     val physical = spark.read.parquet(s"$indexDir/cells")
       .select(col("vec_id"), col("cell"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
@@ -124,7 +119,7 @@ class IndexCompactionSpec extends GraftSpec {
     // build through the rebalance commit (v1 snapshot, v2 fold, v3
     // rebalance)
     IndexCompaction.rebalanceApplied(spark, sfDir).count()
-    val indexDir = IndexCompaction.indexDirs((spark, sfDir))
+    val indexDir = IndexCompaction.foldedIndex(spark, sfDir, 8).root
     assert(new java.io.File(indexDir, s"${AtomicManifest.Name}.v3").exists())
     // clone the FULL physical tree — gen-2 files included — then roll
     // the clone's manifest POINTER back to the fold commit: byte-for-

@@ -62,7 +62,7 @@ class LakeApplySpec extends GraftSpec {
     }
     assert(got === want)
     // physical: files on disk per partition == files_after
-    val root = LakeApply.lakeDirs((spark, ("k24", sfDir)))
+    val root = LakeApply.k24Lake(spark, sfDir).root
     val onDisk = partFiles(root).groupBy(_.split("/").dropRight(1).mkString("/"))
       .map { case (dirPart, fs) => dirPart -> fs.length.toLong }
     got.foreach { case ((m, s), (_, fa, _)) =>
@@ -96,7 +96,7 @@ class LakeApplySpec extends GraftSpec {
     val slice = sliceRows()
     val wantSurvivors = slice.filterNot(r => cohort(r._3))
       .map(r => (r._3, r._4)).sorted.toSeq
-    val root = LakeApply.lakeDirs((spark, (s"k25-$mod", sfDir)))
+    val root = LakeApply.k25Lake(spark, sfDir, mod).root
     val back = spark.read.parquet(root)
       .select(col("l_orderkey"), col("l_linenumber")).collect()
       .map(r => (r.getLong(0), r.getInt(1)))
@@ -135,7 +135,7 @@ class LakeApplySpec extends GraftSpec {
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     val drops = verdict.collect { case (id, "drop") => id }.toSet
     assert(drops.nonEmpty, "fixture must actually drop something")
-    val root = LakeApply.lakeDirs((spark, ("d28", sfDir)))
+    val root = LakeApply.d28Lake(spark, sfDir).root
     val back = spark.read.parquet(root).select("doc_id").collect()
       .map(_.getLong(0)).toSet
     val all = Tables.documents(spark, sfDir).select("doc_id").collect()
@@ -160,7 +160,7 @@ class LakeApplySpec extends GraftSpec {
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(4)))
       .toMap
     assert(rel.keySet === Set("zorder", "linear"))
-    val root = LakeApply.lakeDirs((spark, ("k26", sfDir)))
+    val root = graft.etl.Layout.zorderLake(spark, sfDir, 4096)._1
     val onDisk = partFiles(root)
       .groupBy(_.split("/").head)
       .map { case (d, fs) => d.stripPrefix("layout=") -> fs.length.toLong }

@@ -120,7 +120,7 @@ class R11OpsSpec extends GraftSpec {
   test("k27: the lake physically evolves — v1 files lack discount_amount, " +
       "v2 files lack payment_method, the merged read null-fills exactly") {
     val audit = graft.etl.Evolution.schemaEvolution(spark, sfDir).collect()
-    val root = graft.etl.Evolution.lakeDirs((spark, sfDir))
+    val root = graft.etl.Evolution.k27Lake(spark, sfDir)
     val v1 = spark.read.parquet(s"$root/gen=v1")
     val v2 = spark.read.parquet(s"$root/gen=v2")
     val base = Set("store_id", "sale_date", "sku", "quantity", "line_total")

@@ -45,7 +45,7 @@ class R12OpsSpec extends GraftSpec {
       .select("text").distinct().count()
     // the physical exact index after maintenance = snapshot ∪ novel
     // (disjoint by novelty, so counts add)
-    val idxDir = Dedup.d30IndexDirs((spark, sfDir))
+    val idxDir = Dedup.d30Index(spark, sfDir)
     val physTexts = spark.read.parquet(s"$idxDir/texts").count()
     assert(physTexts === snapTexts + novelTexts)
   }

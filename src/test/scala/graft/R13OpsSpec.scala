@@ -61,7 +61,7 @@ class R13OpsSpec extends GraftSpec {
       "mid-generation contract the end-to-end hash cannot see") {
     import graft.etl.DayClose
     DayClose.dayClose(spark, dir).count() // force both closes
-    val root = DayClose.closeDirs((spark, dir))
+    val root = DayClose.a69Closes(spark, dir).root
     val upTo = graft.model.Tables.sales(spark, dir)
       .filter(col("sale_date") <= DayClose.Close2)
     // the close-1 arrivals are nonempty: close 2 folds ON TOP of a
@@ -164,7 +164,7 @@ class R13OpsSpec extends GraftSpec {
     val nCentroids = 8
     IndexCompaction.gcApplied(spark, dir).count() // force clone + GC
     val gcDir = IndexCompaction.gcIndex(spark, dir, nCentroids)
-    val srcDir = IndexCompaction.indexDirs((spark, dir))
+    val srcDir = IndexCompaction.foldedIndex(spark, dir, nCentroids).root
     val parents = spark.read.parquet(graft.model.OracleSilver
         .dirFor(s"split_subcents_$nCentroids", dir))
       .select("parent_cell").distinct().collect().map(_.getInt(0))
@@ -210,7 +210,7 @@ class R13OpsSpec extends GraftSpec {
       .groupBy(_._1)
     // probe sets recomputed independently, pure-Scala double arithmetic
     // (the same strict left-to-right fold as the engine's dotCol)
-    val indexDir = IndexCompaction.indexDirs((spark, dir))
+    val indexDir = IndexCompaction.foldedIndex(spark, dir, nCentroids).root
     def vecsOf(df: org.apache.spark.sql.DataFrame, id: String,
                emb: String): Array[(Int, Array[Double])] =
       df.select(col(id).cast("int"), col(emb)).collect()

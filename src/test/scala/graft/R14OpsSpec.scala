@@ -17,7 +17,7 @@ class R14OpsSpec extends GraftSpec {
       "already-closed day") {
     import graft.etl.DayClose
     DayClose.restatedClose(spark, dir).count() // force all three closes
-    val root = DayClose.restateDirs((spark, dir))
+    val root = DayClose.a70Closes(spark, dir).root
     val sales = graft.model.Tables.sales(spark, dir)
     val late = pmod(col("l_orderkey"), lit(DayClose.LateMod)) ===
       lit(DayClose.LateRes) && col("sale_date") <= DayClose.Close2
@@ -80,7 +80,7 @@ class R14OpsSpec extends GraftSpec {
       rows.map(r => (r.getLong(3), r.get(4).toString)).sorted.toSeq
     assert(ids(v1) === ids(v2))
     // time travel intact: gen-1 bytes still on disk after the swap
-    val lakeDir = LakeApply.lakeDirs((spark, ("k29", dir)))
+    val lakeDir = LakeApply.k29Dir(spark, dir)._1
     assert(graft.model.AtomicManifest.listFiles(lakeDir, "gen1").nonEmpty)
   }
 
@@ -90,7 +90,7 @@ class R14OpsSpec extends GraftSpec {
       "arithmetic)") {
     import graft.vector.{IndexCompaction, Lloyd}
     IndexCompaction.rebalanceApplied(spark, dir).count()
-    val indexDir = IndexCompaction.indexDirs((spark, dir))
+    val indexDir = IndexCompaction.foldedIndex(spark, dir, 8).root
     val silver = spark.read.parquet(
         graft.model.OracleSilver.dirFor("split_subcents_8", dir))
       .collect()

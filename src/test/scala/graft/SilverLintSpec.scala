@@ -2,9 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source lint over `src/main/scala`: [[graft.model.Silver.memoize]] is
-  * the one place a silver is materialized and the one frame-valued memo,
-  * and [[graft.model.Silver.iterate]] the one place a loop's rounds are.
+/** Source lint over `src/main/scala`: [[graft.model.Silver.once]] is the
+  * one session memo, [[graft.model.Silver.memoize]] the one place a silver
+  * is materialized, and [[graft.model.Silver.iterate]] the one place a
+  * loop's rounds are.
   *
   *   1. A memoize body must return a PLAIN plan: a trailing `.cache()`,
   *      `.persist(...)` or `.localCheckpoint()` is a second
@@ -12,16 +13,24 @@ import org.scalatest.funsuite.AnyFunSuite
   *      CacheManager, which every action scans). An iterative body
   *      returns a round of `Silver.iterate`, already a leaf, which
   *      memoize keeps as-is.
-  *   2. No `TrieMap`/`Map`/`SessionMemo` with `DataFrame`- or
-  *      `Dataset`-typed values outside `graft/model/`: a DataFrame is
-  *      bound to its session, and every side memo so far got that
-  *      binding wrong or duplicated what memoize already does.
+  *   2. No `TrieMap`/`Map` with `DataFrame`- or `Dataset`-typed values,
+  *      and no `TrieMap`, `SessionMemo` or `getOrElseUpdate` memo at all,
+  *      outside `graft/model/`: [[graft.model.Silver.once]] is the one
+  *      session memo. A DataFrame is bound to its session, and every side
+  *      memo so far got that binding wrong, skipped a parameter in its
+  *      key, built twice under concurrent callers, or duplicated what
+  *      the memo already does.
   *   3. Outside `graft/model/`, a reused intermediate is a silver, not a
   *      materialization of its own: a `.cache()`/`.persist()` is a scoped
   *      temporary, unpersisted in a `finally` of the same `def`, and a
   *      `.localCheckpoint()` appears only in an allowlisted `def`, each
   *      with the reason a silver cannot stand in for it: a per-call
   *      snapshot. A loop's rounds go through `Silver.iterate`.
+  *   4. A `Silver.memoize` or `Silver.once` name interpolates every
+  *      parameter of its def other than `spark` and `dir` (a by-name
+  *      parameter is the build itself), so two calls that differ in a
+  *      parameter never share a value; an allowlisted def says why its
+  *      name may leave one out.
   */
 class SilverLintSpec extends AnyFunSuite {
 
@@ -93,7 +102,7 @@ class SilverLintSpec extends AnyFunSuite {
 
   private val MapDecl = "\\b(TrieMap|Map|SessionMemo)\\s*\\[".r
 
-  /** Top-level comma-separated type arguments of the `[` at `open`. */
+  /** Top-level comma-separated arguments of the `[` or `(` at `open`. */
   private def typeArgs(src: String, open: Int): Seq[String] = {
     val inner = src.substring(open + 1, closing(src, open))
     val parts = Seq.newBuilder[String]
@@ -122,6 +131,20 @@ class SilverLintSpec extends AnyFunSuite {
     assert(hits.isEmpty,
       "\nframe-valued memo maps outside graft/model/ (use Silver.memoize, " +
         "which keys by session):\n" + hits.mkString("\n"))
+  }
+
+  private val SideMemo = "\\b(TrieMap|SessionMemo|getOrElseUpdate)\\b".r
+
+  test("no TrieMap, SessionMemo or getOrElseUpdate memo outside graft/model/") {
+    val hits = for {
+      (file, src) <- sources if !file.startsWith("graft/model/")
+      m <- SideMemo.findAllMatchIn(src)
+      before = src.substring(src.lastIndexOf('\n', m.start - 1) + 1, m.start)
+      if !before.trim.startsWith("*") && !before.contains("//")
+    } yield s"$file:${lineOf(src, m.start)}: ${m.group(1)}"
+    assert(hits.isEmpty,
+      "\nsession memos outside graft/model/ (a build-once value is a " +
+        "Silver.once, keyed by session and every parameter):\n" + hits.mkString("\n"))
   }
 
   /** (name, first line, last line) of every `def` in `src`, by layout: a
@@ -203,5 +226,73 @@ class SilverLintSpec extends AnyFunSuite {
         "through Silver.iterate):\n" + bad.mkString("\n"))
     val stale = checkpointers.keySet -- hits.map(h => (h._1, h._2)).toSet
     assert(stale.isEmpty, s"allowlisted defs that no longer checkpoint: $stale")
+  }
+
+  private val MemoCall = "Silver\\.(memoize|once)\\s*\\(".r
+  private val DefAt = "\\bdef\\s+(\\w+)".r
+
+  /** The parameters of the def declared on `line` of `src` (1-based), in
+    * every parameter list, as (name, by-name?). */
+  private def params(src: String, line: Int): Seq[(String, Boolean)] = {
+    val from = src.split("\n", -1).take(line - 1).map(_.length + 1).sum
+    var open = from + DefAt.findFirstMatchIn(src.substring(from)).get.end
+    val out = Seq.newBuilder[(String, Boolean)]
+    while (src.charAt(open) == '(' || src.charAt(open) == '[') {
+      if (src.charAt(open) == '(')
+        typeArgs(src, open).filter(_.nonEmpty).foreach { p =>
+          val Array(name, tpe) = p.stripPrefix("implicit ").split(":", 2).map(_.trim)
+          out += ((name, tpe.startsWith("=>")))
+        }
+      open = src.indexWhere(!_.isWhitespace, closing(src, open) + 1)
+    }
+    out.result()
+  }
+
+  private val Splice = "\\$\\{[^}]*\\}|\\$\\w+".r
+
+  /** `body` as code: comments dropped, and each string literal reduced
+    * to its `$` splices. */
+  private def code(body: String): String = {
+    def splices(lit: String) = Splice.findAllIn(lit).mkString(" ", " ", " ")
+    val noTriple = "(?s)\"\"\"(.*?)\"\"\"".r.replaceAllIn(body,
+      m => java.util.regex.Matcher.quoteReplacement(splices(m.group(1))))
+    "\"((?:[^\"\\\\\n]|\\\\.)*)\"".r.replaceAllIn(
+      noTriple.replaceAll("(?m)//.*$", "").replaceAll("(?s)/\\*.*?\\*/", ""),
+      m => java.util.regex.Matcher.quoteReplacement(splices(m.group(1))))
+  }
+
+  /** (file, def) -> why its memo name leaves out a parameter. */
+  private val unnamedParams: Map[(String, String), String] = Map(
+    ("graft/analytics/Graph.scala", "oriented") ->
+      "the edges function is named by its caller's tag: one tag per edge rule")
+
+  test("a memoize or once name interpolates every parameter of its def " +
+      "that its build reads, other than spark and dir") {
+    val hits = for {
+      (file, src) <- sources if file != "graft/model/Silver.scala"
+      ds = defs(src)
+      m <- MemoCall.findAllMatchIn(src).toSeq
+      line = lineOf(src, m.start)
+      d <- ds.filter(d => d._2 <= line && line <= d._3).maxByOption(_._2).toSeq
+    } yield {
+      val args = closing(src, m.end - 1)
+      val open = src.indexWhere(!_.isWhitespace, args + 1)
+      val body = code(src.substring(open + 1, closing(src, open)))
+      val name = typeArgs(src, m.end - 1)(1)
+      val named = Splice.findAllIn(name).flatMap("\\w+".r.findAllIn).toSet + name
+      val missing = params(src, d._2).collect {
+        case (p, false) if p != "spark" && p != "dir" && !named(p) &&
+          s"\\b$p\\b".r.findFirstIn(body).isDefined => p
+      }
+      ((file, d._1), s"$file:$line: ${m.group(1)} $name in def ${d._1} omits " +
+        missing.mkString(", "), missing.nonEmpty)
+    }
+    assert(hits.size > 100, s"lint found only ${hits.size} memo calls")
+    val bad = hits.collect { case (fd, at, true) if !unnamedParams.contains(fd) => at }
+    assert(bad.isEmpty,
+      "\nmemo names that leave out a parameter their build reads (two calls " +
+        "that differ in it would share one value):\n" + bad.mkString("\n"))
+    val stale = unnamedParams.keySet -- hits.collect { case (fd, _, true) => fd }
+    assert(stale.isEmpty, s"allowlisted defs whose names carry every parameter: $stale")
   }
 }

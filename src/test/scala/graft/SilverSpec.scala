@@ -3,15 +3,17 @@ package graft
 import graft.model.Silver
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, max}
 
-/** The materialization rules of [[Silver.memoize]], the engine's one
-  * silver memo: handles are checkpointed plan leaves, held per session,
-  * built once by ONE job that both fills and measures the leaf, and a
-  * body that already is a leaf is not copied again. Builders that reuse
-  * an intermediate make it a silver keyed by every parameter it depends
-  * on: a repeat call runs no job, and joins to it are planned from its
-  * measured size, not a hand-written broadcast hint. */
+/** The materialization rules of [[Silver.memoize]], `once` of a silver
+  * leaf in the engine's one session memo: handles are checkpointed plan
+  * leaves, held per session, built once by ONE job that both fills and
+  * measures the leaf, and a body that already is a leaf is not copied
+  * again. Builders that reuse an intermediate make it a silver keyed by
+  * every parameter it depends on: a repeat call runs no job, a call with
+  * another parameter builds its own value, concurrent first callers of
+  * one build-once directory build it once, and joins to a silver are
+  * planned from its measured size, not a hand-written broadcast hint. */
 class SilverSpec extends GraftSpec {
 
   private var groups = 0
@@ -127,17 +129,21 @@ class SilverSpec extends GraftSpec {
   }
 
   test("a repeat call of d23, d27, j14 or v21 in the same session runs no job") {
-    // and of every key whose body runs rounds: its loop is built once
-    val loopKeys = Seq("g4_kcore", "g6_bfs_hops", "g7_lpa_communities",
+    // and of every key whose body runs rounds: its loop is built once;
+    // and of keys that read tables outside their memo, whose schema is
+    // read once per session
+    val entryKeys = Seq("g4_kcore", "g6_bfs_hops", "g7_lpa_communities",
       "g8_personalized_pagerank", "g9_weighted_sssp", "d6_dup_clusters",
       "d10_clusters_xxhash", "er3_entity_clusters", "e28_absorption",
-      "e32_removal_effect", "v33_mmr_diversify", "v34_pca_power", "t20_bpe_train")
+      "e32_removal_effect", "v33_mmr_diversify", "v34_pca_power", "t20_bpe_train",
+      "e1_events_daily", "v16_filtered_ann")
     (Seq[(String, () => DataFrame)](
       "d23" -> (() => graft.dedup.Dedup.templatePassages(spark, sfDir)),
       "d27" -> (() => graft.dedup.Dedup.dupSpans(spark, sfDir)),
       "j14" -> (() => graft.analytics.Star.marketShare(spark, sfDir)),
-      "v21" -> (() => graft.vector.Similarity.semanticClusters(spark, sfDir))) ++
-      loopKeys.map(k => k -> (() => SparkEntry.queries(k)(spark, sfDir)))).foreach {
+      "v21" -> (() => graft.vector.Similarity.semanticClusters(spark, sfDir)),
+      "resolve_date" -> (() => graft.analytics.Kpis.resolveDate(spark, sfDir))) ++
+      entryKeys.map(k => k -> (() => SparkEntry.queries(k)(spark, sfDir)))).foreach {
       case (key, call) =>
         val first = call()
         val (again, jobs) = JobLog.during(spark)(call())
@@ -224,5 +230,56 @@ class SilverSpec extends GraftSpec {
     def passages(minDf: Int) =
       graft.dedup.Dedup.templatePassages(spark, sfDir, minDf = minDf).collect().toSeq
     assert(passages(2) != passages(5), "two df floors returned one floor's passages")
+  }
+
+  test("a repeat call with a different parameter builds its own value") {
+    def ranks(topK: Int) = graft.etl.Materialize.incrementalTopK(spark, sfDir, topK)
+      .select(max(col("rank"))).head.get(0).toString.toInt
+    assert(ranks(5) === 5)
+    assert(ranks(2) === 2, "a68 with topK 2 after topK 5 returned topK 5's ranks")
+    def cells(nCentroids: Int) =
+      graft.vector.IndexCompaction.cellInventory(spark, sfDir, nCentroids)
+        .collect().map(_.getAs[Any]("cell").toString.toInt)
+    assert(cells(8).max === 7)
+    assert(cells(4).max === 3, "v40 with 4 centroids after 8 returned the 8-cell index")
+  }
+
+  test("four concurrent first callers of v39-v42 build one folded index") {
+    val s = spark.newSession()
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def indexes() = Option(tmp.list()).toSeq.flatten.filter(_.startsWith("graft-v39-index")).toSet
+    val before = indexes()
+    val calls = Seq[SparkSession => DataFrame](
+      graft.vector.IndexCompaction.compactionApplied(_, sfDir),
+      graft.vector.IndexCompaction.cellInventory(_, sfDir),
+      graft.vector.IndexCompaction.foldRecall(_, sfDir),
+      graft.vector.IndexCompaction.rebalanceApplied(_, sfDir))
+    val start = new java.util.concurrent.CyclicBarrier(calls.size)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = calls.map { f =>
+      new Thread(() => {
+        start.await()
+        try f(s).collect() catch { case e: Throwable => errors.add(e) }
+      })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    assert(errors.isEmpty, errors.toString)
+    val built = indexes() -- before
+    assert(built.size === 1, s"index directories built: $built")
+  }
+
+  test("a table read with its memoized schema equals the inferred read") {
+    import graft.model.Tables
+    val s = spark.newSession()
+    Seq[(String, (SparkSession, String) => DataFrame)]("lineitem" -> Tables.lineitem,
+      "orders" -> Tables.orders, "documents" -> Tables.documents,
+      "embeddings" -> Tables.embeddings).foreach { case (t, read) =>
+      val given = read(s, sfDir)
+      val inferred = s.read.parquet(s"$sfDir/$t.parquet")
+      assert(given.schema === inferred.schema, t)
+      assert(given.collect().map(_.toString).sorted.toSeq ===
+        inferred.collect().map(_.toString).sorted.toSeq, t)
+    }
   }
 }

@@ -28,7 +28,7 @@ class StreamingIndexMaintenanceSpec extends GraftSpec {
     // the batch reference: d30 builds + appends in one pass
     val d30 = Dedup.indexMaintenance(spark, sfDir).collect()
       .map(r => r.getLong(0) -> r.getString(2)).toMap
-    val batchRoot = Dedup.d30IndexDirs((spark, sfDir))
+    val batchRoot = Dedup.d30Index(spark, sfDir)
     // the streaming index, same frozen snapshot
     val root = SIM.buildSnapshotIndex(spark, sfDir)
     val snapTexts = Dedup.snapshotTexts(spark, sfDir)
@@ -79,7 +79,7 @@ class StreamingIndexMaintenanceSpec extends GraftSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     // batch reference: force the v39 fold, then read its physical cells
     graft.vector.IndexCompaction.compactionApplied(spark, sfDir).count()
-    val batchRoot = graft.vector.IndexCompaction.indexDirs((spark, sfDir))
+    val batchRoot = graft.vector.IndexCompaction.foldedIndex(spark, sfDir, 8).root
     val root = graft.etl.Scratch.tempDir("stream-vec-index")
     val cents = SIM.buildSnapshotCells(spark, sfDir, root)
     val delta = graft.model.Tables.embeddings(spark, sfDir)
