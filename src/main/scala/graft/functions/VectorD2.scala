@@ -1,12 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native codegen'd squared-L2 distance of two `array<float>` columns, in
   * double precision, strictly left-to-right — bit-identical to the
@@ -18,67 +14,17 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * path ([[graft.vector.Similarity.pqCodes]]): nSub × nCodes sub-distances
   * per vector — at 100 TB the encode pass is the index build, and an
   * interpreted per-element lambda there is the difference between
-  * scan-speed and 10× scan time. The sibling of [[VectorDot]] (same
-  * contract, diff-square instead of product). */
-case class VectorD2(left: Expression, right: Expression)
-    extends BinaryExpression {
+  * scan-speed and 10× scan time. The sibling of [[VectorDot]]: the same
+  * [[VectorFold]] with a diff-square term instead of a product. */
+case class VectorD2(left: Expression, right: Expression) extends VectorFold {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"vector_d2 expects (array<float>, array<float>), got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
+  override protected def term(a: Double, b: Double): Double = {
+    val d = a - b
+    d * d
   }
 
-  override def dataType: DataType = DoubleType
-
-  override def nullIntolerant: Boolean = true
-
-  // mismatched lengths yield NULL, exactly like the reference fold:
-  // zip_with pads the shorter side with nulls and the sum propagates them
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    if (a.numElements() != b.numElements()) null
-    else {
-      val n = a.numElements()
-      var acc = 0.0
-      var i = 0
-      while (i < n) {
-        val d = a.getFloat(i).toDouble - b.getFloat(i).toDouble
-        acc += d * d
-        i += 1
-      }
-      acc
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $a.numElements();
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double $d = ((double) $a.getFloat($i)) - ((double) $b.getFloat($i));
-         |    $acc += $d * $d;
-         |  }
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
+  override protected def termCode(a: String, b: String): String =
+    s"($a - $b) * ($a - $b)"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

@@ -1,12 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native codegen'd dot product of two `array<float>` columns, in double
   * precision, strictly left-to-right (index order) — bit-identical to the
@@ -15,67 +11,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * row instead of per-element lambda dispatch, and it stays inside
   * WholeStageCodegen. This is the custom-Expression escape hatch the
   * built-ins genuinely can't match on the ANN hot path (per-pair work =
-  * one fused loop over 64 floats).
-  *
-  * Interpreted eval is provided for completeness (codegen-disabled paths,
-  * e.g. spark.sql.codegen.factoryMode=NO_CODEGEN) and matches exactly.
-  */
-case class VectorDot(left: Expression, right: Expression)
-    extends BinaryExpression {
+  * one fused loop over 64 floats). The loop, null contract and interpreted path are [[VectorFold]]'s. */
+case class VectorDot(left: Expression, right: Expression) extends VectorFold {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"vector_dot expects (array<float>, array<float>), got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
+  override protected def term(a: Double, b: Double): Double = a * b
 
-  override def dataType: DataType = DoubleType
-
-  override def nullIntolerant: Boolean = true
-
-  // mismatched lengths yield NULL, exactly like the reference fold:
-  // zip_with pads the shorter side with nulls and the sum propagates them
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    if (a.numElements() != b.numElements()) null
-    else {
-      val n = a.numElements()
-      var acc = 0.0
-      var i = 0
-      while (i < n) {
-        acc += a.getFloat(i).toDouble * b.getFloat(i).toDouble
-        i += 1
-      }
-      acc
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $a.numElements();
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $acc += ((double) $a.getFloat($i)) * ((double) $b.getFloat($i));
-         |  }
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
+  override protected def termCode(a: String, b: String): String = s"$a * $b"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

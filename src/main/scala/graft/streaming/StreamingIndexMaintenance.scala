@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.dedup.Dedup
+import graft.vector.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -90,28 +91,10 @@ object StreamingIndexMaintenance {
     * as arrivals stream). */
   def buildSnapshotCells(spark: SparkSession, dir: String, root: String,
                          nCentroids: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val e = graft.model.Tables.embeddings(spark, dir)
-      .withColumn("norm2",
-        graft.vector.Similarity.dotCol(col("embedding"), col("embedding")))
-    val snap = e.filter(
+    val snap = Similarity.withNorm(spark, dir).filter(
       col("vec_id") % 10 < graft.vector.IndexCompaction.SnapshotMod)
-    val cents = snap.orderBy(col("vec_id").asc).limit(nCentroids)
-      .select(col("vec_id").as("cent_vid"), col("embedding").as("c_emb"),
-        col("norm2").as("c_norm2"))
-      .withColumn("centroid_id",
-        row_number().over(Window.orderBy(col("cent_vid"))) - 1)
-      .drop("cent_vid")
-      .localCheckpoint()
-    val wv = Window.partitionBy(col("vec_id"))
-      .orderBy(col("ccos").desc, col("centroid_id").asc)
-    snap.crossJoin(broadcast(cents))
-      .withColumn("ccos",
-        graft.vector.Similarity.dotCol(col("embedding"), col("c_emb")) /
-          sqrt(col("norm2") * col("c_norm2")))
-      .withColumn("crank", row_number().over(wv))
-      .filter(col("crank") === 1)
-      .select(col("vec_id"), col("centroid_id").as("cell"))
+    val cents = Similarity.donorCents(snap, nCentroids).localCheckpoint()
+    Similarity.assign(snap, cents)
       .write.mode("overwrite").parquet(s"$root/cells")
     cents
   }
@@ -125,22 +108,11 @@ object StreamingIndexMaintenance {
                       batch: Seq[ArrivingVec],
                       cents: DataFrame): Unit = {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     if (batch.isEmpty) return
     val vecs = batch.map(v => (v.vec_id, v.embedding))
       .toDF("vec_id", "embedding")
-      .withColumn("norm2",
-        graft.vector.Similarity.dotCol(col("embedding"), col("embedding")))
-    val wv = Window.partitionBy(col("vec_id"))
-      .orderBy(col("ccos").desc, col("centroid_id").asc)
-    val assigned = vecs.crossJoin(broadcast(cents))
-      .withColumn("ccos",
-        graft.vector.Similarity.dotCol(col("embedding"), col("c_emb")) /
-          sqrt(col("norm2") * col("c_norm2")))
-      .withColumn("crank", row_number().over(wv))
-      .filter(col("crank") === 1)
-      .select(col("vec_id"), col("centroid_id").as("cell"))
-      .localCheckpoint()
+      .withColumn("norm2", Similarity.dotCol(col("embedding"), col("embedding")))
+    val assigned = Similarity.assign(vecs, cents).localCheckpoint()
     assigned
       .join(spark.read.parquet(s"$root/cells"), Seq("vec_id"), "left_anti")
       .write.mode("append").parquet(s"$root/cells")

@@ -37,13 +37,10 @@ object StreamingVector {
     * watermark, |queries| output rows per arriving vector. */
   def scoreArrivals(stream: Dataset[ArrivingVec],
                     queries: DataFrame): DataFrame =
-    stream.toDF()
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb"))
-      .withColumn("n_norm2", Similarity.dotCol(col("n_emb"), col("n_emb")))
-      .join(broadcast(queries))
-      .filter(col("query_id") =!= col("neighbor_id"))
+    Similarity.scorePairs(stream.toDF()
+        .select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb"))
+        .withColumn("n_norm2", Similarity.dotCol(col("n_emb"), col("n_emb")))
+        .join(broadcast(queries)))
       .select(col("query_id"), col("neighbor_id"),
-        lit(true).as("from_delta"),
-        (Similarity.dotCol(col("q_emb"), col("n_emb")) /
-          sqrt(col("q_norm2") * col("n_norm2"))).as("cosine"))
+        lit(true).as("from_delta"), col("cosine"))
 }

@@ -814,8 +814,14 @@ object TextAnalysis {
   }
 
   def bm25(spark: SparkSession, dir: String, nQueries: Int = 3,
-           k: Int = 5, maxDfPct: Int = 78): DataFrame = {
-    val index = bm25Index(spark, dir, maxDfPct)
+           k: Int = 5, maxDfPct: Int = 78): DataFrame =
+    bm25Query(bm25Index(spark, dir, maxDfPct), nQueries, k)
+
+  /** t15's query half over a scored posting list (doc_id, word,
+    * contrib), in memory ([[bm25Index]]) or persisted
+    * ([[graft.vector.IndexStore.queryLexical]]): queries are the first
+    * `nQueries` documents, their terms their own postings. */
+  def bm25Query(index: DataFrame, nQueries: Int, k: Int): DataFrame = {
     val qterms = index.filter(col("doc_id") < nQueries)
       .select(col("doc_id").as("query_id"), col("word"))
     val w = Window.partitionBy(col("query_id"))

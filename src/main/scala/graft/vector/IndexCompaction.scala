@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import Similarity.{cosine, dotCol, dotSql, withNorm, withNormSql, defaultNQueries}
+import Similarity.{assign, assignedSql, candidates, cellRankSql, cosine, cosineSql,
+  defaultNQueries, donorCents, donorCentsSql, dotCol, dotSql, probeCells, qprobeSql,
+  queries, rankSql, scorePairs, topK, withNorm, withNormSql}
 import graft.model.{AtomicManifest, Silver}
 
 /** v39/v40: the vector PLAN → ACTION loop — v38's missing half.
@@ -66,19 +68,6 @@ object IndexCompaction {
     AtomicManifest.readGen(spark, indexDir, gen, sub, version).getOrElse(
       sys.error(s"index at $indexDir has no committed gen-$gen files"))
 
-  /** Rank-1 frozen-centroid assignment of `vecs` (vec_id, embedding,
-    * norm2): max cosine, ties to the lowest centroid — v38's rule. */
-  private def assign(vecs: DataFrame, cents: DataFrame): DataFrame = {
-    val wv = Window.partitionBy(col("vec_id"))
-      .orderBy(col("ccos").desc, col("centroid_id").asc)
-    vecs.crossJoin(broadcast(cents))
-      .withColumn("ccos", cosine(dotCol(col("embedding"), col("c_emb")),
-        col("norm2"), col("c_norm2")))
-      .withColumn("crank", row_number().over(wv))
-      .filter(col("crank") === 1)
-      .select(col("vec_id"), col("centroid_id").as("cell"))
-  }
-
   /** Build the snapshot index physically, then FOLD the delta into it.
     * One build per (session, sfDir, nCentroids), shared by v39–v44. */
   private[graft] def foldedIndex(spark: SparkSession, dir: String,
@@ -88,12 +77,7 @@ object IndexCompaction {
       val e = withNorm(spark, dir)
       val snap = e.filter(col("vec_id") % 10 < SnapshotMod)
       // v38's coarse quantizer: the first nCentroids snapshot vectors
-      val cents = snap.orderBy(col("vec_id").asc).limit(nCentroids)
-        .select(col("vec_id").as("cent_vid"), col("embedding").as("c_emb"),
-          col("norm2").as("c_norm2"))
-        .withColumn("centroid_id",
-          row_number().over(Window.orderBy(col("cent_vid"))) - 1)
-        .drop("cent_vid")
+      val cents = donorCents(snap, nCentroids)
       cents.write.mode("overwrite").parquet(s"$indexDir/centroids")
       // snapshot cells: ONE file per cell (the compacted main index)
       graft.etl.LakeApply.writeExactFiles(
@@ -128,37 +112,17 @@ object IndexCompaction {
                         nCentroids: Int = 8, nProbe: Int = 2): DataFrame =
     Silver.memoize(spark, s"v39CompactionApplied:$k:$nQueries:$nCentroids:$nProbe", dir) {
       val index = foldedIndex(spark, dir, nCentroids)
-      val cents = broadcast(spark.read.parquet(s"${index.root}/centroids"))
+      val cents = spark.read.parquet(s"${index.root}/centroids")
       val e = withNorm(spark, dir)
-      val queries = e.filter(col("vec_id") < nQueries)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-          col("norm2").as("q_norm2"))
-      val wq = Window.partitionBy(col("query_id"))
-        .orderBy(col("qcos").desc, col("centroid_id").asc)
-      val qprobe = queries.crossJoin(cents)
-        .withColumn("qcos", cosine(dotCol(col("q_emb"), col("c_emb")),
-          col("q_norm2"), col("c_norm2")))
-        .withColumn("crank", row_number().over(wq))
-        .filter(col("crank") <= nProbe)
-        .select(col("query_id"), col("centroid_id").as("cell"),
-          col("q_emb"), col("q_norm2"))
+      val qprobe = probeCells(queries(e, nQueries), cents, nProbe, "qcos")
       // candidates from the PHYSICAL index: the live files of the FOLD
       // commit, joined on the probed cells (the inverted-list seek).
       // The read pins the fold's manifest version: this key certifies
       // the post-fold index whether or not a rebalance committed since.
       val cells = manifestGen(spark, index.root, 1L, "cells", Some(index.commit))
         .select(col("vec_id").as("neighbor_id"), col("cell"))
-      val scored = broadcast(qprobe).join(cells, Seq("cell"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .join(e.select(col("vec_id").as("neighbor_id"),
-          col("embedding").as("n_emb"), col("norm2").as("n_norm2")),
-          Seq("neighbor_id"))
-        .withColumn("cosine", cosine(dotCol(col("q_emb"), col("n_emb")),
-          col("q_norm2"), col("n_norm2")))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cosine").desc, col("neighbor_id").asc)
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
+      topK(scorePairs(broadcast(qprobe).join(cells, Seq("cell"))
+          .join(candidates(e), Seq("neighbor_id"))), k)
         .select(col("query_id"), col("rank"), col("neighbor_id"),
           // the side-table is folded away: nothing is served from it
           lit(false).as("from_delta"),
@@ -173,45 +137,20 @@ object IndexCompaction {
   private def assignedCtesSql(nCentroids: Int): String =
     s"""e AS ($withNormSql),
        |snap AS (SELECT * FROM e WHERE vec_id % 10 < $SnapshotMod),
-       |cents AS (
-       |  SELECT vec_id AS cent_vid, embedding AS c_emb, norm2 AS c_norm2,
-       |    ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS centroid_id
-       |  FROM snap ORDER BY vec_id LIMIT $nCentroids),
-       |aff AS (
-       |  SELECT v.vec_id, v.embedding, v.norm2, c.centroid_id,
-       |    ${dotSql("v.embedding", "c.c_emb")}
-       |      / sqrt(v.norm2 * c.c_norm2) AS ccos
-       |  FROM e v CROSS JOIN cents c),
-       |assigned AS (
-       |  SELECT vec_id AS neighbor_id, centroid_id AS cell,
-       |    embedding AS n_emb, norm2 AS n_norm2
-       |  FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-       |          ORDER BY ccos DESC, centroid_id ASC) AS crank FROM aff)
-       |  WHERE crank = 1)""".stripMargin
+       |cents AS (${donorCentsSql(nCentroids, "snap")}),
+       |${assignedSql("e")}""".stripMargin
 
   def compactionAppliedSql(k: Int = 5, nQueries: Int = defaultNQueries,
                            nCentroids: Int = 8, nProbe: Int = 2): String =
     s"""WITH ${assignedCtesSql(nCentroids)},
-       |qaff AS (
-       |  SELECT q.vec_id AS query_id, q.embedding AS q_emb,
-       |    q.norm2 AS q_norm2, c.centroid_id AS cell,
-       |    ${dotSql("q.embedding", "c.c_emb")}
-       |      / sqrt(q.norm2 * c.c_norm2) AS qcos
-       |  FROM e q CROSS JOIN cents c WHERE q.vec_id < $nQueries),
-       |qprobe AS (
-       |  SELECT query_id, cell, q_emb, q_norm2
-       |  FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |          ORDER BY qcos DESC, cell ASC) AS crank FROM qaff)
-       |  WHERE crank <= $nProbe),
+       |${qprobeSql("cents", nQueries, nProbe)},
        |pairs AS (
        |  SELECT p.query_id, a.neighbor_id,
-       |    ${dotSql("p.q_emb", "a.n_emb")}
-       |      / sqrt(p.q_norm2 * a.n_norm2) AS cosine
+       |    ${cosineSql(dotSql("p.q_emb", "a.n_emb"), "p.q_norm2", "a.n_norm2")} AS cosine
        |  FROM qprobe p JOIN assigned a USING (cell)
        |  WHERE p.query_id <> a.neighbor_id),
        |ranked AS (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |    ORDER BY cosine DESC, neighbor_id ASC) AS rank
+       |  SELECT *, ${rankSql("cosine")} AS rank
        |  FROM pairs)
        |SELECT query_id, rank, neighbor_id,
        |  FALSE AS from_delta,
@@ -520,9 +459,8 @@ object IndexCompaction {
        |sass AS (
        |  SELECT vec_id, new_cell AS cell FROM (
        |    SELECT v.vec_id, s.new_cell,
-       |      ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-       |        ${dotSql("v.n_emb", "s.c_emb")}
-       |          / sqrt(v.n_norm2 * s.c_norm2) DESC, s.sub_idx ASC) AS r
+       |      ${cellRankSql("v.vec_id", cosineSql(dotSql("v.n_emb", "s.c_emb"),
+              "v.n_norm2", "s.c_norm2"), "s.sub_idx")} AS r
        |    FROM hotv v JOIN subc s ON s.parent_cell = v.parent_cell)
        |  WHERE r = 1),
        |live AS (
@@ -561,35 +499,15 @@ object IndexCompaction {
         .join(silver.select(col("parent_cell")).distinct(),
           col("centroid_id") === col("parent_cell"), "left_anti")
         .select(col("centroid_id"), col("c_emb"), col("c_norm2"))
-      val cents = broadcast(kept.unionByName(
+      val cents = kept.unionByName(
         silver.select(col("new_cell").as("centroid_id"), col("c_emb"))
-          .withColumn("c_norm2", dotCol(col("c_emb"), col("c_emb")))))
+          .withColumn("c_norm2", dotCol(col("c_emb"), col("c_emb"))))
       val e = withNorm(spark, dir)
-      val queries = e.filter(col("vec_id") < nQueries)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-          col("norm2").as("q_norm2"))
-      val wq = Window.partitionBy(col("query_id"))
-        .orderBy(col("qcos").desc, col("centroid_id").asc)
-      val qprobe = queries.crossJoin(cents)
-        .withColumn("qcos", cosine(dotCol(col("q_emb"), col("c_emb")),
-          col("q_norm2"), col("c_norm2")))
-        .withColumn("crank", row_number().over(wq))
-        .filter(col("crank") <= nProbe)
-        .select(col("query_id"), col("centroid_id").as("cell"),
-          col("q_emb"), col("q_norm2"))
+      val qprobe = probeCells(queries(e, nQueries), cents, nProbe, "qcos")
       val cells = liveCells(spark, dir, nCentroids)
         .select(col("vec_id").as("neighbor_id"), col("cell"))
-      val scored = broadcast(qprobe).join(cells, Seq("cell"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .join(e.select(col("vec_id").as("neighbor_id"),
-          col("embedding").as("n_emb"), col("norm2").as("n_norm2")),
-          Seq("neighbor_id"))
-        .withColumn("cosine", cosine(dotCol(col("q_emb"), col("n_emb")),
-          col("q_norm2"), col("n_norm2")))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cosine").desc, col("neighbor_id").asc)
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
+      topK(scorePairs(broadcast(qprobe).join(cells, Seq("cell"))
+          .join(candidates(e), Seq("neighbor_id"))), k)
         .select(col("query_id"), col("rank"), col("neighbor_id"),
           col("cell"), (col("cell") >= nCentroids).as("from_split_cell"),
           col("cosine"))
@@ -604,17 +522,7 @@ object IndexCompaction {
        |  WHERE centroid_id NOT IN (SELECT cell FROM hot)
        |  UNION ALL
        |  SELECT new_cell, c_emb, c_norm2 FROM subc),
-       |qaff AS (
-       |  SELECT q.vec_id AS query_id, q.embedding AS q_emb,
-       |    q.norm2 AS q_norm2, c.centroid_id AS cell,
-       |    ${dotSql("q.embedding", "c.c_emb")}
-       |      / sqrt(q.norm2 * c.c_norm2) AS qcos
-       |  FROM e q CROSS JOIN allc c WHERE q.vec_id < $nQueries),
-       |qprobe AS (
-       |  SELECT query_id, cell, q_emb, q_norm2
-       |  FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |          ORDER BY qcos DESC, cell ASC) AS crank FROM qaff)
-       |  WHERE crank <= $nProbe),
+       |${qprobeSql("allc", nQueries, nProbe)},
        |cand AS (
        |  SELECT p.query_id, p.q_emb, p.q_norm2, l.vec_id AS neighbor_id,
        |    l.cell
@@ -622,12 +530,10 @@ object IndexCompaction {
        |  WHERE p.query_id <> l.vec_id),
        |pairs AS (
        |  SELECT c.query_id, c.neighbor_id, c.cell,
-       |    ${dotSql("c.q_emb", "n.embedding")}
-       |      / sqrt(c.q_norm2 * n.norm2) AS cosine
+       |    ${cosineSql(dotSql("c.q_emb", "n.embedding"), "c.q_norm2", "n.norm2")} AS cosine
        |  FROM cand c JOIN e n ON n.vec_id = c.neighbor_id),
        |rankedp AS (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |    ORDER BY cosine DESC, neighbor_id ASC) AS rank
+       |  SELECT *, ${rankSql("cosine")} AS rank
        |  FROM pairs)
        |SELECT query_id, rank, neighbor_id, cell,
        |  (cell >= $nCentroids) AS from_split_cell, cosine

@@ -2,7 +2,6 @@ package graft.vector
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** IVF-PQ index LIFECYCLE — the piece that makes the v11 shape a real
   * index instead of a per-query computation: build ONCE over the
@@ -46,11 +45,8 @@ object IndexStore {
     else cells.write.mode("overwrite").parquet(s"$indexDir/cells")
     Similarity.pqCodes(spark, dir, nSub, nCodes)
       .write.mode("overwrite").parquet(s"$indexDir/codes")
-    Similarity.withNorm(spark, dir)
-      .orderBy(col("vec_id").asc).limit(nCentroids)
-      .select(col("embedding").as("c_emb"),
-        row_number().over(Window.orderBy(col("vec_id"))).as("rn"))
-      .select((col("rn") - 1).as("centroid_id"), col("c_emb"))
+    Similarity.donorCents(Similarity.withNorm(spark, dir), nCentroids)
+      .select(col("centroid_id"), col("c_emb"))
       .write.mode("overwrite").parquet(s"$indexDir/centroids")
     val cb = Similarity.pqCodebook(spark, dir, nSub, nCodes)
     import spark.implicits._
@@ -76,22 +72,26 @@ object IndexStore {
     * convention), candidates from the posting join. Bit-identical to
     * the in-memory [[graft.text.TextAnalysis.bm25]] (IndexStoreSpec). */
   def queryLexical(spark: SparkSession, indexDir: String,
-                   nQueries: Int = 3, k: Int = 5): DataFrame = {
-    val index = spark.read.parquet(s"$indexDir/postings")
-    val qterms = index.filter(col("doc_id") < nQueries)
-      .select(col("doc_id").as("query_id"), col("word"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-    qterms.join(index, "word")
-      .filter(col("doc_id") =!= col("query_id"))
-      .groupBy("query_id", "doc_id")
-      .agg(sum(col("contrib")).as("score"), count(lit(1)).as("n_terms"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("doc_id"), col("score"), col("n_terms"))
-      .orderBy("query_id", "rank")
+                   nQueries: Int = 3, k: Int = 5): DataFrame =
+    graft.text.TextAnalysis.bm25Query(
+      spark.read.parquet(s"$indexDir/postings"), nQueries, k)
+
+  /** The PQ codebook persisted at `indexDir` as `cb(s)(code)`. */
+  private def readCodebook(spark: SparkSession,
+                           indexDir: String): Array[Array[Array[Double]]] = {
+    val cbRows = spark.read.parquet(s"$indexDir/codebook")
+      .collect().map(r => (r.getInt(0), r.getInt(1),
+        r.getSeq[Double](2).toArray))
+    val cb = Array.ofDim[Array[Double]](cbRows.map(_._1).max + 1,
+      cbRows.map(_._2).max + 1)
+    cbRows.foreach { case (s, c, v) => cb(s)(c) = v }
+    cb
   }
+
+  /** The persisted coarse quantizer (centroid_id, c_emb, c_norm2). */
+  private def readCentroids(spark: SparkSession, indexDir: String): DataFrame =
+    spark.read.parquet(s"$indexDir/centroids")
+      .withColumn("c_norm2", Similarity.dotColHof(col("c_emb"), col("c_emb")))
 
   /** INCREMENTAL MAINTENANCE — append a delta corpus to a persisted
     * IVF-PQ index WITHOUT rebuilding: new vectors are assigned to the
@@ -113,26 +113,8 @@ object IndexStore {
     * append-only lake table. */
   def appendIvfPq(spark: SparkSession, dataDir: String, indexDir: String,
                   delta: Column): Unit = {
-    val cbRows = spark.read.parquet(s"$indexDir/codebook")
-      .collect().map(r => (r.getInt(0), r.getInt(1),
-        r.getSeq[Double](2).toArray))
-    val nSub = cbRows.map(_._1).max + 1
-    val nCodes = cbRows.map(_._2).max + 1
-    val cb = Array.ofDim[Array[Double]](nSub, nCodes)
-    cbRows.foreach { case (s, c, v) => cb(s)(c) = v }
-    val subDim = cb(0)(0).length
-    val cents = broadcast(spark.read.parquet(s"$indexDir/centroids")
-      .withColumn("c_norm2", Similarity.dotColHof(col("c_emb"), col("c_emb"))))
     val newVecs = Similarity.withNorm(spark, dataDir).filter(delta)
-    val wv = Window.partitionBy(col("vec_id"))
-      .orderBy(col("ccos").desc, col("centroid_id").asc)
-    val newCells = newVecs.crossJoin(cents)
-      .withColumn("ccos",
-        Similarity.dotColHof(col("embedding"), col("c_emb")) /
-          sqrt(col("norm2") * col("c_norm2")))
-      .withColumn("crank", row_number().over(wv))
-      .filter(col("crank") === 1)
-      .select(col("vec_id"), col("centroid_id").as("cell"))
+    val newCells = Similarity.assign(newVecs, readCentroids(spark, indexDir))
     // append under the layout the index was BUILT with (a cell=N
     // directory listing means hive-partitioned). Probed through the
     // Hadoop FileSystem API, NOT java.io.File: the index dir may live on
@@ -147,22 +129,7 @@ object IndexStore {
       newCells.write.mode("append").partitionBy("cell")
         .parquet(s"$indexDir/cells")
     else newCells.write.mode("append").parquet(s"$indexDir/cells")
-    val sub = newVecs.select(col("vec_id") +: col("label") +:
-      (0 until nSub).map(s =>
-        slice(col("embedding"), s * subDim + 1, subDim).as(s"sub_$s")): _*)
-    def d2(s: Int, c: Int): Column =
-      graft.functions.VectorD2.vectorD2(col(s"sub_$s"),
-        array(cb(s)(c).map(v => lit(v.toFloat)): _*))
-    val withD2 = sub.select(col("vec_id") +: col("label") +:
-      (0 until nSub).map(s =>
-        array((0 until nCodes).map(c => d2(s, c)): _*).as(s"d2_$s")): _*)
-    withD2.select(
-      col("vec_id") +: col("label") +:
-        ((0 until nSub).map(s =>
-          (array_position(col(s"d2_$s"), array_min(col(s"d2_$s"))) - 1)
-            .cast("long").as(s"code_$s")) :+
-          (0 until nSub).map(s => array_min(col(s"d2_$s")))
-            .reduceLeft(_ + _).as("recon_d2")): _*)
+    Similarity.pqEncode(newVecs, readCodebook(spark, indexDir))
       .write.mode("append").parquet(s"$indexDir/codes")
   }
 
@@ -203,35 +170,20 @@ object IndexStore {
   def queryIvfPq(spark: SparkSession, indexDir: String, dataDir: String,
                  k: Int = 5, nQueries: Int = Similarity.defaultNQueries,
                  nProbe: Int = 2): DataFrame = {
-    val cbRows = spark.read.parquet(s"$indexDir/codebook")
-      .collect().map(r => (r.getInt(0), r.getInt(1),
-        r.getSeq[Double](2).toArray))
-    val nSub = cbRows.map(_._1).max + 1
-    val nCodes = cbRows.map(_._2).max + 1
-    val cb = Array.ofDim[Array[Double]](nSub, nCodes)
-    cbRows.foreach { case (s, c, v) => cb(s)(c) = v }
+    val cb = readCodebook(spark, indexDir)
+    val nSub = cb.length
+    val nCodes = cb(0).length
     val subDim = cb(0)(0).length
     val cnorm = Array.tabulate(nSub, nCodes)((s, c) =>
       cb(s)(c).foldLeft(0.0)((acc, x) => acc + x * x))
 
-    val cents = broadcast(spark.read.parquet(s"$indexDir/centroids")
-      .withColumn("c_norm2", Similarity.dotColHof(col("c_emb"), col("c_emb"))))
-    val q = Similarity.withNorm(spark, dataDir)
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("norm2").as("q_norm2"))
-    val aff = q.crossJoin(cents)
-      .withColumn("qcos",
-        Similarity.dotColHof(col("q_emb"), col("c_emb")) /
-          sqrt(col("q_norm2") * col("c_norm2")))
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("qcos").desc, col("centroid_id").asc)
+    val q = Similarity.queries(Similarity.withNorm(spark, dataDir), nQueries)
     def lutEntry(s: Int, c: Int) =
       Similarity.dotColHof(
         slice(col("q_emb"), s * subDim + 1, subDim),
         array(cb(s)(c).map(v => lit(v.toFloat)): _*))
-    val probes = aff.withColumn("crank", row_number().over(wq))
-      .filter(col("crank") <= nProbe)
+    val probes = Similarity.nearestCells(q, readCentroids(spark, indexDir), nProbe,
+        "query_id", "q_emb", "q_norm2", "qcos")
       .select(col("query_id") +: col("q_norm2") +:
         col("centroid_id").as("cell") +:
         (0 until nSub).map(s =>
@@ -264,11 +216,8 @@ object IndexStore {
       .reduceLeft(_ + _)
     val pairs = broadcast(probesLeaf).join(cellCodes, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine_adc", adcDot / sqrt(col("q_norm2") * reconNorm2))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine_adc").desc, col("neighbor_id").asc)
-    pairs.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .withColumn("cosine_adc", Similarity.cosine(adcDot, col("q_norm2"), reconNorm2))
+    Similarity.topK(pairs, k, "cosine_adc")
       .select(col("query_id"), col("rank"), col("neighbor_id"),
         col("cell"), col("cosine_adc"))
       .orderBy(col("query_id"), col("rank"))

@@ -71,11 +71,8 @@ object Lloyd {
     * update), from the donor init. Returns nCentroids x dim doubles. */
   def ivfTrain(spark: SparkSession, dir: String, nCentroids: Int = 8,
                iters: Int = 4): Array[Array[Double]] = {
-    val init: Array[Array[Double]] = Tables.embeddings(spark, dir)
-      .orderBy(col("vec_id").asc).limit(nCentroids)
-      .select(col("embedding")).collect()
-      .map(_.getSeq[Float](0).toArray.map(_.toDouble))
-    ivfTrainFrom(Tables.embeddings(spark, dir), init, iters)
+    ivfTrainFrom(Tables.embeddings(spark, dir),
+      Similarity.donorVectors(spark, dir, nCentroids), iters)
   }
 
   /** The [[ivfTrain]] loop over an EXPLICIT vector relation and init —
@@ -97,7 +94,7 @@ object Lloyd {
         val cn = c.foldLeft(0.0)((acc, v) => acc + v * v)
         val dot = Similarity.dotColHof(col("embedding"),
           array(c.map(v => lit(v.toFloat)): _*))
-        dot / sqrt(col("norm2") * lit(cn))
+        Similarity.cosine(dot, col("norm2"), lit(cn))
       }
       val cosArr = array(cos: _*)
       val sums = e
@@ -163,8 +160,9 @@ object Lloyd {
       val wv = Window.partitionBy(col("vec_id"))
         .orderBy(col("scos").desc, col("sub_idx").asc)
       val sums = e.join(cdf, Seq("parent_cell"))
-        .withColumn("scos", Similarity.dotColHof(col("embedding"), col("c_emb"))
-          / sqrt(col("norm2") * col("c_norm2")))
+        .withColumn("scos", Similarity.cosine(
+          Similarity.dotColHof(col("embedding"), col("c_emb")),
+          col("norm2"), col("c_norm2")))
         .withColumn("srank", row_number().over(wv))
         .filter(col("srank") === 1)
         .select(col("parent_cell"), col("sub_idx"),

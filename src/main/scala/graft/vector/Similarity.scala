@@ -3,11 +3,33 @@ package graft.vector
 import graft.model.{Silver, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 
-/** Vector-similarity operators over the `embeddings` table (vec_id,
-  * embedding: array<float>, label): brute-force cosine top-k, an
-  * LSH-bucketed ANN variant, and embedding-cosine near-dup.
+/** Vector retrieval over the `embeddings` table (vec_id,
+  * embedding: array<float>, label): exact and approximate top-k (v1,
+  * LSH, IVF, PQ, MIPS, filtered, hybrid), their recall evaluations,
+  * quantizers and index audits, each with its DuckDB oracle SQL.
+  *
+  * THE SHARED RETRIEVAL RULES — each written once as a Spark function
+  * with an independently written SQL twin, and pinned by
+  * VectorLintSpec:
+  *  - query set: the first `nQueries` vectors (`vec_id < nQueries`),
+  *    projected as (query_id, q_emb, q_norm2) by [[queries]]; a
+  *    candidate is (neighbor_id, n_emb, n_norm2) by [[candidates]], and
+  *    a query never meets itself ([[scorePairs]]; [[queryPairSql]]);
+  *  - similarity: [[cosine]] / [[cosineSql]] over a strict-fold dot and
+  *    precomputed squared norms ([[withNorm]]);
+  *  - per-query top-k: score desc, then `neighbor_id` asc, kept by
+  *    `row_number() <= k` ([[topK]] / [[rankSql]]) — the shape
+  *    [[graft.plans.GroupTopKRewrite]] lifts into its heap operator;
+  *  - donor quantizer: the first `nCentroids` vectors by vec_id, with
+  *    `centroid_id` = rank − 1 ([[donorCents]] / [[donorCentsSql]];
+  *    [[donorVectors]] on the driver);
+  *  - nearest cells: cosine desc, then `centroid_id` asc, keeping `n`
+  *    (1 is assignment, nProbe is probing) ([[cellRanked]],
+  *    [[nearestCells]], [[assign]] / [[cellRankSql]]);
+  *  - recall@k: per query, the truth pairs an approximate ranking also
+  *    returns ([[recallAtK]] / [[recallSql]]).
   *
   * FLOAT-PARITY DESIGN: every dot product is a strict left-to-right fold
   * over the element list in double precision — Spark `aggregate(zip_with)`
@@ -16,15 +38,11 @@ import org.apache.spark.sql.expressions.Window
   * a SUM over rows of doubles, and never an engine-internal vectorized
   * summation whose accumulation order we don't control).
   *
-  * Scale posture:
-  *  - v1 broadcast: the query set is small by construction; brute force is
-  *    a broadcast nested loop — scan-speed over any number of candidate
-  *    vectors, no shuffle of the big side.
-  *  - v2 buckets both sides by deterministic sign-bit LSH (axis-aligned
-  *    hyperplanes): candidates shrink ~2^nbits-fold and the join is a hash
-  *    join on the bucket key — the IVF-style cell-local search pattern.
-  *  - v3 near-dup partitions by the coarse label (IVF cell): pairwise work
-  *    is cell-local, never corpus-quadratic.
+  * Scale posture: the query set is small by construction, so exact
+  * search is a broadcast nested loop over the candidates (no shuffle of
+  * the big side); LSH and IVF turn it into a hash join on the bucket or
+  * cell key; near-dup and dedup passes partition by a coarse cell, so
+  * pairwise work is cell-local, never corpus-quadratic.
   */
 object Similarity {
 
@@ -77,7 +95,7 @@ object Similarity {
 
   /** Embeddings with the precomputed squared norm (one pass, reused by
     * every pairwise cosine — norms are never recomputed per pair). */
-  private[vector] def withNorm(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def withNorm(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .withColumn("norm2", dotCol(col("embedding"), col("embedding")))
 
@@ -86,8 +104,137 @@ object Similarity {
        |  ${dotSql("embedding", "embedding")} AS norm2
        |FROM embeddings""".stripMargin
 
-  private[vector] def cosine(dot: Column, n2a: Column, n2b: Column): Column =
+  private[graft] def cosine(dot: Column, n2a: Column, n2b: Column): Column =
     dot / sqrt(n2a * n2b)
+
+  /** SQL twin of [[cosine]]. */
+  private[vector] def cosineSql(dot: String, n2a: String, n2b: String): String =
+    s"$dot / sqrt($n2a * $n2b)"
+
+  /** The query set of `e`: its first `nQueries` vectors as (query_id,
+    * extra..., q_emb, q_norm2). */
+  private[graft] def queries(e: DataFrame, nQueries: Int,
+                             extra: Seq[Column] = Nil,
+                             emb: String = "embedding",
+                             norm: String = "norm2"): DataFrame =
+    e.filter(col("vec_id") < nQueries).select(
+      (col("vec_id").as("query_id") +: extra) ++
+        Seq(col(emb).as("q_emb"), col(norm).as("q_norm2")): _*)
+
+  /** The candidate projection of `e`: (neighbor_id, extra..., n_emb,
+    * n_norm2). */
+  private[graft] def candidates(e: DataFrame, extra: Seq[Column] = Nil,
+                                emb: String = "embedding",
+                                norm: String = "norm2"): DataFrame =
+    e.select((col("vec_id").as("neighbor_id") +: extra) ++
+      Seq(col(emb).as("n_emb"), col(norm).as("n_norm2")): _*)
+
+  /** (query, candidate) pairs without self-pairs, scored by the cosine
+    * of q_emb and n_emb. */
+  private[graft] def scorePairs(pairs: DataFrame, score: String = "cosine",
+                                dot: (Column, Column) => Column = dotCol): DataFrame =
+    pairs.filter(col("query_id") =!= col("neighbor_id"))
+      .withColumn(score,
+        cosine(dot(col("q_emb"), col("n_emb")), col("q_norm2"), col("n_norm2")))
+
+  /** The per-query ranking order: score desc, then `tie` asc. */
+  private[graft] def perQuery(score: String, tie: String = "neighbor_id"): WindowSpec =
+    Window.partitionBy(col("query_id")).orderBy(col(score).desc, col(tie).asc)
+
+  /** Per-query top-k: `rank` = row_number over [[perQuery]], kept while
+    * `<= k` (the shape GroupTopKRewrite matches). */
+  private[graft] def topK(scored: DataFrame, k: Int, score: String = "cosine",
+                          tie: String = "neighbor_id",
+                          rank: String = "rank"): DataFrame =
+    scored.withColumn(rank, row_number().over(perQuery(score, tie)))
+      .filter(col(rank) <= k)
+
+  /** SQL twin of [[perQuery]]'s row_number. */
+  private[vector] def rankSql(score: String, tie: String = "neighbor_id",
+                              part: String = "query_id"): String =
+    s"ROW_NUMBER() OVER (PARTITION BY $part\n    ORDER BY $score DESC, $tie ASC)"
+
+  /** SQL twin of the query-set pair predicate: `q` is a query and `n` is
+    * not `q` itself. */
+  private[vector] def queryPairSql(q: String, n: String, nQueries: Int): String =
+    s"$q.vec_id < $nQueries AND $q.vec_id <> $n.vec_id"
+
+  /** The donor quantizer over `e` (vec_id, embedding, norm2): its first
+    * `nCentroids` vectors by vec_id as (c_emb, c_norm2, centroid_id),
+    * centroid_id = rank − 1. */
+  private[graft] def donorCents(e: DataFrame, nCentroids: Int): DataFrame =
+    e.orderBy(col("vec_id").asc).limit(nCentroids)
+      .select(col("vec_id").as("cent_vid"), col("embedding").as("c_emb"),
+        col("norm2").as("c_norm2"))
+      .withColumn("centroid_id",
+        row_number().over(Window.orderBy(col("cent_vid"))) - 1)
+      .drop("cent_vid")
+
+  /** The donor rule on the driver: the embeddings of the first `n`
+    * vectors by vec_id, in vec_id order (PQ codebooks, Lloyd's init). */
+  private[vector] def donorVectors(spark: SparkSession, dir: String,
+                                   n: Int): Array[Array[Double]] =
+    Tables.embeddings(spark, dir)
+      .orderBy(col("vec_id").asc).limit(n)
+      .select(col("embedding")).collect()
+      .map(_.getSeq[Float](0).toArray.map(_.toDouble))
+
+  /** SQL twin of [[donorCents]] over the CTE `from`. */
+  private[vector] def donorCentsSql(nCentroids: Int, from: String = "e"): String =
+    s"""SELECT vec_id AS cent_vid, embedding AS c_emb, norm2 AS c_norm2,
+       |    ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS centroid_id
+       |  FROM $from ORDER BY vec_id LIMIT $nCentroids""".stripMargin
+
+  /** Every row of `vecs` scored (`score`) against every centroid of
+    * `cents` (centroid_id, c_emb, c_norm2; broadcast) and ranked per
+    * `id` as `crank`: cosine desc, then centroid_id asc. */
+  private[graft] def cellRanked(vecs: DataFrame, cents: DataFrame,
+                                id: String = "vec_id", emb: String = "embedding",
+                                norm: String = "norm2",
+                                score: String = "ccos"): DataFrame =
+    vecs.crossJoin(broadcast(cents))
+      .withColumn(score, cosine(dotCol(col(emb), col("c_emb")), col(norm), col("c_norm2")))
+      .withColumn("crank", row_number().over(
+        Window.partitionBy(col(id)).orderBy(col(score).desc, col("centroid_id").asc)))
+
+  /** The `n` nearest cells of each row of `vecs` ([[cellRanked]]). */
+  private[graft] def nearestCells(vecs: DataFrame, cents: DataFrame, n: Int,
+                                  id: String = "vec_id", emb: String = "embedding",
+                                  norm: String = "norm2",
+                                  score: String = "ccos"): DataFrame =
+    cellRanked(vecs, cents, id, emb, norm, score).filter(col("crank") <= n)
+
+  /** Assignment: each vector's nearest cell, as (vec_id, cell). */
+  private[graft] def assign(vecs: DataFrame, cents: DataFrame): DataFrame =
+    nearestCells(vecs, cents, 1).select(col("vec_id"), col("centroid_id").as("cell"))
+
+  /** SQL twin of [[cellRanked]]'s crank. */
+  private[vector] def cellRankSql(part: String = "vec_id", score: String = "ccos",
+                                  cell: String = "centroid_id"): String =
+    rankSql(score, cell, part)
+
+  /** recall@k per query: the (query_id, neighbor_id) pairs of `truth`
+    * that `approx` also returns, as (query_id, n_truth, n_hits, recall). */
+  private[vector] def recallAtK(truth: DataFrame, approx: DataFrame): DataFrame =
+    truth.select(col("query_id"), col("neighbor_id"))
+      .join(approx.select(col("query_id"), col("neighbor_id"))
+        .withColumn("hit", lit(1L)), Seq("query_id", "neighbor_id"), "left")
+      .groupBy("query_id")
+      .agg(count(lit(1)).as("n_truth"),
+        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
+      .select(col("query_id"), col("n_truth"), col("n_hits"),
+        (col("n_hits").cast("double") / col("n_truth").cast("double")).as("recall"))
+
+  /** SQL twin of [[recallAtK]] over the relations `truth` and `approx`. */
+  private[vector] def recallSql(truth: String, approx: String): String =
+    s"""SELECT t.query_id,
+       |  CAST(COUNT(*) AS BIGINT) AS n_truth,
+       |  CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
+       |  CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
+       |    / CAST(COUNT(*) AS DOUBLE) AS recall
+       |FROM $truth t LEFT JOIN $approx a
+       |  ON t.query_id = a.query_id AND t.neighbor_id = a.neighbor_id
+       |GROUP BY t.query_id""".stripMargin
 
   /** v1: brute-force cosine top-k — query vectors (vec_id < $nQueries) broadcast
     * against every candidate; row_number window per query. The exhaustive
@@ -95,33 +242,23 @@ object Similarity {
   def cosineTopK(spark: SparkSession, dir: String, k: Int = 5,
                  nQueries: Int = defaultNQueries): DataFrame = {
     val e = withNorm(spark, dir)
-    val q = e.filter(col("vec_id") < nQueries).select(
-      col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-      col("norm2").as("q_norm2"))
-    val pairs = broadcast(q).crossJoin(
-        e.select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb"),
-          col("norm2").as("n_norm2")))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        cosine(dotCol(col("q_emb"), col("n_emb")), col("q_norm2"), col("n_norm2")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    pairs.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(scorePairs(broadcast(queries(e, nQueries)).crossJoin(candidates(e))), k)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
       .orderBy(col("query_id"), col("rank"))
   }
 
+  /** The exact pairs CTE body of v1's oracle over the CTE `e`. */
+  private def exactPairsSql(nQueries: Int): String =
+    s"""SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
+       |    ${cosineSql(dotSql("q.embedding", "n.embedding"), "q.norm2", "n.norm2")} AS cosine
+       |  FROM e q JOIN e n ON ${queryPairSql("q", "n", nQueries)}""".stripMargin
+
   def cosineTopKSql(k: Int = 5, nQueries: Int = defaultNQueries): String =
     s"""WITH e AS ($withNormSql),
        |pairs AS (
-       |  SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-       |    ${dotSql("q.embedding", "n.embedding")}
-       |      / sqrt(q.norm2 * n.norm2) AS cosine
-       |  FROM e q JOIN e n ON q.vec_id < $nQueries AND q.vec_id <> n.vec_id),
+       |  ${exactPairsSql(nQueries)}),
        |ranked AS (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |    ORDER BY cosine DESC, neighbor_id ASC) AS rank
+       |  SELECT *, ${rankSql("cosine")} AS rank
        |  FROM pairs)
        |SELECT query_id, rank, neighbor_id, cosine
        |FROM ranked WHERE rank <= $k
@@ -160,25 +297,14 @@ object Similarity {
         expr("aggregate(vecs, transform(element_at(vecs, 1), " +
           "x -> cast(0.0 as double)), " +
           "(acc, v) -> zip_with(acc, v, (a, b) -> a + cast(b as double)))"))
-    val q = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val expanded = q.join(nb, "query_id")
+    val expanded = queries(e, nQueries).join(nb, "query_id")
       .withColumn("q2",
         expr(s"zip_with(q_emb, sum_vec, (a, b) -> " +
           s"cast(a as double) + cast($beta as double) * (b / cast($k as double)))"))
-      .withColumn("q2_norm2", dotColHof(col("q2"), col("q2")))
-      .select(col("query_id"), col("q2"), col("q2_norm2"))
-    val pairs = broadcast(expanded)
-      .crossJoin(e.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("n_emb"), col("norm2").as("n_norm2")))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        cosine(dotColHof(col("q2"), col("n_emb")),
-          col("q2_norm2"), col("n_norm2")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    pairs.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .select(col("query_id"), col("q2").as("q_emb"),
+        dotColHof(col("q2"), col("q2")).as("q_norm2"))
+    topK(scorePairs(broadcast(expanded).crossJoin(candidates(e)),
+        dot = dotColHof), k)
       .join(broadcast(base.select(col("query_id"),
         col("neighbor_id"), lit(true).as("in_feedback"))),
         Seq("query_id", "neighbor_id"), "left")
@@ -191,14 +317,10 @@ object Similarity {
                        beta: Double = 0.5): String =
     s"""WITH e AS ($withNormSql),
        |bpairs AS (
-       |  SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-       |    ${dotSql("q.embedding", "n.embedding")}
-       |      / sqrt(q.norm2 * n.norm2) AS cosine
-       |  FROM e q JOIN e n ON q.vec_id < $nQueries AND q.vec_id <> n.vec_id),
+       |  ${exactPairsSql(nQueries)}),
        |base AS (
        |  SELECT query_id, neighbor_id, rank FROM (
-       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY cosine DESC, neighbor_id ASC) AS rank
+       |    SELECT *, ${rankSql("cosine")} AS rank
        |    FROM bpairs)
        |  WHERE rank <= $k),
        |nb AS (
@@ -223,12 +345,10 @@ object Similarity {
        |  SELECT query_id, q2, ${dotSql("q2", "q2")} AS q2_norm2 FROM q2),
        |pairs AS (
        |  SELECT q.query_id, n.vec_id AS neighbor_id,
-       |    ${dotSql("q.q2", "n.embedding")}
-       |      / sqrt(q.q2_norm2 * n.norm2) AS cosine
+       |    ${cosineSql(dotSql("q.q2", "n.embedding"), "q.q2_norm2", "n.norm2")} AS cosine
        |  FROM q2n q JOIN e n ON q.query_id <> n.vec_id),
        |ranked AS (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |    ORDER BY cosine DESC, neighbor_id ASC) AS rank
+       |  SELECT *, ${rankSql("cosine")} AS rank
        |  FROM pairs)
        |SELECT r.query_id, r.rank, r.neighbor_id, r.cosine,
        |  b.neighbor_id IS NOT NULL AS in_feedback
@@ -257,19 +377,9 @@ object Similarity {
   def annLsh(spark: SparkSession, dir: String, k: Int = 5,
              nQueries: Int = defaultNQueries): DataFrame = {
     val e = withNorm(spark, dir).withColumn("bucket", bucketCol(col("embedding")))
-    val q = e.filter(col("vec_id") < nQueries).select(
-      col("vec_id").as("query_id"), col("bucket"),
-      col("embedding").as("q_emb"), col("norm2").as("q_norm2"))
-    val cand = e.select(col("vec_id").as("neighbor_id"), col("bucket"),
-      col("embedding").as("n_emb"), col("norm2").as("n_norm2"))
-    val pairs = broadcast(q).join(cand, Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        cosine(dotCol(col("q_emb"), col("n_emb")), col("q_norm2"), col("n_norm2")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    pairs.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val pairs = broadcast(queries(e, nQueries, Seq(col("bucket"))))
+      .join(candidates(e, Seq(col("bucket"))), Seq("bucket"))
+    topK(scorePairs(pairs), k)
       .select(col("query_id"), col("bucket"), col("rank"),
         col("neighbor_id"), col("cosine"))
       .orderBy(col("query_id"), col("rank"))
@@ -280,13 +390,11 @@ object Similarity {
        |  SELECT *, ${bucketSql("embedding")} AS bucket FROM ($withNormSql)),
        |pairs AS (
        |  SELECT q.vec_id AS query_id, q.bucket, n.vec_id AS neighbor_id,
-       |    ${dotSql("q.embedding", "n.embedding")}
-       |      / sqrt(q.norm2 * n.norm2) AS cosine
-       |  FROM e q JOIN e n ON q.bucket = n.bucket AND q.vec_id <> n.vec_id
-       |  WHERE q.vec_id < $nQueries),
+       |    ${cosineSql(dotSql("q.embedding", "n.embedding"), "q.norm2", "n.norm2")} AS cosine
+       |  FROM e q JOIN e n
+       |    ON q.bucket = n.bucket AND ${queryPairSql("q", "n", nQueries)}),
        |ranked AS (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |    ORDER BY cosine DESC, neighbor_id ASC) AS rank
+       |  SELECT *, ${rankSql("cosine")} AS rank
        |  FROM pairs)
        |SELECT query_id, bucket, rank, neighbor_id, cosine
        |FROM ranked WHERE rank <= $k
@@ -308,26 +416,16 @@ object Similarity {
                     nQueries: Int = defaultNQueries): DataFrame = {
     val e = withNorm(spark, dir)
       .withColumn("bucket", bucketCol(col("embedding")))
-    val q = e.filter(col("vec_id") < nQueries).select(
-      col("vec_id").as("query_id"), col("bucket").as("q_bucket"),
-      col("embedding").as("q_emb"), col("norm2").as("q_norm2"))
     val probeArr = array(
       col("q_bucket") +: (0 until 8).map(i =>
         expr(s"q_bucket ^ ${1L << i}")): _*)
-    val probes = q.withColumn("p", explode(probeArr))
-    val cand = e.select(col("vec_id").as("neighbor_id"), col("bucket"),
-      col("embedding").as("n_emb"), col("norm2").as("n_norm2"))
-    val pairs = broadcast(probes).join(cand, col("p") === col("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        cosine(dotCol(col("q_emb"), col("n_emb")),
-          col("q_norm2"), col("n_norm2")))
+    val probes = queries(e, nQueries, Seq(col("bucket").as("q_bucket")))
+      .withColumn("p", explode(probeArr))
+    val pairs = scorePairs(broadcast(probes)
+        .join(candidates(e, Seq(col("bucket"))), col("p") === col("bucket")))
       .withColumn("probe_flips",
         expr("bit_count(q_bucket ^ bucket)").cast("long"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    pairs.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(pairs, k)
       .select(col("query_id"), col("rank"), col("neighbor_id"),
         col("cosine"), col("probe_flips"))
       .orderBy(col("query_id"), col("rank"))
@@ -347,15 +445,13 @@ object Similarity {
        |  FROM q CROSS JOIN UNNEST([q_bucket, $flips]) AS t(p)),
        |pairs AS (
        |  SELECT pr.query_id, n.vec_id AS neighbor_id,
-       |    ${dotSql("pr.q_emb", "n.embedding")}
-       |      / sqrt(pr.q_norm2 * n.norm2) AS cosine,
+       |    ${cosineSql(dotSql("pr.q_emb", "n.embedding"), "pr.q_norm2", "n.norm2")} AS cosine,
        |    CAST(bit_count(xor(pr.q_bucket, n.bucket)) AS BIGINT)
        |      AS probe_flips
        |  FROM probes pr JOIN e n
        |    ON pr.p = n.bucket AND pr.query_id <> n.vec_id),
        |ranked AS (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |    ORDER BY cosine DESC, neighbor_id ASC) AS rank
+       |  SELECT *, ${rankSql("cosine")} AS rank
        |  FROM pairs)
        |SELECT query_id, rank, neighbor_id, cosine, probe_flips
        |FROM ranked WHERE rank <= $k
@@ -468,12 +564,10 @@ object Similarity {
        |  SELECT *, ${bucketSql("embedding")} AS bucket FROM ($withNormSql)),
        |pairs AS (
        |  SELECT a.vec_id, a.bucket, b.vec_id AS neighbor_id,
-       |    ${dotSql("a.embedding", "b.embedding")}
-       |      / sqrt(a.norm2 * b.norm2) AS cosine
+       |    ${cosineSql(dotSql("a.embedding", "b.embedding"), "a.norm2", "b.norm2")} AS cosine
        |  FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
        |ranked AS (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-       |    ORDER BY cosine DESC, neighbor_id ASC) AS rank
+       |  SELECT *, ${rankSql("cosine", part = "vec_id")} AS rank
        |  FROM pairs)
        |SELECT vec_id, bucket, neighbor_id, cosine,
        |  cosine >= $threshold AS is_near_dup
@@ -518,18 +612,8 @@ object Similarity {
             .map { case (c, i) => (i, c.map(_.toFloat)) }.toSeq
             .toDF("centroid_id", "c_emb")
         }.withColumn("c_norm2", dotColHof(col("c_emb"), col("c_emb")))
-      } else e.orderBy(col("vec_id").asc).limit(nCentroids)
-        .select(col("vec_id").as("cent_vid"), col("embedding").as("c_emb"),
-          col("norm2").as("c_norm2"))
-        .withColumn("centroid_id",
-          row_number().over(Window.orderBy(col("cent_vid"))) - 1)
-        .drop("cent_vid")
-    val aff = e.crossJoin(broadcast(cents))
-      .withColumn("ccos",
-        cosine(dotCol(col("embedding"), col("c_emb")), col("norm2"), col("c_norm2")))
-    val wv = Window.partitionBy(col("vec_id"))
-      .orderBy(col("ccos").desc, col("centroid_id").asc)
-    aff.withColumn("crank", row_number().over(wv))
+      } else donorCents(e, nCentroids)
+    cellRanked(e, cents)
   }
 
   def ivfAnn(spark: SparkSession, dir: String, k: Int = 5,
@@ -537,31 +621,14 @@ object Similarity {
              nCentroids: Int = 8, nProbe: Int = 2,
              trainedIters: Int = 0): DataFrame = {
     val ranked = ivfRanked(spark, dir, nCentroids, trainedIters)
-    val assigned = ranked.filter(col("crank") === 1)
-      .select(col("vec_id").as("neighbor_id"), col("centroid_id").as("cell"),
-        col("embedding").as("n_emb"), col("norm2").as("n_norm2"))
-    val probes = ranked.filter(col("vec_id") < nQueries && col("crank") <= nProbe)
-      .select(col("vec_id").as("query_id"), col("centroid_id").as("cell"),
-        col("embedding").as("q_emb"), col("norm2").as("q_norm2"))
-    val pairs = broadcast(probes).join(assigned, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        cosine(dotCol(col("q_emb"), col("n_emb")), col("q_norm2"), col("n_norm2")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    pairs.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val cell = Seq(col("centroid_id").as("cell"))
+    val assigned = candidates(ranked.filter(col("crank") === 1), cell)
+    val probes = queries(ranked.filter(col("crank") <= nProbe), nQueries, cell)
+    topK(scorePairs(broadcast(probes).join(assigned, Seq("cell"))), k)
       .select(col("query_id"), col("rank"), col("neighbor_id"),
         col("cell"), col("cosine"))
       .orderBy(col("query_id"), col("rank"))
   }
-
-  /** The donor (first-nCentroids) coarse-quantizer CTE body — references
-    * the `e` CTE the caller provides. */
-  private def donorCentsSql(nCentroids: Int): String =
-    s"""SELECT vec_id AS cent_vid, embedding AS c_emb, norm2 AS c_norm2,
-       |    ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS centroid_id
-       |  FROM e ORDER BY vec_id LIMIT $nCentroids""".stripMargin
 
   /** The Lloyd-trained quantizer CTE body: centroids read from the
     * oracle silver [[ivfRanked]] materializes, norms recomputed by the
@@ -572,20 +639,24 @@ object Similarity {
        |  FROM read_parquet('${graft.model.OracleSilver.sqlGlob(
             s"trained_centroids_${nCentroids}_$trainedIters")}')""".stripMargin
 
+  /** The `aff` and `ranked` CTEs of the IVF oracles: every row of the CTE
+    * `from` (vec_id, embedding, norm2) scored against the `cents` CTE
+    * and ranked as `crank` ([[cellRanked]]'s SQL form). */
+  private[vector] def ivfRankedSql(from: String): String =
+    s"""aff AS (
+       |  SELECT v.*, c.centroid_id, c.c_emb,
+       |    ${cosineSql(dotSql("v.embedding", "c.c_emb"), "v.norm2", "c.c_norm2")} AS ccos
+       |  FROM $from v CROSS JOIN cents c),
+       |ranked AS (
+       |  SELECT *, ${cellRankSql()} AS crank
+       |  FROM aff)""".stripMargin
+
   /** The v4 ANN pipeline over an explicit cents CTE (donor or trained). */
   private def ivfAnnSqlWithCents(centsSql: String, k: Int, nQueries: Int,
                                  nProbe: Int): String =
     s"""WITH e AS ($withNormSql),
        |cents AS ($centsSql),
-       |aff AS (
-       |  SELECT e.vec_id, e.embedding, e.norm2, c.centroid_id,
-       |    ${dotSql("e.embedding", "c.c_emb")}
-       |      / sqrt(e.norm2 * c.c_norm2) AS ccos
-       |  FROM e CROSS JOIN cents c),
-       |ranked AS (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-       |    ORDER BY ccos DESC, centroid_id ASC) AS crank
-       |  FROM aff),
+       |${ivfRankedSql("e")},
        |assigned AS (
        |  SELECT vec_id AS neighbor_id, centroid_id AS cell,
        |    embedding AS n_emb, norm2 AS n_norm2
@@ -596,13 +667,11 @@ object Similarity {
        |  FROM ranked WHERE vec_id < $nQueries AND crank <= $nProbe),
        |pairs AS (
        |  SELECT p.query_id, a.cell, a.neighbor_id,
-       |    ${dotSql("p.q_emb", "a.n_emb")}
-       |      / sqrt(p.q_norm2 * a.n_norm2) AS cosine
+       |    ${cosineSql(dotSql("p.q_emb", "a.n_emb"), "p.q_norm2", "a.n_norm2")} AS cosine
        |  FROM probes p JOIN assigned a USING (cell)
        |  WHERE p.query_id <> a.neighbor_id),
        |rankedp AS (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |    ORDER BY cosine DESC, neighbor_id ASC) AS rank
+       |  SELECT *, ${rankSql("cosine")} AS rank
        |  FROM pairs)
        |SELECT query_id, rank, neighbor_id, cell, cosine
        |FROM rankedp WHERE rank <= $k
@@ -630,9 +699,7 @@ object Similarity {
     * bytes. */
   private[graft] def deltaIndexQueries(spark: SparkSession, dir: String,
                                        nQueries: Int = defaultNQueries): DataFrame =
-    withNorm(spark, dir).filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("norm2").as("q_norm2"))
+    queries(withNorm(spark, dir), nQueries)
 
   /** v38's STATIC half for the streaming twin: the snapshot IVF main
     * leg, computed once (the index does not move as arrivals stream). */
@@ -642,116 +709,87 @@ object Similarity {
                                        nProbe: Int = 2): DataFrame = {
     val e = withNorm(spark, dir)
     val snap = e.filter(col("vec_id") % 10 < 8)
-    val cents = snap.orderBy(col("vec_id").asc).limit(nCentroids)
-      .select(col("vec_id").as("cent_vid"), col("embedding").as("c_emb"),
-        col("norm2").as("c_norm2"))
-      .withColumn("centroid_id",
-        row_number().over(Window.orderBy(col("cent_vid"))) - 1)
-      .drop("cent_vid")
-    val assigned = {
-      val aff = snap.crossJoin(broadcast(cents))
-        .withColumn("ccos", cosine(dotCol(col("embedding"), col("c_emb")),
-          col("norm2"), col("c_norm2")))
-      val wv = Window.partitionBy(col("vec_id"))
-        .orderBy(col("ccos").desc, col("centroid_id").asc)
-      aff.withColumn("crank", row_number().over(wv))
-        .filter(col("crank") === 1)
-        .select(col("vec_id").as("neighbor_id"),
-          col("centroid_id").as("cell"),
-          col("embedding").as("n_emb"), col("norm2").as("n_norm2"))
-    }
-    val queries = deltaIndexQueries(spark, dir, nQueries)
-    val qprobe = {
-      val qaff = queries.crossJoin(broadcast(cents))
-        .withColumn("ccos", cosine(dotCol(col("q_emb"), col("c_emb")),
-          col("q_norm2"), col("c_norm2")))
-      val wq = Window.partitionBy(col("query_id"))
-        .orderBy(col("ccos").desc, col("centroid_id").asc)
-      qaff.withColumn("crank", row_number().over(wq))
-        .filter(col("crank") <= nProbe)
-        .select(col("query_id"), col("centroid_id").as("cell"),
-          col("q_emb"), col("q_norm2"))
-    }
-    broadcast(qprobe).join(assigned, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
+    val cents = donorCents(snap, nCentroids)
+    val assigned = candidates(nearestCells(snap, cents, 1),
+      Seq(col("centroid_id").as("cell")))
+    val qprobe = probeCells(deltaIndexQueries(spark, dir, nQueries), cents, nProbe)
+    scorePairs(broadcast(qprobe).join(assigned, Seq("cell")))
       .select(col("query_id"), col("neighbor_id"),
-        lit(false).as("from_delta"),
-        cosine(dotCol(col("q_emb"), col("n_emb")),
-          col("q_norm2"), col("n_norm2")).as("cosine"))
+        lit(false).as("from_delta"), col("cosine"))
   }
+
+  /** Each query's `nProbe` nearest cells of `cents`, as (query_id, cell,
+    * q_emb, q_norm2). */
+  private[vector] def probeCells(queries: DataFrame, cents: DataFrame,
+                                 nProbe: Int, score: String = "ccos"): DataFrame =
+    nearestCells(queries, cents, nProbe, "query_id", "q_emb", "q_norm2", score)
+      .select(col("query_id"), col("centroid_id").as("cell"),
+        col("q_emb"), col("q_norm2"))
 
   def deltaIndexAnn(spark: SparkSession, dir: String, k: Int = 5,
                     nQueries: Int = defaultNQueries,
                     nCentroids: Int = 8, nProbe: Int = 2): DataFrame = {
-    val e = withNorm(spark, dir)
-    val delta = e.filter(col("vec_id") % 10 >= 8)
-    val queries = deltaIndexQueries(spark, dir, nQueries)
+    val delta = withNorm(spark, dir).filter(col("vec_id") % 10 >= 8)
     val mainLeg = deltaIndexMainLeg(spark, dir, nQueries, nCentroids, nProbe)
-    val deltaLeg = queries.crossJoin(broadcast(
-        delta.select(col("vec_id").as("neighbor_id"),
-          col("embedding").as("n_emb"), col("norm2").as("n_norm2"))))
-      .filter(col("query_id") =!= col("neighbor_id"))
+    val deltaLeg = scorePairs(deltaIndexQueries(spark, dir, nQueries)
+        .crossJoin(broadcast(candidates(delta))))
       .select(col("query_id"), col("neighbor_id"),
-        lit(true).as("from_delta"),
-        cosine(dotCol(col("q_emb"), col("n_emb")),
-          col("q_norm2"), col("n_norm2")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    mainLeg.unionByName(deltaLeg)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+        lit(true).as("from_delta"), col("cosine"))
+    topK(mainLeg.unionByName(deltaLeg), k)
       .select(col("query_id"), col("rank"), col("neighbor_id"),
         col("from_delta"), col("cosine"))
       .orderBy(col("query_id"), col("rank"))
   }
+
+  /** The `aff` and `assigned` CTEs of the frozen-quantizer oracles
+    * (v38-v43): every row of the CTE `vecs` in its nearest cell of the
+    * `cents` CTE, as (neighbor_id, cell, n_emb, n_norm2). */
+  private[vector] def assignedSql(vecs: String, cents: String = "cents"): String =
+    s"""aff AS (
+       |  SELECT v.vec_id, v.embedding, v.norm2, c.centroid_id,
+       |    ${cosineSql(dotSql("v.embedding", "c.c_emb"), "v.norm2", "c.c_norm2")} AS ccos
+       |  FROM $vecs v CROSS JOIN $cents c),
+       |assigned AS (
+       |  SELECT vec_id AS neighbor_id, centroid_id AS cell,
+       |    embedding AS n_emb, norm2 AS n_norm2
+       |  FROM (SELECT *, ${cellRankSql()} AS crank FROM aff)
+       |  WHERE crank = 1)""".stripMargin
+
+  /** The `qaff` and `qprobe` CTEs of the frozen-quantizer oracles: each
+    * query of the CTE `e` in its `nProbe` nearest cells of `cents`, as
+    * (query_id, cell, q_emb, q_norm2). */
+  private[vector] def qprobeSql(cents: String, nQueries: Int, nProbe: Int): String =
+    s"""qaff AS (
+       |  SELECT q.vec_id AS query_id, q.embedding AS q_emb,
+       |    q.norm2 AS q_norm2, c.centroid_id AS cell,
+       |    ${cosineSql(dotSql("q.embedding", "c.c_emb"), "q.norm2", "c.c_norm2")} AS qcos
+       |  FROM e q CROSS JOIN $cents c WHERE q.vec_id < $nQueries),
+       |qprobe AS (
+       |  SELECT query_id, cell, q_emb, q_norm2
+       |  FROM (SELECT *, ${cellRankSql("query_id", "qcos", "cell")} AS crank FROM qaff)
+       |  WHERE crank <= $nProbe)""".stripMargin
 
   def deltaIndexAnnSql(k: Int = 5, nQueries: Int = defaultNQueries,
                        nCentroids: Int = 8, nProbe: Int = 2): String =
     s"""WITH e AS ($withNormSql),
        |snap AS (SELECT * FROM e WHERE vec_id % 10 < 8),
        |delta AS (SELECT * FROM e WHERE vec_id % 10 >= 8),
-       |cents AS (
-       |  SELECT vec_id AS cent_vid, embedding AS c_emb, norm2 AS c_norm2,
-       |    ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS centroid_id
-       |  FROM snap ORDER BY vec_id LIMIT $nCentroids),
-       |aff AS (
-       |  SELECT s.vec_id, s.embedding, s.norm2, c.centroid_id,
-       |    ${dotSql("s.embedding", "c.c_emb")}
-       |      / sqrt(s.norm2 * c.c_norm2) AS ccos
-       |  FROM snap s CROSS JOIN cents c),
-       |assigned AS (
-       |  SELECT vec_id AS neighbor_id, centroid_id AS cell,
-       |    embedding AS n_emb, norm2 AS n_norm2
-       |  FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-       |          ORDER BY ccos DESC, centroid_id ASC) AS crank FROM aff)
-       |  WHERE crank = 1),
-       |qaff AS (
-       |  SELECT e.vec_id AS query_id, e.embedding AS q_emb,
-       |    e.norm2 AS q_norm2, c.centroid_id AS cell,
-       |    ${dotSql("e.embedding", "c.c_emb")}
-       |      / sqrt(e.norm2 * c.c_norm2) AS ccos
-       |  FROM e CROSS JOIN cents c WHERE e.vec_id < $nQueries),
-       |qprobe AS (
-       |  SELECT query_id, cell, q_emb, q_norm2
-       |  FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |          ORDER BY ccos DESC, cell ASC) AS crank FROM qaff)
-       |  WHERE crank <= $nProbe),
+       |cents AS (${donorCentsSql(nCentroids, "snap")}),
+       |${assignedSql("snap")},
+       |${qprobeSql("cents", nQueries, nProbe)},
        |main_leg AS (
        |  SELECT p.query_id, a.neighbor_id, FALSE AS from_delta,
-       |    ${dotSql("p.q_emb", "a.n_emb")}
-       |      / sqrt(p.q_norm2 * a.n_norm2) AS cosine
+       |    ${cosineSql(dotSql("p.q_emb", "a.n_emb"), "p.q_norm2", "a.n_norm2")} AS cosine
        |  FROM qprobe p JOIN assigned a USING (cell)
        |  WHERE p.query_id <> a.neighbor_id),
        |delta_leg AS (
        |  SELECT q.vec_id AS query_id, d.vec_id AS neighbor_id,
        |    TRUE AS from_delta,
-       |    ${dotSql("q.embedding", "d.embedding")}
-       |      / sqrt(q.norm2 * d.norm2) AS cosine
+       |    ${cosineSql(dotSql("q.embedding", "d.embedding"), "q.norm2", "d.norm2")} AS cosine
        |  FROM e q CROSS JOIN delta d
-       |  WHERE q.vec_id < $nQueries AND q.vec_id <> d.vec_id),
+       |  WHERE ${queryPairSql("q", "d", nQueries)}),
        |ranked AS (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |    ORDER BY cosine DESC, neighbor_id ASC) AS rank
+       |  SELECT *, ${rankSql("cosine")} AS rank
        |  FROM (SELECT * FROM main_leg UNION ALL SELECT * FROM delta_leg))
        |SELECT query_id, rank, neighbor_id, from_delta, cosine
        |FROM ranked WHERE rank <= $k
@@ -761,12 +799,10 @@ object Similarity {
     s"""WITH e AS ($withNormSql),
        |pairs AS (
        |  SELECT a.vec_id, a.label, b.vec_id AS neighbor_id,
-       |    ${dotSql("a.embedding", "b.embedding")}
-       |      / sqrt(a.norm2 * b.norm2) AS cosine
+       |    ${cosineSql(dotSql("a.embedding", "b.embedding"), "a.norm2", "b.norm2")} AS cosine
        |  FROM e a JOIN e b ON a.label = b.label AND a.vec_id <> b.vec_id),
        |ranked AS (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-       |    ORDER BY cosine DESC, neighbor_id ASC) AS rank
+       |  SELECT *, ${rankSql("cosine", part = "vec_id")} AS rank
        |  FROM pairs)
        |SELECT vec_id, label, neighbor_id, cosine,
        |  cosine >= $threshold AS is_near_dup
@@ -783,19 +819,10 @@ object Similarity {
   def annRecall(spark: SparkSession, dir: String, k: Int = 5,
                 nQueries: Int = defaultNQueries): DataFrame = {
     val truth = cosineTopK(spark, dir, k, nQueries)
-      .select(col("query_id"), col("neighbor_id"))
-    def eval(method: String, pairs: DataFrame): DataFrame =
-      truth.join(pairs.withColumn("hit", lit(1L)),
-          Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("n_truth"),
-          sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-        .select(lit(method).as("method"), col("query_id"),
-          col("n_truth"), col("n_hits"),
-          (col("n_hits").cast("double") / col("n_truth").cast("double")).as("recall"))
-    eval("ivf", ivfAnn(spark, dir, k, nQueries).select("query_id", "neighbor_id"))
-      .union(eval("lsh",
-        annLsh(spark, dir, k, nQueries).select("query_id", "neighbor_id")))
+    def eval(method: String, approx: DataFrame): DataFrame =
+      recallAtK(truth, approx).select(lit(method).as("method"), col("*"))
+    eval("ivf", ivfAnn(spark, dir, k, nQueries))
+      .union(eval("lsh", annLsh(spark, dir, k, nQueries)))
       .orderBy("method", "query_id")
   }
 
@@ -805,21 +832,10 @@ object Similarity {
        |lshp AS (SELECT query_id, neighbor_id FROM (${annLshSql(k, nQueries)})),
        |ivfp AS (SELECT query_id, neighbor_id FROM (${ivfAnnSql(k, nQueries)})),
        |ev AS (
-       |  SELECT 'ivf' AS method, t.query_id,
-       |    CAST(COUNT(*) AS BIGINT) AS n_truth,
-       |    CAST(SUM(CASE WHEN i.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-       |  FROM truth t LEFT JOIN ivfp i
-       |    ON t.query_id = i.query_id AND t.neighbor_id = i.neighbor_id
-       |  GROUP BY t.query_id
+       |  SELECT 'ivf' AS method, * FROM (${recallSql("truth", "ivfp")})
        |  UNION ALL
-       |  SELECT 'lsh' AS method, t.query_id,
-       |    CAST(COUNT(*) AS BIGINT) AS n_truth,
-       |    CAST(SUM(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-       |  FROM truth t LEFT JOIN lshp l
-       |    ON t.query_id = l.query_id AND t.neighbor_id = l.neighbor_id
-       |  GROUP BY t.query_id)
-       |SELECT method, query_id, n_truth, n_hits,
-       |  CAST(n_hits AS DOUBLE) / CAST(n_truth AS DOUBLE) AS recall
+       |  SELECT 'lsh' AS method, * FROM (${recallSql("truth", "lshp")}))
+       |SELECT method, query_id, n_truth, n_hits, recall
        |FROM ev ORDER BY method, query_id""".stripMargin
 
   /** v7: quantized-retrieval recall — run brute-force cosine top-k over
@@ -856,32 +872,18 @@ object Similarity {
 
   def quantizedRecall(spark: SparkSession, dir: String, k: Int = 5,
                       nQueries: Int = defaultNQueries): DataFrame = {
-    val r = reconQuantized(spark, dir)
-    val q = r.filter(col("vec_id") < nQueries).select(
-      col("vec_id").as("query_id"), col("remb").as("q_emb"),
-      col("rnorm2").as("q_norm2"))
-    val pairs = broadcast(q).crossJoin(
-        r.select(col("vec_id").as("neighbor_id"), col("remb").as("n_emb"),
-          col("rnorm2").as("n_norm2")))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine_q",
-        cosine(dotColHof(col("q_emb"), col("n_emb")), col("q_norm2"), col("n_norm2")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine_q").desc, col("neighbor_id").asc)
-    val approx = pairs.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"))
-    cosineTopK(spark, dir, k, nQueries)
-      .select(col("query_id"), col("neighbor_id"))
-      .join(approx.withColumn("hit", lit(1L)),
-        Seq("query_id", "neighbor_id"), "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("n_truth"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .select(col("query_id"), col("n_truth"), col("n_hits"),
-        (col("n_hits").cast("double") / col("n_truth").cast("double")).as("recall"))
+    recallAtK(cosineTopK(spark, dir, k, nQueries),
+        reconTopK(reconQuantized(spark, dir), k, nQueries, "cosine_q"))
       .orderBy("query_id")
   }
+
+  /** Exact cosine top-k over a reconstructed corpus (vec_id, remb,
+    * rnorm2) — the approximate side of v7, v9 and v14's first stage. */
+  private def reconTopK(r: DataFrame, k: Int, nQueries: Int,
+                        score: String): DataFrame =
+    topK(scorePairs(broadcast(queries(r, nQueries, emb = "remb", norm = "rnorm2"))
+        .crossJoin(candidates(r, emb = "remb", norm = "rnorm2")),
+      score, dotColHof), k, score)
 
   def quantizedRecallSql(k: Int = 5, nQueries: Int = defaultNQueries): String = {
     val qCode = "CASE WHEN d.maxs[i] = d.mins[i] THEN 0 " +
@@ -902,27 +904,25 @@ object Similarity {
        |     for i in range(1, len(embedding) + 1)] AS remb
        |  FROM embeddings CROSS JOIN dims d),
        |rn AS (SELECT vec_id, remb, ${dotSql("remb", "remb")} AS rnorm2 FROM r),
-       |pairs AS (
+       |${reconRecallSql(k, nQueries)}""".stripMargin
+  }
+
+  /** The tail of v7 and v9's oracles over the reconstruction CTE `rn`
+    * (vec_id, remb, rnorm2): exact top-k over it, scored by recall@k
+    * against v1. */
+  private def reconRecallSql(k: Int, nQueries: Int): String =
+    s"""pairs AS (
        |  SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-       |    ${dotSql("q.remb", "n.remb")} / sqrt(q.rnorm2 * n.rnorm2) AS cosine_q
-       |  FROM rn q JOIN rn n ON q.vec_id <> n.vec_id
-       |  WHERE q.vec_id < $nQueries),
+       |    ${cosineSql(dotSql("q.remb", "n.remb"), "q.rnorm2", "n.rnorm2")} AS cosine_q
+       |  FROM rn q JOIN rn n ON ${queryPairSql("q", "n", nQueries)}),
        |approx AS (
        |  SELECT query_id, neighbor_id FROM (
-       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY cosine_q DESC, neighbor_id ASC) AS rank
+       |    SELECT *, ${rankSql("cosine_q")} AS rank
        |    FROM pairs) WHERE rank <= $k),
        |truth AS (
        |  SELECT query_id, neighbor_id FROM (${cosineTopKSql(k, nQueries)}))
-       |SELECT t.query_id,
-       |  CAST(COUNT(*) AS BIGINT) AS n_truth,
-       |  CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-       |  CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-       |    / CAST(COUNT(*) AS DOUBLE) AS recall
-       |FROM truth t LEFT JOIN approx a
-       |  ON t.query_id = a.query_id AND t.neighbor_id = a.neighbor_id
-       |GROUP BY t.query_id ORDER BY t.query_id""".stripMargin
-  }
+       |${recallSql("truth", "approx")}
+       |ORDER BY t.query_id""".stripMargin
 
   /** v14: TWO-STAGE retrieval — int8 prefilter, exact float rerank: the
     * production pattern v7 measures but doesn't run. Stage 1 scans ONLY
@@ -939,35 +939,13 @@ object Similarity {
   def twoStageRetrieval(spark: SparkSession, dir: String, k: Int = 5,
                         nCand: Int = 20,
                         nQueries: Int = defaultNQueries): DataFrame = {
-    val r = reconQuantized(spark, dir)
-    val q = r.filter(col("vec_id") < nQueries).select(
-      col("vec_id").as("query_id"), col("remb").as("q_emb"),
-      col("rnorm2").as("q_norm2"))
-    val pairs = broadcast(q).crossJoin(
-        r.select(col("vec_id").as("neighbor_id"), col("remb").as("n_emb"),
-          col("rnorm2").as("n_norm2")))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine_q",
-        cosine(dotColHof(col("q_emb"), col("n_emb")), col("q_norm2"), col("n_norm2")))
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine_q").desc, col("neighbor_id").asc)
-    val cand = pairs.withColumn("crank", row_number().over(wq))
-      .filter(col("crank") <= nCand)
+    val cand = reconTopK(reconQuantized(spark, dir), nCand, nQueries, "cosine_q")
       .select(col("query_id"), col("neighbor_id"), col("cosine_q"))
     val e = withNorm(spark, dir)
-    val qe = e.filter(col("vec_id") < nQueries).select(
-      col("vec_id").as("query_id"), col("embedding").as("fq_emb"),
-      col("norm2").as("fq_norm2"))
-    val ne = e.select(col("vec_id").as("neighbor_id"),
-      col("embedding").as("fn_emb"), col("norm2").as("fn_norm2"))
-    val wf = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    cand.join(broadcast(qe), "query_id").join(ne, "neighbor_id")
-      .withColumn("cosine",
-        cosine(dotCol(col("fq_emb"), col("fn_emb")),
-          col("fq_norm2"), col("fn_norm2")))
-      .withColumn("rank", row_number().over(wf))
-      .filter(col("rank") <= k)
+    topK(cand.join(broadcast(queries(e, nQueries)), "query_id")
+        .join(candidates(e), "neighbor_id")
+        .withColumn("cosine",
+          cosine(dotCol(col("q_emb"), col("n_emb")), col("q_norm2"), col("n_norm2"))), k)
       .select(col("query_id"), col("rank").cast("long").as("rank"),
         col("neighbor_id"), col("cosine"), col("cosine_q"))
       .orderBy("query_id", "rank")
@@ -995,13 +973,11 @@ object Similarity {
        |rn AS (SELECT vec_id, remb, ${dotSql("remb", "remb")} AS rnorm2 FROM r),
        |pairs AS (
        |  SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-       |    ${dotSql("q.remb", "n.remb")} / sqrt(q.rnorm2 * n.rnorm2) AS cosine_q
-       |  FROM rn q JOIN rn n ON q.vec_id <> n.vec_id
-       |  WHERE q.vec_id < $nQueries),
+       |    ${cosineSql(dotSql("q.remb", "n.remb"), "q.rnorm2", "n.rnorm2")} AS cosine_q
+       |  FROM rn q JOIN rn n ON ${queryPairSql("q", "n", nQueries)}),
        |cand AS (
        |  SELECT query_id, neighbor_id, cosine_q FROM (
-       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY cosine_q DESC, neighbor_id ASC) AS crank
+       |    SELECT *, ${rankSql("cosine_q")} AS crank
        |    FROM pairs) WHERE crank <= $nCand),
        |e AS (
        |  SELECT vec_id, embedding,
@@ -1009,13 +985,12 @@ object Similarity {
        |  FROM embeddings),
        |scored AS (
        |  SELECT c.query_id, c.neighbor_id, c.cosine_q,
-       |    ${dotSql("q.embedding", "n.embedding")} / sqrt(q.norm2 * n.norm2) AS cosine
+       |    ${cosineSql(dotSql("q.embedding", "n.embedding"), "q.norm2", "n.norm2")} AS cosine
        |  FROM cand c
        |  JOIN e q ON q.vec_id = c.query_id
        |  JOIN e n ON n.vec_id = c.neighbor_id)
        |SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id, cosine, cosine_q
-       |FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |        ORDER BY cosine DESC, neighbor_id ASC) AS rank
+       |FROM (SELECT *, ${rankSql("cosine")} AS rank
        |      FROM scored)
        |WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
   }
@@ -1084,10 +1059,7 @@ object Similarity {
     * sized at any corpus scale (the a20/v5 collect pattern). */
   private[vector] def pqCodebook(spark: SparkSession, dir: String,
                                  nSub: Int, nCodes: Int): Array[Array[Array[Double]]] = {
-    val full = Tables.embeddings(spark, dir)
-      .orderBy(col("vec_id").asc).limit(nCodes)
-      .select(col("embedding")).collect()
-      .map(_.getSeq[Float](0).toArray.map(_.toDouble))
+    val full = donorVectors(spark, dir, nCodes)
     val subDim = full.head.length / nSub
     Array.tabulate(nSub, nCodes)((s, c) => full(c).slice(s * subDim, (s + 1) * subDim))
   }
@@ -1109,23 +1081,27 @@ object Similarity {
     * because both engines run the identical operation sequence). */
   def pqCodes(spark: SparkSession, dir: String,
               nSub: Int = 4, nCodes: Int = 8): DataFrame =
-    pqEncode(spark, dir, pqCodebook(spark, dir, nSub, nCodes), nSub, nCodes)
+    pqEncode(Tables.embeddings(spark, dir), pqCodebook(spark, dir, nSub, nCodes))
+      .orderBy("vec_id")
 
   /** v8 with a Lloyd-trained codebook ([[Lloyd.pqTrain]]) — same encode
     * plan, lower reconstruction error; NOT the oracle path (donor
     * codebooks stay oracle-reproducible). */
   def pqCodesTrained(spark: SparkSession, dir: String, nSub: Int = 4,
                      nCodes: Int = 8, iters: Int = 4): DataFrame =
-    pqEncode(spark, dir, Lloyd.pqTrain(spark, dir, nSub, nCodes, iters),
-      nSub, nCodes)
+    pqEncode(Tables.embeddings(spark, dir),
+      Lloyd.pqTrain(spark, dir, nSub, nCodes, iters))
+      .orderBy("vec_id")
 
-  /** The shared PQ encoder: argmin-L2 codes against a literal codebook —
-    * pure map-side regardless of where the codebook came from. */
-  private def pqEncode(spark: SparkSession, dir: String,
-                       cb: Array[Array[Array[Double]]],
-                       nSub: Int, nCodes: Int): DataFrame = {
+  /** The shared PQ encoder: each vector of `vecs` (vec_id, label,
+    * embedding) coded argmin-L2 against a literal codebook, as (vec_id,
+    * label, code_0.., recon_d2) — pure map-side regardless of where the
+    * codebook came from (donor, trained, or read back from an index). */
+  private[vector] def pqEncode(e: DataFrame,
+                               cb: Array[Array[Array[Double]]]): DataFrame = {
+    val nSub = cb.length
+    val nCodes = cb(0).length
     val subDim = cb(0)(0).length
-    val e = Tables.embeddings(spark, dir)
     // bind sub-vectors as plain attributes (HOF-lambda re-eval rule)
     val sub = e.select(col("vec_id") +: col("label") +:
       (0 until nSub).map(s =>
@@ -1146,7 +1122,6 @@ object Similarity {
             .cast("long").as(s"code_$s")) :+
           (0 until nSub).map(s => array_min(col(s"d2_$s")))
             .reduceLeft(_ + _).as("recon_d2")): _*)
-      .orderBy("vec_id")
   }
 
   /** Shared oracle CTEs for the PQ family: codebook, per-(vec, sub, code)
@@ -1198,34 +1173,12 @@ object Similarity {
       else pqCodebook(spark, dir, nSub, nCodes)
     val cbLit = (0 until nSub).map(s =>
       array(cb(s).map(c => array(c.map(lit): _*)): _*))
-    val codes = pqEncode(spark, dir, cb, nSub, nCodes)
-    val r = codes.select(col("vec_id"),
+    val r = pqEncode(Tables.embeddings(spark, dir), cb).select(col("vec_id"),
         flatten(array((0 until nSub).map(s =>
           element_at(cbLit(s), col(s"code_$s").cast("int") + 1)): _*)).as("remb"))
       .withColumn("rnorm2", dotColHof(col("remb"), col("remb")))
-    val q = r.filter(col("vec_id") < nQueries).select(
-      col("vec_id").as("query_id"), col("remb").as("q_emb"),
-      col("rnorm2").as("q_norm2"))
-    val pairs = broadcast(q).crossJoin(
-        r.select(col("vec_id").as("neighbor_id"), col("remb").as("n_emb"),
-          col("rnorm2").as("n_norm2")))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine_q",
-        cosine(dotColHof(col("q_emb"), col("n_emb")), col("q_norm2"), col("n_norm2")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine_q").desc, col("neighbor_id").asc)
-    val approx = pairs.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"))
-    cosineTopK(spark, dir, k, nQueries)
-      .select(col("query_id"), col("neighbor_id"))
-      .join(approx.withColumn("hit", lit(1L)),
-        Seq("query_id", "neighbor_id"), "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("n_truth"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .select(col("query_id"), col("n_truth"), col("n_hits"),
-        (col("n_hits").cast("double") / col("n_truth").cast("double")).as("recall"))
+    recallAtK(cosineTopK(spark, dir, k, nQueries),
+        reconTopK(r, k, nQueries, "cosine_q"))
       .orderBy("query_id")
   }
 
@@ -1248,26 +1201,7 @@ object Similarity {
        |  FROM codes v
        |  $joins),
        |rn AS (SELECT vec_id, remb, ${dotSql("remb", "remb")} AS rnorm2 FROM r),
-       |pairs AS (
-       |  SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-       |    ${dotSql("q.remb", "n.remb")} / sqrt(q.rnorm2 * n.rnorm2) AS cosine_q
-       |  FROM rn q JOIN rn n ON q.vec_id <> n.vec_id
-       |  WHERE q.vec_id < $nQueries),
-       |approx AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY cosine_q DESC, neighbor_id ASC) AS rank
-       |    FROM pairs) WHERE rank <= $k),
-       |truth AS (
-       |  SELECT query_id, neighbor_id FROM (${cosineTopKSql(k, nQueries)}))
-       |SELECT t.query_id,
-       |  CAST(COUNT(*) AS BIGINT) AS n_truth,
-       |  CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-       |  CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-       |    / CAST(COUNT(*) AS DOUBLE) AS recall
-       |FROM truth t LEFT JOIN approx a
-       |  ON t.query_id = a.query_id AND t.neighbor_id = a.neighbor_id
-       |GROUP BY t.query_id ORDER BY t.query_id""".stripMargin
+       |${reconRecallSql(k, nQueries)}""".stripMargin
   }
 
   /** v10: PQ ASYMMETRIC-DISTANCE search (ADC) — the production PQ query
@@ -1296,10 +1230,10 @@ object Similarity {
     // query-independent code norms, folded in oracle order
     val cnorm = Array.tabulate(nSub, nCodes)((s, c) =>
       cb(s)(c).foldLeft(0.0)((acc, x) => acc + x * x))
-    val qBase = withNorm(spark, dir).filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id") +: col("norm2").as("q_norm2") +:
+    val qBase = queries(withNorm(spark, dir), nQueries)
+      .select(col("query_id") +: col("q_norm2") +:
         (0 until nSub).map(s =>
-          slice(col("embedding"), s * subDim + 1, subDim).as(s"q_$s")): _*)
+          slice(col("q_emb"), s * subDim + 1, subDim).as(s"q_$s")): _*)
     def lutEntry(s: Int, c: Int): Column =
       dotCol(col(s"q_$s"), array(cb(s)(c).map(v => lit(v.toFloat)): _*))
     val q = qBase.select(col("query_id") +: col("q_norm2") +:
@@ -1316,11 +1250,8 @@ object Similarity {
       .reduceLeft(_ + _)
     val pairs = broadcast(q).crossJoin(codes)
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine_adc", adcDot / sqrt(col("q_norm2") * reconNorm2))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine_adc").desc, col("neighbor_id").asc)
-    pairs.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .withColumn("cosine_adc", cosine(adcDot, col("q_norm2"), reconNorm2))
+    topK(pairs, k, "cosine_adc")
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine_adc"))
       .orderBy(col("query_id"), col("rank"))
   }
@@ -1357,14 +1288,13 @@ object Similarity {
        |  FROM qsub qs JOIN cbsub cs ON cs.s = qs.s),
        |pairs AS (
        |  SELECT q.query_id, c.vec_id AS neighbor_id,
-       |    ($adcDot) / sqrt(q.q_norm2 * ($reconNorm)) AS cosine_adc
+       |    ${cosineSql(s"($adcDot)", "q.q_norm2", s"($reconNorm)")} AS cosine_adc
        |  FROM codes c CROSS JOIN q
        |  $lutJoins
        |  $normJoins
        |  WHERE c.vec_id <> q.query_id),
        |ranked AS (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |    ORDER BY cosine_adc DESC, neighbor_id ASC) AS rank
+       |  SELECT *, ${rankSql("cosine_adc")} AS rank
        |  FROM pairs)
        |SELECT query_id, rank, neighbor_id, cosine_adc
        |FROM ranked WHERE rank <= $k
@@ -1398,14 +1328,15 @@ object Similarity {
       .select(col("vec_id").as("neighbor_id") +:
         (0 until nSub).map(s => col(s"code_$s")): _*)
     val cellCodes = assigned.join(codes, Seq("neighbor_id"))
-    val qlut = withNorm(spark, dir).filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id") +: col("norm2").as("q_norm2") +:
+    val qlut = queries(withNorm(spark, dir), nQueries)
+      .select(col("query_id") +: col("q_norm2") +:
         (0 until nSub).map(s =>
-          slice(col("embedding"), s * subDim + 1, subDim).as(s"q_$s")): _*)
+          slice(col("q_emb"), s * subDim + 1, subDim).as(s"q_$s")): _*)
     def lutEntry(s: Int, c: Int): Column =
       dotCol(col(s"q_$s"), array(cb(s)(c).map(v => lit(v.toFloat)): _*))
-    val probes = ranked.filter(col("vec_id") < nQueries && col("crank") <= nProbe)
-      .select(col("vec_id").as("query_id"), col("centroid_id").as("cell"))
+    val probes = queries(ranked.filter(col("crank") <= nProbe), nQueries,
+        Seq(col("centroid_id").as("cell")))
+      .select(col("query_id"), col("cell"))
       .join(qlut.select(col("query_id") +: col("q_norm2") +:
         (0 until nSub).map(s =>
           array((0 until nCodes).map(c => lutEntry(s, c)): _*).as(s"lut_$s")): _*),
@@ -1418,11 +1349,8 @@ object Similarity {
       .reduceLeft(_ + _)
     val pairs = broadcast(probes).join(cellCodes, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine_adc", adcDot / sqrt(col("q_norm2") * reconNorm2))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine_adc").desc, col("neighbor_id").asc)
-    pairs.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .withColumn("cosine_adc", cosine(adcDot, col("q_norm2"), reconNorm2))
+    topK(pairs, k, "cosine_adc")
       .select(col("query_id"), col("rank"), col("neighbor_id"),
         col("cell"), col("cosine_adc"))
       .orderBy(col("query_id"), col("rank"))
@@ -1448,19 +1376,8 @@ object Similarity {
        |  FROM cb CROSS JOIN range($nSub) t(s)),
        |cnorm AS (SELECT code, s, ${dotSql("sv", "sv")} AS nrm FROM cbsub),
        |e AS ($withNormSql),
-       |cents AS (
-       |  SELECT vec_id AS cent_vid, embedding AS c_emb, norm2 AS c_norm2,
-       |    ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS centroid_id
-       |  FROM e ORDER BY vec_id LIMIT $nCentroids),
-       |aff AS (
-       |  SELECT e.vec_id, e.embedding, e.norm2, c.centroid_id,
-       |    ${dotSql("e.embedding", "c.c_emb")}
-       |      / sqrt(e.norm2 * c.c_norm2) AS ccos
-       |  FROM e CROSS JOIN cents c),
-       |ranked AS (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-       |    ORDER BY ccos DESC, centroid_id ASC) AS crank
-       |  FROM aff),
+       |cents AS (${donorCentsSql(nCentroids)}),
+       |${ivfRankedSql("e")},
        |cellcodes AS (
        |  SELECT r.vec_id AS neighbor_id, r.centroid_id AS cell,
        |    ${(0 until nSub).map(s => s"c.code_$s").mkString(", ")}
@@ -1479,14 +1396,13 @@ object Similarity {
        |  FROM ranked WHERE vec_id < $nQueries AND crank <= $nProbe),
        |pairs AS (
        |  SELECT p.query_id, cc.cell, cc.neighbor_id,
-       |    ($adcDot) / sqrt(p.q_norm2 * ($reconNorm)) AS cosine_adc
+       |    ${cosineSql(s"($adcDot)", "p.q_norm2", s"($reconNorm)")} AS cosine_adc
        |  FROM probes p JOIN cellcodes cc USING (cell)
        |  $lutJoins
        |  $normJoins
        |  WHERE p.query_id <> cc.neighbor_id),
        |rankedp AS (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |    ORDER BY cosine_adc DESC, neighbor_id ASC) AS rank
+       |  SELECT *, ${rankSql("cosine_adc")} AS rank
        |  FROM pairs)
        |SELECT query_id, rank, neighbor_id, cell, cosine_adc
        |FROM rankedp WHERE rank <= $k
@@ -1514,10 +1430,7 @@ object Similarity {
     // driver-side sample: first nCentroids rows are the centroids, the
     // next nCodes rows donate the residual codebook; donor assignment
     // uses the same strict fold + (ccos desc, centroid asc) tie-break
-    val sample = Tables.embeddings(spark, dir)
-      .orderBy(col("vec_id").asc).limit(nCentroids + nCodes)
-      .select(col("embedding")).collect()
-      .map(_.getSeq[Float](0).toArray.map(_.toDouble))
+    val sample = donorVectors(spark, dir, nCentroids + nCodes)
     val cents = sample.take(nCentroids)
     val donors = sample.slice(nCentroids, nCentroids + nCodes)
     def dot(a: Array[Double], b: Array[Double]): Double = {
@@ -1584,20 +1497,11 @@ object Similarity {
       .map(s => s"MAX(CASE WHEN s = $s THEN d2 END)").mkString(" + ")
     val diff = s"(r.resid[t.s*$subDim + i] - cb.cresid[t.s*$subDim + i])"
     s"""WITH e AS ($withNormSql),
-       |cents AS (
-       |  SELECT vec_id AS cent_vid, embedding AS c_emb, norm2 AS c_norm2,
-       |    ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS centroid_id
-       |  FROM e ORDER BY vec_id LIMIT $nCentroids),
-       |aff AS (
-       |  SELECT e.vec_id, e.embedding, c.centroid_id, c.c_emb,
-       |    ${dotSql("e.embedding", "c.c_emb")}
-       |      / sqrt(e.norm2 * c.c_norm2) AS ccos
-       |  FROM e CROSS JOIN cents c),
+       |cents AS (${donorCentsSql(nCentroids)}),
+       |${ivfRankedSql("e")},
        |assigned AS (
-       |  SELECT vec_id, centroid_id AS cell, embedding, c_emb FROM (
-       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-       |      ORDER BY ccos DESC, centroid_id ASC) AS crank
-       |    FROM aff) WHERE crank = 1),
+       |  SELECT vec_id, centroid_id AS cell, embedding, c_emb
+       |  FROM ranked WHERE crank = 1),
        |resid AS (
        |  SELECT vec_id, cell,
        |    [CAST(embedding[i] AS DOUBLE) - CAST(c_emb[i] AS DOUBLE)
@@ -1645,14 +1549,10 @@ object Similarity {
     val e = Tables.embeddings(spark, dir)
     val q = e.filter(col("vec_id") < nQueries).select(
       col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("dot").desc, col("neighbor_id").asc)
-    broadcast(q).crossJoin(
+    topK(broadcast(q).crossJoin(
         e.select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb")))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("dot", dotCol(col("q_emb"), col("n_emb")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .withColumn("dot", dotCol(col("q_emb"), col("n_emb"))), k, "dot")
       .select(col("query_id"), col("rank").cast("long").as("rank"),
         col("neighbor_id"), col("dot"))
       .orderBy("query_id", "rank")
@@ -1662,11 +1562,9 @@ object Similarity {
     s"""WITH pairs AS (
        |  SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
        |    ${dotSql("q.embedding", "n.embedding")} AS dot
-       |  FROM embeddings q JOIN embeddings n ON q.vec_id <> n.vec_id
-       |  WHERE q.vec_id < $nQueries)
+       |  FROM embeddings q JOIN embeddings n ON ${queryPairSql("q", "n", nQueries)})
        |SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id, dot
-       |FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |        ORDER BY dot DESC, neighbor_id ASC) AS rank
+       |FROM (SELECT *, ${rankSql("dot")} AS rank
        |      FROM pairs)
        |WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
 
@@ -1683,19 +1581,11 @@ object Similarity {
   def filteredTopK(spark: SparkSession, dir: String, k: Int = 5,
                    nQueries: Int = defaultNQueries): DataFrame = {
     val e = withNorm(spark, dir)
-    val q = e.filter(col("vec_id") < nQueries).select(
-      col("vec_id").as("query_id"), col("label"),
-      col("embedding").as("q_emb"), col("norm2").as("q_norm2"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    broadcast(q)
-      .join(e.select(col("vec_id").as("neighbor_id"), col("label"),
-          col("embedding").as("n_emb"), col("norm2").as("n_norm2")),
-        Seq("label"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        cosine(dotCol(col("q_emb"), col("n_emb")), col("q_norm2"), col("n_norm2")))
-      .withColumn("rank", row_number().over(w).cast("long"))
+    val label = Seq(col("label"))
+    // the key's rank is a bigint, cast before the filter
+    scorePairs(broadcast(queries(e, nQueries, label))
+        .join(candidates(e, label), Seq("label")))
+      .withColumn("rank", row_number().over(perQuery("cosine")).cast("long"))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("label"), col("rank"),
         col("neighbor_id"), col("cosine"))
@@ -1706,13 +1596,11 @@ object Similarity {
     s"""WITH e AS ($withNormSql),
        |pairs AS (
        |  SELECT q.vec_id AS query_id, q.label, n.vec_id AS neighbor_id,
-       |    ${dotSql("q.embedding", "n.embedding")}
-       |      / sqrt(q.norm2 * n.norm2) AS cosine
-       |  FROM e q JOIN e n ON q.label = n.label AND q.vec_id <> n.vec_id
-       |  WHERE q.vec_id < $nQueries),
+       |    ${cosineSql(dotSql("q.embedding", "n.embedding"), "q.norm2", "n.norm2")} AS cosine
+       |  FROM e q JOIN e n
+       |    ON q.label = n.label AND ${queryPairSql("q", "n", nQueries)}),
        |ranked AS (
-       |  SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-       |    ORDER BY cosine DESC, neighbor_id ASC) AS BIGINT) AS rank
+       |  SELECT *, CAST(${rankSql("cosine")} AS BIGINT) AS rank
        |  FROM pairs)
        |SELECT query_id, label, rank, neighbor_id, cosine
        |FROM ranked WHERE rank <= $k
@@ -1731,8 +1619,6 @@ object Similarity {
     * certifies v2/v4 against v1. */
   def mipsAnnRecall(spark: SparkSession, dir: String, k: Int = 5,
                     nQueries: Int = defaultNQueries): DataFrame = {
-    val truth = mipsTopK(spark, dir, k, nQueries)
-      .select(col("query_id"), col("neighbor_id"))
     val e = Tables.embeddings(spark, dir)
       .withColumn("bucket", bucketCol(col("embedding")))
     val q = e.filter(col("vec_id") < nQueries).select(
@@ -1740,22 +1626,10 @@ object Similarity {
       col("embedding").as("q_emb"))
     val cand = e.select(col("vec_id").as("neighbor_id"), col("bucket"),
       col("embedding").as("n_emb"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("dot").desc, col("neighbor_id").asc)
-    val approx = broadcast(q).join(cand, Seq("bucket"))
+    val approx = topK(broadcast(q).join(cand, Seq("bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("dot", dotCol(col("q_emb"), col("n_emb")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"))
-    truth.join(approx.withColumn("hit", lit(1L)),
-        Seq("query_id", "neighbor_id"), "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("n_truth"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .select(col("query_id"), col("n_truth"), col("n_hits"),
-        (col("n_hits").cast("double") / col("n_truth").cast("double"))
-          .as("recall"))
+      .withColumn("dot", dotCol(col("q_emb"), col("n_emb"))), k, "dot")
+    recallAtK(mipsTopK(spark, dir, k, nQueries), approx)
       .orderBy("query_id")
   }
 
@@ -1768,24 +1642,15 @@ object Similarity {
        |pairs AS (
        |  SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
        |    ${dotSql("q.embedding", "n.embedding")} AS dot
-       |  FROM e q JOIN e n ON q.bucket = n.bucket AND q.vec_id <> n.vec_id
-       |  WHERE q.vec_id < $nQueries),
+       |  FROM e q JOIN e n
+       |    ON q.bucket = n.bucket AND ${queryPairSql("q", "n", nQueries)}),
        |approx AS (
        |  SELECT query_id, neighbor_id FROM (
-       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY dot DESC, neighbor_id ASC) AS rank
+       |    SELECT *, ${rankSql("dot")} AS rank
        |    FROM pairs)
-       |  WHERE rank <= $k),
-       |ev AS (
-       |  SELECT t.query_id, CAST(COUNT(*) AS BIGINT) AS n_truth,
-       |    CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL
-       |      THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-       |  FROM truth t LEFT JOIN approx a
-       |    ON t.query_id = a.query_id AND t.neighbor_id = a.neighbor_id
-       |  GROUP BY t.query_id)
-       |SELECT query_id, n_truth, n_hits,
-       |  CAST(n_hits AS DOUBLE) / CAST(n_truth AS DOUBLE) AS recall
-       |FROM ev ORDER BY query_id""".stripMargin
+       |  WHERE rank <= $k)
+       |${recallSql("truth", "approx")}
+       |ORDER BY t.query_id""".stripMargin
 
   /** h1's document-frequency cap, as an integer percent of the corpus:
     * a term enters the inverted index only if df*100 <= pct*n_docs.
@@ -1853,20 +1718,12 @@ object Similarity {
       .groupBy("query_id", "doc_id")
       .agg(count(lit(1)).as("n_common_words"))
       .filter(col("n_common_words") >= minCommon)
-    val e = Tables.embeddings(spark, dir)
-      .withColumn("norm2", dotCol(col("embedding"), col("embedding")))
-    val qe = e.filter(col("vec_id") < nQueries).select(
-      col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-      col("norm2").as("q_norm2"))
-    val ne = e.select(col("vec_id").as("doc_id"),
-      col("embedding").as("n_emb"), col("norm2").as("n_norm2"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("doc_id").asc)
-    cands.join(broadcast(qe), "query_id").join(ne, "doc_id")
+    val e = withNorm(spark, dir)
+    val ne = candidates(e).withColumnRenamed("neighbor_id", "doc_id")
+    topK(cands.join(broadcast(queries(e, nQueries)), "query_id").join(ne, "doc_id")
       .withColumn("cosine",
-        dotCol(col("q_emb"), col("n_emb")) / sqrt(col("q_norm2") * col("n_norm2")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+        cosine(dotCol(col("q_emb"), col("n_emb")), col("q_norm2"), col("n_norm2"))),
+      k, tie = "doc_id")
       .select(col("query_id"), col("rank"), col("doc_id"),
         col("n_common_words"), col("cosine"))
       .orderBy(col("query_id"), col("rank"))
@@ -1896,14 +1753,12 @@ object Similarity {
        |  FROM embeddings),
        |scored AS (
        |  SELECT c.query_id, c.doc_id, c.n_common_words,
-       |    ${dotSql("q.embedding", "n.embedding")}
-       |      / sqrt(q.norm2 * n.norm2) AS cosine
+       |    ${cosineSql(dotSql("q.embedding", "n.embedding"), "q.norm2", "n.norm2")} AS cosine
        |  FROM cands c
        |  JOIN e q ON q.vec_id = c.query_id
        |  JOIN e n ON n.vec_id = c.doc_id),
        |ranked AS (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |    ORDER BY cosine DESC, doc_id ASC) AS rank
+       |  SELECT *, ${rankSql("cosine", "doc_id")} AS rank
        |  FROM scored)
        |SELECT query_id, rank, doc_id, n_common_words, cosine
        |FROM ranked WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
@@ -1929,18 +1784,11 @@ object Similarity {
                  probeLevels: Seq[Int] = Seq(1, 2, 4, 8)): DataFrame = {
     import spark.implicits._
     val ranked = ivfRanked(spark, dir, nCentroids)
-    val assigned = ranked.filter(col("crank") === 1)
-      .select(col("vec_id").as("neighbor_id"), col("centroid_id").as("cell"),
-        col("embedding").as("n_emb"), col("norm2").as("n_norm2"))
-    val maxP = probeLevels.max
-    val probes = ranked.filter(col("vec_id") < nQueries && col("crank") <= maxP)
-      .select(col("vec_id").as("query_id"), col("centroid_id").as("cell"),
-        col("crank").as("probe_rank"),
-        col("embedding").as("q_emb"), col("norm2").as("q_norm2"))
-    val pairs = broadcast(probes).join(assigned, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        cosine(dotCol(col("q_emb"), col("n_emb")), col("q_norm2"), col("n_norm2")))
+    val assigned = candidates(ranked.filter(col("crank") === 1),
+      Seq(col("centroid_id").as("cell")))
+    val probes = queries(ranked.filter(col("crank") <= probeLevels.max), nQueries,
+      Seq(col("centroid_id").as("cell"), col("crank").as("probe_rank")))
+    val pairs = scorePairs(broadcast(probes).join(assigned, Seq("cell")))
       .select("query_id", "probe_rank", "neighbor_id", "cosine")
     val levels = probeLevels.map(_.toLong).toDF("n_probe")
     val expanded = pairs.join(broadcast(levels), col("probe_rank") <= col("n_probe"))
@@ -1971,19 +1819,8 @@ object Similarity {
     val maxP = probeLevels.max
     val levelValues = probeLevels.map(p => s"($p)").mkString(", ")
     s"""WITH e AS ($withNormSql),
-       |cents AS (
-       |  SELECT vec_id AS cent_vid, embedding AS c_emb, norm2 AS c_norm2,
-       |    ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS centroid_id
-       |  FROM e ORDER BY vec_id LIMIT $nCentroids),
-       |aff AS (
-       |  SELECT e.vec_id, e.embedding, e.norm2, c.centroid_id,
-       |    ${dotSql("e.embedding", "c.c_emb")}
-       |      / sqrt(e.norm2 * c.c_norm2) AS ccos
-       |  FROM e CROSS JOIN cents c),
-       |ranked AS (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-       |    ORDER BY ccos DESC, centroid_id ASC) AS crank
-       |  FROM aff),
+       |cents AS (${donorCentsSql(nCentroids)}),
+       |${ivfRankedSql("e")},
        |assigned AS (
        |  SELECT vec_id AS neighbor_id, centroid_id AS cell,
        |    embedding AS n_emb, norm2 AS n_norm2
@@ -1994,8 +1831,7 @@ object Similarity {
        |  FROM ranked WHERE vec_id < $nQueries AND crank <= $maxP),
        |pairs AS (
        |  SELECT p.query_id, p.probe_rank, a.neighbor_id,
-       |    ${dotSql("p.q_emb", "a.n_emb")}
-       |      / sqrt(p.q_norm2 * a.n_norm2) AS cosine
+       |    ${cosineSql(dotSql("p.q_emb", "a.n_emb"), "p.q_norm2", "a.n_norm2")} AS cosine
        |  FROM probes p JOIN assigned a USING (cell)
        |  WHERE p.query_id <> a.neighbor_id),
        |levels AS (
@@ -2006,8 +1842,7 @@ object Similarity {
        |  FROM pairs pr JOIN levels l ON pr.probe_rank <= l.n_probe),
        |topk AS (
        |  SELECT * FROM (
-       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY n_probe, query_id
-       |      ORDER BY cosine DESC, neighbor_id ASC) AS rank
+       |    SELECT *, ${rankSql("cosine", part = "n_probe, query_id")} AS rank
        |    FROM expanded)
        |  WHERE rank <= $k),
        |truth AS (
@@ -2065,20 +1900,12 @@ object Similarity {
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("hamming",
         (expr("bit_count(q0 ^ n0)") + expr("bit_count(q1 ^ n1)")).cast("long"))
+    // nearest is the SMALLEST distance: the hamming order stays its own
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("hamming").asc, col("neighbor_id").asc)
     val approx = pairs.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"))
-    cosineTopK(spark, dir, k, nQueries)
-      .select(col("query_id"), col("neighbor_id"))
-      .join(approx.withColumn("hit", lit(1L)),
-        Seq("query_id", "neighbor_id"), "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("n_truth"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .select(col("query_id"), col("n_truth"), col("n_hits"),
-        (col("n_hits").cast("double") / col("n_truth").cast("double")).as("recall"))
+    recallAtK(cosineTopK(spark, dir, k, nQueries), approx)
       .orderBy("query_id")
   }
 
@@ -2105,8 +1932,7 @@ object Similarity {
        |  SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
        |    CAST(bit_count(xor(q.w0, n.w0)) AS BIGINT)
        |      + CAST(bit_count(xor(q.w1, n.w1)) AS BIGINT) AS hamming
-       |  FROM codes q JOIN codes n ON q.vec_id <> n.vec_id
-       |  WHERE q.vec_id < $nQueries),
+       |  FROM codes q JOIN codes n ON ${queryPairSql("q", "n", nQueries)}),
        |approx AS (
        |  SELECT query_id, neighbor_id FROM (
        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
@@ -2114,15 +1940,8 @@ object Similarity {
        |    FROM pairs) WHERE rank <= $k),
        |truth AS (
        |  SELECT query_id, neighbor_id FROM (${cosineTopKSql(k, nQueries)}))
-       |SELECT t.query_id,
-       |  CAST(COUNT(*) AS BIGINT) AS n_truth,
-       |  CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-       |    AS BIGINT) AS n_hits,
-       |  CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-       |      AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS recall
-       |FROM truth t LEFT JOIN approx a
-       |  ON t.query_id = a.query_id AND t.neighbor_id = a.neighbor_id
-       |GROUP BY t.query_id ORDER BY t.query_id""".stripMargin
+       |${recallSql("truth", "approx")}
+       |ORDER BY t.query_id""".stripMargin
   }
 
   /** v20: recall@k OPERATING CURVE for the LSH ANN — v6's point
@@ -2208,10 +2027,7 @@ object Similarity {
         col("label").as("n_label")), Seq("neighbor_id"))
       .groupBy(col("query_id"), col("n_label"))
       .agg(count(lit(1)).as("votes"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("votes").desc, col("n_label").asc)
-    votes.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    topK(votes, 1, "votes", "n_label", "rn")
       .select(col("query_id"), col("n_label").as("pred_label"),
         col("votes").as("n_votes"))
       .join(labels.select(col("vec_id").as("query_id"),
@@ -2232,8 +2048,7 @@ object Similarity {
        |  GROUP BY 1, 2),
        |pred AS (
        |  SELECT query_id, n_label AS pred_label, votes AS n_votes FROM (
-       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY votes DESC, n_label ASC) AS rn
+       |    SELECT *, ${rankSql("votes", "n_label")} AS rn
        |    FROM votes) WHERE rn = 1)
        |SELECT p.query_id, CAST(e.label AS BIGINT) AS true_label,
        |  p.pred_label, p.n_votes,
@@ -2379,8 +2194,8 @@ object Similarity {
        |  SELECT *, ${bucketSql("embedding")} AS bucket FROM ($withNormSql)),
        |pairs AS (
        |  SELECT LEAST(19, GREATEST(0, CAST(FLOOR(
-       |      (${dotSql("a.embedding", "b.embedding")}
-       |        / sqrt(a.norm2 * b.norm2) + 1) * 10) AS BIGINT))) AS bin
+       |      (${cosineSql(dotSql("a.embedding", "b.embedding"), "a.norm2", "b.norm2")}
+       |        + 1) * 10) AS BIGINT))) AS bin
        |  FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id < b.vec_id),
        |counts AS (
        |  SELECT bin, CAST(COUNT(*) AS BIGINT) AS n_pairs
@@ -2407,20 +2222,13 @@ object Similarity {
   def hardNegatives(spark: SparkSession, dir: String, k: Int = 5,
                     nQueries: Int = defaultNQueries): DataFrame = {
     val e = withNorm(spark, dir)
-    val q = e.filter(col("vec_id") < nQueries).select(
-      col("vec_id").as("query_id"), col("label").as("query_label"),
-      col("embedding").as("q_emb"), col("norm2").as("q_norm2"))
-    val cand = e.select(col("vec_id").as("neighbor_id"),
-      col("label").as("neighbor_label"), col("embedding").as("n_emb"),
-      col("norm2").as("n_norm2"))
-    val pairs = broadcast(q).crossJoin(cand)
+    // a different label already excludes the query itself
+    val pairs = broadcast(queries(e, nQueries, Seq(col("label").as("query_label"))))
+      .crossJoin(candidates(e, Seq(col("label").as("neighbor_label"))))
       .filter(col("query_label") =!= col("neighbor_label"))
       .withColumn("cosine",
         cosine(dotCol(col("q_emb"), col("n_emb")), col("q_norm2"), col("n_norm2")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    pairs.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(pairs, k)
       .select(col("query_id"), col("query_label").cast("long").as("query_label"),
         col("rank"), col("neighbor_id"),
         col("neighbor_label").cast("long").as("neighbor_label"), col("cosine"))
@@ -2434,13 +2242,11 @@ object Similarity {
        |    CAST(q.label AS BIGINT) AS query_label,
        |    n.vec_id AS neighbor_id,
        |    CAST(n.label AS BIGINT) AS neighbor_label,
-       |    ${dotSql("q.embedding", "n.embedding")}
-       |      / sqrt(q.norm2 * n.norm2) AS cosine
+       |    ${cosineSql(dotSql("q.embedding", "n.embedding"), "q.norm2", "n.norm2")} AS cosine
        |  FROM e q JOIN e n
        |    ON q.vec_id < $nQueries AND q.label <> n.label),
        |ranked AS (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |    ORDER BY cosine DESC, neighbor_id ASC) AS rank
+       |  SELECT *, ${rankSql("cosine")} AS rank
        |  FROM pairs)
        |SELECT query_id, query_label, rank, neighbor_id, neighbor_label, cosine
        |FROM ranked WHERE rank <= $k
@@ -2462,22 +2268,11 @@ object Similarity {
                     nQueries: Int = defaultNQueries,
                     trainedIters: Int = 5): DataFrame = {
     val truth = cosineTopK(spark, dir, k, nQueries)
-      .select(col("query_id"), col("neighbor_id"))
-    def eval(method: String, pairs: DataFrame): DataFrame =
-      truth.join(pairs.withColumn("hit", lit(1L)),
-          Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("n_truth"),
-          sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-        .select(lit(method).as("method"), col("query_id"),
-          col("n_truth"), col("n_hits"),
-          (col("n_hits").cast("double") / col("n_truth").cast("double"))
-            .as("recall"))
-    eval("donor", ivfAnn(spark, dir, k, nQueries)
-        .select("query_id", "neighbor_id"))
+    def eval(method: String, approx: DataFrame): DataFrame =
+      recallAtK(truth, approx).select(lit(method).as("method"), col("*"))
+    eval("donor", ivfAnn(spark, dir, k, nQueries))
       .union(eval("trained",
-        ivfAnn(spark, dir, k, nQueries, trainedIters = trainedIters)
-          .select("query_id", "neighbor_id")))
+        ivfAnn(spark, dir, k, nQueries, trainedIters = trainedIters)))
       .orderBy("method", "query_id")
   }
 
@@ -2492,16 +2287,7 @@ object Similarity {
                        nCentroids: Int = 8, nProbe: Int = 2,
                        trainedIters: Int = 5): String = {
     def evalSql(method: String, annSql: String): String =
-      s"""SELECT '$method' AS method, t.query_id,
-         |  CAST(COUNT(*) AS BIGINT) AS n_truth,
-         |  CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL
-         |    THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-         |  CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL
-         |    THEN 1 ELSE 0 END) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
-         |    AS recall
-         |FROM truth t LEFT JOIN ($annSql) a
-         |  ON a.query_id = t.query_id AND a.neighbor_id = t.neighbor_id
-         |GROUP BY t.query_id""".stripMargin
+      s"SELECT '$method' AS method, * FROM (${recallSql("truth", s"($annSql)")})"
     s"""WITH truth AS (
        |  SELECT query_id, neighbor_id FROM (${cosineTopKSql(k, nQueries)}))
        |SELECT * FROM (
@@ -2547,9 +2333,8 @@ object Similarity {
       .withColumn("rrf_milli",
         coalesce(expr("60000 div (60 + lex_rank)"), lit(0L)) +
           coalesce(expr("60000 div (60 + sem_rank)"), lit(0L)))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("rrf_milli").desc, col("doc").asc)
-    fused.withColumn("fused_rank", row_number().over(w).cast("long"))
+    fused.withColumn("fused_rank",
+        row_number().over(perQuery("rrf_milli", "doc")).cast("long"))
       .filter(col("fused_rank") <= kOut)
       .select(col("query_id"), col("fused_rank"), col("doc"),
         col("rrf_milli"), col("lex_rank"), col("sem_rank"))
@@ -2572,8 +2357,7 @@ object Similarity {
        |  FROM lex l FULL OUTER JOIN sem s
        |    ON l.query_id = s.query_id AND l.doc = s.doc),
        |ranked AS (
-       |  SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-       |    ORDER BY rrf_milli DESC, doc ASC) AS BIGINT) AS fused_rank
+       |  SELECT *, CAST(${rankSql("rrf_milli", "doc")} AS BIGINT) AS fused_rank
        |  FROM fused)
        |SELECT query_id, fused_rank, doc, rrf_milli, lex_rank, sem_rank
        |FROM ranked WHERE fused_rank <= $kOut
@@ -2648,19 +2432,8 @@ object Similarity {
       s"CASE WHEN embedding[${i * 4 + 1}] > 0 THEN ${1L << i} ELSE 0 END")
       .mkString("(", " + ", ")")
     s"""WITH e AS ($withNormSql),
-       |cents AS (
-       |  SELECT vec_id AS cent_vid, embedding AS c_emb, norm2 AS c_norm2,
-       |    ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS centroid_id
-       |  FROM e ORDER BY vec_id LIMIT $nCentroids),
-       |aff AS (
-       |  SELECT e.vec_id, e.embedding, c.centroid_id,
-       |    ${dotSql("e.embedding", "c.c_emb")}
-       |      / sqrt(e.norm2 * c.c_norm2) AS ccos
-       |  FROM e CROSS JOIN cents c),
-       |ranked AS (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-       |    ORDER BY ccos DESC, centroid_id ASC) AS crank
-       |  FROM aff),
+       |cents AS (${donorCentsSql(nCentroids)}),
+       |${ivfRankedSql("e")},
        |pb AS (
        |  SELECT centroid_id AS cell, $bucket3 AS bucket
        |  FROM ranked WHERE crank = 1),
@@ -2763,10 +2536,7 @@ object Similarity {
         coalesce(max(when(col("g") > 0, expr("1000 DIV rank"))), lit(0L))
           .as("mrr_milli"))
       .withColumn("p_at_k_milli", expr(s"hits * 1000 DIV $k"))
-    val wIdeal = Window.partitionBy(col("query_id"))
-      .orderBy(col("gain").desc, col("doc_id").asc)
-    val ideal = rel.withColumn("rn", row_number().over(wIdeal))
-      .filter(col("rn") <= k)
+    val ideal = topK(rel, k, "gain", "doc_id", "rn")
       .groupBy(col("query_id"))
       .agg(sum(col("gain") * discOf(col("rn").cast("long")))
         .as("idcg_milli"))
@@ -2827,8 +2597,7 @@ object Similarity {
        |  SELECT query_id,
        |    CAST(SUM(gain * ${discOf("rn")}) AS BIGINT) AS idcg_milli
        |  FROM (
-       |    SELECT query_id, gain, ROW_NUMBER() OVER (
-       |      PARTITION BY query_id ORDER BY gain DESC, doc_id ASC) AS rn
+       |    SELECT query_id, gain, ${rankSql("gain", "doc_id")} AS rn
        |    FROM rel) q
        |  WHERE rn <= $k
        |  GROUP BY 1)
@@ -2877,19 +2646,8 @@ object Similarity {
 
   def oodScoresSql(nCentroids: Int = 8): String =
     s"""WITH e AS ($withNormSql),
-       |cents AS (
-       |  SELECT vec_id AS cent_vid, embedding AS c_emb, norm2 AS c_norm2,
-       |    ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS centroid_id
-       |  FROM e ORDER BY vec_id LIMIT $nCentroids),
-       |aff AS (
-       |  SELECT e.vec_id, c.centroid_id,
-       |    ${dotSql("e.embedding", "c.c_emb")}
-       |      / sqrt(e.norm2 * c.c_norm2) AS ccos
-       |  FROM e CROSS JOIN cents c),
-       |ranked AS (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-       |    ORDER BY ccos DESC, centroid_id ASC) AS crank
-       |  FROM aff)
+       |cents AS (${donorCentsSql(nCentroids)}),
+       |${ivfRankedSql("e")}
        |SELECT vec_id, centroid_id AS cell, ccos AS best_cos,
        |  1000 - CAST(FLOOR(ccos * 1000) AS BIGINT) AS ood_milli,
        |  (1000 - CAST(FLOOR(ccos * 1000) AS BIGINT)) > 900 AS is_outlier
@@ -2917,19 +2675,8 @@ object Similarity {
 
   def cellBalanceSql(nCentroids: Int = 8): String =
     s"""WITH e AS ($withNormSql),
-       |cents AS (
-       |  SELECT vec_id AS cent_vid, embedding AS c_emb, norm2 AS c_norm2,
-       |    ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS centroid_id
-       |  FROM e ORDER BY vec_id LIMIT $nCentroids),
-       |aff AS (
-       |  SELECT e.vec_id, c.centroid_id,
-       |    ${dotSql("e.embedding", "c.c_emb")}
-       |      / sqrt(e.norm2 * c.c_norm2) AS ccos
-       |  FROM e CROSS JOIN cents c),
-       |ranked AS (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-       |    ORDER BY ccos DESC, centroid_id ASC) AS crank
-       |  FROM aff),
+       |cents AS (${donorCentsSql(nCentroids)}),
+       |${ivfRankedSql("e")},
        |cells AS (
        |  SELECT centroid_id AS cell, CAST(COUNT(*) AS BIGINT) AS n_vectors
        |  FROM ranked WHERE crank = 1 GROUP BY 1)
@@ -3004,14 +2751,12 @@ object Similarity {
        |  FROM embeddings v CROSS JOIN levels l),
        |pairs AS (
        |  SELECT q.dim, q.vec_id AS query_id, n.vec_id AS neighbor_id,
-       |    ${tdot("q.embedding", "n.embedding", "q.dim")}
-       |      / sqrt(q.t_norm2 * n.t_norm2) AS cosine
+       |    ${cosineSql(tdot("q.embedding", "n.embedding", "q.dim"), "q.t_norm2", "n.t_norm2")} AS cosine
        |  FROM e q JOIN e n ON q.dim = n.dim
-       |    AND q.vec_id < $nQueries AND q.vec_id <> n.vec_id),
+       |    AND ${queryPairSql("q", "n", nQueries)}),
        |ranked AS (
        |  SELECT dim, query_id, neighbor_id,
-       |    ROW_NUMBER() OVER (PARTITION BY dim, query_id
-       |      ORDER BY cosine DESC, neighbor_id ASC) AS rank
+       |    ${rankSql("cosine", part = "dim, query_id")} AS rank
        |  FROM pairs),
        |topk AS (SELECT * FROM ranked WHERE rank <= $k),
        |truth AS (
@@ -3154,11 +2899,8 @@ object Similarity {
             col("a_n2"), col("b_n2")).as("sim"))
     }
     val picks = Silver.memoize(spark, s"mmrPicks:$k:$nCand:$nQueries", dir) {
-      val w1 = Window.partitionBy(col("query_id"))
-        .orderBy(col("rel").desc, col("cand_id").asc)
       // round i picks step i + 1
-      Silver.iterate(pool.withColumn("rn", row_number().over(w1))
-        .filter(col("rn") === 1)
+      Silver.iterate(topK(pool, 1, "rel", "cand_id", "rn")
         .select(col("query_id"), col("cand_id"), col("rel"),
           lit(1).as("step"), col("rel").as("score")), k - 1) { (all, i) =>
         val seld = all.select(col("query_id").as("s_q"),
@@ -3169,17 +2911,14 @@ object Similarity {
           .groupBy(col("query_id"), col("a_id"))
           .agg(max(col("sim")).as("maxsim"))
           .select(col("query_id").as("m_q"), col("a_id"), col("maxsim"))
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("score").desc, col("cand_id").asc)
-        all.union(pool
+        all.union(topK(pool
           .join(seld, col("query_id") === col("s_q") &&
             col("cand_id") === col("s_id"), "left_anti")
           .join(ms, col("query_id") === col("m_q") &&
             col("cand_id") === col("a_id"))
           .withColumn("score",
-            lit(0.5) * col("rel") - lit(0.5) * col("maxsim"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
+            lit(0.5) * col("rel") - lit(0.5) * col("maxsim")),
+          1, "score", "cand_id", "rn")
           .select(col("query_id"), col("cand_id"), col("rel"),
             lit(i + 1).as("step"), col("score")))
       }().last
@@ -3205,9 +2944,7 @@ object Similarity {
          |  SELECT query_id, cand_id, rel, $i AS step, score FROM (
          |    SELECT r.query_id, r.cand_id, r.rel,
          |      0.5 * r.rel - 0.5 * m.maxsim AS score,
-         |      ROW_NUMBER() OVER (PARTITION BY r.query_id
-         |        ORDER BY 0.5 * r.rel - 0.5 * m.maxsim DESC,
-         |          r.cand_id ASC) AS rn
+         |      ${rankSql("0.5 * r.rel - 0.5 * m.maxsim", "r.cand_id", "r.query_id")} AS rn
          |    FROM pool r
          |    ANTI JOIN seld$i sd USING (query_id, cand_id)
          |    JOIN ms$i m
@@ -3219,19 +2956,15 @@ object Similarity {
     s"""WITH e AS ($withNormSql),
        |pr AS (
        |  SELECT q.vec_id AS query_id, n.vec_id AS cand_id,
-       |    ${dotSql("q.embedding", "n.embedding")}
-       |      / sqrt(q.norm2 * n.norm2) AS rel
-       |  FROM e q JOIN e n
-       |    ON q.vec_id < $nQueries AND q.vec_id <> n.vec_id),
+       |    ${cosineSql(dotSql("q.embedding", "n.embedding"), "q.norm2", "n.norm2")} AS rel
+       |  FROM e q JOIN e n ON ${queryPairSql("q", "n", nQueries)}),
        |pool AS (
        |  SELECT query_id, cand_id, rel FROM (
-       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY rel DESC, cand_id ASC) AS rn FROM pr)
+       |    SELECT *, ${rankSql("rel", "cand_id")} AS rn FROM pr)
        |  WHERE rn <= $nCand),
        |psim AS (
        |  SELECT a.query_id, a.cand_id AS a_id, b.cand_id AS b_id,
-       |    ${dotSql("ea.embedding", "eb.embedding")}
-       |      / sqrt(ea.norm2 * eb.norm2) AS sim
+       |    ${cosineSql(dotSql("ea.embedding", "eb.embedding"), "ea.norm2", "eb.norm2")} AS sim
        |  FROM pool a
        |  JOIN pool b
        |    ON a.query_id = b.query_id AND a.cand_id <> b.cand_id
@@ -3239,8 +2972,7 @@ object Similarity {
        |  JOIN e eb ON eb.vec_id = b.cand_id),
        |sel1 AS (
        |  SELECT query_id, cand_id, rel, 1 AS step, rel AS score FROM (
-       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY rel DESC, cand_id ASC) AS rn FROM pool)
+       |    SELECT *, ${rankSql("rel", "cand_id")} AS rn FROM pool)
        |  WHERE rn = 1),
        |$steps
        |SELECT query_id, CAST(step AS BIGINT) AS step,
@@ -3303,20 +3035,11 @@ object Similarity {
 
   def semDedupSql(tau: Double = 0.4, nCentroids: Int = 8): String =
     s"""WITH e AS ($withNormSql),
-       |cents AS (
-       |  SELECT vec_id AS cent_vid, embedding AS c_emb, norm2 AS c_norm2,
-       |    ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS centroid_id
-       |  FROM e ORDER BY vec_id LIMIT $nCentroids),
-       |aff AS (
-       |  SELECT e.vec_id, e.embedding, e.norm2, c.centroid_id,
-       |    ${dotSql("e.embedding", "c.c_emb")}
-       |      / sqrt(e.norm2 * c.c_norm2) AS ccos
-       |  FROM e CROSS JOIN cents c),
+       |cents AS (${donorCentsSql(nCentroids)}),
+       |${ivfRankedSql("e")},
        |assigned AS (
-       |  SELECT vec_id, embedding, norm2, centroid_id AS cell FROM (
-       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-       |      ORDER BY ccos DESC, centroid_id ASC) AS crank
-       |    FROM aff) WHERE crank = 1),
+       |  SELECT vec_id, embedding, norm2, centroid_id AS cell
+       |  FROM ranked WHERE crank = 1),
        |q AS (
        |  SELECT doc_id, quality_score
        |  FROM (${graft.text.TextAnalysis.qualityScoreSql})),
@@ -3328,8 +3051,7 @@ object Similarity {
        |  SELECT x.doc_id, CAST(COUNT(*) AS BIGINT) AS n_better_close
        |  FROM a x JOIN a y
        |    ON x.cell = y.cell AND x.doc_id <> y.doc_id
-       |  WHERE ${dotSql("x.embedding", "y.embedding")}
-       |      / sqrt(x.norm2 * y.norm2) >= $tau
+       |  WHERE ${cosineSql(dotSql("x.embedding", "y.embedding"), "x.norm2", "y.norm2")} >= $tau
        |    AND (y.quality_score > x.quality_score OR
        |         (y.quality_score = x.quality_score
        |          AND y.doc_id < x.doc_id))

@@ -131,4 +131,19 @@ class GroupTopKSpec extends GraftSpec {
       .sortBy(identity)
     assert(got.toSeq == want.toSeq)
   }
+
+  test("vector keys plan the heap operator exactly where their rank filter has its shape") {
+    def heap(df: DataFrame) = collectPlan(df.queryExecution.executedPlan)
+      .exists(_.getClass.getSimpleName == "GroupTopKExec")
+    val planned = Map(
+      // v1: row_number() <= k over the per-query order
+      "v1" -> heap(graft.vector.Similarity.cosineTopK(extSpark, sfDir)),
+      // v16 casts its rank to bigint before the filter; the optimizer
+      // unwraps the cast, so the filter keeps the matched shape
+      "v16" -> heap(graft.vector.Similarity.filteredTopK(extSpark, sfDir)),
+      // v39 is a memoized silver: its ranking runs inside the build, and
+      // the frame a caller gets is the measured leaf
+      "v39" -> heap(graft.vector.IndexCompaction.compactionApplied(extSpark, sfDir)))
+    assert(planned == Map("v1" -> true, "v16" -> true, "v39" -> false))
+  }
 }
