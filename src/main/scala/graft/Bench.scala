@@ -304,7 +304,6 @@ object Bench {
             name -> (System.nanoTime() - t0) / 1e9
           } catch { case _: Throwable => name -> -1.0 }
         }.toMap
-        val big = results.toMap
         // adjudicate the numerator BEFORE flagging (the r12 k13 false
         // positive): steady restamps override transient medians; a key
         // that would still flag and has no restamp gets one confirmation

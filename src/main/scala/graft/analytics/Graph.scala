@@ -1,7 +1,7 @@
 package graft.analytics
 
 import graft.model.{Silver, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** TRIANGLE CENSUS over the SKU co-purchase graph — the canonical

@@ -1,6 +1,6 @@
 package graft.analytics
 
-import graft.etl.{Defaults, StoreDaily, ProductDaily}
+import graft.etl.{Defaults, StoreDaily}
 import graft.model.Silver
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._

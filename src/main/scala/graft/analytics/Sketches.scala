@@ -244,8 +244,7 @@ object Sketches {
   /** pmod so SIGNED keys (xxhash64 content hashes) land in [0, m) too;
     * for the non-negative TPC-H keys this is bit-identical to plain `%`,
     * which is what the sk8 oracle SQL writes. */
-  private def bloomPos(key: Column, a: Long, b: Long,
-                       bits: Long = bloomBits): Column =
+  private def bloomPos(key: Column, a: Long, b: Long, bits: Long): Column =
     (pmod(key, lit(bloomP)) * lit(a) + lit(b)) % bloomP % bits
 
   private def bloomPosSql(key: String, a: Long, b: Long,

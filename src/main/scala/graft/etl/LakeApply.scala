@@ -2,7 +2,7 @@ package graft.etl
 
 import graft.model.{AtomicManifest, Silver, Tables}
 import org.apache.spark.Partitioner
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}

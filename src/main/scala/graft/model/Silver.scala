@@ -31,7 +31,20 @@ import scala.collection.concurrent.TrieMap
   * consumer joins (and their broadcasts) plan against the real size,
   * not the optimizer's estimate. ONE job fills and measures a fresh
   * leaf: the checkpoint is lazy, the measuring pass fills its blocks,
-  * and Spark truncates the lineage when that job ends. Builders return
+  * and Spark truncates the lineage when that job ends.
+  *
+  * A leaf small enough for one partition also says so: when its RDD has
+  * one partition and its bytes are at most the size below which AQE's
+  * `CoalesceShufflePartitions` would coalesce any shuffle of them into
+  * one partition, it states `SinglePartition`
+  * (`ColumnBridge.withMeasuredStats`). The planner then inserts no
+  * exchange under an aggregate, window or global sort over it, so a
+  * warm consumer runs as one job instead of one per shuffle stage plus
+  * a sampling job per sort. The gate mirrors the coalescing rule
+  * because that is the layout the exchange would have produced anyway:
+  * under it, dropping the exchange loses no parallelism. Above it, a
+  * one-partition leaf keeps its exchange, so a consumer that multiplies
+  * its rows (an explode) still spreads over the cores. Builders return
   * PLAIN plans (SilverLintSpec), and an intermediate a builder reuses
   * is a silver keyed by every parameter it depends on; a body that
   * already is a leaf is kept as-is.

@@ -376,18 +376,30 @@ object Multimodal {
           col("channels"), col("f0"))
     }
 
-  def multimodalFeatures(spark: SparkSession, dir: String): DataFrame = {
-    val media = mediaFromDocs(spark, dir)
-    frameSample(media)
+  /** The columns of [[mediaFromDocs]] that frame sampling reads, without
+    * the encoded payloads: a silver of about 56 bytes a row, where the
+    * media leaf holds every blob. m2 samples from it, so its two union
+    * branches scan metadata, not media. */
+  private def mediaFrameMeta(spark: SparkSession, dir: String): DataFrame =
+    graft.model.Silver.memoize(spark, "mediaFrameMeta", dir) {
+      mediaFromDocs(spark, dir).toDF()
+        .select(col("media_id"), col("kind"), col("width"), col("height"), col("n_frames"))
+    }
+
+  def multimodalFeatures(spark: SparkSession, dir: String): DataFrame =
+    framesOf(mediaFrameMeta(spark, dir), step = 10)
       .join(mediaFeatureLeaf(spark, dir), Seq("media_id"))
       .orderBy("media_id", "frame_idx")
-  }
 
   /** Frame sampling for video rows: every `step`-th frame index becomes a
     * row (the UDTF/Generator shape — built-in explode over a sequence, no
     * custom Generator needed). Non-video rows pass through with frame 0. */
-  def frameSample(media: Dataset[MediaRecord], step: Int = 10): DataFrame = {
-    val df = media.toDF()
+  def frameSample(media: Dataset[MediaRecord], step: Int = 10): DataFrame =
+    framesOf(media.toDF(), step)
+
+  /** [[frameSample]] over any frame with its `media_id`, `kind`, `width`,
+    * `height` and `n_frames` columns. */
+  private def framesOf(df: DataFrame, step: Int): DataFrame = {
     val video = df.filter(col("kind") === "video")
       .withColumn("frame_idx",
         explode(sequence(lit(0), col("n_frames") - 1, lit(step))))

@@ -1994,8 +1994,6 @@ object EventsBatch {
       .agg(sum(when(col("half") === "a", 1L).otherwise(0L)).as("n_a"),
         sum(when(col("half") === "b", 1L).otherwise(0L)).as("n_b"))
     val byType = Window.partitionBy(col("event_type"))
-    val cdf = byType.orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val diffs = counts
       .withColumn("tot_a", sum(col("n_a")).over(byType))
       .withColumn("tot_b", sum(col("n_b")).over(byType))

@@ -50,7 +50,7 @@ object StatefulNearest {
     ds.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout) {
         (user: Long, rows: Iterator[TouchEvent], state: GroupState[NearestState]) =>
-          var st = state.getOption.getOrElse(NearestState(Long.MinValue, Nil))
+          val st = state.getOption.getOrElse(NearestState(Long.MinValue, Nil))
           var lastView = st.lastView
           var pending = st.pending
           val out = List.newBuilder[NearestDecision]

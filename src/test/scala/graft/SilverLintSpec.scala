@@ -31,6 +31,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *      parameter is the build itself), so two calls that differ in a
   *      parameter never share a value; an allowlisted def says why its
   *      name may leave one out.
+  *   5. `SinglePartition` and `LogicalRDD(` appear in code only in
+  *      `ColumnBridge`, so one function (`withMeasuredStats`) decides
+  *      what a leaf states about its layout.
   */
 class SilverLintSpec extends AnyFunSuite {
 
@@ -294,5 +297,22 @@ class SilverLintSpec extends AnyFunSuite {
         "that differ in it would share one value):\n" + bad.mkString("\n"))
     val stale = unnamedParams.keySet -- hits.collect { case (fd, _, true) => fd }
     assert(stale.isEmpty, s"allowlisted defs whose names carry every parameter: $stale")
+  }
+
+  private val bridge = "graft/functions/ColumnBridge.scala"
+  private val LayoutStatement = "\\bSinglePartition\\b|\\bLogicalRDD\\(".r
+
+  test("SinglePartition and LogicalRDD( appear only in ColumnBridge") {
+    val hits = for {
+      (file, src) <- sources
+      m <- LayoutStatement.findAllMatchIn(code(src)).toSeq
+    } yield (file, m.matched)
+    assert(hits.collect { case (`bridge`, m) => m }.toSet ===
+      Set("SinglePartition", "LogicalRDD("),
+      "ColumnBridge.withMeasuredStats states a leaf's layout")
+    val bad = hits.filter(_._1 != bridge).map { case (f, m) => s"$f: $m" }
+    assert(bad.isEmpty,
+      "\nleaf layout stated outside ColumnBridge (a silver's partitioning is " +
+        "decided by withMeasuredStats):\n" + bad.mkString("\n"))
   }
 }

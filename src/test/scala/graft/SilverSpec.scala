@@ -2,7 +2,10 @@ package graft
 
 import graft.model.Silver
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions.{col, max}
 
 /** The materialization rules of [[Silver.memoize]], `once` of a silver
@@ -57,6 +60,68 @@ class SilverSpec extends GraftSpec {
     // joined to a side too big to broadcast, the leaf is the broadcast side
     val plan = h.join(spark.range(100000000L).toDF("a"), "a").queryExecution.executedPlan
     assert(plan.toString.contains("BroadcastHashJoin"), plan.toString)
+  }
+
+  private def stated(df: DataFrame) =
+    df.queryExecution.logical.asInstanceOf[LogicalRDD].outputPartitioning
+
+  test("a one-partition leaf under the coalescing size states SinglePartition") {
+    def body = spark.range(0, 400, 1, 4).groupBy((col("id") % 100).as("id")).count()
+    assert(stated(body.localCheckpoint(eager = false)) != SinglePartition)
+    val h = Silver.memoize(spark, "silverSpec:single", sfDir)(body)
+    assert(h.rdd.getNumPartitions === 1)
+    assert(stated(h) === SinglePartition)
+    // an aggregate and a global sort over it plan no exchange
+    val plan = h.groupBy(col("id") % 3).agg(max(col("count")).as("n")).orderBy(col("n"))
+      .queryExecution.executedPlan.asInstanceOf[AdaptiveSparkPlanExec].executedPlan
+    assert(plan.collect { case e: ShuffleExchangeLike => e }.isEmpty, plan.toString)
+  }
+
+  test("a leaf above the coalescing size, or of four partitions, states " +
+      "what its checkpoint states") {
+    import org.apache.spark.sql.graftbridge.ColumnBridge.withMeasuredStats
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1k")
+    s.conf.set("spark.sql.shuffle.partitions", "1")
+    // a one-partition aggregate: 1000 rows of 24 bytes measure 24 KB,
+    // above the session's 1 KB
+    def single = s.range(0, 4000, 1, 4).groupBy((col("id") % 1000).as("k")).count()
+    val checkpoint = single.localCheckpoint(eager = false)
+    val above = withMeasuredStats(checkpoint)
+    assert(above.rdd.getNumPartitions === 1)
+    assert(above.queryExecution.optimizedPlan.stats.sizeInBytes > 1024)
+    assert(stated(checkpoint) != SinglePartition)
+    assert(stated(above) === stated(checkpoint))
+    val fourCheckpoint = s.range(0, 1000, 1, 4).toDF("id").localCheckpoint(eager = false)
+    val four = withMeasuredStats(fourCheckpoint)
+    assert(four.rdd.getNumPartitions === 4)
+    assert(stated(four) === stated(fourCheckpoint))
+    // without parallelismFirst the gate is the advisory size (64 MB)
+    s.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+    assert(stated(Silver.memoize(s, "silverSpec:advisory", sfDir)(single)) ===
+      SinglePartition)
+  }
+
+  test("a warm calendarRollup, storeHistoryFiltered, trendHalves or kvKeys " +
+      "call runs one job and returns a fresh session's rows") {
+    val store = graft.etl.StoreDaily.rollupDec(spark, sfDir).head().getAs[String]("store_id")
+    val calls = Seq[(String, SparkSession => DataFrame)](
+      "calendarRollup" -> (graft.analytics.Kpis.calendarRollup(_, sfDir, "week")),
+      "storeHistoryFiltered" ->
+        (graft.analytics.History.storeHistoryFiltered(_, sfDir, Some(store))),
+      "trendHalves" -> (graft.analytics.Trends.trendHalves(_, sfDir)),
+      "kvKeys" -> (graft.export.Flatten.kvKeys(_, sfDir)))
+    // a session whose AQE coalesces nothing states every leaf as its
+    // checkpoint does, so it plans each exchange
+    val fresh = spark.newSession()
+    fresh.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    calls.foreach { case (name, call) =>
+      call(spark).collect()
+      val (rows, n) = jobs(call(spark).collect().toSeq)
+      assert(n === 1, s"$name: a warm call ran $n jobs")
+      assert(rows.nonEmpty, name)
+      assert(rows === call(fresh).collect().toSeq, name)
+    }
   }
 
   test("a repeat call in the same session returns the same handle and runs no job") {
